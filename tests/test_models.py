@@ -2,14 +2,20 @@
 src/lib.rs:143-197 test: table → CREATE FUNCTION ... LANGUAGE TORCH →
 argmax(model(features)) vs a known oracle; plus batch-size invariance
 (reference loop semantics src/udf.rs:250-287 demand output independent of
-batch_size) and freeze-at-create config semantics (src/lib.rs:81-94)."""
+batch_size) and freeze-at-create config semantics (src/lib.rs:81-94).
+The per-batch Arrow body is also tested on its own, without Spark."""
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from pyspark.errors import PythonException
+from pyspark.util import PythonEvalType
 
+from torchfusion_spark.models.backends import load_predictor
 from torchfusion_spark.models.fixtures import mlp_bytes, oracle_predict, write_demo_model
+from torchfusion_spark.models.registry import _score_list_array
 
 
 @pytest.fixture(scope="module")
@@ -62,8 +68,41 @@ def test_declared_return_type_honored(engine, tables, model_path):
     engine.sql(
         f"CREATE OR REPLACE FUNCTION clf_f64(DOUBLE[]) RETURNS DOUBLE[] LANGUAGE TORCH AS '{model_path}'"
     )
-    schema = engine.sql("SELECT clf_f64(embedding) AS out FROM embeddings LIMIT 1").schema
-    assert schema["out"].dataType.simpleString() == "array<double>"
+    df = engine.sql("SELECT embedding, clf_f64(embedding) AS out FROM embeddings ORDER BY vec_id LIMIT 50")
+    assert df.schema["out"].dataType.simpleString() == "array<double>"
+    table = df.toArrow()
+    x, got = (table.column(c).combine_chunks().flatten().to_numpy() for c in ("embedding", "out"))
+    assert got.dtype == np.float64
+    np.testing.assert_allclose(
+        got.reshape(len(table), -1), oracle_predict(x.reshape(len(table), -1)), rtol=0, atol=1e-6
+    )
+
+
+def _torch_udf_eval_types(df) -> list[int]:
+    """evalType of every ArrowEvalPython node in the optimized plan."""
+
+    def walk(node):
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return [n.evalType() for n in walk(plan) if n.nodeName() == "ArrowEvalPython"]
+
+
+def test_torch_function_is_arrow_iter_udf(engine, tables, model_path):
+    # the Arrow-native path scores ListArray buffers directly; a fallback
+    # to a pandas UDF would still be correct, only slower, so pin it here
+    engine.sql(f"CREATE OR REPLACE FUNCTION clf_arrow(FLOAT[]) RETURNS FLOAT[] LANGUAGE TORCH AS '{model_path}'")
+    df = engine.sql("SELECT clf_arrow(embedding) FROM embeddings")
+    assert _torch_udf_eval_types(df) == [PythonEvalType.SQL_SCALAR_ARROW_ITER_UDF]
+
+
+def test_null_input_row_fails_loudly(engine, tables, model_path):
+    engine.sql(f"CREATE OR REPLACE FUNCTION clf_null(FLOAT[]) RETURNS FLOAT[] LANGUAGE TORCH AS '{model_path}'")
+    with pytest.raises(PythonException, match="LANGUAGE TORCH input rows must not be NULL"):
+        engine.sql("SELECT clf_null(CAST(NULL AS ARRAY<FLOAT>))").collect()
 
 
 def test_missing_model_body_errors(engine):
@@ -96,3 +135,47 @@ def test_registry_flagship_matches_numpy_oracle(spark, tables):
     x = np.stack(emb["embedding"].to_numpy())
     expected = dict(zip(emb["vec_id"], oracle_predict(x).argmax(axis=1)))
     assert got == expected
+
+
+# --- the per-batch Arrow body, without Spark ----------------------------------
+
+
+def _list_array(x: np.ndarray) -> pa.ListArray:
+    n, width = x.shape
+    return pa.ListArray.from_arrays(np.arange(0, n * width + 1, width, dtype=np.int32), x.reshape(-1))
+
+
+@pytest.fixture(scope="module")
+def predictor():
+    return load_predictor(mlp_bytes(), "demo.npz")
+
+
+@pytest.fixture(scope="module")
+def features():
+    return np.random.default_rng(3).standard_normal((10, 64), dtype=np.float32)
+
+
+@pytest.mark.parametrize("out_dtype", [np.float32, np.float64])
+@pytest.mark.parametrize("batch_size", [1, 3, 7])
+def test_score_list_array_matches_oracle(predictor, features, batch_size, out_dtype):
+    out = _score_list_array(_list_array(features), predictor, batch_size, np.float32, out_dtype)
+    assert out.type == pa.list_(pa.from_numpy_dtype(out_dtype))
+    np.testing.assert_array_equal(out.offsets.to_numpy(), np.arange(0, 101, 10))
+    got = out.values.to_numpy().reshape(len(out), -1)
+    np.testing.assert_allclose(got, oracle_predict(features), rtol=0, atol=1e-6)
+
+
+def test_score_list_array_sliced(predictor, features):
+    # a slice shifts arr.offsets but leaves arr.values the whole buffer
+    arr = _list_array(features).slice(1, 2)
+    assert arr.offsets.to_numpy()[0] == 64 and len(arr.values) == features.size
+    out = _score_list_array(arr, predictor, 3, np.float32, np.float32)
+    assert len(out) == 2
+    got = out.values.to_numpy().reshape(2, -1)
+    np.testing.assert_allclose(got, oracle_predict(features[1:3]), rtol=0, atol=1e-6)
+
+
+def test_score_list_array_empty(predictor):
+    arr = pa.array([], type=pa.list_(pa.float32()))
+    out = _score_list_array(arr, predictor, 4, np.float32, np.float64)
+    assert len(out) == 0 and out.type == pa.list_(pa.float64())

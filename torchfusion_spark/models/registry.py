@@ -4,9 +4,10 @@ src/lib.rs:23-100).
 Flow (mirrors SURVEY §3.1): fetch bytes through a store abstraction on the
 driver → snapshot ``torchfusion.*`` config (freeze-at-create,
 src/lib.rs:81-94) → ``sc.broadcast`` the bytes so each executor ships them
-once → iterator-form pandas UDF with a per-worker predictor cache, inner
-mini-batch loop of ``batch_size`` rows (src/udf.rs:191-222 semantics via
-models.batching) → ``spark.udf.register``.
+once → iterator-form Arrow UDF with a per-worker predictor cache: each
+batch's ListArray values and offsets are read zero-copy, mini-batched by
+models.batching and the output rebuilt as a ListArray, with no per-row
+Python object (src/udf.rs:164-179,191-248) → ``spark.udf.register``.
 
 The declared return type is honored exactly — the reference's
 ``(f64, f64)`` arm silently returns f32 (src/udf.rs:49-57); we fix that
@@ -20,12 +21,13 @@ from collections.abc import Iterator
 from urllib.parse import urlparse
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
 
 from torchfusion_spark.config import TorchConfig
+from torchfusion_spark.models.batching import create_batched, flatten_batched
 
 _SPARK_TO_NUMPY = {
     "float": np.float32,
@@ -102,6 +104,27 @@ def _worker_predictor(bc, uri: str, reg_token: str, device: str, cuda_device: in
     return p
 
 
+def _score_list_array(
+    arr: pa.ListArray, predictor, batch_size: int, in_dtype: np.dtype, out_dtype: np.dtype
+) -> pa.ListArray:
+    """Score one Arrow batch of feature rows; one output list per input row.
+
+    ``arr.offsets`` honors a slice of ``arr`` while ``arr.values`` is the
+    whole child buffer, so the offsets index the values directly.
+    """
+    if arr.null_count:  # the reference has no null handling (src/udf.rs:210)
+        raise ValueError(
+            f"LANGUAGE TORCH input rows must not be NULL ({arr.null_count} of {len(arr)} are)"
+        )
+    offsets = arr.offsets.to_numpy()
+    values = arr.values.to_numpy(zero_copy_only=False).astype(in_dtype, copy=False)
+    outs = [predictor(b) for b in create_batched(values, offsets, batch_size)]
+    flat, out_offsets = flatten_batched(outs)
+    return pa.ListArray.from_arrays(
+        out_offsets.astype(np.int32, copy=False), flat.astype(out_dtype, copy=False)
+    )
+
+
 def register_torch_udf(
     spark: SparkSession,
     name: str,
@@ -126,25 +149,10 @@ def register_torch_udf(
     batch_size = cfg.batch_size
     device, cuda_device = cfg.device, cfg.cuda_device
 
-    def infer(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from torchfusion_spark.models.batching import create_batched, flatten_batched
-
+    def infer(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         predictor = _worker_predictor(bc, uri, reg_token, device, cuda_device)
-        for series in it:
-            if series.empty:
-                yield pd.Series([], dtype=object)
-                continue
-            # flat values + Arrow-style offsets, so the mini-batch loop IS
-            # models.batching — the kernels the reference's unit tests
-            # translate against, not a parallel re-implementation
-            arrs = series.to_numpy()
-            offsets = np.zeros(len(arrs) + 1, dtype=np.int64)
-            np.cumsum([len(a) for a in arrs], out=offsets[1:])
-            values = np.concatenate(arrs).astype(in_dtype, copy=False)
-            outs = [predictor(b) for b in create_batched(values, offsets, batch_size)]
-            flat, _ = flatten_batched(outs)
-            y = flat.reshape(len(arrs), -1).astype(out_dtype, copy=False)
-            yield pd.Series(list(y))
+        for arr in it:
+            yield _score_list_array(arr, predictor, batch_size, in_dtype, out_dtype)
 
-    udf = F.pandas_udf(infer, returnType=_parse_datatype_string(return_type))
+    udf = F.arrow_udf(infer, returnType=_parse_datatype_string(return_type))
     spark.udf.register(name, udf)

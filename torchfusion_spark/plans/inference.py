@@ -150,8 +150,9 @@ def _mlp_oracle_sql() -> str:
     "torch_inference_classes",
     _mlp_oracle_sql(),
     doc="the reference's flagship: CREATE FUNCTION ... LANGUAGE TORCH, then "
-    "SELECT argmax(model(features)) — batched vectorized inference via "
-    "iterator pandas UDF (src/udf.rs:20-287 semantics); oracle = the seeded "
+    "SELECT argmax(model(features)) — batched Arrow-native inference via "
+    "iterator arrow_udf over ListArray values+offsets (src/udf.rs:20-287 "
+    "semantics); oracle = the seeded "
     "MLP unrolled into a DuckDB relational matmul (flagship fully hash-checked)",
 )
 def torch_inference_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
