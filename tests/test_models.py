@@ -13,7 +13,8 @@ import pytest
 from pyspark.errors import PythonException
 from pyspark.util import PythonEvalType
 
-from torchfusion_spark.models.backends import load_predictor
+from torchfusion_spark.models.backends import load_predictor, per_leading_index
+from torchfusion_spark.models.batching import create_batched, flatten_batched
 from torchfusion_spark.models.fixtures import mlp_bytes, oracle_predict, write_demo_model
 from torchfusion_spark.models.registry import _score_list_array
 
@@ -179,3 +180,79 @@ def test_score_list_array_empty(predictor):
     arr = pa.array([], type=pa.list_(pa.float32()))
     out = _score_list_array(arr, predictor, 4, np.float32, np.float64)
     assert len(out) == 0 and out.type == pa.list_(pa.float64())
+
+
+# --- the stacked forward: bit-identical to the per-mini-batch loop -------------
+
+N_ROWS = 600
+
+
+def _per_batch_loop(arr: pa.ListArray, predictor, batch_size: int, out_dtype) -> np.ndarray:
+    """The reference's loop (src/udf.rs:191-248): one forward per mini-batch."""
+    offsets = arr.offsets.to_numpy()
+    values = arr.values.to_numpy().astype(np.float32, copy=False)
+    flat, _ = flatten_batched([predictor(b) for b in create_batched(values, offsets, batch_size)])
+    return flat.astype(out_dtype, copy=False)
+
+
+@pytest.fixture(scope="module")
+def many_rows():
+    return np.random.default_rng(5).standard_normal((N_ROWS, 64), dtype=np.float32)
+
+
+@pytest.mark.parametrize("sliced", [False, True])
+@pytest.mark.parametrize("out_dtype", [np.float32, np.float64])
+@pytest.mark.parametrize("batch_size", [1, 3, 7, 256, N_ROWS, N_ROWS + 5])
+def test_stacked_forward_bit_identical_to_per_batch_loop(
+    predictor, many_rows, batch_size, out_dtype, sliced
+):
+    arr = _list_array(many_rows)
+    if sliced:
+        arr = arr.slice(5, N_ROWS - 11)
+    out = _score_list_array(arr, predictor, batch_size, np.float32, out_dtype)
+    expected = _per_batch_loop(arr, predictor, batch_size, out_dtype)
+    assert out.values.to_numpy().dtype == out_dtype
+    assert np.array_equal(out.values.to_numpy(), expected)
+    np.testing.assert_array_equal(out.offsets.to_numpy(), np.arange(len(arr) + 1) * 10)
+
+
+@pytest.mark.parametrize("batch_size", [1, 3, 7, 256, N_ROWS, N_ROWS + 5])
+def test_stacked_forward_calls_predictor_at_most_twice(predictor, many_rows, batch_size):
+    # a Python call per mini-batch costs ~20 µs; at batch size 1 that was
+    # the whole per-row budget, so pin the call shape, not just the result
+    shapes = []
+
+    def counting(x):
+        shapes.append(x.shape)
+        return predictor(x)
+
+    _score_list_array(_list_array(many_rows), counting, batch_size, np.float32, np.float32)
+    full, tail = divmod(N_ROWS, batch_size)
+    expected = ([(full, batch_size, 64)] if full else []) + ([(tail, 64)] if tail else [])
+    assert shapes == expected
+
+
+@pytest.mark.parametrize("batch_size", [1, 2])
+def test_ragged_rows_rejected(predictor, batch_size):
+    # one reshape over the batch would score a 63- and a 65-float row as
+    # two 64-float rows
+    arr = pa.array([np.ones(63, np.float32), np.ones(65, np.float32)], type=pa.list_(pa.float32()))
+    with pytest.raises(ValueError, match="LANGUAGE TORCH input rows must all have the same length"):
+        _score_list_array(arr, predictor, batch_size, np.float32, np.float32)
+
+
+def test_per_leading_index_one_forward_per_item(predictor, many_rows):
+    # the TorchScript backend's lift: each 2-D forward still sees one
+    # mini-batch, and the result equals the numpy MLP's native stacked call
+    seen = []
+
+    def forward_2d(x):
+        assert x.ndim == 2
+        seen.append(len(x))
+        return predictor(x)
+
+    stacked = many_rows.reshape(-1, 8, 64)
+    got = per_leading_index(forward_2d)(stacked)
+    assert seen == [8] * len(stacked)
+    assert np.array_equal(got, predictor(stacked))
+    assert np.array_equal(per_leading_index(forward_2d)(many_rows[:5]), predictor(many_rows[:5]))

@@ -556,3 +556,23 @@ def test_staged_ok_matches_inline_band_relation(spark, tables):
         assert staged.count() == inline.count(), staged_view
         assert staged.exceptAll(inline).count() == 0, staged_view
         assert inline.exceptAll(staged).count() == 0, staged_view
+
+
+# the staged capped relation passed as ok_rel is built at the family cap;
+# a different max_bucket alongside it used to be silently ignored
+
+
+def test_minhash_ok_rel_refuses_other_max_bucket():
+    from torchfusion_spark.operators.dedup import MAX_BUCKET, minhash_body_sql
+
+    assert "__ok" in minhash_body_sql("spark", "s", 0.6, MAX_BUCKET, ok_rel="__ok")
+    with pytest.raises(ValueError, match="max_bucket=65 needs the inline spelling"):
+        minhash_body_sql("spark", "s", 0.6, MAX_BUCKET + 1, ok_rel="__ok")
+
+
+def test_simhash_ok_rel_refuses_other_max_bucket():
+    from torchfusion_spark.operators.dedup import SIMHASH_MAX_BUCKET, simhash_body_sql
+
+    assert "__ok" in simhash_body_sql("spark", "s", max_bucket=SIMHASH_MAX_BUCKET, ok_rel="__ok")
+    with pytest.raises(ValueError, match="max_bucket=16 needs the inline spelling"):
+        simhash_body_sql("spark", "s", max_bucket=16, ok_rel="__ok")

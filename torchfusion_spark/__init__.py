@@ -13,7 +13,7 @@ The reference (939 LoC Rust on DataFusion 45) contributes:
 
 Here layer B (the engine) is Spark SQL itself; layer A is this package:
 a SQL front door (:class:`~torchfusion_spark.engine.Engine`), a model
-registry producing Arrow-vectorized pandas UDFs, the ``argmax`` function,
+registry producing Arrow-native iterator UDFs, the ``argmax`` function,
 and a validated config namespace — plus large-scale data-pipeline
 extension operators (dedup, similarity, text analysis, multimodal) that go
 beyond the reference surface.

@@ -10,7 +10,11 @@ this environment, so the backend is pluggable:
   executed with numpy. Serves as the degradation path and as the oracle
   for golden tests (FIXTURES.md §3).
 
-A predictor is ``(np.ndarray[n, d]) -> np.ndarray[n, k]``.
+A predictor is ``(np.ndarray[..., rows, d]) -> np.ndarray[..., rows, k]``:
+each leading index is one forward call of ``rows`` rows. The numpy MLP
+meets this natively (a stacked ``matmul`` runs one GEMM per leading
+index); a backend whose forward takes only 2-D input is lifted to it by
+:func:`per_leading_index`.
 """
 
 from __future__ import annotations
@@ -21,6 +25,20 @@ from collections.abc import Callable
 import numpy as np
 
 Predictor = Callable[[np.ndarray], np.ndarray]
+
+
+def per_leading_index(forward: Predictor) -> Predictor:
+    """Lift a 2-D forward ``(rows, d) -> (rows, k)`` to the stacked
+    predictor contract by calling it once per leading index, so every
+    forward still sees exactly ``rows`` rows."""
+
+    def predict(x: np.ndarray) -> np.ndarray:
+        if x.ndim == 2:
+            return forward(x)
+        out = np.stack([forward(item) for item in x.reshape(-1, *x.shape[-2:])])
+        return out.reshape(*x.shape[:-2], *out.shape[1:])
+
+    return predict
 
 
 def _npz_predictor(model_bytes: bytes) -> Predictor:
@@ -52,12 +70,12 @@ def _torchscript_predictor(model_bytes: bytes, device: str, cuda_device: int) ->
     module = torch.jit.load(io.BytesIO(model_bytes), map_location=dev)
     module.eval()
 
-    def predict(x: np.ndarray) -> np.ndarray:
+    def forward(x: np.ndarray) -> np.ndarray:
         with torch.inference_mode():
             t = torch.from_numpy(np.ascontiguousarray(x)).to(dev)
             return module(t).cpu().numpy()
 
-    return predict
+    return per_leading_index(forward)
 
 
 def load_predictor(

@@ -9,6 +9,10 @@ src/udf.rs:224-248; output row width = total elements / rows :242-245).
 These functions exist standalone so the reference's unit tests
 (src/udf.rs:289-398) translate one-to-one, and so inference results are
 provably independent of batch_size (the reference's loop invariant).
+They are the per-mini-batch specification of the UDF: the hot path,
+``models.registry._score_list_array``, scores all full mini-batches of an
+Arrow batch in one stacked predictor call instead, and its tests pin it
+bit-identical to ``create_batched`` → predictor → ``flatten_batched``.
 """
 
 from __future__ import annotations

@@ -5,9 +5,11 @@ Flow (mirrors SURVEY §3.1): fetch bytes through a store abstraction on the
 driver → snapshot ``torchfusion.*`` config (freeze-at-create,
 src/lib.rs:81-94) → ``sc.broadcast`` the bytes so each executor ships them
 once → iterator-form Arrow UDF with a per-worker predictor cache: each
-batch's ListArray values and offsets are read zero-copy, mini-batched by
-models.batching and the output rebuilt as a ListArray, with no per-row
-Python object (src/udf.rs:164-179,191-248) → ``spark.udf.register``.
+batch's ListArray values and offsets are read zero-copy, its full
+``torchfusion.batch_size`` mini-batches scored by one stacked predictor
+call (one GEMM per mini-batch) plus one call for the short tail, and the
+output rebuilt as a ListArray, with no per-row or per-mini-batch Python
+call (src/udf.rs:164-179,191-248) → ``spark.udf.register``.
 
 The declared return type is honored exactly — the reference's
 ``(f64, f64)`` arm silently returns f32 (src/udf.rs:49-57); we fix that
@@ -27,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
 
 from torchfusion_spark.config import TorchConfig
-from torchfusion_spark.models.batching import create_batched, flatten_batched
 
 _SPARK_TO_NUMPY = {
     "float": np.float32,
@@ -109,6 +110,15 @@ def _score_list_array(
 ) -> pa.ListArray:
     """Score one Arrow batch of feature rows; one output list per input row.
 
+    The predictor is called at most twice: once on every full mini-batch
+    stacked as a ``(n // batch_size, batch_size, d)`` view, once on the
+    short final ``(n % batch_size, d)`` batch. Under the stacked predictor
+    contract (models/backends.py) each leading index is one forward of
+    ``batch_size`` rows, so this does exactly the arithmetic of the
+    reference's per-batch loop (src/udf.rs:191-222) — bit-identical to
+    ``create_batched`` → predictor → ``flatten_batched`` — without a Python
+    call per mini-batch.
+
     ``arr.offsets`` honors a slice of ``arr`` while ``arr.values`` is the
     whole child buffer, so the offsets index the values directly.
     """
@@ -116,13 +126,28 @@ def _score_list_array(
         raise ValueError(
             f"LANGUAGE TORCH input rows must not be NULL ({arr.null_count} of {len(arr)} are)"
         )
+    n = len(arr)
+    if n == 0:
+        return pa.array([], type=pa.list_(pa.from_numpy_dtype(out_dtype)))
     offsets = arr.offsets.to_numpy()
-    values = arr.values.to_numpy(zero_copy_only=False).astype(in_dtype, copy=False)
-    outs = [predictor(b) for b in create_batched(values, offsets, batch_size)]
-    flat, out_offsets = flatten_batched(outs)
-    return pa.ListArray.from_arrays(
-        out_offsets.astype(np.int32, copy=False), flat.astype(out_dtype, copy=False)
-    )
+    widths = np.diff(offsets)
+    width = int(widths[0])
+    if (widths != width).any():  # one reshape would misalign ragged rows
+        raise ValueError(
+            "LANGUAGE TORCH input rows must all have the same length "
+            f"(found {widths.min()} to {widths.max()} in one batch of {n})"
+        )
+    values = arr.values.to_numpy(zero_copy_only=False)[offsets[0] : offsets[-1]]
+    x = values.astype(in_dtype, copy=False).reshape(n, width)
+    full = n - n % batch_size
+    outs = []
+    if full:
+        outs.append(predictor(x[:full].reshape(-1, batch_size, width)).reshape(-1))
+    if full < n:
+        outs.append(predictor(x[full:]).reshape(-1))
+    flat = outs[0] if len(outs) == 1 else np.concatenate(outs)
+    out_offsets = np.arange(n + 1, dtype=np.int32) * np.int32(flat.size // n)
+    return pa.ListArray.from_arrays(out_offsets, flat.astype(out_dtype, copy=False))
 
 
 def register_torch_udf(

@@ -266,7 +266,14 @@ def minhash_body_sql(
     bucket-size window run once per corpus instead of twice per query
     (plan: 2 × [Exchange → Window] → 1 staged build; see
     plans/r17/dedup_minhash_lsh_*). The oracle keeps the inline CTE
-    chain — DuckDB's MATERIALIZED CTEs evaluate once already."""
+    chain — DuckDB's MATERIALIZED CTEs evaluate once already. The staged
+    relation is capped at ``MAX_BUCKET``, so any other ``max_bucket``
+    with ``ok_rel`` raises instead of being silently ignored."""
+    if ok_rel is not None and max_bucket != MAX_BUCKET:
+        raise ValueError(
+            f"ok_rel {ok_rel!r} is capped at MAX_BUCKET={MAX_BUCKET}; "
+            f"max_bucket={max_bucket} needs the inline spelling (ok_rel=None)"
+        )
     inter = G.arr_intersect_size("x.hx", "y.hx", d)
     mat = "MATERIALIZED " if d == "duck" else ""
     if ok_rel is None:
@@ -547,7 +554,14 @@ def simhash_body_sql(
 
     ``ok_rel`` (Spark arm only, r17): a MATERIALIZED capped banded
     relation (:func:`simhash_ok_sql`) to self-join directly — same
-    staged-``ok`` discipline as :func:`minhash_body_sql`."""
+    staged-``ok`` discipline as :func:`minhash_body_sql`, including its
+    refusal of a ``max_bucket`` other than the staged cap
+    (``SIMHASH_MAX_BUCKET``)."""
+    if ok_rel is not None and max_bucket != SIMHASH_MAX_BUCKET:
+        raise ValueError(
+            f"ok_rel {ok_rel!r} is capped at SIMHASH_MAX_BUCKET={SIMHASH_MAX_BUCKET}; "
+            f"max_bucket={max_bucket} needs the inline spelling (ok_rel=None)"
+        )
     ham = f"bit_count({G.xor('sim_a', 'sim_b', d)})"
     if ok_rel is None:
         bands = bits // 8
