@@ -267,10 +267,10 @@ def main() -> None:
     staging_warm = time.perf_counter()
     staging_components: dict = {}
     try:
-        # The staging schedule (builders, dependency phases, pool width
-        # and its rationale) lives in torchfusion_spark/staging.py — ONE
-        # copy shared with tools/perf_probe.py (code-review r16: the two
-        # hand-duplicated lists drifted).
+        # The staging schedule (the registry's prewarm relations, each
+        # submitted once its declared deps finish, and the pool width)
+        # lives in torchfusion_spark/staging.py — ONE copy shared with
+        # tools/perf_probe.py.
         from torchfusion_spark.staging import prewarm_staging
 
         # Per-relation itemization (VERDICT r15 item 4): each component's

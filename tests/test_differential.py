@@ -1870,16 +1870,13 @@ def test_differential_pack_sequences_prefix_sum(spark, duck, restore_documents, 
     duck.execute("CREATE OR REPLACE VIEW documents AS SELECT * FROM pdf")
     # the registry path: staged (lang, shard)-partitioned input relation
     # (the r15 single-scan plan), keyed on the swapped docs view per case
-    from torchfusion_spark.operators.textstats import _staged_pack_t
+    from torchfusion_spark.staging import stage
 
+    t_rel = stage(spark, "pack_tokens", shards=shards)
     got = [
         tuple(r)
-        for r in _staged_pack_t(
-            spark,
-            then=lambda t_rel: spark.sql(
-                pack_sequences_sql("spark", seq_len, shards, t_rel=t_rel)
-            ),
-            shards=shards,
+        for r in spark.sql(
+            pack_sequences_sql("spark", seq_len, shards, t_rel=t_rel)
         ).collect()
     ]
     want = [

@@ -820,3 +820,24 @@ def test_copy_to_arrow_roundtrip(engine, tables, tmp_path):
     engine.sql(f"CREATE EXTERNAL TABLE region_copyback STORED AS ARROW LOCATION '{p}'")
     assert engine.sql("SELECT count(*) AS n FROM region_copyback").collect()[0].n == 2
     engine.spark.catalog.dropTempView("region_copyback")
+
+
+def test_configure_keeps_preset_settings_and_seeds_missing(spark):
+    """``configure`` seeds only the torchfusion.* keys a session lacks: a
+    preset value survives it, a missing key gets its default."""
+    from torchfusion_spark.session import configure
+
+    keys = ("torchfusion.batch_size", "torchfusion.device")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set("torchfusion.batch_size", "7")
+        spark.conf.unset("torchfusion.device")
+        configure(spark)
+        assert spark.conf.get("torchfusion.batch_size") == "7"
+        assert spark.conf.get("torchfusion.device") == "cpu"
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

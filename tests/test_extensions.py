@@ -721,20 +721,23 @@ def test_scored_checkpoint_reused_across_scorer_queries(spark, tables):
     pool entry survives the second query untouched, and a docs-view
     swap (different corpus) rebuilds it."""
     from torchfusion_spark.plans import REGISTRY
+    from torchfusion_spark.staging import built
+
+    def handle(name):  # the staged entry's checkpoint handle
+        return built(spark, name).checkpoints[0]
 
     REGISTRY["text_quality_classifier"].builder(spark, tables).count()
-    pool = spark.__dict__["_tf_ck_pool"]
-    handle_cls = pool["cls_scored"]
+    handle_cls = handle("cls_scored")
     REGISTRY["pipeline_quality_ensemble"].builder(spark, tables).count()
-    assert pool["cls_scored"] is handle_cls  # memo hit — no rescore
-    handle_ppl = pool["ppl_scored"]  # built by the ensemble
+    assert handle("cls_scored") is handle_cls  # memo hit — no rescore
+    handle_ppl = handle("ppl_scored")  # built by the ensemble
     REGISTRY["text_lm_perplexity"].builder(spark, tables).count()
-    assert pool["ppl_scored"] is handle_ppl  # perplexity reuses it too
+    assert handle("ppl_scored") is handle_ppl  # perplexity reuses it too
     orig = spark.table("documents")
     try:
         orig.filter("doc_id % 2 = 0").createOrReplaceTempView("documents")
         REGISTRY["text_quality_classifier"].builder(spark, tables).count()
-        assert pool["cls_scored"] is not handle_cls  # corpus swap rebuilds
+        assert handle("cls_scored") is not handle_cls  # corpus swap rebuilds
     finally:
         orig.createOrReplaceTempView("documents")
 
@@ -1445,9 +1448,9 @@ def test_bm25_topk_matches_python(spark, tables):
     from torchfusion_spark.operators.textstats import (
         BM25_QUERIES,
         BM25_TOP_K,
-        _staged_unigrams,
         bm25_topk_sql,
     )
+    from torchfusion_spark.staging import stage
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1488,7 +1491,7 @@ def test_bm25_topk_matches_python(spark, tables):
         want[q] = [(d, float(s), m) for d, (s, m) in ranked[:BM25_TOP_K]]
 
     got = spark.sql(
-        bm25_topk_sql("spark", tf_rel=_staged_unigrams(spark))
+        bm25_topk_sql("spark", tf_rel=stage(spark, "unigrams"))
     ).collect()
     by_q: dict[int, list] = {}
     for r in got:
@@ -1540,7 +1543,8 @@ def test_lm_perplexity_matches_python(spark, tables):
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from torchfusion_spark.operators.textstats import _staged_unigrams, lm_perplexity_sql
+    from torchfusion_spark.operators.textstats import lm_perplexity_sql
+    from torchfusion_spark.staging import stage
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1581,7 +1585,7 @@ def test_lm_perplexity_matches_python(spark, tables):
             buckets[d] = ["head", "middle", "tail"][b - 1]
 
     got = spark.sql(
-        lm_perplexity_sql("spark", tf_rel=_staged_unigrams(spark))
+        lm_perplexity_sql("spark", tf_rel=stage(spark, "unigrams"))
     ).collect()
     assert len(got) == len(per_doc)
     for r in got:
@@ -1605,9 +1609,9 @@ def test_dsir_importance_matches_python(spark, tables):
 
     from torchfusion_spark.operators.textstats import (
         DSIR_BUCKETS,
-        _staged_unigrams,
         dsir_importance_sql,
     )
+    from torchfusion_spark.staging import stage
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -1655,7 +1659,7 @@ def test_dsir_importance_matches_python(spark, tables):
     quintile = {d: _cut_bucket(scored[d][1], cuts, desc=True) for d in scored}
 
     got = spark.sql(
-        dsir_importance_sql("spark", tf_rel=_staged_unigrams(spark))
+        dsir_importance_sql("spark", tf_rel=stage(spark, "unigrams"))
     ).collect()
     assert len(got) == len(scored)
     for r in got:
@@ -1680,7 +1684,8 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
     pattern, which does NOT bump spark._tf_tables_loaded — memo-hit on
     the tables key and served corpus A's cached grams to corpus B's
     anti-join, silently mixing corpora in the span operators."""
-    from torchfusion_spark.operators import dedup, similarity, textstats
+    from torchfusion_spark.operators import dedup
+    from torchfusion_spark.staging import stage
 
     def corpus(dup_ids, filler):
         run = " ".join(f"d{i}" for i in range(10))  # shared 10-token run
@@ -1699,7 +1704,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
             ).createOrReplaceTempView("documents")
             spans = spark.sql(
                 dedup.substring_body_sql(
-                    "spark", dedup._staged_substring_grams(spark), dedup.SUBSTRING_K
+                    "spark", stage(spark, "substring_grams"), dedup.SUBSTRING_K
                 )
             ).collect()
             assert {r.doc_id for r in spans} == set(dup_ids), (dup_ids, spans)
@@ -1709,7 +1714,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
             assert {r.doc_id for r in stripped if r.removed_tokens > 0} <= set(dup_ids)
             # unigram memo (BM25/LM/DSIR side): tokens must come from the
             # live corpus — filler tokens are disjoint between corpora
-            uni = spark.table(textstats._staged_unigrams(spark))
+            uni = spark.table(stage(spark, "unigrams"))
             toks = {r.tok for r in uni.select("tok").distinct().collect()}
             assert any(t.startswith(filler) for t in toks), filler
             other = "b" if filler == "a" else "a"
@@ -1721,7 +1726,7 @@ def test_view_swap_invalidates_derived_staged_memos(spark, tables):
                 [(i, [float(i + 1), 1.0]) for i in range(n_vec)],
                 "vec_id bigint, embedding array<double>",
             ).createOrReplaceTempView("embeddings")
-            norms = spark.table(similarity._staged_norms(spark))
+            norms = spark.table(stage(spark, "sim_norms"))
             assert norms.count() == n_vec
     finally:
         orig_docs.createOrReplaceTempView("documents")
@@ -1735,42 +1740,42 @@ def test_staged_assign_memoizes_and_invalidates(spark, tables):
     memo-hit (no re-cache), the staged rows must equal the inline
     assign_cte_sql arm, and an embeddings-view swap must rebuild."""
     from torchfusion_spark.operators import similarity
+    from torchfusion_spark.staging import built
 
     orig_emb = spark.table("embeddings")
     try:
         similarity.ivf_topk(spark).collect()
-        pool = spark.__dict__["_tf_staged_pool"]
-        first = pool["sim_assign_16"]
+        first = built(spark, "sim_assign", n_centroids=16)
         # staged rows == the inline CTE arm on the same corpus
         staged = sorted(
-            (r.vec_id, r.c_id) for r in spark.table("__sim_assign_16").collect()
+            (r.vec_id, r.c_id) for r in spark.table(first.result).collect()
         )
         inline = sorted(
             (r.vec_id, r.c_id)
             for r in spark.sql(
-                similarity.assign_cte_sql("spark", 16, rel="__sim_norms")
+                similarity.assign_cte_sql("spark", 16, rel=built(spark, "sim_norms").result)
             ).collect()
         )
         assert staged == inline and staged
         # second consumer memo-hits: the cached DataFrame is not replaced
         similarity.semantic_dedup(spark).collect()
-        assert pool["sim_assign_16"] is first
+        assert built(spark, "sim_assign", n_centroids=16) is first
         # a sibling n_centroids staged on the same corpus
         similarity.ivf_topk(spark, n_centroids=4).collect()
-        assert "sim_assign_4" in pool
-        # embeddings swap invalidates: the slot is re-staged on next use,
-        # and the sibling-n slot from the superseded corpus is RELEASED
-        # (code-review r16 second pass — staged_cache only unpersists on
-        # same-slot reuse, so without the purge sim_assign_4 would pin
-        # old-corpus executor storage for the session)
+        assert built(spark, "sim_assign", n_centroids=4) is not None
+        # embeddings swap invalidates: the relation is re-staged on next
+        # use, and the sibling-n entry from the superseded corpus is
+        # RELEASED (code-review r16 second pass — without the purge
+        # sim_assign n=4 would pin old-corpus executor storage for the
+        # session)
         spark.createDataFrame(
             [(i, [float(i + 1), 1.0]) for i in range(20)],
             "vec_id bigint, embedding array<double>",
         ).createOrReplaceTempView("embeddings")
         similarity.ivf_topk(spark).collect()
-        assert pool["sim_assign_16"] is not first
-        assert spark.table("__sim_assign_16").count() == 20
-        assert "sim_assign_4" not in pool
+        assert built(spark, "sim_assign", n_centroids=16) is not first
+        assert spark.table(built(spark, "sim_assign", n_centroids=16).result).count() == 20
+        assert built(spark, "sim_assign", n_centroids=4) is None
     finally:
         orig_emb.createOrReplaceTempView("embeddings")
 
@@ -2182,12 +2187,13 @@ def test_quantile_cut_approx_production_path(spark, tables):
     and a populated bucket distribution. The oracle gate always runs
     exact; this pins that the swap is a real code path, not a docstring."""
     from torchfusion_spark.operators import textstats
+    from torchfusion_spark.staging import stage
 
     try:
         textstats.QUANTILE_EXACT = False
         df = spark.sql(
             textstats.dsir_importance_sql(
-                "spark", tf_rel=textstats._staged_unigrams(spark)
+                "spark", tf_rel=stage(spark, "unigrams")
             )
         )
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -2221,10 +2227,10 @@ def test_quality_classifier_matches_python_recompute(spark, tables):
     from torchfusion_spark.operators.textstats import (
         CLS_TRAIN_PCT,
         DSIR_BUCKETS,
-        _staged_unigrams,
         gopher_rules_sql,
         quality_classifier_sql,
     )
+    from torchfusion_spark.staging import stage
 
     def r9(x: float) -> Decimal:
         return Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP)
@@ -2286,7 +2292,7 @@ def test_quality_classifier_matches_python_recompute(spark, tables):
     quintile = {d: _cut_bucket(scored[d][1], cuts, desc=True) for d in scored}
 
     got = spark.sql(
-        quality_classifier_sql("spark", tf_rel=_staged_unigrams(spark))
+        quality_classifier_sql("spark", tf_rel=stage(spark, "unigrams"))
     ).collect()
     assert len(got) == len(scored)
     for r in got:
@@ -2316,15 +2322,13 @@ def test_quality_ensemble_composes_its_signals(spark, tables):
     bucket): signals, agreement count, tier and majority keep recomputed
     per doc from the sub-operators' own Spark outputs."""
     from torchfusion_spark.operators.textstats import (
-        _staged_labels,
-        _staged_unigrams,
         lm_perplexity_sql,
         quality_classifier_sql,
         quality_ensemble_sql,
     )
+    from torchfusion_spark.staging import stage
 
-    tfn = _staged_unigrams(spark)
-    labn = _staged_labels(spark)
+    tfn, labn = stage(spark, "unigrams", "quality_labels")
     cls = {
         r.doc_id: r
         for r in spark.sql(

@@ -113,9 +113,11 @@ def test_minhash_cap_preserves_normal_corpus_pairs(spark, tables):
     """On the real (non-skewed) test corpus the cap must not change the
     pair set: no bucket exceeds MAX_BUCKET there."""
     from torchfusion_spark.operators.dedup import minhash_body_sql, minhash_lsh
+    from torchfusion_spark.staging import stage
 
     pairs_capped = minhash_lsh(spark).toPandas()
-    uncapped_body = minhash_body_sql("spark", "__minhash_sig", 0.6, max_bucket=10**9)
+    sig, _ = stage(spark, "minhash_sig")
+    uncapped_body = minhash_body_sql("spark", sig, 0.6, max_bucket=10**9)
     pairs_uncapped = spark.sql(uncapped_body).toPandas()
     pd.testing.assert_frame_equal(pairs_capped, pairs_uncapped)
 
@@ -317,15 +319,15 @@ def test_staged_lifecycle_no_storage_leak(spark, tables):
     assert jsc.getPersistentRDDs().size() == before + 1
 
     # operators: persistent-RDD count is stable across repeat invocations
-    from torchfusion_spark.operators import textstats
+    from torchfusion_spark.staging import stage
 
     dedup.containment(spark).count()
     similarity.kmeans(spark).count()
-    textstats._staged_bloom(spark)
+    stage(spark, "bloom_filter")
     steady = jsc.getPersistentRDDs().size()
     dedup.containment(spark).count()
     similarity.kmeans(spark).count()
-    textstats._staged_bloom(spark)
+    stage(spark, "bloom_filter")
     assert jsc.getPersistentRDDs().size() == steady
 
 
@@ -336,9 +338,10 @@ def test_staged_bloom_rebuilds_on_table_reload(spark, tables):
     the failure mode would be silently decontaminating against the wrong
     benchmark suite."""
     from torchfusion_spark.operators import textstats
+    from torchfusion_spark.staging import stage
 
-    textstats._staged_bloom(spark)
-    before = spark.table("__tf_bench_h").count()
+    bench, _ = stage(spark, "bloom_filter")
+    before = spark.table(bench).count()
 
     orig_docs = spark.table("documents")
     orig_key = spark._tf_tables_loaded
@@ -346,19 +349,19 @@ def test_staged_bloom_rebuilds_on_table_reload(spark, tables):
         # a different corpus: keep only every 4th doc
         orig_docs.where("doc_id % 4 = 0").createOrReplaceTempView("documents")
         spark._tf_tables_loaded = (orig_key, "bloom-switch-probe")
-        textstats._staged_bloom(spark)
-        after = spark.table("__tf_bench_h").count()
+        bench, bloom = stage(spark, "bloom_filter")
+        after = spark.table(bench).count()
         assert after < before  # fewer bench docs -> fewer bench hashes
         # and the filter matches a from-scratch fold over the new set
         want = spark.sql(
-            textstats.bloom_fold_sql("spark", "__tf_bench_h")
+            textstats.bloom_fold_sql("spark", bench)
         ).collect()
-        got = spark.table("__tf_bloom").collect()
+        got = spark.table(bloom).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     finally:
         orig_docs.createOrReplaceTempView("documents")
         spark._tf_tables_loaded = orig_key
-        textstats._staged_bloom(spark)  # restore the real staging
+        stage(spark, "bloom_filter")  # restore the real staging
 
 
 def test_cap_recall_loss_exact_counts(spark, tables):
@@ -384,6 +387,7 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         minhash_capped_bucket_stats,
         simhash_capped_bucket_stats,
     )
+    from torchfusion_spark.staging import stage
 
     n_boiler = MAX_BUCKET + 16  # 80: every all-boilerplate bucket is hot
     boiler = "license header boilerplate text repeated verbatim across the corpus shard"
@@ -402,10 +406,9 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         spark.createDataFrame(
             rows, "doc_id bigint, text string, lang string, n_chars int"
         ).createOrReplaceTempView("documents")
-        # new memo key → minhash_lsh re-stages __minhash_sig over the
+        # new tables key → minhash_lsh re-stages the signature over the
         # synthetic view instead of reusing the fixture corpus signature
         spark._tf_tables_loaded = ("__cap_recall_synthetic__",)
-        spark._tf_minhash_sig_key = object()
 
         mh = minhash_capped_bucket_stats(spark).toPandas()
         assert len(mh) == 8
@@ -419,9 +422,10 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         assert set(sh["bsz"]) == {n_boiler}
 
         pair = lambda df: {(r.id_a, r.id_b) for r in df.collect()}  # noqa: E731
-        capped = pair(spark.sql(minhash_body_sql("spark", "__minhash_sig", 0.6)))
+        sig, _ = stage(spark, "minhash_sig")
+        capped = pair(spark.sql(minhash_body_sql("spark", sig, 0.6)))
         uncapped = pair(
-            spark.sql(minhash_body_sql("spark", "__minhash_sig", 0.6, max_bucket=10**9))
+            spark.sql(minhash_body_sql("spark", sig, 0.6, max_bucket=10**9))
         )
         boiler_ids = {1_000_000 + i for i in range(n_boiler)}
         boiler_pairs = {p for p in uncapped if p[0] in boiler_ids and p[1] in boiler_ids}
@@ -429,9 +433,9 @@ def test_cap_recall_loss_exact_counts(spark, tables):
         assert capped == uncapped - boiler_pairs  # loss = exactly the block
         assert (1, 2) in capped  # the organic near-dup pair survives the cap
     finally:
-        # restore the fixture corpus: reload tables and invalidate memos
+        # restore the fixture corpus: reload tables (a new tables key
+        # re-stages every relation built on the synthetic view)
         spark._tf_tables_loaded = None
-        spark._tf_minhash_sig_key = object()
         from torchfusion_spark.sources import load_tables
 
         load_tables(spark, tables)
@@ -518,17 +522,14 @@ def test_staged_ok_matches_inline_band_relation(spark, tables):
         SIMHASH_MAX_BUCKET,
         G,
         _simhash_band_keys,
-        _staged_simhash_sig,
-        minhash_lsh,
     )
 
     from torchfusion_spark.operators import similarity as sim
+    from torchfusion_spark.staging import stage
 
-    minhash_lsh(spark)  # stages __minhash_sig + __minhash_ok
-    _staged_simhash_sig(spark)  # stages __simhash_sig + __simhash_ok
-    mm._staged_phash(spark)  # stages __mm_phash + __mm_phash_ok
-    mm._staged_frame_phash(spark)  # stages __mm_fphash + __mm_fphash_ok
-    sim._staged_buckets(spark, lambda rel: None)  # stages __sim_lsh_ok too
+    (mh_sig, mh_ok), (sh_sig, sh_ok), (mm_sig, mm_ok), (fp_sig, fp_ok), (sb, sb_ok) = stage(
+        spark, "minhash_sig", "simhash_sig", "payload_phash", "frame_phash", "sim_buckets"
+    )
 
     def inline_ok(sig_view, band_keys, carry, cap):
         band_rel = G.band_explode(sig_view, band_keys, "spark", carry=carry)
@@ -541,14 +542,14 @@ def test_staged_ok_matches_inline_band_relation(spark, tables):
 
     fsig = (
         f"(SELECT doc_id * {mm.FRAME_KEY_MULT} + frame_idx AS doc_id, "
-        f"simhash FROM __mm_fphash)"
+        f"simhash FROM {fp_sig})"
     )
     cases = [
-        ("__minhash_ok", "__minhash_sig", G.band_exprs("sig", "spark"), "doc_id", MAX_BUCKET),
-        ("__simhash_ok", "__simhash_sig", _simhash_band_keys(4, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
-        ("__mm_phash_ok", "__mm_phash", _simhash_band_keys(mm.PHASH_BITS // 8, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
-        ("__mm_fphash_ok", fsig, _simhash_band_keys(mm.PHASH_BITS // 8, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
-        ("__sim_lsh_ok", "__sim_buckets", list(sim.MB_COLS), "vec_id, v, nrm", sim.LSH_MAX_BUCKET),
+        (mh_ok, mh_sig, G.band_exprs("sig", "spark"), "doc_id", MAX_BUCKET),
+        (sh_ok, sh_sig, _simhash_band_keys(4, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
+        (mm_ok, mm_sig, _simhash_band_keys(mm.PHASH_BITS // 8, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
+        (fp_ok, fsig, _simhash_band_keys(mm.PHASH_BITS // 8, "spark"), "doc_id, simhash", SIMHASH_MAX_BUCKET),
+        (sb_ok, sb, list(sim.MB_COLS), "vec_id, v, nrm", sim.LSH_MAX_BUCKET),
     ]
     for staged_view, sig_view, band_keys, carry, cap in cases:
         staged = spark.table(staged_view)

@@ -1,0 +1,184 @@
+"""The session-staging registry (``torchfusion_spark.staging``): the
+prewarm contract the benchmark and bench read, declaration-time DAG
+checks, and build-once / one-corpus binding under concurrency."""
+
+from __future__ import annotations
+
+import dataclasses
+import threading
+import time
+from collections import Counter
+
+import pytest
+
+# perfbench/workloads.py STAGING_COMPONENTS: the names the benchmark
+# reports as staging.<component>_s, each the wall of its own build
+STAGING_COMPONENTS = {
+    "hx_shingles",
+    "sim_norms",
+    "substring_grams",
+    "unigrams",
+    "payload_phash",
+    "frame_phash",
+    "doc_lines",
+    "pack_tokens",
+    "li_by_order",
+    "url_index",
+    "minhash_clusters",
+    "bloom_filter",
+    "containment_index",
+    "quality_labels",
+    "sim_assign",
+    "sim_buckets",
+}
+
+
+def test_prewarm_runs_each_component_once_after_its_deps(spark, tables):
+    from torchfusion_spark.staging import prewarm_deps, prewarm_staging
+
+    spans: dict[str, list[tuple[float, float]]] = {}
+    lock = threading.Lock()
+
+    def timed(name, fn, *args):
+        t0 = time.perf_counter()
+        fn(*args)
+        t1 = time.perf_counter()
+        with lock:
+            spans.setdefault(name, []).append((t0, t1))
+
+    prewarm_staging(spark, timed=timed)
+    assert set(spans) == STAGING_COMPONENTS
+    assert all(len(v) == 1 for v in spans.values()), spans
+    for name, [(start, _)] in spans.items():
+        for dep in prewarm_deps(name):
+            assert spans[dep][0][1] <= start, (name, dep)
+    # the dependency edges the schedule must honour are really declared
+    assert prewarm_deps("minhash_clusters") == {"hx_shingles"}
+    assert prewarm_deps("quality_labels") == {"unigrams"}
+    assert prewarm_deps("sim_buckets") == {"sim_norms"}
+
+
+def test_declare_rejects_unknown_dep_and_cycle():
+    from torchfusion_spark.staging import REGISTRY, declare
+
+    def build(ctx):
+        return None
+
+    try:
+        with pytest.raises(ValueError, match="undeclared"):
+            declare("t_orphan", deps=("t_no_such_relation",))(build)
+        assert "t_orphan" not in REGISTRY
+        declare("t_a")(build)
+        declare("t_b", deps=("t_a",))(build)
+        with pytest.raises(ValueError, match="cycle"):
+            declare("t_a", deps=("t_b",))(build)
+        with pytest.raises(ValueError, match="cycle"):
+            declare("t_a", deps=("t_a",))(build)
+        assert REGISTRY["t_a"].deps == ()  # a rejected redeclaration changes nothing
+    finally:
+        for n in ("t_orphan", "t_a", "t_b"):
+            REGISTRY.pop(n, None)
+
+
+def test_concurrent_cold_start_builds_each_key_once_on_one_corpus(spark, tables):
+    """Four threads cold-start consumers of ``hx_shingles`` while the
+    ``documents`` view is swapped mid-flight: every input identity is
+    built exactly once, and every consumer reads exactly one corpus."""
+    from torchfusion_spark.operators.dedup import hashed_shingle_sql
+    from torchfusion_spark.staging import REGISTRY, stage
+
+    def corpus(tag):
+        return spark.createDataFrame(
+            [
+                (i, "en", " ".join(f"{tag}{i}w{j}" for j in range(8)) + " shared tail words here")
+                for i in range(12)
+            ],
+            "doc_id bigint, lang string, text string",
+        )
+
+    a, b = corpus(f"a{time.time_ns()}"), corpus(f"b{time.time_ns()}")
+
+    def shingles(df):
+        df.createOrReplaceTempView("__t_corpus")
+        rows = spark.sql(hashed_shingle_sql("spark", rel="__t_corpus")).collect()
+        return {(r.doc_id, tuple(sorted(r.hx))) for r in rows}
+
+    want = {"a": shingles(a), "b": shingles(b)}
+    assert want["a"] != want["b"]
+
+    lock = threading.Lock()
+    builds: Counter = Counter()
+    hx_started = threading.Event()
+    originals = {}
+    for name in ("documents", "hx_shingles"):
+        orig = originals[name] = REGISTRY[name]
+
+        def build(ctx, _orig=orig, _name=name):
+            ident = ctx.key if _name == "documents" else ctx.deps["docs"].tag
+            with lock:
+                builds[(_name, ident)] += 1
+            if _name == "hx_shingles":
+                hx_started.set()
+                time.sleep(0.5)  # hold the build open across the swap
+            return _orig.build(ctx)
+
+        REGISTRY[name] = dataclasses.replace(orig, build=build)
+
+    results, errors = [], []
+
+    def consumer():
+        try:
+            rows = spark.table(stage(spark, "hx_shingles")).collect()
+            got = {(r.doc_id, tuple(sorted(r.hx))) for r in rows}
+            with lock:
+                results.append(got)
+        except Exception as exc:  # noqa: BLE001 — surfaced by the assert below
+            with lock:
+                errors.append(exc)
+
+    orig_docs = spark.table("documents")
+    try:
+        a.createOrReplaceTempView("documents")
+        early = [threading.Thread(target=consumer) for _ in range(2)]
+        for t in early:
+            t.start()
+        assert hx_started.wait(timeout=120)
+        b.createOrReplaceTempView("documents")  # mid-flight swap
+        late = [threading.Thread(target=consumer) for _ in range(2)]
+        for t in late:
+            t.start()
+        for t in early + late:
+            t.join(timeout=600)
+    finally:
+        REGISTRY.update(originals)
+        orig_docs.createOrReplaceTempView("documents")
+
+    assert not errors, errors
+    assert len(results) == 4
+    for got in results:
+        assert [c for c in want if want[c] == got] in (["a"], ["b"])
+    assert any(got == want["a"] for got in results)
+    assert any(got == want["b"] for got in results)
+    assert builds and set(builds.values()) == {1}, builds
+    assert sum(1 for n, _ in builds if n == "hx_shingles") == 2
+
+
+def test_restaging_the_same_corpus_keeps_its_cache(spark, tables):
+    """A relation re-staged on the rows it was first staged on (view
+    swapped away and back) caches the same plan again; releasing the
+    superseded entry must not uncache the live one."""
+    from pyspark import StorageLevel
+
+    from torchfusion_spark.staging import stage
+
+    orig = spark.table("documents")
+    try:
+        stage(spark, "minhash_sig")
+        orig.filter("doc_id % 2 = 0").createOrReplaceTempView("documents")
+        stage(spark, "hx_shingles")  # minhash_sig is not re-staged here
+        orig.createOrReplaceTempView("documents")
+        sig, ok = stage(spark, "minhash_sig")
+        for view in (sig, ok):
+            assert spark.table(view).storageLevel != StorageLevel.NONE, view
+    finally:
+        orig.createOrReplaceTempView("documents")

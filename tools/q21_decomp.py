@@ -48,13 +48,13 @@ def main() -> None:
 
     from torchfusion_spark import session
     from torchfusion_spark.plans import REGISTRY
-    from torchfusion_spark.plans.relational2 import _staged_li_by_order
     from torchfusion_spark.sources import load_tables
+    from torchfusion_spark.staging import stage
 
     spark = session()
     load_tables(spark, sf_dir)
     t0 = time.perf_counter()
-    rel = _staged_li_by_order(spark)
+    rel = stage(spark, "li_by_order")
     stage_sec = round(time.perf_counter() - t0, 4)
     path = (
         spark.sql(f"DESCRIBE TABLE EXTENDED {rel}")

@@ -57,13 +57,13 @@ def main() -> None:
         MAX_BUCKET,
         NGRAM_MAX_BLOCK,
         SIMHASH_MAX_BUCKET,
-        _staged_hx,
         minhash_capped_bucket_stats,
         ngram_blocks_sql,
         simhash_capped_bucket_stats,
     )
     from torchfusion_spark.session import session
     from torchfusion_spark.sources import load_tables
+    from torchfusion_spark.staging import stage
 
     spark = session(app_name="skew_caps_report")
     load_tables(spark, sf_dir)
@@ -123,9 +123,10 @@ def main() -> None:
     # the exploded relation and the prune predicate are the operator's
     # OWN spellings (dedup.containment_exploded_spark_sql /
     # containment_stop_body_sql), so this report cannot measure a
-    # different cap than _staged_containment applies
+    # different cap than the staged containment index applies
+    hx = stage(spark, "hx_shingles")
     stop = spark.sql(
-        f"WITH exploded AS ({dedup.containment_exploded_spark_sql(_staged_hx(spark))}) "
+        f"WITH exploded AS ({dedup.containment_exploded_spark_sql(hx)}) "
         f"{dedup.containment_stop_body_sql('exploded', CONTAIN_MAX_DF)}"
     ).collect()
     report["caps"]["containment_df_prune"] = {
@@ -138,7 +139,7 @@ def main() -> None:
 
     # substring dedup has NO cap by design — linear in hot-gram
     # occurrences; report the hottest gram so the no-cap claim is measured
-    grams = dedup._staged_substring_grams(spark)
+    grams = stage(spark, "substring_grams")
     hot_gram = spark.sql(
         f"SELECT hx, COUNT(*) AS occurrences, COUNT(DISTINCT doc_id) AS docs "
         f"FROM {grams} GROUP BY hx ORDER BY occurrences DESC LIMIT 1"
@@ -160,7 +161,7 @@ def main() -> None:
     # different feature space than the classifier aggregates).
     from torchfusion_spark.operators import textstats
 
-    tfn = textstats._staged_unigrams(spark)
+    tfn = stage(spark, "unigrams")
     # the rollup output is bounded at 64Ki rows — collect ONCE and
     # derive max/median/histogram in Python instead of re-running the
     # corpus-scale GROUP BY per statistic (code-review r11)

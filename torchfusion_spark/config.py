@@ -122,9 +122,7 @@ def validate(key: str, value: str) -> str:
 def seed_defaults(spark: SparkSession) -> None:
     """Install defaults for any torchfusion.* key not already set."""
     for key, default in _DEFAULTS.items():
-        try:
-            spark.conf.get(key)
-        except Exception:
+        if spark.conf.get(key, None) is None:
             spark.conf.set(key, default)
 
 

@@ -20,9 +20,9 @@ from __future__ import annotations
 
 import itertools
 import os
-import threading
 
 from torchfusion_spark.operators import sqlgen as G
+from torchfusion_spark.staging import declare, stage, table_key
 
 
 def exact_dedup_sql(d: str) -> str:
@@ -328,151 +328,65 @@ def minhash_lsh_sql(d: str, threshold: float = 0.6) -> str:
 
 
 def minhash_lsh(spark, threshold: float = 0.6, ordered: bool = True):
-    """Spark-side staged execution: materialize the signature relation
-    (doc_id, hx, sig) ONCE (it is ~1% of the input; at 100 TB this is
-    persist-to-disk or a checkpoint), then run the band/verify pipeline
-    over the cached view — the shingle pass, the md5 pass and the 16-perm
-    fold each run exactly once regardless of how many times the self-join
-    references the relation.
-
-    The input is repartitioned first: a single small parquet file arrives
-    as ONE partition and shingling is CPU-bound — without the fan-out the
-    whole stage runs on one core. Width adapts to the row count
-    (cpu_fanout): full parallelism at scale, a few tasks at gate sf.
-
-    The staged signature is memoized per (session, loaded tables):
-    ``minhash_clusters`` runs the identical signature pipeline immediately
-    after ``minhash_lsh`` in gate order, and recomputing the one expensive
-    pass (shingle + md5 + fold) would double its cost for nothing. The key
-    follows the docs-view identity, so switching sf_dir OR swapping the
-    view directly rebuilds."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    with memo_lock(spark, "minhash_sig"):
-        if getattr(spark, "_tf_minhash_sig_key", object()) != key:
-            # derive from the SESSION-STAGED hashed-shingle relation shared
-            # with containment/decontaminate — the shingle+md5 pass is the
-            # dominant cost of every shingle-based operator and previously ran
-            # a second time here over a private docs view
-            # (r16 note: a NumPy-under-mapInArrow spelling of the signature
-            # fold was measured SLOWER than this SQL fold — warm noop-sink
-            # 0.59s vs 0.21s at sf0.1, plus ~10s cold Python-worker spin-up —
-            # because the hx array column must round-trip the Arrow boundary
-            # for the Jaccard verify; the JVM fold stays)
-            sig = staged_cache(
-                spark,
-                "minhash_sig",
-                spark.sql(sig_rel_sql("spark", _staged_hx(spark))),
-            )
-            sig.count()  # materialize before the self-join races both sides into the fill
-            sig.createOrReplaceTempView("__minhash_sig")
-            # stage the capped banded relation beside the signature (r17):
-            # the candidate self-join reads it on BOTH sides, and the
-            # cached plan keeps its (band, bkey) hash partitioning, so the
-            # join needs no exchange at all — the explode + bucket-size
-            # window run once per corpus here (cost visible in the
-            # first-run/staging bill, same key/lock as the signature)
-            ok = staged_cache(
-                spark,
-                "minhash_ok",
-                spark.sql(minhash_ok_sql("spark", "__minhash_sig")),
-            )
-            ok.count()  # same fill-race rule as the signature
-            ok.createOrReplaceTempView("__minhash_ok")
-            spark._tf_minhash_sig_key = key
-        # resolve the returned plan INSIDE the memo lock: resolving after
-        # release would let a concurrent docs-view swap replace
-        # __minhash_sig between the memo check and spark.sql, binding the
-        # plan to the other corpus's signatures (ADVICE r08 TOCTOU)
-        return spark.sql(
-            minhash_body_sql(
-                "spark",
-                "__minhash_sig",
-                threshold,
-                ordered=ordered,
-                ok_rel="__minhash_ok",
-            )
-        )
-
-
-_DOCS_LOCK = threading.Lock()
+    """Spark-side staged execution: the band/verify pipeline over the
+    session-staged signature relation (doc_id, hx, sig) and its capped
+    banded relation (``minhash_sig`` below) — the shingle pass, the md5
+    pass and the 16-perm fold each run once per corpus regardless of how
+    many times the self-join references the relation, and
+    ``minhash_clusters`` reuses them right after in gate order."""
+    sig, ok = stage(spark, "minhash_sig")
+    return spark.sql(
+        minhash_body_sql("spark", sig, threshold, ordered=ordered, ok_rel=ok)
+    )
 
 
 def _docs_key(spark):
-    """Identity of the live ``documents`` view for staged-memo keying:
-    (load_tables key, semantic plan hash of the view). EVERY memo derived
-    from the docs view keys on this, not the tables key alone — a caller
-    that swaps the view directly (the property-test pattern) invalidates
-    ``_staged_docs``, and a tables-key-only derived memo would keep
-    serving relations cached from the PREVIOUS corpus, silently mixing
-    corpora in downstream joins (code-review r07: the span operators'
-    anti-join would strip the new corpus with the old corpus's grams).
-    An un-analyzable view yields a fresh ``object()`` → always rebuild."""
-    try:
-        return (
-            getattr(spark, "_tf_tables_loaded", None),
-            spark.table("documents").semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
-        return object()
+    """Identity of the live ``documents`` view: (load_tables key,
+    semantic plan hash of the view) — the key every relation staged from
+    the corpus inherits through the registry's ``documents`` root, so a
+    caller that swaps the view directly (the property-test pattern)
+    rebuilds them all."""
+    return table_key(spark, "documents")
 
 
-def _staged_docs(spark):
-    """Fan the documents table out to full parallelism once; a single
-    small parquet file arrives as ONE split and every dedup signature
-    pass is CPU-bound (at cluster scale the input already has enough
-    splits and this shuffle is a no-op-sized rebalance).
-
-    Memoized per (session, loaded tables, SEMANTIC PLAN of the live
-    ``documents`` view) and lock-guarded: the parallel bench prewarm
-    runs ``_staged_hx`` and ``_staged_substring_grams`` concurrently and
-    both prep the docs view — without the memo each pays the fan-out
-    count() job and both write the same ``__dedup_docs`` slot. The
-    semantic-hash component invalidates the memo when a caller swaps
-    the ``documents`` view DIRECTLY (the established pattern in the
-    property/differential tests) without bumping
-    ``spark._tf_tables_loaded`` — a tables-key-only memo would silently
-    serve the PREVIOUS corpus to every downstream consumer (code-review
-    r07)."""
+@declare("docs", deps=("documents",))
+def _docs(ctx):
+    """The documents fanned out to full parallelism once: a single small
+    parquet file arrives as ONE split and every dedup signature pass is
+    CPU-bound (at cluster scale the input already has enough splits and
+    this shuffle is a no-op-sized rebalance)."""
     from torchfusion_spark.session import cpu_fanout
 
-    key = _docs_key(spark)
-    with _DOCS_LOCK:
-        if getattr(spark, "_tf_dedup_docs_key", object()) != key:
-            cpu_fanout(spark.table("documents")).createOrReplaceTempView("__dedup_docs")
-            spark._tf_dedup_docs_key = key
-    return "__dedup_docs"
+    return ctx.view("__dedup_docs", cpu_fanout(ctx.spark.table(ctx.dep("documents"))))
 
 
-def _staged_hx(spark, then=None) -> str:
-    """The hashed-shingle relation (doc_id, hx) staged ONCE per (session,
-    loaded tables): the shingle-build + md5 pass is the dominant cost of
-    every shingle-based operator (containment, both decontaminate
-    variants), and each of their plans references it on two or more CTE
-    sides — Catalyst inlines CTEs, so without staging the md5 pass runs
-    per reference. Memoized the same way as the MinHash signature memo
-    (keyed on the docs-view identity, so switching sf_dir or swapping
-    the view rebuilds).
+@declare("hx_shingles", deps=("docs",), prewarm=True)
+def _hx(ctx):
+    """The hashed-shingle relation (doc_id, hx): the shingle-build + md5
+    pass is the dominant cost of every shingle-based operator (MinHash,
+    containment, both decontaminate variants, the Bloom benchmark set),
+    and their plans reference it on two or more CTE sides — Catalyst
+    inlines CTEs, so without staging the md5 pass runs per reference."""
+    return ctx.cache(
+        "__tf_hx", ctx.spark.sql(hashed_shingle_sql("spark", rel=ctx.dep("docs")))
+    )
 
-    ``then`` is invoked INSIDE the memo lock (the
-    ``similarity._staged_norms`` discipline): a consumer resolving its
-    plan from ``__tf_hx`` after release races a concurrent docs-view
-    swap (ADVICE r08 TOCTOU class, closed family-wide in r9)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
 
-    key = _docs_key(spark)
-    with memo_lock(spark, "hx"):
-        if getattr(spark, "_tf_hx_key", object()) != key:
-            hx = staged_cache(
-                spark, "tf_hx", spark.sql(hashed_shingle_sql("spark", rel=_staged_docs(spark)))
-            )
-            hx.count()
-            hx.createOrReplaceTempView("__tf_hx")
-            spark._tf_hx_key = key
-        if then is not None:
-            return then("__tf_hx")
-    return "__tf_hx"
+@declare("minhash_sig", deps=("hx_shingles",))
+def _minhash_sig(ctx):
+    """(signature view, capped banded view). The signature derives from
+    the staged shingles (r16 note: a NumPy-under-mapInArrow spelling of
+    the fold was measured SLOWER than this SQL fold — warm noop-sink
+    0.59s vs 0.21s at sf0.1, plus ~10s cold Python-worker spin-up —
+    because the hx array column must round-trip the Arrow boundary for
+    the Jaccard verify). The capped banded relation is staged beside it
+    (r17): the candidate self-join reads it on BOTH sides, and the
+    cached plan keeps its (band, bkey) hash partitioning, so the join
+    needs no exchange at all."""
+    sig = ctx.cache(
+        "__minhash_sig", ctx.spark.sql(sig_rel_sql("spark", ctx.dep("hx_shingles")))
+    )
+    return sig, ctx.cache("__minhash_ok", ctx.spark.sql(minhash_ok_sql("spark", sig)))
 
 
 def _simhash_band_keys(bands: int, d: str) -> list[str]:
@@ -603,48 +517,27 @@ def simhash_sql(d: str, bits: int = 32, max_hamming: int = 2) -> str:
     )
 
 
-def _staged_simhash_sig(spark, bits: int = 32) -> str:
-    """The SimHash signature relation staged once per (session, loaded
-    tables, bits) — memoized like the MinHash signature so the banded
-    join and the cap-stats observer share one per-token hash + bit-vote
-    pass instead of each re-running it."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = (_docs_key(spark), bits)
-    with memo_lock(spark, "simhash_sig"):
-        if getattr(spark, "_tf_simhash_sig_key", object()) != key:
-            s = staged_cache(
-                spark,
-                "simhash_sig",
-                spark.sql(simhash_sig_sql("spark", rel=_staged_docs(spark), bits=bits)),
-            )
-            s.count()
-            s.createOrReplaceTempView("__simhash_sig")
-            # capped banded relation staged beside the signature (r17,
-            # the __minhash_ok discipline): both pair-join sides read it
-            # exchange-free, explode + bucket-size window run once
-            ok = staged_cache(
-                spark,
-                "simhash_ok",
-                spark.sql(simhash_ok_sql("spark", "__simhash_sig", bits=bits)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__simhash_ok")
-            spark._tf_simhash_sig_key = key
-    return "__simhash_sig"
+@declare("simhash_sig", deps=("docs",), params={"bits": 32})
+def _simhash_sig(ctx, bits):
+    """(signature view, capped banded view) of the SimHash family — the
+    banded join and the cap-stats observer share one per-token hash +
+    bit-vote pass, and the pair self-join reads the capped banded
+    relation on both sides exchange-free (the ``minhash_sig``
+    discipline)."""
+    spark = ctx.spark
+    sig = ctx.cache(
+        "__simhash_sig", spark.sql(simhash_sig_sql("spark", rel=ctx.dep("docs"), bits=bits))
+    )
+    return sig, ctx.cache("__simhash_ok", spark.sql(simhash_ok_sql("spark", sig, bits=bits)))
 
 
 def simhash(spark, bits: int = 32, max_hamming: int = 2):
     """Staged Spark execution: signatures computed once over the fanned-out
     input (the CPU-heavy pass), cached, then the banded self-join runs
     over the 12-byte-per-doc signature relation (via the staged capped
-    banded relation — see ``_staged_simhash_sig``)."""
-    _staged_simhash_sig(spark, bits)
-    return spark.sql(
-        simhash_body_sql(
-            "spark", "__simhash_sig", bits, max_hamming, ok_rel="__simhash_ok"
-        )
-    )
+    banded relation — see ``simhash_sig``)."""
+    sig, ok = stage(spark, "simhash_sig", bits=bits)
+    return spark.sql(simhash_body_sql("spark", sig, bits, max_hamming, ok_rel=ok))
 
 
 def simhash_capped_bucket_stats(spark, bits: int = 32, max_bucket: int = SIMHASH_MAX_BUCKET):
@@ -658,7 +551,7 @@ def simhash_capped_bucket_stats(spark, bits: int = 32, max_bucket: int = SIMHASH
     tests/test_skew_and_caps.py pins the fixture-corpus value."""
     return capped_bucket_stats(
         spark,
-        _staged_simhash_sig(spark, bits),
+        stage(spark, "simhash_sig", bits=bits)[0],
         _simhash_band_keys(bits // 8, "spark"),
         max_bucket,
     )
@@ -697,9 +590,8 @@ def capped_bucket_report(rows, max_bucket: int) -> dict:
 def minhash_capped_bucket_stats(spark, max_bucket: int = MAX_BUCKET):
     """MinHash-LSH twin of :func:`simhash_capped_bucket_stats`: the
     (band, bkey) buckets whose size exceeds the hot-bucket cap."""
-    minhash_lsh(spark)  # ensure __minhash_sig is staged (memoized)
     return capped_bucket_stats(
-        spark, "__minhash_sig", G.band_exprs("sig", "spark"), max_bucket
+        spark, stage(spark, "minhash_sig")[0], G.band_exprs("sig", "spark"), max_bucket
     )
 
 
@@ -789,15 +681,17 @@ def ngram_jaccard_sql(d: str, n: int = 5, threshold: float = 0.7) -> str:
     )
 
 
-def ngram_jaccard(spark, n: int = 5, threshold: float = 0.7):
-    from torchfusion_spark.session import staged_cache
-
-    g = staged_cache(
-        spark, "ngram_blocks", spark.sql(ngram_blocks_sql("spark", rel=_staged_docs(spark), n=n))
+@declare("ngram_blocks", deps=("docs",), params={"n": 5})
+def _ngram_blocks(ctx, n):
+    return ctx.cache(
+        "__ngram_blocks", ctx.spark.sql(ngram_blocks_sql("spark", rel=ctx.dep("docs"), n=n))
     )
-    g.count()
-    g.createOrReplaceTempView("__ngram_blocks")
-    return spark.sql(ngram_body_sql("spark", "__ngram_blocks", threshold))
+
+
+def ngram_jaccard(spark, n: int = 5, threshold: float = 0.7):
+    """Spark path: the shingle sets staged once (both join sides read
+    them), then the shared body SQL."""
+    return spark.sql(ngram_body_sql("spark", stage(spark, "ngram_blocks", n=n), threshold))
 
 
 # -- duplicate clusters: connected components over near-dup pairs ----------
@@ -1015,36 +909,39 @@ def connected_components(pairs, max_iter: int = 25):
     return out
 
 
+@declare("minhash_clusters", deps=("minhash_sig",), params={"threshold": 0.6}, prewarm=True)
+def _minhash_clusters(ctx, threshold):
+    """The cached cluster labels: the canonical-selection pipeline runs
+    right after the clusters query in gate order and would otherwise
+    repeat the whole iterative CC loop."""
+    from torchfusion_spark.session import release_staged_group
+
+    sig, ok = ctx.dep("minhash_sig")
+    # ordered=False (r16): the pair relation's global ORDER BY is pure
+    # waste as CC input — a range-partition sort (plus the range
+    # partitioner's boundary-sampling pass, which re-executes the whole
+    # pair join once) feeding a loop that immediately re-shuffles the
+    # edges; the label output is identical.
+    cc = connected_components(
+        ctx.spark.sql(minhash_body_sql("spark", sig, threshold, ordered=False, ok_rel=ok))
+    )
+    view = ctx.cache("__minhash_clusters", cc)
+    # the cached labels now hold the data — THIS call's CC edge/label
+    # checkpoint scratch is dead weight. Release only the nonce-scoped
+    # group (ADVICE r04): a bare "cc_" release would unpersist a
+    # concurrent connected_components call's live localCheckpoint blocks
+    # mid-loop, which lineage truncation makes unrecoverable.
+    nonce = getattr(cc, "_tf_cc_nonce", None)
+    if nonce is not None:
+        release_staged_group(ctx.spark, f"cc_{nonce}_")
+    return view
+
+
 def minhash_clusters(spark, threshold: float = 0.6):
     """MinHash-LSH pairs → duplicate clusters (the canonical corpus-dedup
-    output: keep one doc per component). Memoized per (session, loaded
-    tables, threshold) like the signature relation: the canonical-
-    selection pipeline runs right after the clusters query in gate order
-    and would otherwise repeat the whole iterative CC loop."""
-    from torchfusion_spark.session import memo_lock, release_staged_group, staged_cache
-
-    key = (_docs_key(spark), threshold)
-    with memo_lock(spark, "minhash_clusters"):
-        if getattr(spark, "_tf_clusters_key", object()) != key:
-            # ordered=False (r16): the pair relation's global ORDER BY is
-            # pure waste as CC input — a range-partition sort (plus the
-            # range partitioner's boundary-sampling pass, which re-executes
-            # the whole pair join once) feeding a loop that immediately
-            # re-shuffles the edges; the label output is identical.
-            cc = connected_components(minhash_lsh(spark, threshold, ordered=False))
-            labels = staged_cache(spark, "minhash_clusters", cc)
-            labels.count()
-            # the cached labels now hold the data — THIS call's CC edge/label
-            # checkpoint scratch is dead weight. Release only the nonce-scoped
-            # group (ADVICE r04): a bare "cc_" release would unpersist a
-            # concurrent connected_components call's live localCheckpoint
-            # blocks mid-loop, which lineage truncation makes unrecoverable.
-            nonce = getattr(cc, "_tf_cc_nonce", None)
-            if nonce is not None:
-                release_staged_group(spark, f"cc_{nonce}_")
-            labels.createOrReplaceTempView("__minhash_clusters")
-            spark._tf_clusters_key = key
-    return spark.table("__minhash_clusters")
+    output: keep one doc per component), staged once per corpus and
+    threshold."""
+    return spark.table(stage(spark, "minhash_clusters", threshold=threshold))
 
 
 def minhash_clusters_oracle_sql(d_unused: str = "duck", threshold: float = 0.6) -> str:
@@ -1184,22 +1081,21 @@ def containment(spark, threshold: float = CONTAIN_THRESHOLD, max_df: int = CONTA
     outright. At cluster scale swap to ``checkpoint()`` with a reliable
     dir if the job must survive executor loss mid-query.
 
-    Round 7 (VERDICT r06 item 6): the inverted index (__contain_sh) and
-    the per-doc sizes (__contain_sizes) are MEMOIZED per (session,
-    loaded tables, max_df) like every other staged signature relation —
-    the index of a 100 TB corpus is built once and probed by every
+    Round 7 (VERDICT r06 item 6): the inverted index and the per-doc
+    sizes are the session-staged ``containment_index`` relation — the
+    index of a 100 TB corpus is built once and probed by every
     downstream containment query, not rebuilt per invocation. The sizes
     aggregate is folded into the staging pass (it used to re-explode
-    __contain_sh inside every timed query), so the steady-state query is
+    the index inside every timed query), so the steady-state query is
     in-row pair generation + one pair aggregate + the two
     pairs⋈sizes joins (pair side tiny → AQE broadcast)."""
-    _staged_containment(spark, max_df)
+    sh, sizes = stage(spark, "containment_index", max_df=max_df)
     return spark.sql(
         f"""
-        WITH sizes AS (SELECT doc_id, n FROM __contain_sizes),
+        WITH sizes AS (SELECT doc_id, n FROM {sizes}),
         shared AS (
             SELECT id_a, id_b, CAST(COUNT(*) AS BIGINT) AS ins
-            FROM __contain_sh
+            FROM {sh}
             LATERAL VIEW explode(docs) A AS id_a
             LATERAL VIEW explode(docs) B AS id_b
             WHERE id_a < id_b
@@ -1228,47 +1124,39 @@ def containment_stop_body_sql(exploded_rel: str, max_df: int = CONTAIN_MAX_DF) -
     )
 
 
-def _staged_containment(spark, max_df: int = CONTAIN_MAX_DF) -> tuple[str, str]:
-    """Stage the containment inverted index once per (session, tables,
-    max_df): ``__contain_sh`` (h, docs≤max_df — localCheckpoint, see
-    ``containment``) and ``__contain_sizes`` (doc_id, n — cache; derived
-    from the SAME pruned exploded pass so the df-prune can never drift
-    between the index and the denominator)."""
-    from torchfusion_spark.session import memo_lock, staged_cache, staged_checkpoint
-
-    key = (_docs_key(spark), max_df)
-    with memo_lock(spark, "containment"):
-        if getattr(spark, "_tf_contain_key", object()) != key:
-            hx = _staged_hx(spark)
-            grouped = staged_checkpoint(
-                spark,
-                "contain_sh",
-                spark.sql(
-                    f"""
-                    WITH exploded AS ({containment_exploded_spark_sql(hx)}),
-                    stop AS ({containment_stop_body_sql("exploded", max_df)})
-                    SELECT e.h, collect_list(e.doc_id) AS docs
-                    FROM exploded e LEFT ANTI JOIN stop s ON e.h = s.h
-                    GROUP BY e.h
-                    """
-                ),
-            )
-            grouped.createOrReplaceTempView("__contain_sh")
-            sizes = staged_cache(
-                spark,
-                "contain_sizes",
-                spark.sql(
-                    """
-                    SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-                    FROM __contain_sh LATERAL VIEW explode(docs) AS doc_id
-                    GROUP BY doc_id
-                    """
-                ),
-            )
-            sizes.count()
-            sizes.createOrReplaceTempView("__contain_sizes")
-            spark._tf_contain_key = key
-    return "__contain_sh", "__contain_sizes"
+@declare(
+    "containment_index", deps=("hx_shingles",), params={"max_df": CONTAIN_MAX_DF}, prewarm=True
+)
+def _containment_index(ctx, max_df):
+    """The containment inverted index: (h, docs≤max_df) —
+    localCheckpoint, see ``containment`` — and the per-doc sizes
+    (doc_id, n) — cache; derived from the SAME pruned exploded pass so
+    the df-prune can never drift between the index and the
+    denominator."""
+    spark = ctx.spark
+    sh = ctx.checkpoint(
+        "__contain_sh",
+        spark.sql(
+            f"""
+            WITH exploded AS ({containment_exploded_spark_sql(ctx.dep("hx_shingles"))}),
+            stop AS ({containment_stop_body_sql("exploded", max_df)})
+            SELECT e.h, collect_list(e.doc_id) AS docs
+            FROM exploded e LEFT ANTI JOIN stop s ON e.h = s.h
+            GROUP BY e.h
+            """
+        ),
+    )
+    sizes = ctx.cache(
+        "__contain_sizes",
+        spark.sql(
+            f"""
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+            FROM {sh} LATERAL VIEW explode(docs) AS doc_id
+            GROUP BY doc_id
+            """
+        ),
+    )
+    return sh, sizes
 
 
 # --- exact-substring dedup (suffix-grouping formulation) -------------------
@@ -1366,30 +1254,19 @@ def substring_sql(d: str, k: int = SUBSTRING_K) -> str:
     )
 
 
-def _staged_substring_grams(spark, k: int = SUBSTRING_K) -> str:
-    """Positional-gram relation staged once per (session, loaded tables):
-    the plan references it on both the aggregate and the join side, and
-    Catalyst inlines CTEs — without staging the tokenize+md5 pass runs
-    twice (same discipline as ``_staged_hx``; param-scoped on k)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = (_docs_key(spark), k)
-    with memo_lock(spark, "subgrams"):
-        if getattr(spark, "_tf_subgram_key", object()) != key:
-            g = staged_cache(
-                spark,
-                "tf_subgrams",
-                spark.sql(substring_grams_sql("spark", k, rel=_staged_docs(spark))),
-            )
-            g.count()
-            g.createOrReplaceTempView("__tf_subgrams")
-            spark._tf_subgram_key = key
-    return "__tf_subgrams"
+@declare("substring_grams", deps=("docs",), params={"k": SUBSTRING_K}, prewarm=True)
+def _substring_grams(ctx, k):
+    """Positional-gram relation: the plan references it on both the
+    aggregate and the join side, and Catalyst inlines CTEs — without
+    staging the tokenize+md5 pass runs twice."""
+    return ctx.cache(
+        "__tf_subgrams", ctx.spark.sql(substring_grams_sql("spark", k, rel=ctx.dep("docs")))
+    )
 
 
 def dedup_substring(spark, k: int = SUBSTRING_K):
     """Spark path: staged positional grams, then the shared body SQL."""
-    return spark.sql(substring_body_sql("spark", _staged_substring_grams(spark, k), k))
+    return spark.sql(substring_body_sql("spark", stage(spark, "substring_grams", k=k), k))
 
 
 def strip_dup_spans_body_sql(
@@ -1519,11 +1396,8 @@ def strip_dup_spans(spark, k: int = SUBSTRING_K):
     token scan reads the staged fanned-out docs view — the per-token
     explode is CPU-bound and a single parquet split would pin it to one
     core (code-review r07)."""
-    return spark.sql(
-        strip_dup_spans_body_sql(
-            "spark", _staged_substring_grams(spark, k), k, docs_rel=_staged_docs(spark)
-        )
-    )
+    grams, docs = stage(spark, "substring_grams", "docs", k=k)
+    return spark.sql(strip_dup_spans_body_sql("spark", grams, k, docs_rel=docs))
 
 
 # ---------------------------------------------------------------------------
@@ -1664,55 +1538,24 @@ def strip_boilerplate_lines_sql(
     )
 
 
-def _staged_lines(spark, w: int = LINE_W, then=None):
-    """The (doc_id, line_no, line, hx) relation staged once per (session,
-    docs-view identity, w): the plan references it on both the rollup
-    and the anti-join probe side and Catalyst inlines CTEs — without
-    staging the tokenize+md5 lining pass runs twice (the
-    ``_staged_substring_grams`` discipline).
-
-    ``then`` is invoked INSIDE the memo lock (the ``_staged_hx``
-    discipline): a consumer resolving its plan from ``__tf_lines`` after
-    release races a concurrent docs-view swap, binding the hot set to
-    one corpus and the base CTE to the other (ADVICE r08 TOCTOU class;
-    code-review r14 caught this staging helper shipping without it)."""
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    # view/slot/memo-attr are all w-scoped (the semantic_dedup
-    # parameter-scoped-names discipline): two widths alternating in one
-    # session must not unpersist each other's staged relation mid-collect
-    # (code-review r14)
-    view = f"__tf_lines_{w}"
-    with memo_lock(spark, "lines"):
-        if getattr(spark, f"_tf_lines_key_{w}", object()) != key:
-            g = staged_cache(
-                spark,
-                f"tf_lines_{w}",
-                spark.sql(lines_rel_sql("spark", w, docs_rel=_staged_docs(spark))),
-            )
-            g.count()
-            g.createOrReplaceTempView(view)
-            setattr(spark, f"_tf_lines_key_{w}", key)
-        if then is not None:
-            return then(view)
-    return view
+@declare("doc_lines", deps=("docs",), params={"w": LINE_W}, prewarm=True)
+def _doc_lines(ctx, w):
+    """The (doc_id, line_no, line, hx) relation: the plan references it
+    on both the rollup and the anti-join probe side and Catalyst inlines
+    CTEs — without staging the tokenize+md5 lining pass runs twice."""
+    return ctx.cache(
+        "__tf_lines", ctx.spark.sql(lines_rel_sql("spark", w, docs_rel=ctx.dep("docs")))
+    )
 
 
 def strip_boilerplate_lines(
     spark, threshold: int = LINE_DUP_THRESHOLD, w: int = LINE_W
 ):
-    """Spark path: staged line stream, then the shared body SQL (resolved
-    inside the memo lock — see ``_staged_lines``); the per-doc n_lines
-    pass reads the raw table (light arithmetic — the scan-split
-    discipline of ``_strip_tail_sql``)."""
-    return _staged_lines(
-        spark,
-        w,
-        then=lambda rel: spark.sql(
-            strip_boilerplate_lines_body_sql("spark", rel, threshold, w=w)
-        ),
-    )
+    """Spark path: staged line stream, then the shared body SQL; the
+    per-doc n_lines pass reads the raw table (light arithmetic — the
+    scan-split discipline of ``_strip_tail_sql``)."""
+    rel = stage(spark, "doc_lines", w=w)
+    return spark.sql(strip_boilerplate_lines_body_sql("spark", rel, threshold, w=w))
 
 
 _CANON_SELECT = """
@@ -1799,6 +1642,18 @@ def build_minhash_index(spark, path: str) -> None:
     sig.unpersist()
 
 
+@declare(
+    "mhinc_sig", params={"new_rel": None}, key=lambda spark, new_rel: table_key(spark, new_rel)
+)
+def _mhinc_sig(ctx, new_rel):
+    """An ingest batch's signature relation — read by the band explode
+    and the verify join."""
+    return ctx.cache(
+        "__mhinc_sig",
+        ctx.spark.sql(sig_rel_sql("spark", f"({hashed_shingle_sql('spark', rel=new_rel)})")),
+    )
+
+
 def dedup_incremental(spark, new_rel: str, path: str, threshold: float = 0.6):
     """Dedup a NEW batch against the persisted index: the batch's band
     keys form the (small) broadcast side, so the index band relation is
@@ -1810,15 +1665,9 @@ def dedup_incremental(spark, new_rel: str, path: str, threshold: float = 0.6):
     This is the production dedup shape: the full-corpus LSH runs once
     (`build_minhash_index`), every subsequent ingest batch is an
     incremental probe."""
-    from torchfusion_spark.session import staged_cache
-
-    new_sig = staged_cache(
-        spark, "mhinc_sig", spark.sql(sig_rel_sql("spark", f"({hashed_shingle_sql('spark', rel=new_rel)})"))
-    )
-    new_sig.count()
-    new_sig.createOrReplaceTempView("__mhinc_sig")
+    new_sig = stage(spark, "mhinc_sig", new_rel=new_rel)
     spark.sql(
-        G.band_explode("__mhinc_sig", G.band_exprs("sig", "spark"), "spark")
+        G.band_explode(new_sig, G.band_exprs("sig", "spark"), "spark")
     ).createOrReplaceTempView("__mhinc_bands")
     spark.read.parquet(f"{path}/sig").createOrReplaceTempView("__mhidx_sig_r")
     spark.read.parquet(f"{path}/bands").createOrReplaceTempView("__mhidx_bands_r")
@@ -1832,7 +1681,7 @@ def dedup_incremental(spark, new_rel: str, path: str, threshold: float = 0.6):
         SELECT new_id, old_id,
                ROUND(CAST({inter} AS DOUBLE) /
                      ({G.arr_size('x.hx', 'spark')} + {G.arr_size('y.hx', 'spark')} - {inter}), 6) AS jaccard
-        FROM cand JOIN __mhinc_sig x ON x.doc_id = new_id
+        FROM cand JOIN {new_sig} x ON x.doc_id = new_id
                   JOIN __mhidx_sig_r y ON y.doc_id = old_id)
     WHERE jaccard >= {threshold}
     ORDER BY new_id, old_id
@@ -1873,13 +1722,13 @@ def build_url_index(spark, path: str, rel: str = "documents") -> None:
     ).write.mode("overwrite").parquet(f"{path}/urls")
 
 
-def _url_split_subq(d: str) -> str:
+def _url_split_subq(d: str, rel: str = "documents") -> str:
     """The deterministic index/batch split point for the incremental-URL
     registry witness: half the max crawl id, as a scalar subquery so
     both dialects derive it declaratively (empty corpus → NULL → both
     slices empty, no special-casing). Shared by the Spark builder and
     the oracle so the split can never drift."""
-    return f"(SELECT {G.intdiv('MAX(doc_id)', '2', d)} FROM documents)"
+    return f"(SELECT {G.intdiv('MAX(doc_id)', '2', d)} FROM {rel})"
 
 
 def url_incremental_equiv_sql(d: str) -> str:
@@ -1998,22 +1847,17 @@ def _url_index_cleanup(base: str) -> None:
         shutil.rmtree(full, ignore_errors=True)
 
 
-def url_incremental_query(spark):
-    """Registry builder for ``dedup_url_incremental`` (VERDICT r9
-    item 5): persist the canonical-URL seen-set over the lower-half
-    crawl (built once per corpus — the index build is the
-    once-per-snapshot cost the incremental shape exists to amortize),
-    then probe the upper-half batch against it. The index parquet lives
+@declare("url_index", deps=("documents",), prewarm=True)
+def _url_index(ctx):
+    """The persisted canonical-URL seen-set over the lower-half crawl:
+    (index dir, upper-half batch relation). The index parquet lives
     under the repo's gitignored ``.scratch`` dir at a path derived from
     the corpus key + pid, with a ``_TF_BUILT`` marker written AFTER the
     parquet lands: the build is skipped whenever the marker exists, so
     an A→B→A docs-view swap-back reuses corpus A's intact index instead
     of overwriting files a previously resolved, not-yet-collected plan
-    for A still references (ADVICE r10 #4 — the old session-attribute
-    memo forgot A when B was built and re-overwrote A's path). Stale
-    dirs are swept at exit / when their owning pid is dead. The whole
-    check-build-probe runs inside the ``url_index`` memo lock
-    (resolve-inside-lock, the ADVICE r08 TOCTOU discipline).
+    for A still references (ADVICE r10 #4). Stale dirs are swept at
+    exit / when their owning pid is dead.
 
     The split point is collected ONCE here (a 1-row control-plane read,
     the ``connected_components`` sanctioned class) and inlined as a
@@ -2027,61 +1871,61 @@ def url_incremental_query(spark):
     the same rows the oracle's NULL-comparison split yields."""
     import atexit
 
-    from torchfusion_spark.session import memo_lock
-
-    with memo_lock(spark, "url_index"):
-        key = _docs_key(spark)
-        row = spark.sql(f"SELECT {_url_split_subq('spark')} AS s").first()
-        split = "NULL" if row is None or row.s is None else str(row.s)
-        idx_pred = "FALSE" if split == "NULL" else f"doc_id < {split}"
-        batch_pred = "FALSE" if split == "NULL" else f"doc_id >= {split}"
-        path = _url_index_path(key)
-        if type(key) is object:  # unkeyed sentinel: bound this session's dirs
-            _drop_prev_unkeyed(spark, path)
-        base = os.path.dirname(path)
-        if not getattr(url_incremental_query, "_cleanup_registered", False):
-            atexit.register(_url_index_cleanup, base)
-            url_incremental_query._cleanup_registered = True
-            _url_index_cleanup(base)  # sweep dead-pid leftovers now
-        marker = os.path.join(path, "_TF_BUILT")
-        if not os.path.exists(marker):
-            build_url_index(
-                spark,
-                path,
-                rel=f"(SELECT * FROM documents WHERE {idx_pred}) __url_idx_src",
-            )
-            with open(marker, "w") as f:
-                # line 2: this process's start time — the cleanup sweep's
-                # exact ownership proof against pid recycling
-                start = _pid_start_time(os.getpid())
-                f.write(os.path.basename(path) + (f"\n{start}" if start else ""))
-        elif _marker_recorded_start(path) is None:
-            # legacy (pre-r13) marker with no start-time line: upgrade it
-            # in place on this successful probe — the path is keyed to
-            # OUR pid, so ownership is certain — closing the window in
-            # which a foreign sweep sees a live pid but no recorded start
-            # (ADVICE r13 #4).
+    spark, docs = ctx.spark, ctx.dep("documents")
+    key = ctx.deps["documents"].key
+    row = spark.sql(f"SELECT {_url_split_subq('spark', docs)} AS s").first()
+    split = "NULL" if row is None or row.s is None else str(row.s)
+    idx_pred = "FALSE" if split == "NULL" else f"doc_id < {split}"
+    batch_pred = "FALSE" if split == "NULL" else f"doc_id >= {split}"
+    path = _url_index_path(key)
+    if type(key) is object:  # unkeyed sentinel: bound this session's dirs
+        _drop_prev_unkeyed(spark, path)
+    base = os.path.dirname(path)
+    if not getattr(_url_index, "_cleanup_registered", False):
+        atexit.register(_url_index_cleanup, base)
+        _url_index._cleanup_registered = True
+        _url_index_cleanup(base)  # sweep dead-pid leftovers now
+    marker = os.path.join(path, "_TF_BUILT")
+    if not os.path.exists(marker):
+        build_url_index(
+            spark, path, rel=f"(SELECT * FROM {docs} WHERE {idx_pred}) __url_idx_src"
+        )
+        with open(marker, "w") as f:
+            # line 2: this process's start time — the cleanup sweep's
+            # exact ownership proof against pid recycling
             start = _pid_start_time(os.getpid())
-            if start is not None:
-                with open(marker, "w") as f:
-                    f.write(f"{os.path.basename(path)}\n{start}")
-        else:
-            # touch-on-probe (code-review r13 second pass): the sweep's
-            # no-procfs branch reads dir mtime as "idleness" with a 7-day
-            # backstop, but a probe skips the build and would otherwise
-            # never refresh it — an ACTIVE owner on a procfs-less host
-            # must still look active to that mtime check. (This branch
-            # only runs when the marker already carries a start time, so
-            # it cannot defend PRE-r13 owners — those never execute this
-            # code, and one idling >28 days remains sweepable by design:
-            # the 4x bound is the accepted plausibility cutoff, ADVICE
-            # r13 #4.)
-            try:
-                os.utime(path)
-            except OSError:
-                pass
-        batch = f"(SELECT * FROM documents WHERE {batch_pred}) __url_batch_src"
-        return dedup_url_incremental(spark, batch, path)
+            f.write(os.path.basename(path) + (f"\n{start}" if start else ""))
+    return path, f"(SELECT * FROM {docs} WHERE {batch_pred}) __url_batch_src"
+
+
+def url_incremental_query(spark):
+    """Registry builder for ``dedup_url_incremental`` (VERDICT r9
+    item 5): probe the upper-half batch against the staged URL seen-set
+    (``url_index`` — built once per corpus, the once-per-snapshot cost
+    the incremental shape exists to amortize)."""
+    path, batch = stage(spark, "url_index")
+    if _marker_recorded_start(path) is None:
+        # legacy (pre-r13) marker with no start-time line: upgrade it
+        # in place on this successful probe — the path is keyed to
+        # OUR pid, so ownership is certain — closing the window in
+        # which a foreign sweep sees a live pid but no recorded start
+        # (ADVICE r13 #4).
+        start = _pid_start_time(os.getpid())
+        if start is not None:
+            with open(os.path.join(path, "_TF_BUILT"), "w") as f:
+                f.write(f"{os.path.basename(path)}\n{start}")
+    else:
+        # touch-on-probe (code-review r13 second pass): the sweep's
+        # no-procfs branch reads dir mtime as "idleness" with a 7-day
+        # backstop, so an ACTIVE owner on a procfs-less host must still
+        # look active to that mtime check. (A PRE-r13 owner idling >28
+        # days remains sweepable by design: the 4x bound is the accepted
+        # plausibility cutoff, ADVICE r13 #4.)
+        try:
+            os.utime(path)
+        except OSError:
+            pass
+    return dedup_url_incremental(spark, batch, path)
 
 
 def _url_index_path(key) -> str:
@@ -2117,9 +1961,7 @@ def _drop_prev_unkeyed(spark, new_path: str) -> None:
     (code-review r12), and two THREADS sharing one session must not
     either — thread B superseding "the session's" previous dir while
     thread A's just-resolved probe plan is still collecting against it
-    rmtree'd A's files mid-scan (ADVICE r13 #2; the caller's
-    ``url_index`` memo lock doesn't cover A's collect, which runs after
-    the lock is released). A finished thread's last dir persists until
+    rmtree'd A's files mid-scan (ADVICE r13 #2). A finished thread's last dir persists until
     interpreter exit, where ``_url_index_cleanup`` removes every
     own-pid dir unconditionally. Caveat this trades away: an unexecuted
     probe plan from the same thread's PREVIOUS unkeyed call loses its

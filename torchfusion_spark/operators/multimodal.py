@@ -21,12 +21,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from torchfusion_spark.operators.dedup import simhash_ok_sql
+from torchfusion_spark.staging import declare, stage
+
 FEATURE_SCHEMA = (
     "doc_id bigint, mime string, n_bytes bigint, first_byte int, last_byte int, checksum16 int"
 )
 
 
-def attach_payload(spark: SparkSession) -> DataFrame:
+def attach_payload(spark: SparkSession, docs: DataFrame | None = None) -> DataFrame:
     """documents → (doc_id, payload binary, meta struct<mime, n_bytes>).
 
     The multimodal table shape: payload is an opaque binary column (here
@@ -36,10 +39,11 @@ def attach_payload(spark: SparkSession) -> DataFrame:
     downstream op here is per-row Python work — the one case where a
     single-partition input serializes the whole job. Width adapts to the
     row count (cpu_fanout): full parallelism at scale, a handful of tasks
-    for the small correctness-gate inputs."""
+    for the small correctness-gate inputs. ``docs``: an already fanned-out
+    documents relation (the staged ``docs`` view)."""
     from torchfusion_spark.session import cpu_fanout
 
-    d = cpu_fanout(spark.table("documents"))
+    d = docs if docs is not None else cpu_fanout(spark.table("documents"))
     payload = F.encode(F.col("text"), "utf-8")
     return d.select(
         "doc_id",
@@ -286,38 +290,19 @@ def perceptual_hash(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema="doc_id bigint, simhash bigint")
 
 
-def _staged_phash(spark: SparkSession, then=None):
-    """The payload-fingerprint relation staged once per (session, docs
-    view) — 12 bytes per doc; memoized like the text SimHash signature
-    so repeated dedup calls never re-run the Arrow scan. ``then`` (the
-    family-wide r9 binder discipline) runs INSIDE the memo lock with the
-    staged view name, so consumers resolve their final plan before a
-    concurrent docs-view swap can rebind ``__mm_phash`` (ADVICE r08
-    TOCTOU). The lock is NOT reentrant — never wrap this call in another
-    ``memo_lock("mm_phash")``."""
-    from torchfusion_spark.operators.dedup import _docs_key
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    with memo_lock(spark, "mm_phash"):
-        if getattr(spark, "_tf_mm_phash_key", object()) != key:
-            from torchfusion_spark.operators.dedup import simhash_ok_sql
-
-            s = staged_cache(spark, "mm_phash", perceptual_hash(attach_payload(spark)))
-            s.count()
-            s.createOrReplaceTempView("__mm_phash")
-            # capped banded relation staged beside the fingerprints (r17,
-            # the __minhash_ok discipline): the pair self-join reads it on
-            # both sides exchange-free; explode + bucket window run once
-            ok = staged_cache(
-                spark,
-                "mm_phash_ok",
-                spark.sql(simhash_ok_sql("spark", "__mm_phash", bits=PHASH_BITS)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__mm_phash_ok")
-            spark._tf_mm_phash_key = key
-        return then("__mm_phash") if then is not None else "__mm_phash"
+@declare("payload_phash", deps=("docs",), prewarm=True)
+def _payload_phash(ctx):
+    """(fingerprint view, capped banded view): the payload-fingerprint
+    relation — 12 bytes per doc, so repeated dedup calls never re-run
+    the Arrow scan — and, beside it (r17, the ``minhash_sig``
+    discipline), the capped banded relation the pair self-join reads on
+    both sides exchange-free."""
+    spark = ctx.spark
+    sig = ctx.cache(
+        "__mm_phash", perceptual_hash(attach_payload(spark, spark.table(ctx.dep("docs"))))
+    )
+    ok = ctx.cache("__mm_phash_ok", spark.sql(simhash_ok_sql("spark", sig, bits=PHASH_BITS)))
+    return sig, ok
 
 
 def dedup_query(spark: SparkSession, max_hamming: int = PHASH_MAX_HAMMING) -> DataFrame:
@@ -330,14 +315,8 @@ def dedup_query(spark: SparkSession, max_hamming: int = PHASH_MAX_HAMMING) -> Da
     <= 3 of the 4 bands, so every qualifying pair shares a band key."""
     from torchfusion_spark.operators.dedup import simhash_body_sql
 
-    return _staged_phash(
-        spark,
-        then=lambda rel: spark.sql(
-            simhash_body_sql(
-                "spark", rel, PHASH_BITS, max_hamming, ok_rel="__mm_phash_ok"
-            )
-        ),
-    )
+    rel, ok = stage(spark, "payload_phash")
+    return spark.sql(simhash_body_sql("spark", rel, PHASH_BITS, max_hamming, ok_rel=ok))
 
 
 def mm_dedup_oracle_sql(max_hamming: int = PHASH_MAX_HAMMING) -> str:
@@ -394,12 +373,8 @@ def phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None = None
     )
 
     cap = SIMHASH_MAX_BUCKET if max_bucket is None else max_bucket
-    return _staged_phash(
-        spark,
-        then=lambda rel: capped_bucket_stats(
-            spark, rel, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap
-        ),
-    )
+    rel, _ = stage(spark, "payload_phash")
+    return capped_bucket_stats(spark, rel, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap)
 
 
 # ---------------------------------------------------------------------------
@@ -463,37 +438,19 @@ def frame_fingerprints(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema="doc_id bigint, frame_idx int, simhash bigint")
 
 
-def _staged_frame_phash(spark: SparkSession, then=None):
-    """Per-frame fingerprint relation staged once per (session, docs
-    view) — the ``_staged_phash`` discipline (memo-locked, ``then``
-    binds the consumer plan inside the lock)."""
-    from torchfusion_spark.operators.dedup import _docs_key
-    from torchfusion_spark.session import memo_lock, staged_cache
-
-    key = _docs_key(spark)
-    with memo_lock(spark, "mm_fphash"):
-        if getattr(spark, "_tf_mm_fphash_key", object()) != key:
-            from torchfusion_spark.operators.dedup import simhash_ok_sql
-
-            s = staged_cache(spark, "mm_fphash", frame_fingerprints(attach_payload(spark)))
-            s.count()
-            s.createOrReplaceTempView("__mm_fphash")
-            # capped banded relation over the PACKED frame key (the tail's
-            # ``fsig`` spelling verbatim), staged beside the fingerprints
-            # (r17, the __minhash_ok discipline)
-            fsig = (
-                f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, "
-                f"simhash FROM __mm_fphash)"
-            )
-            ok = staged_cache(
-                spark,
-                "mm_fphash_ok",
-                spark.sql(simhash_ok_sql("spark", fsig, bits=PHASH_BITS)),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__mm_fphash_ok")
-            spark._tf_mm_fphash_key = key
-        return then("__mm_fphash") if then is not None else "__mm_fphash"
+@declare("frame_phash", deps=("docs",), prewarm=True)
+def _frame_phash(ctx):
+    """(per-frame fingerprint view, capped banded view over the PACKED
+    frame key — the tail's ``fsig`` spelling verbatim): the
+    ``payload_phash`` discipline."""
+    spark = ctx.spark
+    sig = ctx.cache(
+        "__mm_fphash", frame_fingerprints(attach_payload(spark, spark.table(ctx.dep("docs"))))
+    )
+    fsig = f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, simhash FROM {sig})"
+    return sig, ctx.cache(
+        "__mm_fphash_ok", spark.sql(simhash_ok_sql("spark", fsig, bits=PHASH_BITS))
+    )
 
 
 def frame_dedup_tail_sql(
@@ -556,12 +513,8 @@ def frame_dedup_tail_sql(
 
 
 def frame_dedup_query(spark: SparkSession, max_hamming: int = FRAME_MAX_HAMMING) -> DataFrame:
-    return _staged_frame_phash(
-        spark,
-        then=lambda rel: spark.sql(
-            frame_dedup_tail_sql("spark", rel, max_hamming, ok_rel="__mm_fphash_ok")
-        ),
-    )
+    rel, ok = stage(spark, "frame_phash")
+    return spark.sql(frame_dedup_tail_sql("spark", rel, max_hamming, ok_rel=ok))
 
 
 def mm_frame_dedup_oracle_sql(max_hamming: int = FRAME_MAX_HAMMING) -> str:
@@ -611,12 +564,8 @@ def frame_phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None 
 
     cap = SIMHASH_MAX_BUCKET if max_bucket is None else max_bucket
 
-    def _stats(rel):
-        fs = f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, simhash FROM {rel})"
-        v = "__mm_fsig_stats"
-        spark.sql(f"SELECT * FROM {fs}").createOrReplaceTempView(v)
-        return capped_bucket_stats(
-            spark, v, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap
-        )
-
-    return _staged_frame_phash(spark, then=_stats)
+    rel, _ = stage(spark, "frame_phash")
+    fs = f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, simhash FROM {rel})"
+    v = "__mm_fsig_stats"
+    spark.sql(f"SELECT * FROM {fs}").createOrReplaceTempView(v)
+    return capped_bucket_stats(spark, v, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap)

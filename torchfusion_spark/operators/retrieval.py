@@ -23,8 +23,8 @@ cannot broadcast a FULL OUTER side, so the join spelling drags a
 sort-merge exchange into every fusion; the union-aggregate shape is one
 tiny shuffle and generalizes to R rankers as an R-way union). Inputs
 are post-TopK relations — |Q|·k rows regardless of corpus size; the
-corpus-sized work happens once in the two staged builders
-(``textstats._staged_unigrams``, ``similarity._staged_norms``), both
+corpus-sized work happens once in the two staged relations
+(``unigrams``, ``sim_norms`` — see ``torchfusion_spark.staging``), both
 shared with every other retrieval/scoring query in the session.
 
 Reference note: the reference engine (/root/reference, a DataFusion
@@ -36,8 +36,9 @@ from __future__ import annotations
 
 from torchfusion_spark.operators import sqlgen as G
 from torchfusion_spark.operators import textstats
-from torchfusion_spark.operators.similarity import _staged_norms, cosine_topk_sql
+from torchfusion_spark.operators.similarity import cosine_topk_sql
 from torchfusion_spark.operators.textstats import bm25_topk_sql
+from torchfusion_spark.staging import stage
 
 RRF_K = 60  # the published default smoothing constant
 RRF_IN_K = 20  # per-ranker candidate-list depth fed into the fusion
@@ -99,23 +100,10 @@ def rrf_fusion_sql(
 
 
 def rrf_fusion(spark):
-    """Staged Spark path: both corpus-sized inputs resolve from their
-    session memos, plans bound INSIDE both memo locks (the
-    ``_staged_norms`` TOCTOU discipline — a view swap between memo check
-    and ``spark.sql`` would bind one ranker to the other corpus). Lock
-    order is sim_norms → unigrams (→ docs inside the unigrams builder);
-    no existing path acquires these in the opposite order
-    (``memo_lock``'s acyclic-builder-order contract), so nesting cannot
-    deadlock."""
-    return _staged_norms(
-        spark,
-        lambda nrel: textstats._staged_unigrams(
-            spark,
-            lambda trel: spark.sql(
-                rrf_fusion_sql("spark", tf_rel=trel, norm_rel=nrel)
-            ),
-        ),
-    )
+    """Staged Spark path: both corpus-sized inputs are session-staged
+    relations."""
+    nrel, trel = stage(spark, "sim_norms", "unigrams")
+    return spark.sql(rrf_fusion_sql("spark", tf_rel=trel, norm_rel=nrel))
 
 
 RAG_CONTEXT_BUDGET = 600  # context char budget per query (~3 lead chunks)
@@ -195,14 +183,6 @@ def rag_context_sql(
 
 
 def rag_context(spark):
-    """Staged Spark path — same nested-memo discipline as
-    :func:`rrf_fusion` (sim_norms → unigrams lock order)."""
-    return _staged_norms(
-        spark,
-        lambda nrel: textstats._staged_unigrams(
-            spark,
-            lambda trel: spark.sql(
-                rag_context_sql("spark", tf_rel=trel, norm_rel=nrel)
-            ),
-        ),
-    )
+    """Staged Spark path — the staged inputs of :func:`rrf_fusion`."""
+    nrel, trel = stage(spark, "sim_norms", "unigrams")
+    return spark.sql(rag_context_sql("spark", tf_rel=trel, norm_rel=nrel))

@@ -23,6 +23,7 @@ from __future__ import annotations
 import itertools
 
 from torchfusion_spark.operators import sqlgen as G
+from torchfusion_spark.staging import declare, stage
 
 
 def _vec(d: str, col: str = "embedding") -> str:
@@ -62,47 +63,21 @@ def norm_cte(d: str, rel: str = "embeddings") -> str:
     )
 
 
-def _emb_key(spark):
-    """Identity of the live ``embeddings`` view for staged-memo keying —
-    the embeddings-side twin of ``dedup._docs_key`` (code-review r07): a
-    caller swapping the view directly must invalidate the norms memo, or
-    every similarity op silently joins against the previous corpus."""
-    try:
-        return (
-            getattr(spark, "_tf_tables_loaded", None),
-            spark.table("embeddings").semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
-        return object()
+@declare("sim_emb", deps=("embeddings",))
+def _sim_emb(ctx):
+    """The embeddings fanned out for CPU parallelism (the source parquet
+    is a single split)."""
+    from torchfusion_spark.session import cpu_fanout
+
+    return ctx.view("__sim_emb", cpu_fanout(ctx.spark.table(ctx.dep("embeddings"))))
 
 
-def _staged_norms(spark, then=None):
-    """Materialize norms once for Spark execution: the relation is used on
-    both sides of every similarity join, and the source parquet is a
-    single split — repartition for CPU parallelism, cache for reuse.
-    Memoized per (session, embeddings-view identity) — five registry
-    queries stage the identical relation back-to-back in gate order
-    (same pattern as the minhash signature memo).
-
-    ``then`` (callable taking the staged view name, returning a
-    DataFrame) is invoked INSIDE the memo lock: a consumer that resolves
-    its plan from ``__sim_norms`` after the lock is released races a
-    concurrent embeddings-view swap — the swap rebuilds the view between
-    the memo check and the consumer's ``spark.sql``, binding the plan to
-    the other corpus (ADVICE r08, the minhash TOCTOU twin)."""
-    from torchfusion_spark.session import cpu_fanout, memo_lock, staged_cache
-
-    key = _emb_key(spark)
-    with memo_lock(spark, "sim_norms"):
-        if getattr(spark, "_tf_sim_norms_key", object()) != key:
-            cpu_fanout(spark.table("embeddings")).createOrReplaceTempView("__sim_emb")
-            n = staged_cache(spark, "sim_norms", spark.sql(norm_cte("spark", "__sim_emb")))
-            n.count()  # materialize before multi-sided reuse
-            n.createOrReplaceTempView("__sim_norms")
-            spark._tf_sim_norms_key = key
-        if then is not None:
-            return then("__sim_norms")
-    return "__sim_norms"
+@declare("sim_norms", deps=("sim_emb",), prewarm=True)
+def _sim_norms(ctx):
+    """The normalized-vector relation, cached: it is used on both sides
+    of every similarity join, and five registry queries read it
+    back-to-back in gate order."""
+    return ctx.cache("__sim_norms", ctx.spark.sql(norm_cte("spark", ctx.dep("sim_emb"))))
 
 
 def cosine_topk_sql(
@@ -554,9 +529,7 @@ def semantic_dedup_sql(
 
 
 def cosine_topk(spark, k: int = 10, n_queries: int = 8):
-    return _staged_norms(
-        spark, lambda rel: spark.sql(cosine_topk_sql("spark", k, n_queries, rel=rel))
-    )
+    return spark.sql(cosine_topk_sql("spark", k, n_queries, rel=stage(spark, "sim_norms")))
 
 
 _PAIR_BLOCK_MAX = 512  # rows of the larger-id side per mapInArrow block
@@ -668,77 +641,22 @@ def exact_pair_rows(spark, rel: str, threshold: float, max_n: int):
 
 
 def cosine_near_dup(spark, threshold: float = 0.42, max_n: int = EXACT_PAIRS_CAP):
-    return _staged_norms(
-        spark,
-        lambda rel: exact_pair_rows(spark, rel, threshold, max_n).orderBy(
-            "id_a", "id_b"
-        ),
+    return exact_pair_rows(spark, stage(spark, "sim_norms"), threshold, max_n).orderBy(
+        "id_a", "id_b"
     )
 
 
-def _staged_assign(spark, rel: str, n_centroids: int = 16) -> str:
-    """Stage the nearest-centroid assignment relation (vec_id, v, nrm,
-    c_id) once per (session, embeddings identity, n_centroids) and return
-    its view name — shared by ``semantic_dedup``, the staged ``ivf_topk``
-    builder and the recall audit's IVF side (r16: each consumer used to
-    recompute the centroid argmax per call — one broadcast cross join +
-    a full-width exchange into the groupBy, ×3 consumers).
-
-    MUST be called inside the norms memo lock (every caller resolves via
-    ``_staged_norms``/``_staged_buckets``), so the memo check-act is
-    race-free and keyed like ``_staged_buckets``: a corpus swap
-    invalidates norms, buckets and assignments together.
-
-    The view/slot is scoped by ``n_centroids``: the staged similarity
-    views are content-deterministic per parameter set, so two concurrent
-    calls with the same parameters replace a view with identical content
-    (harmless), and calls with DIFFERENT parameters use different names —
-    without the scope, a concurrent 4-centroid call could swap the view
-    out from under a 16-centroid call mid-query (the ADVICE-r03
-    clobbering class; kmeans uses a nonce because its loop state is
-    content-nondeterministic mid-flight)."""
-    from torchfusion_spark.session import staged_cache
-
-    view = f"__sim_assign_{n_centroids}"
-    cur = spark._tf_sim_norms_key
-    memo = spark.__dict__.setdefault("_tf_sim_assign_keys", {})
-    if memo.get(n_centroids) != cur:
-        # release sibling-n slots staged on a SUPERSEDED corpus
-        # (code-review r16, second pass): staged_cache only unpersists
-        # on same-slot reuse, so a 4-centroid relation from corpus A
-        # would otherwise stay persisted for the whole session once the
-        # view swaps to corpus B and only 16 is ever requested again —
-        # the ADVICE-r03 unbounded-executor-storage class. Safe without
-        # the slot lock: every _staged_assign caller holds the norms
-        # memo lock, and nothing else touches sim_assign_* slots.
-        for n, k in list(memo.items()):
-            if n != n_centroids and k != cur:
-                stale = spark.__dict__.get("_tf_staged_pool", {}).pop(
-                    f"sim_assign_{n}", None
-                )
-                if stale is not None:
-                    try:
-                        stale.unpersist()
-                    except Exception:  # noqa: BLE001 — release is best-effort
-                        pass
-                # drop the stale temp view too (ADVICE r16): the slot
-                # release alone leaves __sim_assign_{n} resolvable, and a
-                # direct spark.table()/SQL reference after a corpus swap
-                # would silently recompute OLD-corpus rows
-                try:
-                    spark.catalog.dropTempView(f"__sim_assign_{n}")
-                except Exception:  # noqa: BLE001 — release is best-effort
-                    pass
-                del memo[n]
-        a = staged_cache(
-            spark,
-            f"sim_assign_{n_centroids}",
-            spark.sql(assign_cte_sql("spark", n_centroids, rel=rel)),
-        )
-        a.count()
-        a.createOrReplaceTempView(view)
-        memo[n_centroids] = cur
-    return view
+@declare("sim_assign", deps=("sim_norms",), params={"n_centroids": 16}, prewarm=True)
+def _sim_assign(ctx, n_centroids):
+    """The nearest-centroid assignment relation (vec_id, v, nrm, c_id) —
+    shared by ``semantic_dedup``, the staged ``ivf_topk`` builder and the
+    recall audit's IVF side (r16: each consumer used to recompute the
+    centroid argmax per call — one broadcast cross join + a full-width
+    exchange into the groupBy, ×3 consumers)."""
+    return ctx.cache(
+        "__sim_assign",
+        ctx.spark.sql(assign_cte_sql("spark", n_centroids, rel=ctx.dep("sim_norms"))),
+    )
 
 
 def ivf_topk(spark, k: int = 10, n_queries: int = 4, n_centroids: int = 16):
@@ -746,90 +664,59 @@ def ivf_topk(spark, k: int = 10, n_queries: int = 4, n_centroids: int = 16):
     # SQL (code-review r16): a staged view built for a different centroid
     # count than the probe ranks would silently drop the extra lists'
     # candidates — one value must control both.
-    return _staged_norms(
-        spark,
-        lambda rel: spark.sql(
-            ivf_topk_sql(
-                "spark",
-                k,
-                n_queries,
-                n_centroids=n_centroids,
-                rel=rel,
-                assign_rel=_staged_assign(spark, rel, n_centroids),
-            )
-        ),
+    rel, assign = stage(spark, "sim_norms", "sim_assign", n_centroids=n_centroids)
+    return spark.sql(
+        ivf_topk_sql(
+            "spark", k, n_queries, n_centroids=n_centroids, rel=rel, assign_rel=assign
+        )
     )
 
 
 def semantic_dedup(spark, threshold: float = 0.42, n_centroids: int = 16):
     """Staged Spark path: the assignment relation is referenced three
-    times (both pair sides + the verdict scan) — materialize it once
-    (and memoize it: see :func:`_staged_assign`)."""
-
-    def build(rel):
-        view = _staged_assign(spark, rel, n_centroids)
-        return spark.sql(semantic_dedup_sql("spark", threshold, assign_rel=view))
-
-    return _staged_norms(spark, build)
+    times (both pair sides + the verdict scan) — it is staged once
+    (``sim_assign``)."""
+    view = stage(spark, "sim_assign", n_centroids=n_centroids)
+    return spark.sql(semantic_dedup_sql("spark", threshold, assign_rel=view))
 
 
-def _staged_buckets(spark, then):
-    """Stage the sign-LSH bucketed relation
-    (vec_id, v, nrm, bucket, mb0..mb{bands-1}) once per (session,
-    embeddings identity) and resolve ``then`` against it inside the norms
-    memo lock — shared by the pair-enumerating LSH query (the fine
-    multi-band mb* keys), the cluster-collapse query (the coarse band-0
-    ``bucket``) and the recall audit, which run back-to-back in gate
-    order and would otherwise recompute the 64+8 plane dots repeatedly.
-    Memoized under the norms key: the norms lock is already held here, so
-    the check-act is race-free, and a corpus swap invalidates both
-    relations together."""
-    from torchfusion_spark.session import staged_cache
-
-    def build(rel):
-        key = spark._tf_sim_norms_key
-        if getattr(spark, "_tf_sim_buckets_key", object()) != key:
-            mb_cols = ", ".join(
-                f"{e} AS {c}"
-                for c, e in zip(MB_COLS, lsh_band_bucket_exprs("v", "spark"))
-            )
-            b = staged_cache(
-                spark,
-                "sim_buckets",
-                spark.sql(
-                    f"SELECT vec_id, v, nrm, {lsh_bucket_expr('v', 'spark')} AS bucket, "
-                    f"{mb_cols} FROM {rel}"
-                ),
-            )
-            b.count()
-            b.createOrReplaceTempView("__sim_buckets")
-            # capped banded relation staged beside the buckets (r17, the
-            # __minhash_ok discipline): the pair self-join reads it on
-            # both sides exchange-free, and the 64-double vector payload
-            # crosses the (band, bkey) exchange once per corpus instead
-            # of twice per query
-            exploded = G.band_explode(
-                "__sim_buckets", MB_COLS, "spark", carry="vec_id, v, nrm"
-            )
-            ok = staged_cache(
-                spark,
-                "sim_lsh_ok",
-                spark.sql(
-                    f"""
-                    SELECT vec_id, v, nrm, band, bkey FROM (
-                        SELECT vec_id, v, nrm, band, bkey,
-                               COUNT(*) OVER (PARTITION BY band, bkey) AS bsz
-                        FROM ({exploded}))
-                    WHERE bsz <= {LSH_MAX_BUCKET}
-                    """
-                ),
-            )
-            ok.count()
-            ok.createOrReplaceTempView("__sim_lsh_ok")
-            spark._tf_sim_buckets_key = key
-        return then("__sim_buckets")
-
-    return _staged_norms(spark, build)
+@declare("sim_buckets", deps=("sim_norms",), prewarm=True)
+def _sim_buckets(ctx):
+    """(bucketed view, capped banded view): the sign-LSH bucketed
+    relation (vec_id, v, nrm, bucket, mb0..mb{bands-1}) — shared by the
+    pair-enumerating LSH query (the fine multi-band mb* keys), the
+    cluster-collapse query (the coarse band-0 ``bucket``) and the recall
+    audit, which run back-to-back in gate order and would otherwise
+    recompute the 64+8 plane dots repeatedly — and, beside it (r17, the
+    ``minhash_sig`` discipline), the capped banded relation: the pair
+    self-join reads it on both sides exchange-free, and the 64-double
+    vector payload crosses the (band, bkey) exchange once per corpus
+    instead of twice per query."""
+    spark = ctx.spark
+    mb_cols = ", ".join(
+        f"{e} AS {c}" for c, e in zip(MB_COLS, lsh_band_bucket_exprs("v", "spark"))
+    )
+    b = ctx.cache(
+        "__sim_buckets",
+        spark.sql(
+            f"SELECT vec_id, v, nrm, {lsh_bucket_expr('v', 'spark')} AS bucket, "
+            f"{mb_cols} FROM {ctx.dep('sim_norms')}"
+        ),
+    )
+    exploded = G.band_explode(b, MB_COLS, "spark", carry="vec_id, v, nrm")
+    ok = ctx.cache(
+        "__sim_lsh_ok",
+        spark.sql(
+            f"""
+            SELECT vec_id, v, nrm, band, bkey FROM (
+                SELECT vec_id, v, nrm, band, bkey,
+                       COUNT(*) OVER (PARTITION BY band, bkey) AS bsz
+                FROM ({exploded}))
+            WHERE bsz <= {LSH_MAX_BUCKET}
+            """
+        ),
+    )
+    return b, ok
 
 
 def cosine_near_dup_lsh(
@@ -838,14 +725,15 @@ def cosine_near_dup_lsh(
     # the staged ok relation bakes in the default cap — a caller probing
     # a different cap (the skew report's uncapped growth witness) takes
     # the inline spelling
-    ok = "__sim_lsh_ok" if max_bucket == LSH_MAX_BUCKET else None
-    return _staged_buckets(
-        spark,
-        lambda rel: spark.sql(
-            cosine_near_dup_lsh_sql(
-                "spark", threshold, rel=rel, max_bucket=max_bucket, ok_rel=ok
-            )
-        ),
+    rel, ok = stage(spark, "sim_buckets")
+    return spark.sql(
+        cosine_near_dup_lsh_sql(
+            "spark",
+            threshold,
+            rel=rel,
+            max_bucket=max_bucket,
+            ok_rel=ok if max_bucket == LSH_MAX_BUCKET else None,
+        )
     )
 
 
@@ -858,19 +746,13 @@ def lsh_capped_bucket_stats(spark, max_bucket: int = LSH_MAX_BUCKET):
     from the other families."""
     from torchfusion_spark.operators.dedup import capped_bucket_stats
 
-    return _staged_buckets(
-        spark,
-        lambda rel: capped_bucket_stats(
-            spark, rel, MB_COLS, max_bucket, carry="vec_id"
-        ),
-    )
+    rel, _ = stage(spark, "sim_buckets")
+    return capped_bucket_stats(spark, rel, MB_COLS, max_bucket, carry="vec_id")
 
 
 def near_dup_collapse(spark, threshold: float = 0.30):
-    return _staged_buckets(
-        spark,
-        lambda rel: spark.sql(near_dup_collapse_sql("spark", threshold, rel=rel)),
-    )
+    rel, _ = stage(spark, "sim_buckets")
+    return spark.sql(near_dup_collapse_sql("spark", threshold, rel=rel))
 
 
 AUDIT_PAIR_SAMPLE = 4_096  # id-prefix universe for the pair-recall estimate:
@@ -1033,47 +915,46 @@ def ann_recall_audit(
     max_bucket: int = LSH_MAX_BUCKET,
     n_centroids: int = 16,
 ):
-    """Staged Spark path: norms AND the LSH bucket relation resolve from
-    the session memos (both referenced by multiple components), inside
-    the norms lock like every other similarity consumer. The exact pair
+    """Staged Spark path: norms, the LSH bucket relation and the IVF
+    assignment resolve from session staging (each referenced by multiple
+    components), in one :func:`stage` call so all three describe one
+    embeddings corpus. The exact pair
     side is the Arrow scan (:func:`exact_pair_rows`), registered as a
     per-call temp view the audit SQL splices in — per-call because the
     scan is part of the audited computation (no caching across calls),
     nonce-named so concurrent audits cannot clobber each other's view."""
 
-    def build(rel):
-        view = f"__audit_ep_{next(_audit_ep_nonce)}"
-        exact_pair_rows(
-            spark, "__sim_norms", threshold, AUDIT_PAIR_SAMPLE
-        ).createOrReplaceTempView(view)
-        return spark.sql(
-            ann_recall_audit_sql(
-                "spark",
-                k,
-                n_queries,
-                threshold,
-                max_bucket,
-                rel="__sim_norms",
-                bucket_rel=rel,
-                exact_rel=view,
-                # the IVF side reads the session-staged assignment like
-                # it already reads the staged norms/buckets (r16): the
-                # staged view is content-identical to the inline CTE;
-                # the audited computation — probe, candidate join,
-                # top-k, hit joins, and the per-call exact side — still
-                # runs fresh every call. ONE n_centroids value controls
-                # the staged view and the probe SQL (code-review r16).
-                assign_rel=_staged_assign(spark, "__sim_norms", n_centroids),
-                n_centroids=n_centroids,
-                # the LSH pair side reads the staged capped band relation
-                # (r17) when the audit runs at the registered cap — the
-                # audited pair SET is identical (the staged relation is
-                # row-identical to the inline sized/ok chain)
-                ok_rel="__sim_lsh_ok" if max_bucket == LSH_MAX_BUCKET else None,
-            )
+    norms, (rel, ok), assign = stage(
+        spark, "sim_norms", "sim_buckets", "sim_assign", n_centroids=n_centroids
+    )
+    view = f"__audit_ep_{next(_audit_ep_nonce)}"
+    exact_pair_rows(spark, norms, threshold, AUDIT_PAIR_SAMPLE).createOrReplaceTempView(view)
+    return spark.sql(
+        ann_recall_audit_sql(
+            "spark",
+            k,
+            n_queries,
+            threshold,
+            max_bucket,
+            rel=norms,
+            bucket_rel=rel,
+            exact_rel=view,
+            # the IVF side reads the session-staged assignment like it
+            # reads the staged norms/buckets (r16): the staged view is
+            # content-identical to the inline CTE; the audited
+            # computation — probe, candidate join, top-k, hit joins, and
+            # the per-call exact side — still runs fresh every call. ONE
+            # n_centroids value controls the staged view and the probe
+            # SQL (code-review r16).
+            assign_rel=assign,
+            n_centroids=n_centroids,
+            # the LSH pair side reads the staged capped band relation
+            # (r17) when the audit runs at the registered cap — the
+            # audited pair SET is identical (the staged relation is
+            # row-identical to the inline sized/ok chain)
+            ok_rel=ok if max_bucket == LSH_MAX_BUCKET else None,
         )
-
-    return _staged_buckets(spark, build)
+    )
 
 
 _audit_ep_nonce = itertools.count()
@@ -1090,27 +971,23 @@ def norm_excluded_stats(spark):
     kept = the staged norms relation's own count, so the report cannot
     measure a different rule than the operators apply."""
 
-    def build(rel):
-        # zero_norm is counted EXACTLY (the norm expression re-evaluated
-        # once, report-time cost) rather than derived as nonnull - kept:
-        # an embedding array containing a NULL element folds to a NULL
-        # norm and is dropped by the same nrm > 0 filter, and the
-        # derived form misattributed those rows to zero_norm
-        # (code-review r15); they get their own null_norm column.
-        zn = (
-            f"COUNT(CASE WHEN {_norm(_vec('spark'), 'spark')} = 0 THEN 1 END)"
-        )
-        return spark.sql(
-            "SELECT t.total, t.null_vec, t.zero_norm, "
-            "t.nonnull - t.zero_norm - k.kept AS null_norm, k.kept "
-            "FROM (SELECT COUNT(*) AS total, "
-            "COUNT(CASE WHEN embedding IS NULL THEN 1 END) AS null_vec, "
-            f"COUNT(embedding) AS nonnull, {zn} AS zero_norm "
-            "FROM __sim_emb) t CROSS JOIN "
-            f"(SELECT COUNT(*) AS kept FROM {rel}) k"
-        )
-
-    return _staged_norms(spark, build)
+    emb, rel = stage(spark, "sim_emb", "sim_norms")
+    # zero_norm is counted EXACTLY (the norm expression re-evaluated
+    # once, report-time cost) rather than derived as nonnull - kept: an
+    # embedding array containing a NULL element folds to a NULL norm and
+    # is dropped by the same nrm > 0 filter, and the derived form
+    # misattributed those rows to zero_norm (code-review r15); they get
+    # their own null_norm column.
+    zn = f"COUNT(CASE WHEN {_norm(_vec('spark'), 'spark')} = 0 THEN 1 END)"
+    return spark.sql(
+        "SELECT t.total, t.null_vec, t.zero_norm, "
+        "t.nonnull - t.zero_norm - k.kept AS null_norm, k.kept "
+        "FROM (SELECT COUNT(*) AS total, "
+        "COUNT(CASE WHEN embedding IS NULL THEN 1 END) AS null_vec, "
+        f"COUNT(embedding) AS nonnull, {zn} AS zero_norm "
+        f"FROM {emb}) t CROSS JOIN "
+        f"(SELECT COUNT(*) AS kept FROM {rel}) k"
+    )
 
 
 def quantize_int8_sql(d: str) -> str:
@@ -1287,16 +1164,14 @@ def kmeans(spark, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
     v_long, v_assign = f"__km_long_{nonce}", f"__km_assign_{nonce}"
     v_pts = f"__km_pts_{nonce}"
 
-    def snapshot(rel):
-        # snapshot the staged norms into a nonce-scoped CACHED view inside
-        # the memo lock: every later loop read goes through the snapshot,
-        # so a concurrent embeddings-view swap mid-loop cannot rebind the
-        # point relation between iterations (ADVICE r08 TOCTOU class)
-        return staged_checkpoint(
-            spark, f"km_pts_{nonce}", spark.sql(f"SELECT vec_id, v FROM {rel}")
-        )
-
-    _staged_norms(spark, snapshot).createOrReplaceTempView(v_pts)
+    # snapshot the staged norms into a nonce-scoped checkpoint: every
+    # later loop read goes through the snapshot, so the point relation
+    # cannot change between iterations
+    staged_checkpoint(
+        spark,
+        f"km_pts_{nonce}",
+        spark.sql(f"SELECT vec_id, v FROM {stage(spark, 'sim_norms')}"),
+    ).createOrReplaceTempView(v_pts)
     pts = f"(SELECT vec_id, v FROM {v_pts})"
     staged_checkpoint(
         spark,
@@ -1333,9 +1208,7 @@ def build_ivf_index(spark, path: str, n_centroids: int = 16) -> None:
     inverted-list id. Build once, probe many — at 100 TB the probe phase
     reads only ``n_probe / n_centroids`` of the index because the list
     id is a partition directory, not a row filter."""
-    a = _staged_norms(
-        spark, lambda rel: spark.sql(assign_cte_sql("spark", n_centroids, rel=rel))
-    )
+    a = spark.sql(assign_cte_sql("spark", n_centroids, rel=stage(spark, "sim_norms")))
     a.write.mode("overwrite").partitionBy("c_id").parquet(path)
 
 

@@ -6,6 +6,8 @@ sides being plausible."""
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 from torchfusion_spark import streaming
@@ -18,6 +20,7 @@ from torchfusion_spark.operators import (
     textstats,
 )
 from torchfusion_spark.plans.registry import query
+from torchfusion_spark.staging import stage
 
 
 def _sql_pair(name: str, gen, doc: str) -> None:
@@ -388,6 +391,9 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_clusters(spark)
 
 
+_CCS_STAR_LOCK = threading.Lock()
+
+
 @query(
     "dedup_minhash_clusters_star",
     dedup.minhash_clusters_oracle_sql(),
@@ -402,15 +408,15 @@ def dedup_minhash_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each call supersedes the last, so the previous call's surviving
     # checkpoint slot (the final edge set, backing only the superseded
     # plan) is released here. The whole read-release-run-store runs under
-    # one memo lock: unsynchronized, two concurrent builders would race
+    # one lock: unsynchronized, two concurrent builders would race
     # the attribute (leaking the loser's group) and a releasing call
     # could unpersist a completed sibling's not-yet-collected result
     # (code-review r12). Supersede semantics stand: materialize one
     # call's result before invoking the builder again — all registry,
     # bench and gate flows do.
-    from torchfusion_spark.session import memo_lock, release_staged_group
+    from torchfusion_spark.session import release_staged_group
 
-    with memo_lock(spark, "ccs_star"):
+    with _CCS_STAR_LOCK:
         # sweep the whole family prefix, not just the immediately-previous
         # nonce (code-review r13 second pass): a single-nonce release that
         # gets SKIPPED while the issuing thread's in-flight record still
@@ -800,10 +806,7 @@ _sql_pair(
     "text for the rollup); BIGINT arithmetic, hash-order reproducible",
 )
 def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _run(t_rel: str) -> DataFrame:
-        return spark.sql(textstats.pack_sequences_sql("spark", t_rel=t_rel))
-
-    return textstats._staged_pack_t(spark, then=_run)
+    return spark.sql(textstats.pack_sequences_sql("spark", t_rel=stage(spark, "pack_tokens")))
 
 @query(
     "text_dup_gram_fraction",
@@ -815,21 +818,9 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     "back, one per-doc rollup — no all-pairs",
 )
 def text_dup_gram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from torchfusion_spark.session import staged_cache
-
-    # staged with the repo's memo + release discipline (slot-tracked
-    # unpersist on sf_dir switch), not a bare .cache() that re-ran the
-    # dominant explode+hash pass on every invocation; keyed on the
-    # docs-view identity so a direct view swap rebuilds (code-review r07)
-    key = dedup._docs_key(spark)
-    if getattr(spark, "_tf_dupgram_key", object()) != key:
-        e = staged_cache(
-            spark, "dupgram_e", spark.sql(textstats.dup_gram_exploded_sql("spark"))
-        )
-        e.count()
-        e.createOrReplaceTempView("__dupgram_e")
-        spark._tf_dupgram_key = key
-    return spark.sql(textstats.dup_gram_fraction_sql("spark", e_rel="__dupgram_e"))
+    return spark.sql(
+        textstats.dup_gram_fraction_sql("spark", e_rel=stage(spark, "dupgram_exploded"))
+    )
 
 @query(
     "text_bm25_topk",
@@ -843,12 +834,7 @@ def text_dup_gram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a ranking",
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # plan resolved INSIDE the memo lock (ADVICE r08 TOCTOU class): a
-    # docs-view swap between staging and spark.sql would bind the plan
-    # to the other corpus
-    return textstats._staged_unigrams(
-        spark, then=lambda tfn: spark.sql(textstats.bm25_topk_sql("spark", tf_rel=tfn))
-    )
+    return spark.sql(textstats.bm25_topk_sql("spark", tf_rel=stage(spark, "unigrams")))
 
 
 @query(
@@ -861,7 +847,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "generalizes to R rankers); contributions ROUND(1/(60+rank),9) as "
     "DECIMAL so the fused ordering is accumulation-order-proof; both "
     "corpus-sized inputs resolve from the session-staged tf/norms "
-    "relations inside their memo locks",
+    "relations",
 )
 def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return retrieval.rrf_fusion(spark)
@@ -893,17 +879,7 @@ def pipeline_rag_context(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast onto the shared staged tf relation",
 )
 def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _build(tfn):
-        # checkpoint the doc-sized score relation so the tercile tail's
-        # cuts aggregate + final select read it once (VERDICT r9 item 1)
-        v = textstats.checkpoint_scored(
-            spark,
-            "ppl_scored",
-            lambda: spark.sql(textstats.lm_scored_sql("spark", tf_rel=tfn)),
-        )
-        return spark.sql(textstats.lm_bucket_sql("spark", v))
-
-    return textstats._staged_unigrams(spark, then=_build)
+    return spark.sql(textstats.lm_bucket_sql("spark", stage(spark, "ppl_scored")))
 
 
 @query(
@@ -918,24 +894,9 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emits score, predicted class, quintile and top-40% keep flag",
 )
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds TWO staged views: resolved via the key-revalidated binder —
-    # nested locks alone can't prove the two stagings saw one corpus
-    # (code-review r09; the ADVICE r08 TOCTOU class)
-    def _build(tfn, labn):
-        # checkpoint the per-doc score relation so the quintile tail's
-        # cuts aggregate + final select read it once (VERDICT r9 item 1)
-        v = textstats.checkpoint_scored(
-            spark,
-            "cls_scored",
-            lambda: spark.sql(
-                textstats.quality_classifier_scored_sql(
-                    "spark", tf_rel=tfn, lab_rel=labn
-                )
-            ),
-        )
-        return spark.sql(textstats.quality_classifier_bucket_sql("spark", v))
-
-    return textstats.bind_tf_and_labels(spark, _build)
+    return spark.sql(
+        textstats.quality_classifier_bucket_sql("spark", stage(spark, "cls_scored"))
+    )
 
 
 @query(
@@ -948,27 +909,8 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extra doc_id-keyed join over two doc-sized score relations",
 )
 def pipeline_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds the same two staged views as the classifier — same
-    # key-revalidated binder; both sub-pipelines' scored relations are
-    # checkpointed so each computes once (VERDICT r9 item 1)
-    def _build(tfn, labn):
-        cv = textstats.checkpoint_scored(
-            spark,
-            "cls_scored",
-            lambda: spark.sql(
-                textstats.quality_classifier_scored_sql(
-                    "spark", tf_rel=tfn, lab_rel=labn
-                )
-            ),
-        )
-        pv = textstats.checkpoint_scored(
-            spark,
-            "ppl_scored",
-            lambda: spark.sql(textstats.lm_scored_sql("spark", tf_rel=tfn)),
-        )
-        return spark.sql(textstats.quality_ensemble_bucket_sql("spark", cv, pv))
-
-    return textstats.bind_tf_and_labels(spark, _build)
+    cv, pv = stage(spark, "cls_scored", "ppl_scored")
+    return spark.sql(textstats.quality_ensemble_bucket_sql("spark", cv, pv))
 
 
 @query(
@@ -985,38 +927,7 @@ def pipeline_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the two-level-prefix pack — no repeated corpus scans",
 )
 def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds THREE staged views (tf + labels + shingles) via the
-    # key-revalidated triple binder; the two scored relations and the
-    # survivor set are checkpointed (and memo-shared with the
-    # classifier/perplexity/ensemble queries) so each corpus-scale
-    # relation computes once per session
-    def _build(tfn, labn, hxn):
-        cv = textstats.checkpoint_scored(
-            spark,
-            "cls_scored",
-            lambda: spark.sql(
-                textstats.quality_classifier_scored_sql(
-                    "spark", tf_rel=tfn, lab_rel=labn
-                )
-            ),
-        )
-        pv = textstats.checkpoint_scored(
-            spark,
-            "ppl_scored",
-            lambda: spark.sql(textstats.lm_scored_sql("spark", tf_rel=tfn)),
-        )
-        kv = textstats.checkpoint_scored(
-            spark,
-            "pretrain_keep",
-            lambda: spark.sql(
-                textstats.pretrain_keep_sql(
-                    "spark", sh_rel=hxn, cls_rel=cv, ppl_rel=pv
-                )
-            ),
-        )
-        return spark.sql(textstats.pretrain_tail_sql("spark", kv))
-
-    return textstats.bind_tf_labels_hx(spark, _build)
+    return spark.sql(textstats.pretrain_tail_sql("spark", stage(spark, "pretrain_keep")))
 
 
 @query(
@@ -1032,17 +943,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distribution tables roll up from the shared staged tf relation",
 )
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _build(tfn):
-        # checkpoint the doc-sized score relation so the quintile tail's
-        # cuts aggregate + final select read it once (VERDICT r9 item 1)
-        v = textstats.checkpoint_scored(
-            spark,
-            "dsir_scored",
-            lambda: spark.sql(textstats.dsir_scored_sql("spark", tf_rel=tfn)),
-        )
-        return spark.sql(textstats.dsir_bucket_sql("spark", v))
-
-    return textstats._staged_unigrams(spark, then=_build)
+    return spark.sql(textstats.dsir_bucket_sql("spark", stage(spark, "dsir_scored")))
 
 
 _sql_pair(
@@ -1083,8 +984,6 @@ def corpus_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     "them in-statement via the trainer's own fragment CTEs",
 )
 def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds the staged tf relation AND the memoized merge list — the
-    # key-revalidated binder proves they describe one corpus
     return textstats.bind_tf_and_merges(
         spark,
         lambda tfn, merges: spark.sql(
@@ -1187,11 +1086,7 @@ _sql_pair(
     "side reads the per-session staged shingle relation",
 )
 def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # plan resolved INSIDE the memo lock (ADVICE r08 TOCTOU class)
-    return dedup._staged_hx(
-        spark,
-        then=lambda hxn: spark.sql(textstats.decontaminate_sql("spark", sh_rel=hxn)),
-    )
+    return spark.sql(textstats.decontaminate_sql("spark", sh_rel=stage(spark, "hx_shingles")))
 
 
 @query(
@@ -1206,19 +1101,11 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "staged shingle relation",
 )
 def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # binds THREE staged views — the key-revalidated bloom → hx binder
-    # (the nesting order _staged_bloom itself acquires on a rebuild;
-    # hx → bloom would deadlock against a concurrent bloom build)
-    return textstats.bind_hx_and_bloom(
-        spark,
-        lambda hxn, bench_rel, bloom_rel: spark.sql(
-            textstats.decontaminate_bloom_sql(
-                "spark",
-                sh_rel=hxn,
-                bench_rel=bench_rel,
-                bloom_rel=bloom_rel,
-            )
-        ),
+    hxn, (bench_rel, bloom_rel) = stage(spark, "hx_shingles", "bloom_filter")
+    return spark.sql(
+        textstats.decontaminate_bloom_sql(
+            "spark", sh_rel=hxn, bench_rel=bench_rel, bloom_rel=bloom_rel
+        )
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from torchfusion_spark.plans.registry import bcast_dim, query
+from torchfusion_spark.staging import declare, stage
 
 
 @query(
@@ -553,7 +554,7 @@ def q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _li_osr_df(spark: SparkSession, n: int):
+def _li_osr_df(lineitem: DataFrame, n: int):
     """The staged relation's plan (r16 grain v2): the per-(l_orderkey,
     l_suppkey) 'R'-row rollup, pre-``repartition(n, l_orderkey)`` so the
     partial aggregation runs exchange-free after the one staging shuffle
@@ -562,15 +563,22 @@ def _li_osr_df(spark: SparkSession, n: int):
     (repartition and bucketBy share Murmur3) → one file per bucket → the
     reader reports BOTH the hash partitioning and the per-bucket sort."""
     return (
-        spark.table("lineitem")
-        .select("l_orderkey", "l_suppkey", "l_returnflag")
+        lineitem.select("l_orderkey", "l_suppkey", "l_returnflag")
         .repartition(n, "l_orderkey")
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.count(F.when(F.col("l_returnflag") == "R", 1)).alias("r_rows"))
     )
 
 
-def _staged_li_by_order(spark: SparkSession, then=None) -> str:
+@declare(
+    "li_by_order",
+    deps=("lineitem",),
+    # the bucket count is baked into the layout (ADVICE r15 #2), so a
+    # conf change mid-session must re-stage
+    key=lambda spark, **_: int(spark.conf.get("spark.sql.shuffle.partitions")),
+    prewarm=True,
+)
+def _li_by_order(ctx) -> str:
     """The per-(l_orderkey, l_suppkey) 'R'-row rollup of lineitem as an
     EXTERNAL bucketed table on ``l_orderkey`` (``sinks.write_bucketed``,
     data under the gitignored ``.scratch`` like the URL index) — the
@@ -586,78 +594,40 @@ def _staged_li_by_order(spark: SparkSession, then=None) -> str:
     the build entirely — precomputation across runs keyed on the test
     corpus, which the optimization rounds explicitly disallow ("every
     bench/oracle invocation must compute from the parquet inputs").
-    Every process now builds its own pid-scoped dir, swept at exit like
-    the URL index's; the build cost lands in ``staging_warm_sec`` where
-    the bench reports it, and the within-session memo still makes every
-    q21 call after the first registration-free. At 100 TB the same
-    rollup is a real persisted warehouse table maintained by ingest —
-    the cross-run reuse belongs to that layer, not to a benchmarked
-    staging pass.
-
-    Memo key = (tables generation, lineitem semantic hash, shuffle
-    partitions — ADVICE r15 #2: the bucket count is baked into the
-    layout, so a conf change mid-session must re-stage). An
-    un-analyzable lineitem view (in-memory test swaps) draws the
-    always-rebuild sentinel; only that unkeyed case drops the
-    immediately superseded dir eagerly — AFTER the replacement write
-    succeeds (ADVICE r15 #1 ordering) — because keyed re-stages may
-    still have resolved-but-uncollected plans reading the old dir (the
-    exit sweep collects those)."""
+    Every process builds its own pid-scoped dir per build, swept at exit
+    (a superseded dir may still back a resolved-but-uncollected plan);
+    the build cost lands in ``staging_warm_sec`` where the bench reports
+    it. At 100 TB the same rollup is a real persisted warehouse table
+    maintained by ingest — the cross-run reuse belongs to that layer,
+    not to a benchmarked staging pass."""
     import atexit
-    import hashlib
     import os
     import shutil
 
-    from torchfusion_spark.session import memo_lock
-    from torchfusion_spark.sources.sinks import write_bucketed
+    from torchfusion_spark.sources import sinks
 
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = ctx.key
     base = os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
         ".scratch",
     )
-    with memo_lock(spark, "li_by_order"):
-        try:
-            key = (
-                getattr(spark, "_tf_tables_loaded", None),
-                spark.table("lineitem").semanticHash(),
-                n,
-            )
-        except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
-            key = object()
-        if getattr(spark, "_tf_li_by_order_key", object()) != key:
-            if type(key) is object:
-                tag = f"unkeyed{id(key)}"
-            else:
-                tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-            path = os.path.join(base, f"li_by_order_{tag}_{os.getpid()}")
-            made = spark.__dict__.setdefault("_tf_li_by_order_paths", [])
-            if not made:  # first staging this session: register the sweep
-                atexit.register(
-                    lambda: [shutil.rmtree(p, ignore_errors=True) for p in made]
-                )
-            # record BEFORE the write so a mid-write failure's partial dir
-            # is still swept at exit (code-review r15)
-            made.append(path)
-            write_bucketed(
-                _li_osr_df(spark, n),
-                "__tf_li_by_order",
-                ["l_orderkey"],
-                n,
-                sort_cols=["l_orderkey"],
-                path=path,
-            )
-            # the unkeyed always-rebuild sentinel can never be
-            # re-validated: drop the immediately superseded dir now that
-            # the replacement landed (ADVICE r15 #1 ordering — deleting
-            # before the write orphans live data on a mid-write failure;
-            # the url-index unkeyed no-reuse rule)
-            if type(key) is object and len(made) > 1:
-                shutil.rmtree(made[-2], ignore_errors=True)
-            spark._tf_li_by_order_key = key
-        if then is not None:
-            return then("__tf_li_by_order")
-    return "__tf_li_by_order"
+    path = os.path.join(base, f"li_by_order_{ctx.tag}_{os.getpid()}")
+    made = ctx.spark.__dict__.setdefault("_tf_li_by_order_paths", [])
+    if not made:  # first staging this session: register the sweep
+        atexit.register(lambda: [shutil.rmtree(p, ignore_errors=True) for p in made])
+    # record BEFORE the write so a mid-write failure's partial dir is
+    # still swept at exit (code-review r15)
+    made.append(path)
+    table = f"__tf_li_by_order_{ctx.tag}"
+    sinks.write_bucketed(
+        _li_osr_df(ctx.spark.table(ctx.dep("lineitem")), n),
+        table,
+        ["l_orderkey"],
+        n,
+        sort_cols=["l_orderkey"],
+        path=path,
+    )
+    return table
 
 
 @query(
@@ -695,11 +665,11 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     full sort + two window passes per run. r15 (VERDICT r14 item 3, the
     sf1→sf3 ratio bending 4.3→6.0): the fact's 3-column projection is
     session-staged as an l_orderkey-BUCKETED table
-    (``_staged_li_by_order`` → ``sinks.write_bucketed``), so the pair
+    (``li_by_order`` → ``sinks.write_bucketed``), so the pair
     rollup, the order rollup and every downstream orderkey requirement
     run co-located — ZERO fact shuffles at query time; the one fact
     shuffle left in the family is the staging write itself, paid once
-    per session (scope notes in ``_staged_li_by_order``). r16 moves the
+    per session (scope notes in ``li_by_order``). r16 moves the
     first aggregation level INTO
     the staged table (VERDICT r15 item 3b): the stage stores the
     per-(orderkey, suppkey) 'R'-row rollup, so query time is ONE
@@ -717,42 +687,39 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot bite. Oracle unchanged (DuckDB runs the textbook correlated
     form)."""
 
-    def _run(li: str) -> DataFrame:
-        # r16: the staged table IS the per-(orderkey, suppkey) rollup
-        # (grain v2, `_li_osr_df`) — query time starts at the order-level
-        # aggregation, exchange-free over the bucketed read
-        per_os = spark.table(li)
-        sole_r = (
-            per_os.groupBy("l_orderkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_supp"),
-                F.count(F.when(F.col("r_rows") > 0, 1)).alias("n_r_supp"),
-                F.max(F.when(F.col("r_rows") > 0, F.col("l_suppkey"))).alias("l_suppkey"),
-                F.sum(F.when(F.col("r_rows") > 0, F.col("r_rows"))).alias("r_rows"),
-            )
-            .filter((F.col("n_supp") > 1) & (F.col("n_r_supp") == 1))
-            .select("l_orderkey", "l_suppkey", "r_rows")
+    # r16: the staged table IS the per-(orderkey, suppkey) rollup (grain
+    # v2, `_li_osr_df`) — query time starts at the order-level
+    # aggregation, exchange-free over the bucketed read
+    per_os = spark.table(stage(spark, "li_by_order"))
+    sole_r = (
+        per_os.groupBy("l_orderkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_supp"),
+            F.count(F.when(F.col("r_rows") > 0, 1)).alias("n_r_supp"),
+            F.max(F.when(F.col("r_rows") > 0, F.col("l_suppkey"))).alias("l_suppkey"),
+            F.sum(F.when(F.col("r_rows") > 0, F.col("r_rows"))).alias("r_rows"),
         )
-        o = spark.table("orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-        s = (
-            spark.table("supplier")
-            .join(
-                F.broadcast(
-                    spark.table("nation").filter(F.col("n_name") == "NATION_3")
-                ),
-                F.col("s_nationkey") == F.col("n_nationkey"),
-            )
-            .select("s_suppkey", "s_name")
+        .filter((F.col("n_supp") > 1) & (F.col("n_r_supp") == 1))
+        .select("l_orderkey", "l_suppkey", "r_rows")
+    )
+    o = spark.table("orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
+    s = (
+        spark.table("supplier")
+        .join(
+            F.broadcast(
+                spark.table("nation").filter(F.col("n_name") == "NATION_3")
+            ),
+            F.col("s_nationkey") == F.col("n_nationkey"),
         )
-        return (
-            sole_r.join(o, sole_r.l_orderkey == o.o_orderkey)
-            .join(bcast_dim(spark, s, "supplier"), sole_r.l_suppkey == s.s_suppkey)
-            .groupBy("s_name")
-            .agg(F.sum("r_rows").cast("bigint").alias("numwait"))
-            .orderBy(F.col("numwait").desc(), "s_name")
-        )
-
-    return _staged_li_by_order(spark, then=_run)
+        .select("s_suppkey", "s_name")
+    )
+    return (
+        sole_r.join(o, sole_r.l_orderkey == o.o_orderkey)
+        .join(bcast_dim(spark, s, "supplier"), sole_r.l_suppkey == s.s_suppkey)
+        .groupBy("s_name")
+        .agg(F.sum("r_rows").cast("bigint").alias("numwait"))
+        .orderBy(F.col("numwait").desc(), "s_name")
+    )
 
 
 @query(

@@ -6,11 +6,20 @@ installed, ``argmax`` pre-registered.
 Designed for cluster scale even though tests run local: AQE (runtime
 re-planning + skew-join), Arrow-batched Python exchange, UTC session time,
 shuffle parallelism sized from the environment instead of the 200 default.
+
+Also the checkpoint lifecycle of the ITERATIVE staged builders
+(connected components ``cc_``/``ccs_``, k-means ``km_``, BPE ``bpe_``):
+each call draws a :func:`staging_nonce`, checkpoints its rounds into
+nonce-scoped slots (:func:`staged_checkpoint`), and a later call
+releases the superseded group (:func:`release_staged_group`) while
+groups of other live threads stay protected. The session-staged
+relations the registry queries share (shingles, term frequencies,
+norms, …) are not staged here: ``torchfusion_spark.staging`` declares
+them and builds each once per session and input.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import threading
 
@@ -38,50 +47,27 @@ def cpu_fanout(df, rows_per_task: int = 128):
     return df.repartition(width)
 
 
-def staged_cache(spark, slot: str, df):
-    """``cache()`` with release tracking for session-staged relations.
-
-    Every staged relation (minhash signatures, similarity norms, …) is
-    memoized per (session, loaded tables); when the memo key changes
-    (sf_dir switch) the superseded cache must be unpersisted or executor
-    storage grows without bound across invocations (ADVICE r03). Keyed by
-    ``slot``: caching into an occupied slot releases the previous
-    DataFrame first. Returns the cached (not yet materialized) DataFrame.
-    """
-    pool = spark.__dict__.setdefault("_tf_staged_pool", {})
-    with _slot_lock(spark, slot):
-        prev = pool.get(slot)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
-        cached = df.cache()
-        pool[slot] = cached
-        return cached
-
-
 def staged_checkpoint(spark, slot: str, df):
-    """``localCheckpoint()`` with release tracking (same contract as
-    :func:`staged_cache`, for the staging shapes where the cache manager
-    fails to substitute the cached plan — see ``operators.dedup.containment``).
+    """``localCheckpoint()`` with release tracking for the ITERATIVE
+    staged builders (connected components, k-means, BPE): each round's
+    checkpoint lands in a nonce-scoped slot of the per-session checkpoint
+    pool, and checkpointing into an occupied slot releases the
+    superseded checkpoint. Session-staged relations are not staged here;
+    ``torchfusion_spark.staging`` owns their lifecycle.
 
     The checkpointed Dataset's logical plan is a ``LogicalRDD`` wrapping
     the persisted internal RDD, so ``analyzed().rdd()`` on the *result*
     is the handle the block manager holds; unpersisting it on slot reuse
     frees the executor blocks (mechanism verified against
-    ``sc.getPersistentRDDs`` in tests/test_extensions.py).
+    ``sc.getPersistentRDDs`` in tests/test_skew_and_caps.py).
 
     Order matters: the new checkpoint materializes (localCheckpoint is
     eager) BEFORE the superseded one is released — a local checkpoint
     truncates lineage, so an iterative builder whose round N+1 plan reads
-    round N's blocks would lose data under release-first."""
+    round N's blocks would lose data under release-first. Every slot
+    name carries its call's nonce, and a nonce belongs to one thread, so
+    no two threads stage one slot."""
     pool = spark.__dict__.setdefault("_tf_ck_pool", {})
-    with _slot_lock(spark, slot):
-        return _staged_checkpoint_locked(spark, pool, slot, df)
-
-
-def _staged_checkpoint_locked(spark, pool, slot, df):
     with _ck_pool_lock(spark):
         prev = pool.get(slot)
     ck = df.localCheckpoint()
@@ -89,8 +75,7 @@ def _staged_checkpoint_locked(spark, pool, slot, df):
         # contract: the caller must have materialized any DataFrame built
         # on the superseded checkpoint — its lineage is truncated, so a
         # stale handle fails with a lost-block error after this release.
-        # Slot reuse is logged so that failure is attributable (ADVICE
-        # r04); all registry/gate flows materialize before re-invoking.
+        # Slot reuse is logged so that failure is attributable (ADVICE r04).
         import logging
 
         logging.getLogger(__name__).debug(
@@ -135,62 +120,6 @@ def _protected_nonces(spark, keep_nonce: int | None) -> set[int]:
     return out
 
 
-@contextlib.contextmanager
-def _slot_lock(spark, slot: str):
-    """Per-slot lock (as a context manager) serializing the whole
-    read-prev → build → store sequence of :func:`staged_cache` /
-    :func:`staged_checkpoint`. The pool lock alone only protects the dict
-    operations: two threads staging the SAME slot concurrently would both
-    read the same ``prev`` (double unpersist) and the loser's checkpoint
-    blocks would leak when the winner overwrites the pool entry — the
-    unbounded-executor-storage class the slot pool exists to prevent
-    (code-review r07). Distinct slots never contend, so the parallel
-    prewarm keeps its concurrency.
-
-    REFCOUNTED handout (ADVICE r08): the Lock object is obtained and its
-    per-slot refcount incremented atomically under the pool lock, and the
-    refcount is decremented (under the pool lock again) only after the
-    critical section exits. ``release_staged_group``'s registry prune
-    skips any slot with an outstanding handout, which closes the window
-    the r8 try-acquire narrowed but could not close: a thread that had
-    obtained the Lock object from the registry but not yet entered its
-    ``with`` block was invisible to ``acquire(blocking=False)``, so the
-    sweep could pop the entry and let a later call mint a SECOND Lock
-    for the same slot — two "holders" of one slot, recreating the
-    double-unpersist the lock exists to prevent. With the refcount taken
-    under the same pool lock that serializes handout and prune, a handout
-    is either visible to the prune (refcount > 0 → skip) or happens after
-    the pop (fresh Lock, but the old one had no holder)."""
-    with _ck_pool_lock(spark):
-        locks = spark.__dict__.setdefault("_tf_slot_locks", {})
-        refs = spark.__dict__.setdefault("_tf_slot_lock_refs", {})
-        lk = locks.setdefault(slot, threading.Lock())
-        refs[slot] = refs.get(slot, 0) + 1
-    try:
-        with lk:
-            yield lk
-    finally:
-        with _ck_pool_lock(spark):
-            refs = spark.__dict__.get("_tf_slot_lock_refs", {})
-            n = refs.get(slot, 0) - 1
-            if n <= 0:
-                refs.pop(slot, None)
-            else:
-                refs[slot] = n
-
-
-def memo_lock(spark, name: str):
-    """Named per-session lock (context manager) for a staged-builder
-    memo's check-then-act (``_staged_hx``, ``_staged_containment``, …): a
-    user query racing the parallel bench prewarm through an unguarded
-    memo would double-build the relation and double-stage the slot.
-    Builder dependency order is acyclic (containment → hx → docs), so
-    nested acquisition cannot deadlock. Backed by the same per-session
-    refcounted lock registry as :func:`_slot_lock`, under a ``memo:``
-    namespace."""
-    return _slot_lock(spark, f"memo:{name}")
-
-
 def _ck_pool_lock(spark) -> threading.Lock:
     """Session-scoped lock serializing checkpoint-pool mutation against
     release sweeps. ``staged_checkpoint`` inserts into ``_tf_ck_pool``
@@ -225,22 +154,6 @@ def release_staged_group(spark, prefix: str, keep_nonce: int | None = None) -> i
             continue
         with _ck_pool_lock(spark):
             handle = pool.pop(slot, None)
-            # prune the slot's Lock with its pool entry: nonce-scoped
-            # slots get a fresh name per iterative call, so an unpruned
-            # registry grows ~4 Lock objects per connected_components
-            # call for the life of the session (code-review r07).
-            # Prune ONLY when no handout is outstanding (ADVICE r08):
-            # _slot_lock increments the slot's refcount under this same
-            # pool lock BEFORE it can acquire, so refcount == 0 here
-            # proves no thread holds — or is about to enter — the Lock;
-            # the r8 acquire(blocking=False) probe missed a thread that
-            # had obtained the Lock object but not yet entered its
-            # ``with`` block, leaving the double-unpersist window open.
-            # A referenced lock simply stays registered; nonce-scoped
-            # names are never re-staged after their group is superseded,
-            # so the registry stays bounded anyway.
-            if spark.__dict__.get("_tf_slot_lock_refs", {}).get(slot, 0) == 0:
-                spark.__dict__.get("_tf_slot_locks", {}).pop(slot, None)
         if handle is None:
             continue
         try:

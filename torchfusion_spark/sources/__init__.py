@@ -134,12 +134,13 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABL
     # Registration GENERATION in the key: createOrReplaceTempView
     # invalidates every cached plan that references the replaced view
     # (Spark's cache manager), so any staged relation built over the
-    # tables (__tf_hx, __minhash_sig, __sim_norms, …) silently loses its
-    # cache whenever the views are actually re-registered. Staged-builder
-    # memos key on _tf_tables_loaded — bumping the generation here makes
-    # those memo keys differ after every real re-registration, forcing
-    # re-staging instead of running plans that inline the whole pipeline
-    # over an uncached view (plan-audit shuffle-count blowup).
+    # tables (shingles, signatures, norms, …) silently loses its cache
+    # whenever the views are actually re-registered. The staging
+    # registry keys its table roots on _tf_tables_loaded — bumping the
+    # generation here gives them a new identity after every real
+    # re-registration, forcing re-staging instead of running plans that
+    # inline the whole pipeline over an uncached view (plan-audit
+    # shuffle-count blowup).
     spark._tf_tables_gen = gen + 1
     spark._tf_tables_loaded = (sf_dir, tables, gen + 1)
 

@@ -1,47 +1,311 @@
-"""Session-staged relation prewarm — the ONE copy of the staging
-schedule shared by ``bench.py`` and ``tools/perf_probe.py`` (code-review
-r16: the two hand-duplicated lists had to be patched in lock-step for
-the pool-width change and again for the staged-assign root; one helper
-ends the drift).
+"""Session-staged relations: one declarative registry.
 
-The bench's r03/r06 contract: every session-staged relation the
-headline set reads is built here, OUTSIDE the timed region, so its
-one-time cost lands in ``staging_warm_sec`` instead of polluting the
-first timed query's cold number. Builders are independent Spark jobs
-apart from the shared hashed-shingle relation (``__tf_hx`` feeds
-minhash/containment/bloom), so phase 1 overlaps the roots and phase 2
-overlaps the three hx consumers. Safe concurrently: each builder runs
-exactly once per memo key and writes a distinct staged_cache slot /
-memo attribute, so no two threads race on a slot.
+A staged relation is a corpus-sized intermediate (hashed shingles, term
+frequencies, vector norms, …) that several registry queries read; it is
+built once per session and input and reused. Each one is declared once,
+next to the SQL it stages, as
 
-Pool width (r16, guide §2.6): a few jobs in flight fill the scheduler's
-tail without fighting for task slots. The r07 width-10 pool (one thread
-per root) measured 5–6 s at sf0.1 on a quiet host, but local-mode task
-dispatch pays a futex-wake chain per task, and on hosts with inflated
-thread-wake latency (32–500 µs measured in r16) ten concurrent jobs
-thrash: interleaved fresh-session A/B at sf0.1 measured width 10 at
-{20, 79, 80, 133} s against width 5 at {28.0, 28.2, 35.4} s and width 3
-at ~42 s — width 5 keeps the overlap win with far lower variance.
-Parameterized (``$SPARK_GRAFT_STAGING_POOL``) for the same reason the
-core count is: a real cluster sizes concurrent staging submissions to
-its scheduler, not to one sandbox's wake latency. Invalid or
-non-positive values fall back to the default instead of aborting the
-prewarm (an aborted prewarm silently shifts every staged build into the
-first timed queries — code-review r16).
+    @declare("hx_shingles", deps=("docs",), prewarm=True)
+    def _hx(ctx): ...
+
+and consumers ask for it with :func:`stage`. The registry owns the whole
+lifecycle:
+
+* **Build once per input identity.** An entry is identified by its
+  parameters, its own ``key`` (if any) and the builds of its deps. The
+  roots are the catalog tables (``documents``, ``embeddings``,
+  ``lineitem``), pinned as views and keyed on (load_tables generation,
+  semantic plan hash), so swapping a view — or loading other tables —
+  gives every relation downstream of it a new identity. Concurrent
+  callers of one identity wait on one build-once future; no lock is held
+  while Spark runs.
+* **Key-scoped views.** Every build names its temp views after itself
+  (``__tf_hx_7``). A later build under another identity makes new views
+  instead of replacing the ones a consumer is binding, so a plan bound
+  to a staged view keeps reading one corpus without any lock. One
+  :func:`stage` call with several names resolves them against one
+  snapshot of their shared inputs.
+* **Release on supersede.** Building a relation under a new identity
+  releases its entries under any other identity: their caches before
+  the build (a rebuild on the same rows caches the same plan, which
+  shares their cache-manager entry), their checkpoints only after the
+  replacement is materialized. As with every checkpoint in this
+  package, a plan over a superseded checkpoint must be materialized
+  before the relation is staged again on other inputs. The views stay,
+  so a late binder of a cache-backed entry still reads its own corpus.
+* **Derived prewarm.** :func:`prewarm_staging` builds the relations
+  declared ``prewarm=True`` on a thread pool, each submitted once every
+  prewarm relation it depends on has finished, so a component's timed
+  wall is its own build.
+
+Pool width: a few jobs in flight fill the scheduler's tail without
+fighting for task slots. On hosts with slow thread wake-ups (32–500 µs
+measured) ten concurrent jobs thrash: fresh-session A/B at sf0.1
+measured width 10 at {20, 79, 80, 133} s against width 5 at {28.0, 28.2,
+35.4} s and width 3 at ~42 s. ``$SPARK_GRAFT_STAGING_POOL`` overrides
+it, because a real cluster sizes concurrent staging submissions to its
+scheduler; invalid or non-positive values fall back to the default
+instead of aborting the prewarm (an aborted prewarm silently shifts
+every staged build into the first timed queries).
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import threading
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 _DEFAULT_POOL_WIDTH = 5
+
+
+@dataclass(frozen=True)
+class Staged:
+    """One staged relation: ``build(ctx, **params)`` returns its result
+    (view names or a small value) from ``ctx.dep(d)`` for each of
+    ``deps``; ``key(spark, **params)`` adds any input identity the deps
+    do not carry; ``params`` are the declared parameters with their
+    defaults."""
+
+    name: str
+    deps: tuple[str, ...]
+    key: Callable[..., Any] | None
+    build: Callable[..., Any]
+    params: dict = field(default_factory=dict)
+    prewarm: bool = False
+
+
+REGISTRY: dict[str, Staged] = {}
+
+
+def _ancestors(name: str) -> set[str]:
+    out: set[str] = set()
+    todo = list(REGISTRY[name].deps)
+    while todo:
+        d = todo.pop()
+        if d not in out:
+            out.add(d)
+            todo.extend(REGISTRY[d].deps)
+    return out
+
+
+def declare(name: str, deps: tuple[str, ...] = (), key=None, *, params=None, prewarm=False):
+    """Decorator declaring ``build`` as staged relation ``name``. Every
+    dep must already be declared and may not reach ``name`` again, so
+    the registry is a DAG by construction."""
+
+    def wrap(build):
+        unknown = [d for d in deps if d not in REGISTRY]
+        if unknown:
+            raise ValueError(f"staged relation {name!r}: undeclared deps {unknown}")
+        if name in deps or any(name in _ancestors(d) for d in deps):
+            raise ValueError(f"staged relation {name!r}: dependency cycle via {deps}")
+        REGISTRY[name] = Staged(name, tuple(deps), key, build, dict(params or {}), prewarm)
+        return build
+
+    return wrap
+
+
+class Stale(Exception):
+    """A root's input changed between keying and building; :func:`stage`
+    keys it again."""
+
+
+def table_key(spark, table: str, df=None):
+    """Identity of a catalog table: (load_tables generation, semantic
+    plan hash). An un-analyzable table yields a fresh ``object()``, so
+    everything built on it rebuilds on every use."""
+    try:
+        df = spark.table(table) if df is None else df
+        return (getattr(spark, "_tf_tables_loaded", None), df.semanticHash())
+    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
+        return object()
+
+
+def _declare_table(table: str) -> None:
+    @declare(table, key=lambda spark: table_key(spark, table))
+    def _pin(ctx):
+        df = ctx.spark.table(table)
+        if type(ctx.key) is not object and table_key(ctx.spark, table, df) != ctx.key:
+            raise Stale(table)
+        return ctx.view(f"__tf_{table}", df)
+
+
+for _table in ("documents", "embeddings", "lineitem"):
+    _declare_table(_table)
+
+
+@dataclass
+class _Entry:
+    result: Any
+    tag: int
+    key: Any
+    params: dict
+    caches: list  # cached DataFrames
+    checkpoints: list  # the RDDs behind localCheckpoints
+
+
+class _Ctx:
+    """What a build sees: the session, its deps' results and helpers
+    that name views after this build and record what must be released
+    when a later build supersedes it."""
+
+    def __init__(self, spark, tag: int, key, deps: dict[str, _Entry]):
+        self.spark, self.tag, self.key = spark, tag, key
+        self.deps = deps
+        self.caches: list = []
+        self.checkpoints: list = []
+
+    def dep(self, name: str):
+        return self.deps[name].result
+
+    def view(self, base: str, df) -> str:
+        name = f"{base}_{self.tag}"
+        df.createOrReplaceTempView(name)
+        return name
+
+    def cache(self, base: str, df) -> str:
+        """Cache, materialize and expose ``df``."""
+        df = df.cache()
+        self.caches.append(df)
+        df.count()
+        return self.view(base, df)
+
+    def checkpoint(self, base: str, df) -> str:
+        """``localCheckpoint`` (eager) and expose ``df`` — for shapes the
+        cache manager fails to substitute back into a plan (a CTE inside
+        a cached view gets its relation ids remapped on embedding)."""
+        ck = df.localCheckpoint()
+        # the checkpointed Dataset's LogicalRDD wraps the persisted RDD:
+        # that RDD, not the Dataset, is what the block manager holds
+        self.checkpoints.append(ck._jdf.queryExecution().analyzed().rdd())
+        return self.view(base, ck)
+
+
+class _Session:
+    def __init__(self):
+        self.lock = threading.Lock()  # guards the dict only, never a build
+        self.entries: dict[tuple, Future] = {}
+        self.tags = itertools.count(1)
+
+
+def _session(spark) -> _Session:
+    return spark.__dict__.setdefault("_tf_staging", _Session())
+
+
+def _release(handles: list) -> None:
+    for h in handles:
+        try:
+            h.unpersist(False)
+        except Exception:  # noqa: BLE001 — release is best-effort
+            pass
+
+
+def _supersede(sess: _Session, name: str, ident) -> list[_Entry]:
+    """Pop the finished entries of ``name`` under any other identity."""
+    with sess.lock:
+        stale = [
+            k for k, f in sess.entries.items() if k[0] == name and k[2] != ident and f.done()
+        ]
+        futs = [sess.entries.pop(k) for k in stale]
+    return [f.result() for f in futs if f.exception() is None]
+
+
+def _build(spark, sess, rel: Staged, full: tuple, fut: Future, key, deps, params):
+    # superseded caches go first: a build that caches the same plan again
+    # (the same corpus under a new identity) would share their
+    # cache-manager entry and lose it when they are released after it
+    old = _supersede(sess, rel.name, full[2])
+    _release([df for e in old for df in e.caches])
+    with sess.lock:
+        tag = next(sess.tags)
+    ctx = _Ctx(spark, tag, key, deps)
+    try:
+        result = rel.build(ctx, **params)
+    except BaseException as exc:
+        with sess.lock:
+            sess.entries.pop(full, None)
+        _release(ctx.caches + ctx.checkpoints + [ck for e in old for ck in e.checkpoints])
+        fut.set_exception(exc)
+        return
+    fut.set_result(_Entry(result, tag, key, params, ctx.caches, ctx.checkpoints))
+    # checkpoints go only now that their replacement is materialized, with
+    # whatever finished under another identity while this one built
+    late = _supersede(sess, rel.name, full[2])
+    _release(
+        [ck for e in old + late for ck in e.checkpoints] + [df for e in late for df in e.caches]
+    )
+
+
+def _resolve(spark, sess: _Session, name: str, params: dict, memo: dict) -> _Entry:
+    rel = REGISTRY[name]
+    p = {**rel.params, **params}
+    pkey = tuple(sorted(p.items()))
+    if (name, pkey) in memo:
+        return memo[(name, pkey)]
+    deps = {d: _resolve(spark, sess, d, {}, memo) for d in rel.deps}
+    while True:
+        key = rel.key(spark, **p) if rel.key is not None else None
+        full = (name, pkey, (key, tuple(e.tag for e in deps.values())))
+        with sess.lock:
+            fut = sess.entries.get(full)
+            mine = fut is None
+            if mine:
+                fut = sess.entries[full] = Future()
+        if mine:
+            _build(spark, sess, rel, full, fut, key, deps, p)
+        try:
+            entry = fut.result()
+        except Stale:
+            continue
+        memo[(name, pkey)] = entry
+        return entry
+
+
+def stage(spark, *names: str, **params):
+    """The result of each named staged relation, building what is
+    missing. One name returns its result, several a tuple; all of them
+    are resolved against one snapshot of their shared inputs. ``params``
+    go to every named relation that declares them (deps use their
+    defaults)."""
+    if not REGISTRY.keys() >= set(names):
+        _load_declarations()
+    sess = _session(spark)
+    for k in params:
+        if not any(k in REGISTRY[n].params for n in names):
+            raise TypeError(f"no staged relation in {names} takes {k!r}")
+    memo: dict = {}
+    out = tuple(
+        _resolve(
+            spark, sess, n, {k: v for k, v in params.items() if k in REGISTRY[n].params}, memo
+        ).result
+        for n in names
+    )
+    return out[0] if len(names) == 1 else out
+
+
+def built(spark, name: str, **params) -> _Entry | None:
+    """The live, finished entry of ``name`` under ``params`` (defaults
+    filled in), or None — for tests and tools that inspect staging."""
+    if name not in REGISTRY:
+        _load_declarations()
+    p = {**REGISTRY[name].params, **params}
+    sess = _session(spark)
+    with sess.lock:
+        futs = [f for k, f in sess.entries.items() if k[0] == name and f.done()]
+    for f in futs:
+        if f.exception() is None and f.result().params == p:
+            return f.result()
+    return None
 
 
 def staging_pool_width() -> int:
     """$SPARK_GRAFT_STAGING_POOL, validated: a positive int, else the
     default 5 (non-int AND non-positive both fall back — a width-0
     misconfig must not silently serialize the prewarm, which measured
-    ~100 s vs ~28 s at the default on the r16 host)."""
+    ~100 s vs ~28 s at the default)."""
     try:
         width = int(os.environ.get("SPARK_GRAFT_STAGING_POOL", ""))
     except ValueError:
@@ -49,124 +313,44 @@ def staging_pool_width() -> int:
     return width if width > 0 else _DEFAULT_POOL_WIDTH
 
 
+def prewarm_deps(name: str) -> set[str]:
+    """The prewarm relations ``name`` (transitively) depends on."""
+    return {d for d in _ancestors(name) if REGISTRY[d].prewarm}
+
+
+def _load_declarations() -> None:
+    import torchfusion_spark.operators.dedup  # noqa: F401
+    import torchfusion_spark.operators.multimodal  # noqa: F401
+    import torchfusion_spark.operators.similarity  # noqa: F401
+    import torchfusion_spark.operators.textstats  # noqa: F401
+    import torchfusion_spark.plans.relational2  # noqa: F401
+
+
 def prewarm_staging(spark, timed=None, width: int | None = None) -> None:
-    """Build every session-staged relation the headline set reads.
+    """Build every relation declared ``prewarm=True``.
 
     ``timed``: optional ``f(name, fn, *args)`` wrapper — the bench passes
     one that records each component's wall-clock under the concurrent
-    schedule into its ``staging_components`` payload; default just calls
-    ``fn(*args)``.
+    schedule; default just calls ``fn(*args)``. A component is submitted
+    only after every prewarm relation it depends on has finished; among
+    ready components the ones with the most prewarm dependents go first.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from torchfusion_spark.operators.dedup import (
-        _staged_containment,
-        _staged_hx,
-        _staged_lines,
-        _staged_substring_grams,
-        minhash_clusters,
-        url_incremental_query,
-    )
-    from torchfusion_spark.operators.multimodal import (
-        _staged_frame_phash,
-        _staged_phash,
-    )
-    from torchfusion_spark.operators.similarity import (
-        _staged_assign,
-        _staged_buckets,
-        _staged_norms,
-    )
-    from torchfusion_spark.operators.textstats import (
-        _staged_bloom,
-        _staged_labels,
-        _staged_pack_t,
-        _staged_unigrams,
-    )
-    from torchfusion_spark.plans.relational2 import _staged_li_by_order
-
-    def _assign16(s):
-        # the IVF/semantic-dedup/audit shared assignment (r16 change 10)
-        # resolves inside the norms lock like every similarity consumer;
-        # prewarming it keeps the r06 contract — its one-time build must
-        # land in staging_warm_sec, not in the first timed consumer's
-        # cold run (code-review r16)
-        return _staged_norms(s, lambda rel: _staged_assign(s, rel, 16))
-
-    def _buckets(s):
-        # the sign-LSH bucketed relation (vec_id, v, nrm, bucket, mb*) —
-        # shared by sim_cosine_near_dup_lsh, sim_near_dup_collapse and
-        # the recall audit; without this root its build billed 3 extra
-        # jobs and ~2s to the first consumer's cold run (r16 headline
-        # probe: 9 jobs run 1 vs 6 warm), the same r06-contract gap the
-        # assign had
-        return _staged_buckets(s, lambda rel: rel)
-
+    _load_declarations()
     run = timed if timed is not None else (lambda _name, fn, *a: fn(*a))
     if width is None:
         width = staging_pool_width()
-
+    comps = [n for n, r in REGISTRY.items() if r.prewarm]
+    need = {n: prewarm_deps(n) for n in comps}
+    fanout = {n: sum(n in need[m] for m in comps) for n in comps}
+    order = sorted(comps, key=lambda n: -fanout[n])
+    done: set[str] = set()
+    running: dict[Future, str] = {}
     with ThreadPoolExecutor(max_workers=width) as pool:
-        roots = [
-            # shared shingle+md5 relation — must land before its three
-            # phase-2 consumers below
-            pool.submit(run, "hx_shingles", _staged_hx, spark),
-            # __sim_norms (+ the multi-band LSH bucket columns ride the
-            # same memo chain on first use)
-            pool.submit(run, "sim_norms", _staged_norms, spark),
-            # positional grams
-            pool.submit(run, "substring_grams", _staged_substring_grams, spark),
-            # BM25/LM term freqs
-            pool.submit(run, "unigrams", _staged_unigrams, spark),
-            # payload aHash fingerprints (multimodal_dedup)
-            pool.submit(run, "payload_phash", _staged_phash, spark),
-            # per-frame aHash fingerprints (multimodal_frame_dedup)
-            pool.submit(run, "frame_phash", _staged_frame_phash, spark),
-            # ordered line stream (corpus_strip_boilerplate_lines)
-            pool.submit(run, "doc_lines", _staged_lines, spark),
-            # (lang, shard)-partitioned tokenized pack input
-            pool.submit(run, "pack_tokens", _staged_pack_t, spark),
-            # l_orderkey-bucketed per-(order,supp) rollup (q21;
-            # session-scoped — every run pays the build here, visibly)
-            pool.submit(run, "li_by_order", _staged_li_by_order, spark),
-            # one-time persisted URL seen-set (probe plan returned
-            # unexecuted; the build is the staged cost)
-            pool.submit(run, "url_index", url_incremental_query, spark),
-        ]
-        roots[0].result()  # hx must land before its three consumers
-        deps = [
-            # builds __minhash_sig, the LSH pair relation AND the
-            # memoized cluster labels (the CC checkpoint chain)
-            pool.submit(run, "minhash_clusters", minhash_clusters, spark),
-            # 64 KB benchmark filter
-            pool.submit(run, "bloom_filter", _staged_bloom, spark),
-            # inverted index
-            pool.submit(run, "containment_index", _staged_containment, spark),
-        ]
-        # the label relation now derives from the staged tf rows (r17:
-        # one corpus tokenization per session, not two), so it resolves
-        # through the unigrams memo lock — submitted beside the unigrams
-        # root it would park a pool slot on that lock and charge the
-        # whole tf build to quality_labels' itemized wall (the ADVICE
-        # r16 misattribution class); wait for unigrams, then submit
-        roots[3].result()
-        deps.append(pool.submit(run, "quality_labels", _staged_labels, spark))
-        # phase 2 for the assign too (code-review r16, second pass): it
-        # resolves through the norms memo lock, so submitting it beside
-        # the sim_norms root parks a pool slot on that lock for the
-        # whole norms build AND charges the wait to sim_assign's
-        # itemized wall-clock — wait for norms, then submit
-        roots[1].result()
-
-        def _sim_phase2(s):
-            # assign and buckets BOTH resolve through the norms memo
-            # lock, so submitted side by side one of them spends the
-            # other's whole build blocked on the lock and its itemized
-            # staging_components wall is misattributed (ADVICE r16).
-            # Chaining them on one pool slot keeps each row's number the
-            # build it names.
-            run("sim_assign", _assign16, s)
-            run("sim_buckets", _buckets, s)
-
-        deps.append(pool.submit(_sim_phase2, spark))
-        for fut in roots + deps:
-            fut.result()
+        while len(done) < len(comps):
+            for n in order:
+                if n not in done and n not in running.values() and need[n] <= done:
+                    running[pool.submit(run, n, stage, spark, n)] = n
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                f.result()
+                done.add(running.pop(f))

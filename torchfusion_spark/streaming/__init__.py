@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -640,6 +641,9 @@ SESSION_DELAY_MIN = 30  # session variant: watermark delay
 SESSION_STRAG_MOD = 8  # 1-in-8 events arrive one batch late (stragglers)
 
 
+_LATE_STREAM_LOCK = threading.Lock()
+
+
 def _late_batches_dir(spark: SparkSession, sf_dir: str, variant: str = "agg") -> str:
     """Materialize the 3-file late-arrival corpus under ``.scratch`` —
     batch b = events with ``event_id % 3 == b``, timestamps backdated by
@@ -647,14 +651,11 @@ def _late_batches_dir(spark: SparkSession, sf_dir: str, variant: str = "agg") ->
     the file source's (mtime, path) ordering replays batches
     deterministically. Content-keyed by (sf_dir, events parquet mtime +
     size), built once, atomic rename. Concurrency: same-process callers
-    serialize under ``memo_lock('late_stream')`` (two unserialized
+    serialize under ``_LATE_STREAM_LOCK`` (two unserialized
     threads would rmtree each other's build-tmp mid-write — code-review
     r13); cross-process builders use pid+tid-scoped tmp dirs and race
     only at the atomic rename, to identical content."""
     import shutil
-    import threading as _threading
-
-    from torchfusion_spark.session import memo_lock
 
     ev_path = os.path.join(sf_dir, "events.parquet")
     st = os.stat(ev_path)
@@ -676,9 +677,9 @@ def _late_batches_dir(spark: SparkSession, sf_dir: str, variant: str = "agg") ->
         ".scratch",
     )
     final = os.path.join(root, f"late_stream_{key}")
-    with memo_lock(spark, "late_stream"):
+    with _LATE_STREAM_LOCK:
         return _late_batches_build(
-            spark, sf_dir, root, final, key, _threading.get_ident(), variant
+            spark, sf_dir, root, final, key, threading.get_ident(), variant
         )
 
 
