@@ -188,11 +188,13 @@ def test_streaming_windowed_counts_match_batch(spark, tables):
 
 def test_connected_components_known_graph(spark):
     from torchfusion_spark.operators.dedup import connected_components
+    from torchfusion_spark.staging import scratch
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (8, 9), (9, 10), (3, 4)], "id_a bigint, id_b bigint"
     )
-    got = {r.doc_id: r.component for r in connected_components(pairs).collect()}
+    with scratch(spark) as s:
+        got = {r.doc_id: r.component for r in connected_components(s, pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 8: 8, 9: 8, 10: 8}
 
 
@@ -838,16 +840,19 @@ def test_star_cc_matches_propagation_and_handles_chains(spark, tables):
         connected_components_star,
         minhash_lsh,
     )
+    from torchfusion_spark.staging import scratch
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a bigint, id_b bigint"
     )
-    got = {r.doc_id: r.component for r in connected_components_star(chain, max_iter=8).collect()}
-    assert got == {i: 0 for i in range(121)}
-
     pairs = minhash_lsh(spark)
-    a = {(r.doc_id, r.component) for r in connected_components(pairs).collect()}
-    b = {(r.doc_id, r.component) for r in connected_components_star(pairs).collect()}
+    with scratch(spark) as s:
+        got = {
+            r.doc_id: r.component for r in connected_components_star(s, chain, max_iter=8).collect()
+        }
+        a = {(r.doc_id, r.component) for r in connected_components(s, pairs).collect()}
+        b = {(r.doc_id, r.component) for r in connected_components_star(s, pairs).collect()}
+    assert got == {i: 0 for i in range(121)}
     assert a == b
 
 
@@ -950,43 +955,40 @@ def test_multimodal_null_text_rows(spark, tables, tmp_path):
 
 
 def test_staging_release_protects_inflight_sibling_thread(spark):
-    """Round-6 review: release_staged_group must not release a staging
-    group whose nonce belongs to ANOTHER thread that is still running —
-    an in-flight sibling is concurrent, not superseded."""
+    """A scratch scope owns its checkpoints and views: a sibling
+    thread's open scope keeps both while a main-thread scope opens and
+    exits, and releases them when it exits itself."""
     import threading
 
-    from torchfusion_spark.session import (
-        release_staged_group,
-        staged_checkpoint,
-        staging_nonce,
-    )
+    from torchfusion_spark.staging import scratch
 
-    started = threading.Event()
-    finish = threading.Event()
-
-    sibling_nonce = []
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    started, finish = threading.Event(), threading.Event()
+    view = []
 
     def sibling():
-        n = staging_nonce(spark)
-        sibling_nonce.append(n)
-        staged_checkpoint(spark, f"tst_{n}_data", spark.range(5).toDF("x"))
-        started.set()
-        finish.wait(timeout=30)
+        with scratch(spark) as s:
+            view.append(s.view("__tst_data", s.checkpoint(spark.range(5).toDF("x"))))
+            started.set()
+            finish.wait(timeout=30)
 
     t = threading.Thread(target=sibling)
     t.start()
     try:
         assert started.wait(timeout=30)
-        my_nonce = staging_nonce(spark)
-        # sweep from the main thread: the sibling's group must survive
-        release_staged_group(spark, "tst_", keep_nonce=my_nonce)
-        pool = spark.__dict__.get("_tf_ck_pool", {})
-        assert f"tst_{sibling_nonce[0]}_data" in pool
+        with scratch(spark) as s:
+            s.view("__tst_data", s.checkpoint(spark.range(7).toDF("x")))
+            assert jsc.getPersistentRDDs().size() == before + 2
+        # the main scope's exit released its own checkpoint and view only
+        assert jsc.getPersistentRDDs().size() == before + 1
+        assert spark.table(view[0]).count() == 5
     finally:
         finish.set()
-        t.join()
-    # sibling thread done -> its group is now releasable
-    assert release_staged_group(spark, "tst_", keep_nonce=None) >= 1
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert jsc.getPersistentRDDs().size() == before
+    assert not spark.catalog.tableExists(view[0])
 
 
 def test_arrow_ipc_empty_relation_roundtrip(spark, tables, tmp_path):
@@ -1168,29 +1170,60 @@ def test_winnow_short_doc_still_fingerprinted(spark, tables, tmp_path):
         load_tables(spark, tables)
 
 
+def _temp_views(spark) -> set[str]:
+    return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     """Round-6 review: exhausting max_iter with labels still changing
-    must raise, not silently return partially propagated components."""
+    must raise, not silently return partially propagated components —
+    and the raise releases the loop's checkpoints and the scope's views."""
     import pytest
 
     from torchfusion_spark.operators import dedup
+    from torchfusion_spark.staging import scratch
 
+    jsc = spark.sparkContext._jsc
     # chain 0-1-2-...-9 has diameter 9 > max_iter=2; force the iterative
     # path by dropping the small-graph exact short-circuit
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a bigint, id_b bigint"
     )
+    before = (jsc.getPersistentRDDs().size(), _temp_views(spark))
     orig = dedup.SMALL_GRAPH_EDGES
     dedup.SMALL_GRAPH_EDGES = 0
     try:
         with pytest.raises(RuntimeError, match="did not converge"):
-            dedup.connected_components(pairs, max_iter=2)
+            with scratch(spark) as s:
+                s.view("__tst_cc_pairs", pairs)
+                dedup.connected_components(s, pairs, max_iter=2)
+        assert (jsc.getPersistentRDDs().size(), _temp_views(spark)) == before
         # and with enough rounds the same graph resolves exactly
-        got = {r.doc_id: r.component for r in
-               dedup.connected_components(pairs, max_iter=15).collect()}
+        with scratch(spark) as s:
+            got = {r.doc_id: r.component for r in
+                   dedup.connected_components(s, pairs, max_iter=15).collect()}
         assert got == {i: 0 for i in range(10)}
     finally:
         dedup.SMALL_GRAPH_EDGES = orig
+
+
+def test_connected_components_star_raises_on_nonconvergence(spark):
+    """The star loop's analogue: a 10-node chain still contracting after
+    one round raises, and the raise releases the loop's checkpoints and
+    the scope's views."""
+    import pytest
+
+    from torchfusion_spark.operators import dedup
+    from torchfusion_spark.staging import scratch
+
+    jsc = spark.sparkContext._jsc
+    chain = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a bigint, id_b bigint")
+    before = (jsc.getPersistentRDDs().size(), _temp_views(spark))
+    with pytest.raises(RuntimeError, match="still contracting"):
+        with scratch(spark) as s:
+            s.view("__tst_ccs_pairs", chain)
+            dedup.connected_components_star(s, chain, max_iter=1)
+    assert (jsc.getPersistentRDDs().size(), _temp_views(spark)) == before
 
 
 def test_source_filter_matches_python(spark, tables):
@@ -2777,49 +2810,64 @@ def test_drop_prev_unkeyed_is_per_thread(spark, tmp_path):
     spark.__dict__.pop("_tf_url_unkeyed_prev", None)
 
 
-def test_star_supersede_protects_live_owner_then_reaps(spark):
-    """The REVISED staging-lifecycle contract (code-review r13, revising
-    ADVICE r13 #3): a completed star-CC call's nonce record persists
-    while its thread lives, so a sibling's whole-prefix supersede sweep
-    must SKIP the final edge checkpoint — the owner may still be
-    between return and collect() (clearing at completion reopened the
-    code-review r12 unpersist-mid-collect race). The group becomes
-    reapable the moment the owner thread exits (or draws a new nonce):
-    the next sweep reclaims it — the bounded-leak half of the
-    tradeoff."""
+def test_star_supersede_protects_live_owner_then_reaps(spark, tables, monkeypatch):
+    """Star clusters are the staged relation ``minhash_clusters_star``:
+    star calls from 3 live threads make one entry and return equal rows,
+    and a ``documents`` swap releases the old entry's checkpoint only
+    after the new entry has materialized."""
+    import dataclasses
     import threading
+    import time
 
-    from torchfusion_spark.operators.dedup import connected_components_star
-    from torchfusion_spark.session import release_staged_group
+    from torchfusion_spark import staging
+    from torchfusion_spark.plans import REGISTRY as QUERIES
 
-    done = threading.Event()
-    release_me = threading.Event()
-    nonce = []
+    name = "minhash_clusters_star"
+    star = QUERIES["dedup_minhash_clusters_star"]
+    jsc = spark.sparkContext._jsc
+    rel = staging.REGISTRY[name]
+    builds, held, watched = [], [], set()
 
-    def owner():
-        chain = spark.createDataFrame([(0, 1), (1, 2)], "id_a bigint, id_b bigint")
-        out = connected_components_star(chain, max_iter=8)
-        out.count()
-        nonce.append(out._tf_cc_nonce)
-        done.set()
-        release_me.wait(timeout=60)  # stay ALIVE while the sibling sweeps
+    def build(ctx, **params):
+        out = rel.build(ctx, **params)
+        # the new entry is materialized: the superseded one still holds
+        held.append(watched <= persisted())
+        builds.append(ctx.tag)
+        return out
 
-    t = threading.Thread(target=owner)
-    t.start()
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    monkeypatch.setitem(staging.REGISTRY, name, dataclasses.replace(rel, build=build))
+    docs = spark.table("documents")
+    # a corpus no earlier build has seen (same rows), so the threads cold-start it
+    docs.where(f"doc_id <> {-time.time_ns()}").createOrReplaceTempView("documents")
     try:
-        assert done.wait(timeout=120)
-        n = nonce[0]
-        # record persists while the owner lives — that IS the protection
-        assert n in spark.__dict__.get("_tf_thread_nonces", {}).values()
-        pool = spark.__dict__.get("_tf_ck_pool", {})
-        assert any(s.startswith(f"ccs_{n}_") for s in pool)  # one live slot
-        release_staged_group(spark, "ccs_")  # sibling whole-prefix sweep
-        # ...skips the live owner's group
-        assert any(s.startswith(f"ccs_{n}_") for s in pool)
+        rows = [None] * 3
+        gate = threading.Barrier(3)
+
+        def call(i):
+            gate.wait(timeout=60)
+            rows[i] = sorted(tuple(r) for r in star.builder(spark, tables).collect())
+
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(3)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+        assert not any(t.is_alive() for t in threads)
+        assert rows[0] and rows[0] == rows[1] == rows[2]
+        assert len(builds) == 1
+        sess = staging._session(spark)
+        assert sum(k[0] == name for k in sess.entries) == 1
+        old_ids = {h.id() for h in staging.built(spark, name).checkpoints}
+        assert old_ids and old_ids <= persisted()
+        watched |= old_ids
+
+        docs.where(f"doc_id <> {-time.time_ns()}").createOrReplaceTempView("documents")
+        assert sorted(tuple(r) for r in star.builder(spark, tables).collect()) == rows[0]
+        assert len(builds) == 2 and held == [True, True]
+        assert staging.built(spark, name).tag == builds[-1]
+        assert not old_ids & persisted()
     finally:
-        release_me.set()
-        t.join()
-    # owner thread gone -> unprotected -> the next sweep reaps it
-    release_staged_group(spark, "ccs_")
-    pool = spark.__dict__.get("_tf_ck_pool", {})
-    assert not any(s.startswith(f"ccs_{n}_") for s in pool)
+        docs.createOrReplaceTempView("documents")

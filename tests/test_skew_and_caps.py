@@ -307,16 +307,20 @@ def test_staged_lifecycle_no_storage_leak(spark, tables):
     (analyzed().rdd() on the checkpointed Dataset is the handle the block
     manager holds)."""
     from torchfusion_spark.operators import dedup, similarity
-    from torchfusion_spark.session import staged_checkpoint
+    from torchfusion_spark.staging import scratch
 
     jsc = spark.sparkContext._jsc
 
-    # mechanism: a slot-tracked checkpoint is released on slot reuse
+    # mechanism: a scope's checkpoint is held inside it, a loop keeps its
+    # two newest generations, and the scope's exit releases them all
     before = jsc.getPersistentRDDs().size()
-    staged_checkpoint(spark, "lifecycle_probe", spark.range(100).selectExpr("id", "id * 2 AS x"))
-    assert jsc.getPersistentRDDs().size() == before + 1
-    staged_checkpoint(spark, "lifecycle_probe", spark.range(50).selectExpr("id", "id * 3 AS x"))
-    assert jsc.getPersistentRDDs().size() == before + 1
+    with scratch(spark) as s:
+        s.checkpoint(spark.range(100).selectExpr("id", "id * 2 AS x"), "probe")
+        assert jsc.getPersistentRDDs().size() == before + 1
+        s.checkpoint(spark.range(50).selectExpr("id", "id * 3 AS x"), "probe")
+        s.checkpoint(spark.range(20).selectExpr("id", "id * 4 AS x"), "probe")
+        assert jsc.getPersistentRDDs().size() == before + 2
+    assert jsc.getPersistentRDDs().size() == before
 
     # operators: persistent-RDD count is stable across repeat invocations
     from torchfusion_spark.staging import stage

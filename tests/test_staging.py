@@ -182,3 +182,77 @@ def test_restaging_the_same_corpus_keeps_its_cache(spark, tables):
             assert spark.table(view).storageLevel != StorageLevel.NONE, view
     finally:
         orig.createOrReplaceTempView("documents")
+
+
+def test_iterative_loops_leave_no_checkpoint_or_view(spark, tables, monkeypatch):
+    """Three sequential and three concurrent calls of each iterative
+    family, each result materialized, leave the persisted RDDs and the
+    temp views as they found them. The exception is the one registry
+    entry each of ``minhash_clusters`` and ``minhash_clusters_star``
+    builds for the fresh corpus: its view, and its cache or checkpoint
+    in place of the superseded entry's."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from torchfusion_spark.operators import dedup, similarity, textstats
+    from torchfusion_spark.plans import REGISTRY as QUERIES
+    from torchfusion_spark.staging import built, stage
+
+    clusters = ("minhash_clusters", "minhash_clusters_star")
+    calls = {
+        "minhash_clusters": lambda: dedup.minhash_clusters(spark).collect(),
+        "minhash_clusters_star": lambda: QUERIES["dedup_minhash_clusters_star"]
+        .builder(spark, tables)
+        .collect(),
+        "kmeans": lambda: similarity.kmeans(spark).collect(),
+        "bpe_train": lambda: textstats.bpe_train(spark).collect(),
+    }
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def temp_views():
+        return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
+
+    # the propagation loop, not its one-task union-find short-circuit
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", 0)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    docs = spark.table("documents")
+    # a corpus no earlier build has seen (same rows): the cluster entries
+    # build, and run their loops, inside the measured window
+    docs.where(f"doc_id <> {-time.time_ns()}").createOrReplaceTempView("documents")
+    try:
+        stage(spark, "minhash_sig")
+        stage(spark, "sim_norms")
+        stage(spark, "unigrams")
+        superseded = sum(built(spark, n) is not None for n in clusters)
+        rdds, views = persisted(), temp_views()
+        results = {n: [f() for _ in range(3)] for n, f in calls.items()}
+        with ThreadPoolExecutor(3) as pool:
+            for n, f in calls.items():
+                results[n] += pool.map(lambda _, f=f: f(), range(3))
+        new_views = {built(spark, n).result for n in clusters}
+        assert temp_views() == views | new_views
+        assert len(persisted() - rdds) == len(clusters)
+        assert len(rdds - persisted()) <= superseded
+        for n, got in results.items():
+            assert got[0] and all(sorted(g) == sorted(got[0]) for g in got), n
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    finally:
+        docs.createOrReplaceTempView("documents")
+
+
+def test_local_checkpoint_only_in_staging():
+    """Every localCheckpoint belongs to a registry entry or a scratch
+    scope, both in ``staging.py``: one made anywhere else has no owner
+    to release it."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "torchfusion_spark"
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "staging.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line
+    ]
+    assert not hits, hits

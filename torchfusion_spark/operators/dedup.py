@@ -22,7 +22,7 @@ import itertools
 import os
 
 from torchfusion_spark.operators import sqlgen as G
-from torchfusion_spark.staging import declare, stage, table_key
+from torchfusion_spark.staging import declare, scratch, stage, table_key
 
 
 def exact_dedup_sql(d: str) -> str:
@@ -771,7 +771,7 @@ def _observed(obs, fallback, timeout_s: float = 30.0) -> dict:
         wait = min(wait * 2, 0.05)
 
 
-def connected_components(pairs, max_iter: int = 25):
+def connected_components(s, pairs, max_iter: int = 25):
     """(id_a, id_b) near-dup pairs → (doc_id, component) where component
     is the minimum doc_id reachable through the pair graph.
 
@@ -789,53 +789,41 @@ def connected_components(pairs, max_iter: int = 25):
     join/action overhead of the loop dwarfs the work itself there, and
     the output is identical.
 
-    Per-round checkpoints are slot-tracked (``staged_checkpoint`` with a
-    per-call nonce) over TWO alternating label slots: round r's labels
-    land in slot r%2, releasing round r-2's blocks — rounds r and r-1
-    must both stay live because round r's plan reads round r-1's blocks
-    up to the moment its checkpoint materializes. A long loop therefore
-    holds two label generations instead of ``max_iter``. The changed-
-    label count and the initial edge count ride the checkpoint actions
-    as ``observe()`` metrics (r16) — no separate count job per round.
+    Per-round checkpoints go to the caller's scratch scope ``s``
+    (``torchfusion_spark.staging.scratch``) as one loop, which keeps its
+    two newest generations — round r's plan reads round r-1's blocks up
+    to the moment its checkpoint materializes — so a long loop holds two
+    label generations instead of ``max_iter``. The returned plan reads the
+    scope's checkpoints: materialize it before the scope exits. The
+    changed-label count and the initial edge count ride the checkpoint
+    actions as ``observe()`` metrics (r16) — no separate count job per
+    round.
     """
     from pyspark.sql import functions as F
 
-    from torchfusion_spark.session import staged_checkpoint, staging_nonce
-
-    spark = pairs.sparkSession
-    nonce = staging_nonce(spark)
     # one-pass symmetrize (r16, guide §2.4/§1.2): stack() emits both edge
     # directions from a SINGLE execution of the upstream plan — the
     # fwd.union(fwd.swapped) spelling planned the (un-materialized) pair
     # subtree once per union branch, so the first checkpoint re-ran the
     # whole banded LSH self-join + Jaccard verify twice
     edges = pairs.selectExpr("stack(2, id_a, id_b, id_b, id_a) AS (src, dst)")
-    # slots share the cc_{nonce}_ prefix so a consumer can release exactly
-    # this call's scratch (release_staged_group(spark, f"cc_{nonce}_"))
-    # without dropping a concurrent call's live checkpoints; the nonce is
-    # exposed on the returned DataFrame as _tf_cc_nonce (ADVICE r04)
     # observe() folds the small-graph edge count into the checkpoint
     # action itself (r16, guide §1.2: one fewer job per call — the count
     # previously re-scanned the materialized blocks as its own action)
     from pyspark.sql import Observation
 
     obs_e = Observation()
-    edges = staged_checkpoint(
-        spark,
-        f"cc_{nonce}_edges",
-        edges.distinct().observe(obs_e, F.count(F.lit(1)).alias("n")),
+    edges = s.checkpoint(
+        edges.distinct().observe(obs_e, F.count(F.lit(1)).alias("n")), "edges"
     )
     n_edges = _observed(obs_e, lambda: {"n": edges.count()})["n"]
     if n_edges <= SMALL_GRAPH_EDGES:
-        out = _cc_single_task(edges)
-        out._tf_cc_nonce = nonce
-        return out
-    labels = staged_checkpoint(
-        spark,
-        f"cc_{nonce}_labels_init",
+        return _cc_single_task(edges)
+    labels = s.checkpoint(
         edges.select(F.col("src").alias("node")).distinct().withColumn("comp", F.col("node")),
+        "labels",
     )
-    for rnd in range(max_iter):
+    for _ in range(max_iter):
         nbr = (
             edges.join(
                 labels.select(F.col("node").alias("dst"), F.col("comp").alias("dcomp")), "dst"
@@ -858,15 +846,8 @@ def connected_components(pairs, max_iter: int = 25):
             obs_r,
             F.count(F.when(F.col("newcomp") != F.col("comp"), 1)).alias("changed"),
         )
-        new_labels = staged_checkpoint(
-            spark,
-            # letter suffix, NOT a digit: release_staged_group treats any
-            # trailing "_<digits>" as a nonce reference when matching
-            # protected in-flight groups, so a generation digit would make
-            # this slot un-releasable whenever some thread's live staging
-            # nonce happens to equal the generation (code-review r12)
-            f"cc_{nonce}_labels{'AB'[rnd % 2]}",
-            joined.select("node", F.col("newcomp").alias("comp")),
+        new_labels = s.checkpoint(
+            joined.select("node", F.col("newcomp").alias("comp")), "labels"
         )
         changed = _observed(
             obs_r,
@@ -887,54 +868,37 @@ def connected_components(pairs, max_iter: int = 25):
         # silently WRONG components (partially propagated labels) that the
         # memoizing callers then cache — fail loudly instead; the exact
         # oracle would disagree anyway, but with no hint of the cause.
-        # Release this failed call's checkpoint group and in-flight nonce
-        # first (code-review r16 — the star loop's discipline): nothing
-        # can reference the group after the raise, and an unreleased one
-        # pins four localCheckpoint generations until this pool thread
-        # draws a new nonce.
-        from torchfusion_spark.session import finish_staging_nonce, release_staged_group
-
-        release_staged_group(spark, f"cc_{nonce}_")
-        finish_staging_nonce(spark, nonce)
+        # The scope releases this call's checkpoints on the way out.
         raise RuntimeError(
             f"connected_components: label propagation did not converge in "
             f"{max_iter} rounds ({changed} labels still changing) — the "
             "graph has a component of diameter > max_iter; raise max_iter "
             "or use connected_components_star (O(log n) rounds)"
         )
-    out = labels.select(F.col("node").alias("doc_id"), F.col("comp").alias("component")).orderBy(
-        "doc_id"
-    )
-    out._tf_cc_nonce = nonce
-    return out
+    return labels.select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("component")
+    ).orderBy("doc_id")
+
+
+def _lsh_pairs(ctx, threshold):
+    """The MinHash-LSH pair relation over the staged signatures, as CC
+    input. ordered=False (r16): the pair relation's global ORDER BY is
+    pure waste there — a range-partition sort (plus the range
+    partitioner's boundary-sampling pass, which re-executes the whole
+    pair join once) feeding a loop that immediately re-shuffles the
+    edges; the label output is identical."""
+    sig, ok = ctx.dep("minhash_sig")
+    return ctx.spark.sql(minhash_body_sql("spark", sig, threshold, ordered=False, ok_rel=ok))
 
 
 @declare("minhash_clusters", deps=("minhash_sig",), params={"threshold": 0.6}, prewarm=True)
 def _minhash_clusters(ctx, threshold):
     """The cached cluster labels: the canonical-selection pipeline runs
     right after the clusters query in gate order and would otherwise
-    repeat the whole iterative CC loop."""
-    from torchfusion_spark.session import release_staged_group
-
-    sig, ok = ctx.dep("minhash_sig")
-    # ordered=False (r16): the pair relation's global ORDER BY is pure
-    # waste as CC input — a range-partition sort (plus the range
-    # partitioner's boundary-sampling pass, which re-executes the whole
-    # pair join once) feeding a loop that immediately re-shuffles the
-    # edges; the label output is identical.
-    cc = connected_components(
-        ctx.spark.sql(minhash_body_sql("spark", sig, threshold, ordered=False, ok_rel=ok))
-    )
-    view = ctx.cache("__minhash_clusters", cc)
-    # the cached labels now hold the data — THIS call's CC edge/label
-    # checkpoint scratch is dead weight. Release only the nonce-scoped
-    # group (ADVICE r04): a bare "cc_" release would unpersist a
-    # concurrent connected_components call's live localCheckpoint blocks
-    # mid-loop, which lineage truncation makes unrecoverable.
-    nonce = getattr(cc, "_tf_cc_nonce", None)
-    if nonce is not None:
-        release_staged_group(ctx.spark, f"cc_{nonce}_")
-    return view
+    repeat the whole iterative CC loop. The cache materializes inside
+    the loop's scratch scope, which then frees the loop's checkpoints."""
+    with scratch(ctx.spark) as s:
+        return ctx.cache("__minhash_clusters", connected_components(s, _lsh_pairs(ctx, threshold)))
 
 
 def minhash_clusters(spark, threshold: float = 0.6):
@@ -942,6 +906,25 @@ def minhash_clusters(spark, threshold: float = 0.6):
     output: keep one doc per component), staged once per corpus and
     threshold."""
     return spark.table(stage(spark, "minhash_clusters", threshold=threshold))
+
+
+@declare("minhash_clusters_star", deps=("minhash_sig",), params={"threshold": 0.6})
+def _minhash_clusters_star(ctx, threshold):
+    """The same clusters by star contraction
+    (:func:`connected_components_star`). Checkpointed, not cached: a
+    checkpoint of the labels does not read the loop's scratch, and a
+    superseded checkpoint is released only after its replacement
+    materializes."""
+    with scratch(ctx.spark) as s:
+        return ctx.checkpoint(
+            "__minhash_clusters_star", connected_components_star(s, _lsh_pairs(ctx, threshold))
+        )
+
+
+def minhash_clusters_star(spark, threshold: float = 0.6):
+    """:func:`minhash_clusters` via star contraction, staged once per
+    corpus and threshold."""
+    return spark.table(stage(spark, "minhash_clusters_star", threshold=threshold))
 
 
 def minhash_clusters_oracle_sql(d_unused: str = "duck", threshold: float = 0.6) -> str:
@@ -1074,9 +1057,9 @@ def containment(spark, threshold: float = CONTAIN_THRESHOLD, max_df: int = CONTA
        pairs⋈sizes joins have the (tiny) pair relation as one side, so
        AQE broadcasts whichever side is small at any scale.
 
-    The grouped relation is staged via ``localCheckpoint`` (slot-tracked,
-    superseded blocks released) because sizes + pairs both derive from
-    it; the cache manager historically failed to substitute these CTE
+    The grouped relation is staged via ``localCheckpoint`` (a registry
+    checkpoint, released once its replacement lands) because sizes +
+    pairs both derive from it; the cache manager historically failed to substitute these CTE
     shapes back into the plan, while a checkpoint truncates lineage
     outright. At cluster scale swap to ``checkpoint()`` with a reliable
     dir if the job must survive executor loss mid-query.
@@ -2038,7 +2021,7 @@ def dedup_url_incremental(spark, new_rel: str, path: str):
     """)
 
 
-def connected_components_star(pairs, max_iter: int = 20):
+def connected_components_star(s, pairs, max_iter: int = 20):
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond") — converges in O(log n) rounds instead of min-label
@@ -2057,20 +2040,16 @@ def connected_components_star(pairs, max_iter: int = 20):
     No ``SMALL_GRAPH_EDGES`` short-circuit ON PURPOSE: this function is
     the registered witness for the star path itself — short-circuiting
     to the single-task union-find at gate scale would certify the fast
-    path twice and the contraction loop never. Checkpoints are
-    slot-tracked over TWO alternating slots (the sibling's discipline):
+    path twice and the contraction loop never. Checkpoints go to the
+    caller's scratch scope ``s`` as one loop (the sibling's discipline):
     each checkpoint releases the blocks from two checkpoints ago, which
     nothing references anymore (the current edge set is a checkpointed
     leaf independent of its ancestors), so a long loop holds two edge
-    generations instead of ~3 per round until driver GC."""
+    generations instead of ~3 per round until driver GC. The returned
+    plan reads the scope's checkpoints: materialize it before the scope
+    exits."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
-
-    from torchfusion_spark.session import staged_checkpoint, staging_nonce
-
-    spark = pairs.sparkSession
-    nonce = staging_nonce(spark)
-    n_ck = 0
 
     def ck_sig(df):
         """Checkpoint ``df`` and return (checkpoint, (count, xor-hash)).
@@ -2080,19 +2059,15 @@ def connected_components_star(pairs, max_iter: int = 20):
         re-scanned the materialized blocks as a separate per-round
         collect job. bit_xor: order-independent and overflow-free (SUM
         of xxhash64 trips ANSI ARITHMETIC_OVERFLOW)."""
-        nonlocal n_ck
         obs = Observation()
-        # letter suffix, not a digit — see connected_components' labels slot
-        out = staged_checkpoint(
-            spark,
-            f"ccs_{nonce}_e{'AB'[n_ck % 2]}",
+        out = s.checkpoint(
             df.observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.expr("bit_xor(xxhash64(u, v))").alias("h"),
             ),
+            "edges",
         )
-        n_ck += 1
         # bounded read with a synchronous recompute fallback — see
         # :func:`_observed` (a dropped listener event must cost one extra
         # job, never a wedged loop)
@@ -2157,44 +2132,16 @@ def connected_components_star(pairs, max_iter: int = 20):
         # silently wrong labels the driver would certify (the sibling
         # propagation loop fails loudly for the same reason). Rounds grow
         # ~log2(diameter), so 20 covers ~500k-deep chains; deeper graphs
-        # must raise max_iter, not get wrong answers. Release this failed
-        # call's checkpoint group first — nothing can reference it after
-        # the raise, and the builder's supersede-release only ever
-        # targets the last SUCCESSFUL nonce (code-review r12).
-        from torchfusion_spark.session import finish_staging_nonce, release_staged_group
-
-        release_staged_group(spark, f"ccs_{nonce}_")
-        finish_staging_nonce(spark, nonce)
+        # must raise max_iter, not get wrong answers. The scope releases
+        # this call's checkpoints on the way out.
         raise RuntimeError(
             f"connected_components_star: edge set still contracting after "
             f"{max_iter} rounds — component diameter exceeds ~2^{max_iter}; "
             "raise max_iter"
         )
-    # the returned plan reads only the FINAL edge checkpoint; the other
-    # alternating slot holds the penultimate generation — dead weight the
-    # moment the loop ends, so release it here and leave exactly one live
-    # slot per call for the builder's supersede-release to reap. The
-    # nonce's in-flight record is deliberately NOT cleared here (ADVICE
-    # r13 #3 suggested clearing at completion, but this round's review
-    # showed that reopens the code-review r12 race: between this return
-    # and the caller's collect(), a sibling thread's supersede-release
-    # would no longer see this thread in _protected_nonces and could
-    # unpersist the final edge checkpoint mid-read — localCheckpoint
-    # lineage is unrecoverable). The cost of keeping the record is a
-    # BOUNDED leak: at most one superseded group per *idle* pool thread,
-    # reaped by a later call's whole-prefix supersede sweep once this
-    # thread's record is overwritten by its next nonce draw (or the
-    # thread exits); the race it prevents is wrong results. Only the FAILURE
-    # path below clears the record eagerly — after a raise nothing can
-    # reference the group.
-    from torchfusion_spark.session import release_staged_group
-
-    release_staged_group(spark, f"ccs_{nonce}_e{'AB'[n_ck % 2]}")
     comp = (
         e.groupBy("u")
         .agg(F.min("v").alias("mv"))
         .select(F.col("u").alias("doc_id"), F.least(F.col("u"), F.col("mv")).alias("component"))
     )
-    out = comp.orderBy("doc_id")
-    out._tf_cc_nonce = nonce
-    return out
+    return comp.orderBy("doc_id")

@@ -23,7 +23,7 @@ from __future__ import annotations
 import itertools
 
 from torchfusion_spark.operators import sqlgen as G
-from torchfusion_spark.staging import declare, stage
+from torchfusion_spark.staging import declare, scratch, stage
 
 
 def _vec(d: str, col: str = "embedding") -> str:
@@ -1147,59 +1147,47 @@ def kmeans(spark, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
     checkpointed per round so the next assignment starts from data, not
     from the whole prior lineage.
 
-    Temp views carry a per-call nonce (``staging_nonce``) so concurrent
-    kmeans() calls in one session cannot clobber each other's loop state,
-    and each round's checkpoint reuses the call's slot, releasing the
-    superseded round's blocks (ADVICE r03). NOTE for plan auditors: this
-    builder *executes* its staging actions (checkpoints) while building —
-    the returned DataFrame is only the final update/count plan."""
-    from torchfusion_spark.session import (
-        release_staged_group,
-        staged_checkpoint,
-        staging_nonce,
-    )
-
-    nonce = staging_nonce(spark)
-    release_staged_group(spark, "km_", keep_nonce=nonce)  # free the prior call's rounds
-    v_long, v_assign = f"__km_long_{nonce}", f"__km_assign_{nonce}"
-    v_pts = f"__km_pts_{nonce}"
-
-    # snapshot the staged norms into a nonce-scoped checkpoint: every
-    # later loop read goes through the snapshot, so the point relation
-    # cannot change between iterations
-    staged_checkpoint(
-        spark,
-        f"km_pts_{nonce}",
-        spark.sql(f"SELECT vec_id, v FROM {stage(spark, 'sim_norms')}"),
-    ).createOrReplaceTempView(v_pts)
-    pts = f"(SELECT vec_id, v FROM {v_pts})"
-    staged_checkpoint(
-        spark,
-        f"km_long_{nonce}",
-        spark.sql(
-            f"SELECT vec_id, p + 1 AS dim, val FROM {pts} pts_t "
-            f"LATERAL VIEW posexplode(v) pe AS p, val"
-        ),
-    ).createOrReplaceTempView(v_long)
-    cents = f"(SELECT vec_id AS c_id, v AS cv FROM {v_pts} WHERE vec_id < {k})"
-    for i in range(iters):
-        staged_checkpoint(
-            spark, f"km_assign_{nonce}", spark.sql(_km_spark_assign(pts, cents))
-        ).createOrReplaceTempView(v_assign)
-        if i < iters - 1:
-            upd = f"({_km_spark_upd(v_assign, v_long)})"
-            staged_checkpoint(
-                spark, f"km_cents_{nonce}", spark.sql(_km_spark_rebuild(upd))
-            ).createOrReplaceTempView(f"__km_cents_{nonce}_{i}")
-            cents = f"__km_cents_{nonce}_{i}"
-    return spark.sql(f"""
-    WITH u AS ({_km_spark_upd(v_assign, v_long)}),
-    sizes AS (SELECT c_id, CAST(COUNT(*) AS BIGINT) AS n_members
-              FROM {v_assign} GROUP BY c_id)
-    SELECT u.c_id, CAST(u.dim AS BIGINT) AS dim, u.cval, s.n_members
-    FROM u JOIN sizes s ON u.c_id = s.c_id
-    ORDER BY u.c_id, u.dim
-    """)
+    The loop runs in a scratch scope (``staging.scratch``): its views
+    are named after the call, so concurrent calls cannot clobber each
+    other's loop state, and the scope releases every checkpoint and
+    drops every view on exit. The result — the k×dim-row centroid
+    table, the model itself (MLlib's KMeans keeps it on the driver too)
+    — is collected inside the scope and returned as local rows. NOTE for plan auditors: this builder *executes* the
+    whole loop while building."""
+    with scratch(spark) as s:
+        pts = s.view(
+            "__km_pts",
+            s.checkpoint(spark.sql(f"SELECT vec_id, v FROM {stage(spark, 'sim_norms')}"), "pts"),
+        )
+        v_long = s.view(
+            "__km_long",
+            s.checkpoint(
+                spark.sql(
+                    f"SELECT vec_id, p + 1 AS dim, val FROM {pts} "
+                    f"LATERAL VIEW posexplode(v) pe AS p, val"
+                ),
+                "long",
+            ),
+        )
+        cents = f"(SELECT vec_id AS c_id, v AS cv FROM {pts} WHERE vec_id < {k})"
+        for i in range(iters):
+            v_assign = s.view(
+                "__km_assign", s.checkpoint(spark.sql(_km_spark_assign(pts, cents)), "assign")
+            )
+            if i < iters - 1:
+                upd = f"({_km_spark_upd(v_assign, v_long)})"
+                cents = s.view(
+                    "__km_cents", s.checkpoint(spark.sql(_km_spark_rebuild(upd)), "cents")
+                )
+        model = spark.sql(f"""
+        WITH u AS ({_km_spark_upd(v_assign, v_long)}),
+        sizes AS (SELECT c_id, CAST(COUNT(*) AS BIGINT) AS n_members
+                  FROM {v_assign} GROUP BY c_id)
+        SELECT u.c_id, CAST(u.dim AS BIGINT) AS dim, u.cval, s.n_members
+        FROM u JOIN sizes s ON u.c_id = s.c_id
+        """)
+        rows = model.collect()
+    return spark.createDataFrame(rows, model.schema).orderBy("c_id", "dim")
 
 
 def build_ivf_index(spark, path: str, n_centroids: int = 16) -> None:

@@ -6,9 +6,11 @@ Pure column expressions — no Python in the pipeline; one scan, no shuffle
 
 from __future__ import annotations
 
+import threading
+
 from torchfusion_spark.operators import dedup
 from torchfusion_spark.operators import sqlgen as G
-from torchfusion_spark.staging import declare, stage
+from torchfusion_spark.staging import declare, scratch, stage
 
 # tiny stopword marker sets for the language-ID heuristic
 _LANG_MARKERS = {
@@ -2390,6 +2392,7 @@ def bpe_train_sql(
 
 
 _BPE_CKPT_EVERY = 4  # literal-merge chain depth before a re-checkpoint
+_BPE_AQE_LOCK = threading.Lock()
 
 
 def bpe_train(spark, rounds: int = BPE_TRAIN_ROUNDS, tf_rel: str | None = None):
@@ -2428,22 +2431,7 @@ def bpe_train(spark, rounds: int = BPE_TRAIN_ROUNDS, tf_rel: str | None = None):
     barriers it removed.)"""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from torchfusion_spark.session import (
-        release_staged_group,
-        staged_checkpoint,
-        staging_nonce,
-    )
-
-    nonce = staging_nonce(spark)
-    release_staged_group(spark, "bpe_", keep_nonce=nonce)
-    slot = f"bpe_s_{nonce}"
-    view = f"__bpe_s_{nonce}"
-
     tfn = stage(spark, "unigrams") if tf_rel is None else tf_rel
-    s = staged_checkpoint(spark, slot, spark.sql(_bpe_sym0_sql("spark", tfn)))
-    s.createOrReplaceTempView(view)
-    cur = view  # the current stream: the s0 view + an inline merge chain
-    depth = 0  # literal merges since the last checkpoint
     merges = []
     # AQE off for the round loop only: every relation here is
     # vocab-bounded (the corpus-sized tf rollup is staged upstream), so
@@ -2451,33 +2439,38 @@ def bpe_train(spark, rounds: int = BPE_TRAIN_ROUNDS, tf_rel: str | None = None):
     # stage jobs are pure scheduling overhead on an iterative loop —
     # measured at sf0.1: 16 → 8 jobs/run and 2.45 → 1.88 s warm with
     # AQE off, plans static and sizes known-bounded at any corpus scale.
+    # The setting is session-wide, so concurrent loops take turns:
+    # interleaved, a later loop would read an earlier one's override as
+    # the value to restore and leave AQE off for the session.
     aqe_key = "spark.sql.adaptive.enabled"
-    aqe_old = spark.conf.get(aqe_key)
-    spark.conf.set(aqe_key, "false")
-    try:
-        for r in range(1, rounds + 1):
-            top = spark.sql(_bpe_top_sql(cur)).collect()
-            if not top:  # degenerate corpus: no adjacent pairs left
-                break
-            a, b, cnt = top[0].a, top[0].b, top[0].cnt
-            merges.append((r, a, b, a + b, cnt))
-            if r == rounds:
-                break
-            cur = f"({_bpe_merge_sql(cur, _pair_lit_rel(a, b))})"
-            depth += 1
-            if depth >= _BPE_CKPT_EVERY:
-                # bound lineage depth for large round budgets:
-                # re-checkpoint and restart the inline chain (the default
-                # 3-round trainer never reaches this — its deepest chain
-                # is 2 merges)
-                s = staged_checkpoint(
-                    spark, slot, spark.sql(f"SELECT * FROM {cur}")
-                )
-                s.createOrReplaceTempView(view)
-                cur = view
-                depth = 0
-    finally:
-        spark.conf.set(aqe_key, aqe_old)
+    with scratch(spark) as sc:
+        # the current stream: the s0 view + an inline merge chain
+        cur = sc.view("__bpe_s", sc.checkpoint(spark.sql(_bpe_sym0_sql("spark", tfn)), "s"))
+        depth = 0  # literal merges since the last checkpoint
+        with _BPE_AQE_LOCK:
+            aqe_old = spark.conf.get(aqe_key)
+            spark.conf.set(aqe_key, "false")
+            try:
+                for r in range(1, rounds + 1):
+                    top = spark.sql(_bpe_top_sql(cur)).collect()
+                    if not top:  # degenerate corpus: no adjacent pairs left
+                        break
+                    a, b, cnt = top[0].a, top[0].b, top[0].cnt
+                    merges.append((r, a, b, a + b, cnt))
+                    if r == rounds:
+                        break
+                    cur = f"({_bpe_merge_sql(cur, _pair_lit_rel(a, b))})"
+                    depth += 1
+                    if depth >= _BPE_CKPT_EVERY:
+                        # bound lineage depth for large round budgets:
+                        # re-checkpoint and restart the inline chain (the
+                        # default 3-round trainer never reaches this — its
+                        # deepest chain is 2 merges)
+                        ck = sc.checkpoint(spark.sql(f"SELECT * FROM {cur}"), "s")
+                        cur = sc.view("__bpe_s", ck)
+                        depth = 0
+            finally:
+                spark.conf.set(aqe_key, aqe_old)
     schema = StructType(
         [
             StructField("round", LongType(), False),

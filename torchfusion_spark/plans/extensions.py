@@ -6,8 +6,6 @@ sides being plausible."""
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 
 from torchfusion_spark import streaming
@@ -391,9 +389,6 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_clusters(spark)
 
 
-_CCS_STAR_LOCK = threading.Lock()
-
-
 @query(
     "dedup_minhash_clusters_star",
     dedup.minhash_clusters_oracle_sql(),
@@ -403,38 +398,10 @@ _CCS_STAR_LOCK = threading.Lock()
     "oracle = the same recursive-CTE transitive closure",
 )
 def dedup_minhash_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # deliberately NOT memoized (unlike dedup_minhash_clusters): each call
-    # re-runs the contraction loop so its cost stays visible to the bench.
-    # Each call supersedes the last, so the previous call's surviving
-    # checkpoint slot (the final edge set, backing only the superseded
-    # plan) is released here. The whole read-release-run-store runs under
-    # one lock: unsynchronized, two concurrent builders would race
-    # the attribute (leaking the loser's group) and a releasing call
-    # could unpersist a completed sibling's not-yet-collected result
-    # (code-review r12). Supersede semantics stand: materialize one
-    # call's result before invoking the builder again — all registry,
-    # bench and gate flows do.
-    from torchfusion_spark.session import release_staged_group
-
-    with _CCS_STAR_LOCK:
-        # sweep the whole family prefix, not just the immediately-previous
-        # nonce (code-review r13 second pass): a single-nonce release that
-        # gets SKIPPED while the issuing thread's in-flight record still
-        # protects it was never retried — each skip orphaned one
-        # checkpointed edge group for the session's lifetime. The prefix
-        # sweep retries every unprotected superseded group on every call,
-        # so the leak is bounded at one group per thread record (reaped
-        # once that thread draws a new nonce or exits) — the km_/bpe_
-        # altitude. _protected_nonces shields OTHER live threads' groups
-        # (mid-loop or completed-but-not-yet-collected); the caller's own
-        # previous group is releasable by the materialize-before-reinvoke
-        # contract all registry/bench/gate flows follow.
-        release_staged_group(spark, "ccs_")
-        # ordered=False (r16): see minhash_clusters — the CC input needs
-        # no global sort, and the range partitioner's sampling pass would
-        # re-execute the pair join once just to pick sort boundaries.
-        out = dedup.connected_components_star(dedup.minhash_lsh(spark, ordered=False))
-        return out
+    # staged like dedup_minhash_clusters: the contraction loop runs once
+    # per corpus, in the minhash_clusters_star build, and concurrent
+    # callers share that one build
+    return dedup.minhash_clusters_star(spark)
 
 
 @query(

@@ -33,6 +33,15 @@ lifecycle:
   package, a plan over a superseded checkpoint must be materialized
   before the relation is staged again on other inputs. The views stay,
   so a late binder of a cache-backed entry still reads its own corpus.
+* **Call-scoped scratch.** An iterative loop (connected components,
+  k-means, BPE) checkpoints its rounds into a :func:`scratch` scope
+  opened by its caller: ``with scratch(spark) as s: s.checkpoint(df,
+  "labels")``. Each named loop keeps its two newest checkpoints (round
+  N+1's plan reads round N's blocks until its own checkpoint lands),
+  and the scope's views are named after it. On exit, normal or raised,
+  the scope releases every checkpoint and drops every view it made, so
+  what outlives the call must already be on the driver or in a
+  registry entry that materialized it inside the scope.
 * **Derived prewarm.** :func:`prewarm_staging` builds the relations
   declared ``prewarm=True`` on a thread pool, each submitted once every
   prewarm relation it depends on has finished, so a component's timed
@@ -54,7 +63,9 @@ from __future__ import annotations
 import itertools
 import os
 import threading
+from collections.abc import Iterator
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -176,11 +187,11 @@ class _Ctx:
     def checkpoint(self, base: str, df) -> str:
         """``localCheckpoint`` (eager) and expose ``df`` — for shapes the
         cache manager fails to substitute back into a plan (a CTE inside
-        a cached view gets its relation ids remapped on embedding)."""
-        ck = df.localCheckpoint()
-        # the checkpointed Dataset's LogicalRDD wraps the persisted RDD:
-        # that RDD, not the Dataset, is what the block manager holds
-        self.checkpoints.append(ck._jdf.queryExecution().analyzed().rdd())
+        a cached view gets its relation ids remapped on embedding), and
+        for results read from a :func:`scratch` scope's checkpoints,
+        which the truncated lineage frees from that scope."""
+        ck, handle = _local_checkpoint(df)
+        self.checkpoints.append(handle)
         return self.view(base, ck)
 
 
@@ -195,12 +206,66 @@ def _session(spark) -> _Session:
     return spark.__dict__.setdefault("_tf_staging", _Session())
 
 
+def _local_checkpoint(df):
+    """Eager ``localCheckpoint`` of ``df``: (the checkpointed DataFrame,
+    the RDD to unpersist). The checkpointed Dataset's LogicalRDD wraps
+    the persisted RDD: that RDD, not the Dataset, is what the block
+    manager holds."""
+    ck = df.localCheckpoint()
+    return ck, ck._jdf.queryExecution().analyzed().rdd()
+
+
 def _release(handles: list) -> None:
     for h in handles:
         try:
             h.unpersist(False)
         except Exception:  # noqa: BLE001 — release is best-effort
             pass
+
+
+class Scratch:
+    """One call's checkpoints and views; see :func:`scratch`."""
+
+    def __init__(self, tag: int):
+        self.tag = tag
+        self.loops: dict[str, list] = {}  # loop name → live handles, oldest first
+        self.views: set[str] = set()
+
+    def view(self, base: str, df) -> str:
+        name = f"{base}_{self.tag}"
+        df.createOrReplaceTempView(name)
+        self.views.add(name)
+        return name
+
+    def checkpoint(self, df, loop: str = ""):
+        """Eager ``localCheckpoint`` of ``df`` as ``loop``'s newest
+        generation; the generation two back is released only now that
+        this one is materialized."""
+        ck, handle = _local_checkpoint(df)
+        live = self.loops.setdefault(loop, [])
+        live.append(handle)
+        if len(live) > 2:
+            _release([live.pop(0)])
+        return ck
+
+
+@contextmanager
+def scratch(spark) -> Iterator[Scratch]:
+    """A call-scoped :class:`Scratch` for an iterative loop. On exit,
+    normal or raised, every checkpoint it still holds is released and
+    every view it made is dropped: materialize what must outlive the
+    call (collect it, or ``ctx.cache``/``ctx.checkpoint`` it in a
+    registry build) before the block ends."""
+    sess = _session(spark)
+    with sess.lock:
+        tag = next(sess.tags)
+    s = Scratch(tag)
+    try:
+        yield s
+    finally:
+        _release([h for live in s.loops.values() for h in live])
+        for name in s.views:
+            spark.catalog.dropTempView(name)
 
 
 def _supersede(sess: _Session, name: str, ident) -> list[_Entry]:
