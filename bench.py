@@ -7,24 +7,25 @@ Headline set: the TPC-H-shaped queries (scan/join/agg/window/TopK paths)
 plus the inference flagship — the plans whose physical shape matters at
 100 TB (shuffle count, broadcast choice, pushdown).
 
-Round-6 methodology (VERDICT r05 items 5+6): each query runs twice and
-reports its best ("queries") plus |run1-run2| ("spread") so scheduler
-jitter at the sub-second floor is distinguishable from a real
-regression; streaming witnesses are timed but reported in a separate
-"streaming" section and excluded from "value" and the DuckDB ratio —
-micro-batch machinery vs a batch GROUP BY is not a plan comparison.
+The action: each query's time is its builder plus
+``torchfusion_spark.measure.measure``, which fetches the full result with
+``toArrow()`` — every row and column the DuckDB oracle checks, the
+analogue of DuckDB's ``fetchall()``. (A ``count()`` lets Catalyst prune
+unused columns, Python UDFs included, so it would skip work.)
 
-Round-7 methodology (VERDICT r06 items 3/4/7): "cold" publishes each
-query's FIRST-run time so per-query warm/cold attribution is explicit,
-AND the prewarm now stages every session-memoized relation the headline
-set reads — including the minhash cluster labels, whose connected-
-components checkpoint loop previously ran inside the first timed query
-(the loop checkpoints into a call-scoped scratch scope; the staged label
-RELATION it produces is prewarmable like any other staged relation, so
-its cost is charged to staging_warm_sec, not hidden in `cold`/`spread`);
-the complete payload is also written to BENCH_LOCAL.json (the driver
-records only a stdout tail, which truncated most r6 per-query rows);
-the streaming section adds input_rows + rows_per_sec throughput.
+Each query runs twice: "queries" is the best run, "spread" |run1-run2|
+and "cold" run 1, so scheduler jitter at the sub-second floor shows
+apart from a real regression; "jobs" and "shuffle_bytes" are the timed
+action's Spark jobs and shuffle bytes written, from the best run (jobs a
+builder runs while building are not in them). Before timing, the JVM is
+warmed and every prewarm relation of torchfusion_spark/staging.py is
+built; that build is reported as "staging_warm_sec" and per relation in
+"staging_components", and a failed warm-up or prewarm is recorded as
+"warmup_error" / "staging_error". Streaming witnesses are reported in a
+separate "streaming" section, excluded from "value" and the DuckDB ratio
+(micro-batch machinery vs a batch GROUP BY is not a plan comparison),
+with input_rows and rows_per_sec throughput. The complete payload is also
+written to BENCH_LOCAL.json.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# What each query computes, and which staged relations it reads, is in its
+# registry doc (tools/gen_operators_md.py lists them in OPERATORS.md).
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -66,126 +69,57 @@ HEADLINE = [
     "events_retention",
     "corpus_pack_sequences",
     "corpus_chunk_overlap",
-    # round-4 derivation rewrites — benched so a plan regression shows
-    # up as a timing regression too, not just an audit flag
+    # plan rewrites, benched so a plan regression shows as a timing one
     "q2_min_cost_supplier",
     "q17_small_quantity_revenue",
     "q20_potential_promotion",
     "q21_waiting_supplier",
-    # round-5 widening: the remaining judge-tracked scale-path operators
-    # (inverted-index containment, Bloom decontamination, the full
-    # clusters->canonical pipeline) and a streaming witness, so every
-    # 100 TB-critical family carries per-round timing accountability
+    # LLM-data families: dedup, decontamination, quality, retrieval,
+    # sampling, packing. The star-contraction clusters' labels are a
+    # staged relation that is not prewarmed, so its first run builds them
+    # (the cost shows in `cold`) and its second reads them.
     "dedup_containment",
     "text_decontaminate_bloom",
     "pipeline_dedup_canonical",
-    # round-7 addition: exact-substring dedup (the last member of the
-    # mandated dedup family) — benched from day one
     "dedup_substring",
-    # round-7 addition: per-source (domain-level) quality gate — benched
-    # from day one; its fingerprint shuffle is the corpus-wide dup check
     "corpus_source_filter",
-    # round-7 addition: the substring-dedup ACTION step (strip duplicated
-    # spans, keep the earliest occurrence, rebuild the cleaned corpus)
     "corpus_strip_dup_spans",
-    # round-7 addition: span-level benchmark decontamination (drop the
-    # quote, keep the doc) — shares the strip/rebuild tail
     "text_decontaminate_spans",
-    # round-7 additions: BM25 keyword retrieval + CCNet-style LM quality
-    # scoring — both read the session-staged unigram-tf relation
     "text_bm25_topk",
     "text_lm_perplexity",
-    # round-13 addition: hybrid retrieval fusion (RRF over the BM25 +
-    # dense cosine top-k lists) — reads both staged relations
     "retrieval_rrf_fusion",
-    # round-13 addition: RAG context assembly over the fused hits (lead
-    # chunks, greedy char-budget prefix, ordered rebuild + content hash)
     "pipeline_rag_context",
-    # round-7 addition: DSIR importance weighting — same staged relation
     "sample_dsir_importance",
-    # round-7 addition: Gopher quality-rule filter — the cheapest shape
-    # in the family (one scan, zero shuffles), benched from day one
     "text_gopher_rules",
-    # round-8 additions: URL-canonicalization dedup (single keeper-window
-    # shuffle), the LSH mega-cluster collapse (bounded output where
-    # the pair query is C(n,2)), and the composed FineWeb-style quality
-    # gate (gopher ∧ source ∧ url-keeper, reason-coded) — benched from
-    # day one
     "dedup_url_canonical",
     "sim_near_dup_collapse",
     "pipeline_quality_gate",
     "corpus_url_filter",
     "sample_temperature_mixture",
-    # round-9 additions: the trained model-based quality gate (NB
-    # log-odds over the shared hashed feature space, broadcast weights)
-    # and the Nemotron-CC-style quality-signal ensemble composed over it
-    # — benched from day one; both read the session-staged tf relation
     "text_quality_classifier",
     "pipeline_quality_ensemble",
-    # round-9 additions: the iterative BPE merge trainer (3 greedy-merge
-    # rounds on the vocab-sized symbol stream; word rollup from the
-    # staged tf relation) and its inference half (apply the learned
-    # merges, per-doc compression stats)
     "corpus_bpe_train",
     "corpus_bpe_apply",
-    # round-9 addition: the upsample materializer (temperature-mixture
-    # repeat factors → concrete per-doc epoch copies; broadcast plan +
-    # scan-speed fan-out)
     "sample_upsample_epochs",
-    # round-10 addition: incremental URL dedup against the persisted
-    # seen-set (index build memoized per corpus; the benched cost is the
-    # batch canonicalize + broadcast probe — the recurring-ingest shape)
     "dedup_url_incremental",
-    # round-11 addition: the end-to-end pretraining corpus assembly
-    # (filter → dedup → ensemble → decontaminate → mixture → upsample →
-    # pack, composed over the shared staged/checkpointed relations) —
-    # the benched cost is the composition over already-staged inputs
     "pipeline_pretrain_corpus",
-    # round-12 addition: the O(log n)-rounds star-contraction clusters
-    # variant (deep/chain graphs) — benched from day one; its labels are
-    # a staged relation that is not prewarmed, so the banded LSH pair
-    # join and the contraction loop run in the build on the first run
-    # and their cost shows in `cold`; the second run reads the staged
-    # labels
     "dedup_minhash_clusters_star",
-    # round-12 addition: perceptual payload dedup (byte aHash via Arrow
-    # scan + the SimHash banded Hamming tail) — benched from day one
     "multimodal_dedup",
-    # round-13 addition: frame-level perceptual dedup (sampled-frame
-    # aHash → packed-key banded tail → containment-shape doc verdict)
     "multimodal_frame_dedup",
-    # round-14 addition: C4-style line-level boilerplate removal (the
-    # third dedup granularity; map-combinable line-hash rollup +
-    # broadcast anti-join probe) — benched from day one; the LINE
-    # relation is session-staged, so the benched cost is the rollup,
-    # probe and per-doc rebuild
     "corpus_strip_boilerplate_lines",
-    # round-15 addition: the ANN recall audit (IVF recall@k vs exact
-    # top-k; capped-LSH pair recall overall and on the >=0.42 near-dup
-    # band) — the measured price of the r14 hot-bucket cap, benched from
-    # day one; reads the staged norms + bucket relations
     "sim_ann_recall_audit",
 ]
 
-# Streaming witnesses carry round-over-round timing accountability but are
-# excluded from the DuckDB-comparable ratio (VERDICT r05 item 6): a
-# micro-batch pipeline's wall-clock vs a batch GROUP BY is machinery
-# overhead, not a query-plan comparison.
+# Streaming witnesses: stateless window, state store, stream-stream join,
+# late-data eviction and event-time timers. Excluded from the DuckDB
+# ratio: micro-batch machinery vs a batch GROUP BY is not a plan
+# comparison.
 STREAMING = [
     "stream_windowed_counts",
-    # round-7 widening: a stateful aggregation and a stream-stream join
-    # so the throughput section covers the state-store and dual-watermark
-    # paths, not just the stateless tumbling window
     "stream_stateful_user_stats",
     "stream_stream_join",
-    # round-13 addition: the watermark/late-data eviction witnesses
-    # (3-file backdated replays, append mode) — the windowed-agg and
-    # dedup state-eviction paths benched
     "stream_late_eviction",
     "stream_late_dedup",
-    # round-14 addition: the event-time TIMER path (session-timeout state
-    # machine — ListState-shaped group state + event-time timeout) — the
-    # state/throughput row covers the timer-driven eviction path
     "stream_session_timeout",
 ]
 
@@ -253,33 +187,26 @@ def main() -> None:
             .groupBy("l_returnflag")
             .agg(F.sum(F.col("l_extendedprice").cast("decimal(12,2)")).alias("s"))
             .withColumn("r", F.row_number().over(Window.orderBy("l_returnflag")))
-            .count()
+            .toArrow()
         )
-    except Exception:  # noqa: BLE001 — warmup is best-effort, never fatal
-        pass
+    except Exception as exc:  # noqa: BLE001 — best-effort, never fatal, never
+        # silent: an unwarmed JVM bills its JIT to the first timed queries
+        warmup_error = f"{type(exc).__name__}: {exc}"
+    else:
+        warmup_error = None
 
-    # Pre-warm the session-staged relations OUTSIDE the timed region
-    # (VERDICT r03 item 2): __sim_norms and the MinHash signature are
-    # memoized per session and shared by whole query families; billing
-    # their one-time build to whichever family member happens to run
-    # first made sim_cosine_topk look 55× slower than its steady-state
-    # plan. The build cost is still reported (staging_warm_sec below) —
-    # it is paid once per session, amortized across every family query.
+    # Pre-warm the session-staged relations OUTSIDE the timed region: a
+    # staged relation is built once per session and shared by a whole
+    # query family, so billing its build to whichever member runs first
+    # misattributes it. The build is reported as staging_warm_sec, and per
+    # relation as its own wall under the concurrent schedule (components
+    # overlap, so their sum exceeds the total). The schedule lives in
+    # torchfusion_spark/staging.py, shared with tools/perf_probe.py.
     staging_warm = time.perf_counter()
     staging_components: dict = {}
     try:
-        # The staging schedule (the registry's prewarm relations, each
-        # submitted once its declared deps finish, and the pool width)
-        # lives in torchfusion_spark/staging.py — ONE copy shared with
-        # tools/perf_probe.py.
         from torchfusion_spark.staging import prewarm_staging
 
-        # Per-relation itemization (VERDICT r15 item 4): each component's
-        # number is its own wall-clock UNDER the concurrent schedule
-        # (threads share the local[32] scheduler, so components overlap
-        # and the sum exceeds staging_warm_sec — the per-row figure says
-        # which relations dominate the bill, the total says what a cold
-        # session actually pays).
         def _timed(name, fn, *a):
             t0 = time.perf_counter()
             fn(*a)
@@ -299,18 +226,15 @@ def main() -> None:
     # Per-query fault isolation (round-2 postmortem: one AnalysisException
     # aborted the whole bench and the round published no timings). A broken
     # query costs its own row in `errors`; the JSON summary always prints.
-    #
-    # Best-of-2 per query (VERDICT r05 item 5): n=1 cold timing cannot
-    # distinguish scheduler jitter from a real regression at the sf0.1
-    # sub-second floor. Each query runs twice; `queries` reports the best,
-    # `spread` reports |run1 - run2| so a noisy row is visibly noisy.
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    colds: dict[str, float] = {}
+    from torchfusion_spark.measure import measure
+
+    per_query: dict[str, dict] = {
+        k: {} for k in ("queries", "spread", "cold", "jobs", "shuffle_bytes")
+    }
     errors: dict[str, str] = {}
 
     def run_timed(name: str) -> None:
-        runs: list[float] = []
+        runs = []
         try:
             # inside the try: a stale HEADLINE entry (renamed/removed
             # registry query) must record an error row, not KeyError the
@@ -319,34 +243,29 @@ def main() -> None:
             for _ in range(2):
                 t0 = time.perf_counter()
                 df = q.builder(spark, sf_dir)
-                n = df.count()  # full materialization without driver collect
-                assert n >= 0
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(min(runs), 4)
-            spreads[name] = round(abs(runs[0] - runs[1]), 4)
-            # explicit warm/cold attribution (VERDICT r06 item 3): run 1
-            # carries any per-query first-use cost staging_warm_sec does
-            # not cover — publishing it per query means the reader never
-            # has to reverse-engineer the cold path from `spread`
-            colds[name] = round(runs[0], 4)
+                build = time.perf_counter() - t0
+                _, wall, counts, operators = measure(df)
+                shuffle = sum(op.metrics.get("shuffleBytesWritten", 0) for op in operators)
+                runs.append((round(build + wall, 4), counts["jobs"], shuffle))
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            return
+        best = min(runs)
+        per_query["queries"][name], per_query["jobs"][name], per_query["shuffle_bytes"][name] = best
+        per_query["spread"][name] = round(abs(runs[0][0] - runs[1][0]), 4)
+        per_query["cold"][name] = runs[0][0]
 
     for name in HEADLINE:
         run_timed(name)
-    streaming_timings: dict[str, float] = {}
-    streaming_spreads: dict[str, float] = {}
-    streaming_colds: dict[str, float] = {}
+    streaming = {k: {} for k in per_query}
     for name in STREAMING:
         run_timed(name)
-        if name in timings:
-            streaming_timings[name] = timings.pop(name)
-            streaming_spreads[name] = spreads.pop(name)
-            streaming_colds[name] = colds.pop(name)
+        for k, d in per_query.items():
+            if name in d:
+                streaming[k][name] = d.pop(name)
+    timings, streaming_timings = per_query["queries"], streaming["queries"]
 
-    # streaming throughput (VERDICT r06 item 7): rows/sec over the input
-    # cardinality so round-over-round streaming comparisons measure data
-    # throughput, not just micro-batch machinery overhead
+    # streaming throughput: rows/sec over the input cardinality
     try:
         stream_input_rows = spark.table("events").count()
     except Exception:  # noqa: BLE001
@@ -362,29 +281,20 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        "spread": spreads,
-        "cold": colds,
+        **per_query,
         "sf": sf,
         "queries_ok": len(timings) + len(streaming_timings),
         "queries_failed": len(errors),
         "staging_warm_sec": staging_warm,
-        # per-relation build wall-clock under the concurrent prewarm
-        # schedule (components overlap; see the _timed note) — VERDICT
-        # r15 item 4's itemization
         "staging_components": dict(sorted(staging_components.items())),
+        **({"warmup_error": warmup_error} if warmup_error else {}),
         **({"staging_error": staging_error} if staging_error else {}),
         "streaming": {
-            "queries": streaming_timings,
-            "spread": streaming_spreads,
-            "cold": streaming_colds,
+            **streaming,
             "input_rows": stream_input_rows,
             "rows_per_sec": streaming_rps,
-            # state-store footprint of each witness's final progress
-            # (rows + bytes from stateOperators, recorded by the runner,
-            # keyed by the memory-sink name minus its tf_ prefix):
-            # round-over-round growth here flags an unbounded keyspace
-            # long before it OOMs an executor (VERDICT r7 item 5)
+            # state-store rows + bytes of each witness's final progress:
+            # growth here flags an unbounded keyspace before it OOMs
             "state": {
                 k.removeprefix("tf_"): v
                 for k, v in getattr(spark, "_tf_stream_state", {}).items()
@@ -421,13 +331,8 @@ def main() -> None:
                 else None,
             }
 
-    # the driver keeps only a tail window of stdout (BENCH_r06 lost ~22 of
-    # 36 per-query timings to truncation — VERDICT r06 item 4): persist
-    # the COMPLETE payload to a repo artifact so round-over-round
-    # per-query comparison never depends on the driver's tail window.
-    # Only the canonical sf0.1 run writes it — a quick sf0.01 smoke run
-    # must not clobber the round-comparison record with mismatched-scale
-    # numbers (non-canonical runs write a sf-suffixed scratch file).
+    # the complete payload, for readers of a truncated stdout tail; only
+    # the canonical sf0.1 run writes the committed record
     name = "BENCH_LOCAL.json" if sf == 0.1 else f"BENCH_LOCAL_sf{sf}.json.scratch"
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
     try:

@@ -82,3 +82,28 @@ def test_bench_main_routes_through_emit_result():
     assert "emit_result(real_stdout, payload)" in src
     assert "real_stdout = claim_stdout()" in src
     assert "print(json.dumps(payload))" not in src
+
+
+def _function_source(path: str, name: str):
+    import ast
+
+    tree = ast.parse(open(os.path.join(REPO, path)).read())
+    return next(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == name)
+
+
+def test_timed_actions_go_through_measure():
+    """Every timed path fetches the full result through measure() (the
+    toArrow() analogue of DuckDB's fetchall()); none times a count(),
+    whose pruned plan skips unused columns, Python UDFs included."""
+    import ast
+
+    for path, fn in (
+        ("bench.py", "run_timed"),
+        ("tools/perf_probe.py", "main"),
+        ("torchfusion_spark/engine.py", "_explain_analyze"),
+    ):
+        calls = [n.func for n in ast.walk(_function_source(path, fn)) if isinstance(n, ast.Call)]
+        names = {getattr(f, "id", None) or getattr(f, "attr", None) for f in calls}
+        assert "measure" in names, f"{path}:{fn} does not time through measure()"
+        other = names & {"count", "collect", "toPandas", "save"}
+        assert not other, f"{path}:{fn} times {other}"

@@ -106,6 +106,26 @@ def test_null_input_row_fails_loudly(engine, tables, model_path):
         engine.sql("SELECT clf_null(CAST(NULL AS ARRAY<FLOAT>))").collect()
 
 
+def test_measured_inference_keeps_python_eval(engine, tables, model_path):
+    """measure() and EXPLAIN ANALYZE time the full result on the query's
+    own plan, so the model's ArrowEvalPython node is in the operators they
+    report and scored every input row. A count() prunes that node."""
+    from torchfusion_spark.measure import measure
+
+    engine.sql(
+        "CREATE OR REPLACE FUNCTION clf_measured(FLOAT[]) RETURNS FLOAT[] "
+        f"LANGUAGE TORCH AS '{model_path}'"
+    )
+    query = "SELECT vec_id, argmax(clf_measured(embedding)) AS cls FROM embeddings"
+    n = engine.spark.table("embeddings").count()
+    table, wall, counts, operators = measure(engine.sql(query))
+    assert table.num_rows == n and wall > 0 and counts["jobs"] >= 1
+    assert [op.rows for op in operators if op.name.startswith("ArrowEvalPython")] == [n]
+    plan = engine.sql(f"EXPLAIN ANALYZE {query}").collect()[0].plan
+    assert f"ArrowEvalPython  rows={n:,}  " in plan
+    assert f"== Analyzed: {n} rows, " in plan
+
+
 def test_missing_model_body_errors(engine):
     with pytest.raises(ValueError, match="model file should be specified"):
         engine.sql("CREATE FUNCTION broken(FLOAT[]) RETURNS FLOAT[] LANGUAGE TORCH")

@@ -30,9 +30,8 @@ from tools.verify_local import duck_connection  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     runs = max(1, int(sys.argv[2])) if len(sys.argv) > 2 else 3
-    # optional name filter (r16): re-measure ONLY the queries whose oracle
-    # SQL changed this round — the rehearsal-merge partial-refresh path
-    # (tools/merge_sf1_rehearsal.py --duck) without paying the full sweep
+    # optional name filter: re-measure ONLY the queries whose oracle SQL
+    # changed, without paying the full sweep
     only = set(sys.argv[3:]) or None
 
     from bench import HEADLINE, parse_sf

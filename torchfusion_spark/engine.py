@@ -295,8 +295,8 @@ _INFO_SCHEMA_HELPER_NAMES = frozenset(
 )
 
 # DataFusion's EXPLAIN ANALYZE (execute + annotated plan). Spark has no
-# SQL-level equivalent; emulate: run the query, return the final
-# (AQE-resolved) physical plan plus execution counters.
+# SQL-level equivalent; emulate: fetch the full result, return the final
+# (AQE-resolved) operator tree with each operator's metrics.
 _EXPLAIN_ANALYZE_RE = re.compile(
     r"^\s*EXPLAIN\s+ANALYZE\s+(?P<q>.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
 )
@@ -546,20 +546,16 @@ class Engine:
         )
 
     def _explain_analyze(self, query_text: str) -> DataFrame:
-        """Execute, then return the final physical plan (AQE-resolved, so
-        runtime re-plans are visible — the analyze half DataFusion shows as
-        per-operator metrics) with execution counters appended."""
-        import time
+        """Fetch the query's full result, then return the final
+        (AQE-resolved) operator tree of the plan that produced it, with
+        rows, time and bytes for each operator — DataFusion's per-operator
+        metrics, from :func:`torchfusion_spark.measure.measure`."""
+        from torchfusion_spark.measure import measure, render
 
         df = self.sql(query_text)  # recursive dispatch: df_settings etc. apply
-        t0 = time.time()
-        n = df.count()
-        elapsed_ms = round((time.time() - t0) * 1000, 1)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        summary = f"== Analyzed: {n} rows, {elapsed_ms} ms =="
-        return self.spark.createDataFrame(
-            [(f"{plan}\n{summary}",)], "plan string"
-        )
+        table, wall, _, operators = measure(df)
+        summary = f"== Analyzed: {table.num_rows} rows, {round(wall * 1000, 1)} ms =="
+        return self.spark.createDataFrame([(f"{render(operators)}\n{summary}",)], "plan string")
 
     # -- scripts ------------------------------------------------------------
 

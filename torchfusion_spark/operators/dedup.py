@@ -264,8 +264,8 @@ def minhash_body_sql(
     cached relation preserves its plan's (band, bkey) hash partitioning,
     so BOTH self-join sides read it exchange-free and the explode +
     bucket-size window run once per corpus instead of twice per query
-    (plan: 2 × [Exchange → Window] → 1 staged build; see
-    plans/r17/dedup_minhash_lsh_*). The oracle keeps the inline CTE
+    (plan: 2 × [Exchange → Window] → 1 staged build; ``tools/perf_probe.py
+    --plans-dir`` shows it for ``dedup_minhash_lsh``). The oracle keeps the inline CTE
     chain — DuckDB's MATERIALIZED CTEs evaluate once already. The staged
     relation is capped at ``MAX_BUCKET``, so any other ``max_bucket``
     with ``ok_rel`` raises instead of being silently ignored."""

@@ -39,6 +39,26 @@ def cpu_fanout(df, rows_per_task: int = 128):
     return df.repartition(width)
 
 
+def _runtime_confs(shuffle_partitions: int) -> dict[str, str]:
+    """The engine's runtime-settable SQL confs: ONE spelling for
+    :func:`session` and :func:`tune_runtime`. The parquet-timestamp
+    vintage confs come from sources' shared spelling."""
+    from torchfusion_spark.sources import _TS_NORMALIZE_CONFS
+
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # unfiltered MIN/MAX/COUNT answered from parquet footer statistics
+        "spark.sql.parquet.aggregatePushdown": "true",
+        # both testdata timestamp vintages → TIMESTAMP (see sources.read_table)
+        **_TS_NORMALIZE_CONFS,
+    }
+
+
 def session(
     app_name: str = "torchfusion_spark",
     master: str | None = None,
@@ -47,28 +67,14 @@ def session(
 ) -> SparkSession:
     """Build (or reuse) the SparkSession with engine defaults applied."""
     cpus = default_parallelism()
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or cpus
-
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # unfiltered MIN/MAX/COUNT answered from parquet footer statistics
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # both testdata timestamp vintages → TIMESTAMP (see sources.read_table)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .master(master or f"local[{cpus}]")
+        # driver-only settings: they cannot change on a running session
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_runtime_confs(shuffle_partitions or cpus), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
 
     spark = builder.getOrCreate()
@@ -103,21 +109,7 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     """
     if getattr(spark, "_tf_runtime_tuned", False):
         return spark
-    # the parquet-timestamp vintage confs come from sources' ONE shared
-    # spelling — a vintage fix edited there must reach this memoized
-    # (runs-first-in-every-builder) path too, not leave a stale copy
-    from torchfusion_spark.sources import _TS_NORMALIZE_CONFS
-
-    for k, v in {
-        "spark.sql.shuffle.partitions": str(default_parallelism()),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.aggregatePushdown": "true",
-        **_TS_NORMALIZE_CONFS,
-    }.items():
+    for k, v in _runtime_confs(default_parallelism()).items():
         spark.conf.set(k, v)
     spark._tf_runtime_tuned = True
     return spark
