@@ -15,8 +15,9 @@ unused columns, Python UDFs included, so it would skip work.)
 
 Each query runs twice: "queries" is the best run, "spread" |run1-run2|
 and "cold" run 1, so scheduler jitter at the sub-second floor shows
-apart from a real regression; "jobs" and "shuffle_bytes" are the timed
-action's Spark jobs and shuffle bytes written, from the best run (jobs a
+apart from a real regression; "jobs", "shuffle_bytes", "python_init_ms"
+and "python_total_ms" are the timed action's Spark jobs, shuffle bytes
+written and Python workers' init and total time, from the best run (jobs a
 builder runs while building are not in them). Before timing, the JVM is
 warmed and every prewarm relation of torchfusion_spark/staging.py is
 built; that build is reported as "staging_warm_sec" and per relation in
@@ -122,6 +123,19 @@ STREAMING = [
     "stream_late_dedup",
     "stream_session_timeout",
 ]
+
+# Per-query payload columns summed over the timed plan's operators, with
+# the SQL metric each sums (the Python ones are in ms).
+OPERATOR_SUMS = {
+    "shuffle_bytes": "shuffleBytesWritten",
+    "python_init_ms": "pythonInitTime",
+    "python_total_ms": "pythonTotalTime",
+}
+
+
+def operator_sums(operators) -> dict[str, int]:
+    """The :data:`OPERATOR_SUMS` columns of one timed run."""
+    return {k: sum(op.metrics.get(m, 0) for op in operators) for k, m in OPERATOR_SUMS.items()}
 
 
 def parse_sf(sf_dir: str) -> float:
@@ -229,7 +243,7 @@ def main() -> None:
     from torchfusion_spark.measure import measure
 
     per_query: dict[str, dict] = {
-        k: {} for k in ("queries", "spread", "cold", "jobs", "shuffle_bytes")
+        k: {} for k in ("queries", "spread", "cold", "jobs", *OPERATOR_SUMS)
     }
     errors: dict[str, str] = {}
 
@@ -245,13 +259,16 @@ def main() -> None:
                 df = q.builder(spark, sf_dir)
                 build = time.perf_counter() - t0
                 _, wall, counts, operators = measure(df)
-                shuffle = sum(op.metrics.get("shuffleBytesWritten", 0) for op in operators)
-                runs.append((round(build + wall, 4), counts["jobs"], shuffle))
+                runs.append(
+                    (round(build + wall, 4), {"jobs": counts["jobs"], **operator_sums(operators)})
+                )
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             return
-        best = min(runs)
-        per_query["queries"][name], per_query["jobs"][name], per_query["shuffle_bytes"][name] = best
+        best = min(runs, key=lambda r: r[0])
+        per_query["queries"][name] = best[0]
+        for k, v in best[1].items():
+            per_query[k][name] = v
         per_query["spread"][name] = round(abs(runs[0][0] - runs[1][0]), 4)
         per_query["cold"][name] = runs[0][0]
 

@@ -107,3 +107,29 @@ def test_timed_actions_go_through_measure():
         assert "measure" in names, f"{path}:{fn} does not time through measure()"
         other = names & {"count", "collect", "toPandas", "save"}
         assert not other, f"{path}:{fn} times {other}"
+
+
+def test_per_query_columns_sum_the_timed_plans_operators():
+    """Each query's row carries its shuffle bytes and its Python workers'
+    init and total time, summed over every operator of the timed plan."""
+    import ast
+
+    import bench
+    from torchfusion_spark.measure import Operator
+
+    def op(**metrics):
+        return Operator(0, "x", None, None, None, metrics)
+
+    operators = [
+        op(pythonInitTime=40, pythonTotalTime=300, pythonDataSent=9),
+        op(shuffleBytesWritten=1024),
+        op(pythonInitTime=2, pythonTotalTime=30),
+    ]
+    assert bench.operator_sums(operators) == {
+        "shuffle_bytes": 1024,
+        "python_init_ms": 42,
+        "python_total_ms": 330,
+    }
+    run_timed = _function_source("bench.py", "run_timed")
+    calls = {getattr(n.func, "id", None) for n in ast.walk(run_timed) if isinstance(n, ast.Call)}
+    assert "operator_sums" in calls

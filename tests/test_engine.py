@@ -156,6 +156,23 @@ def test_explain_analyze_reports_rows_time_bytes_per_operator(engine, tables):
             assert stage[3] != "-", plan
 
 
+def test_explain_analyze_collect_root_reports_fetched_rows(engine, tables):
+    """A LIMIT root runs on the driver as the result is fetched, and Spark
+    leaves its metrics at 0: it reports the fetched rows, and `-` for the
+    time and bytes it never measured."""
+    for query, root, n in (
+        (
+            "SELECT c_name, c_acctbal FROM customer ORDER BY c_acctbal DESC LIMIT 7",
+            "TakeOrderedAndProject",
+            7,
+        ),
+        ("SELECT c_name FROM customer LIMIT 5", "CollectLimit", 5),
+    ):
+        plan = engine.sql(f"EXPLAIN ANALYZE {query}").collect()[0].plan
+        assert f"== Analyzed: {n} rows, " in plan
+        assert _analyzed_operators(plan)[0] == (0, root, str(n), "-", "-"), plan
+
+
 def test_create_function_rejects_multiple_args(engine):
     """Reference parity: the TORCH UDF signature is exactly one array
     argument (src/udf.rs:59-64,108-115 errors otherwise); multi-arg

@@ -18,6 +18,9 @@ from typing import NamedTuple
 
 _ROW_METRICS = ("numOutputRows", "pythonNumRowsReceived", "shuffleRecordsWritten")
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+# roots the driver runs itself when it fetches the result, leaving their
+# SQL metrics (all shuffle metrics) at 0
+_COLLECT_ROOTS = ("CollectLimit", "CollectTail", "TakeOrderedAndProject")
 
 
 class Operator(NamedTuple):
@@ -59,7 +62,12 @@ def measure(df):
         for st in filter(None, map(tracker.getStageInfo, info.stageIds)):
             counts["stages"] += 1
             counts["tasks"] += st.numTasks
-    return table, wall, counts, _operators(df._jdf.queryExecution().executedPlan())
+    operators = _operators(df._jdf.queryExecution().executedPlan())
+    if operators and operators[0].name in _COLLECT_ROOTS:
+        # the root produced exactly the fetched rows; its time and bytes
+        # were never measured
+        operators[0] = operators[0]._replace(rows=table.num_rows, time_ms=None, bytes=None)
+    return table, wall, counts, operators
 
 
 def _seq(s):

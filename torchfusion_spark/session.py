@@ -73,6 +73,9 @@ def session(
         # driver-only settings: they cannot change on a running session
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # pyspark's daemon, minus re-reading pyspark.zip and the spark-core
+        # jar on every task (see worker_daemon)
+        .config("spark.python.daemon.module", "torchfusion_spark.worker_daemon")
     )
     for k, v in {**_runtime_confs(shuffle_partitions or cpus), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
