@@ -15,10 +15,11 @@ unused columns, Python UDFs included, so it would skip work.)
 
 Each query runs twice: "queries" is the best run, "spread" |run1-run2|
 and "cold" run 1, so scheduler jitter at the sub-second floor shows
-apart from a real regression; "jobs", "shuffle_bytes", "python_init_ms"
-and "python_total_ms" are the timed action's Spark jobs, shuffle bytes
-written and Python workers' init and total time, from the best run (jobs a
-builder runs while building are not in them). Before timing, the JVM is
+apart from a real regression. From the best run: "build_s" is the
+builder's wall (inside "queries"; jobs a builder runs while building are
+not in "jobs"), and "jobs", "shuffle_bytes", "python_init_ms" and
+"python_total_ms" are the timed action's Spark jobs, shuffle bytes
+written and Python workers' init and total time. Before timing, the JVM is
 warmed and every prewarm relation of torchfusion_spark/staging.py is
 built; that build is reported as "staging_warm_sec" and per relation in
 "staging_components", and a failed warm-up or prewarm is recorded as
@@ -138,6 +139,19 @@ def operator_sums(operators) -> dict[str, int]:
     return {k: sum(op.metrics.get(m, 0) for op in operators) for k, m in OPERATOR_SUMS.items()}
 
 
+def run_columns(build_s: float, counts: dict, operators) -> dict:
+    """The per-query columns of one timed run: the builder's wall (what
+    it builds on first use, such as a staged relation the prewarm does
+    not cover, lands here), the timed action's jobs and the
+    :data:`OPERATOR_SUMS`."""
+    return {"build_s": round(build_s, 4), "jobs": counts["jobs"], **operator_sums(operators)}
+
+
+# the payload's per-query sections: best run, |run1-run2|, run 1, and the
+# best run's run_columns
+PER_QUERY = ("queries", "spread", "cold", "build_s", "jobs", *OPERATOR_SUMS)
+
+
 def parse_sf(sf_dir: str) -> float:
     """Best-effort scale factor from a dir name like .../sf0.1 — never
     crashes: a path merely containing 'sf' (or a suffix like
@@ -242,9 +256,7 @@ def main() -> None:
     # query costs its own row in `errors`; the JSON summary always prints.
     from torchfusion_spark.measure import measure
 
-    per_query: dict[str, dict] = {
-        k: {} for k in ("queries", "spread", "cold", "jobs", *OPERATOR_SUMS)
-    }
+    per_query: dict[str, dict] = {k: {} for k in PER_QUERY}
     errors: dict[str, str] = {}
 
     def run_timed(name: str) -> None:
@@ -259,9 +271,7 @@ def main() -> None:
                 df = q.builder(spark, sf_dir)
                 build = time.perf_counter() - t0
                 _, wall, counts, operators = measure(df)
-                runs.append(
-                    (round(build + wall, 4), {"jobs": counts["jobs"], **operator_sums(operators)})
-                )
+                runs.append((round(build + wall, 4), run_columns(build, counts, operators)))
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             return

@@ -110,8 +110,9 @@ def test_timed_actions_go_through_measure():
 
 
 def test_per_query_columns_sum_the_timed_plans_operators():
-    """Each query's row carries its shuffle bytes and its Python workers'
-    init and total time, summed over every operator of the timed plan."""
+    """Each query's row carries its builder's wall, its action's jobs,
+    and its shuffle bytes and Python workers' init and total time,
+    summed over every operator of the timed plan."""
     import ast
 
     import bench
@@ -130,6 +131,13 @@ def test_per_query_columns_sum_the_timed_plans_operators():
         "python_init_ms": 42,
         "python_total_ms": 330,
     }
+    assert bench.run_columns(0.123456, {"jobs": 3}, operators) == {
+        "build_s": 0.1235,
+        "jobs": 3,
+        **bench.operator_sums(operators),
+    }
+    # every run column is a payload section of its own, next to jobs
+    assert set(bench.run_columns(0.0, {"jobs": 0}, [])) <= set(bench.PER_QUERY)
     run_timed = _function_source("bench.py", "run_timed")
     calls = {getattr(n.func, "id", None) for n in ast.walk(run_timed) if isinstance(n, ast.Call)}
-    assert "operator_sums" in calls
+    assert "run_columns" in calls

@@ -65,23 +65,25 @@ def test_bucketed_join_has_no_shuffle(spark, tables):
 
 def test_li_osr_stage_is_session_scoped(spark, tables):
     """r16 optimization-round rules: the q21 bucketed rollup must NOT be
-    a cross-run artifact — the staged dir is pid-scoped (a new process
-    always rebuilds from the parquet inputs, so the build cost is always
-    inside the benched staging_warm_sec), while WITHIN a session the
-    memo makes every later call registration-free (write_bucketed
-    poisoned to prove it) and the bucketed layout reads exchange-free."""
+    a cross-run artifact — the staged dir lies under this process's
+    staging root (a new process always rebuilds from the parquet inputs,
+    so the build cost is always inside the benched staging_warm_sec),
+    while WITHIN a session the memo makes every later call
+    registration-free (write_bucketed poisoned to prove it) and the
+    bucketed layout reads exchange-free."""
     import torchfusion_spark.sources.sinks as sinks
     from torchfusion_spark.plans import REGISTRY
-    from torchfusion_spark.staging import built, stage
+    from torchfusion_spark.staging import built, stage, staging_root
 
-    rel = stage(spark, "li_by_order")
+    stage(spark, "li_by_order")
+    rel = built(spark, "li_by_order").result
     path = spark.sql(f"DESCRIBE TABLE EXTENDED {rel}").filter(
         "col_name = 'Location'"
     ).first().data_type.removeprefix("file:")
-    # pid-scoped dir: no content-keyed cross-process reuse, and no
-    # _TF_BUILT reuse marker for a second process to trust
-    assert path.rstrip("/").endswith(f"_{os.getpid()}"), path
-    assert not os.path.exists(os.path.join(path, "_TF_BUILT"))
+    # process-scoped dir: no content-keyed cross-process reuse
+    assert os.path.realpath(os.path.dirname(path.rstrip("/"))) == os.path.realpath(
+        staging_root()
+    ), path
     rows1 = REGISTRY["q21_waiting_supplier"].builder(spark, tables).collect()
     # the build q21 read: its runtime tuning may change the shuffle
     # partitions the bucket layout is keyed on, re-staging once

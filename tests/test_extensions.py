@@ -744,71 +744,24 @@ def test_scored_checkpoint_reused_across_scorer_queries(spark, tables):
         orig.createOrReplaceTempView("documents")
 
 
-def test_url_index_cleanup_ownership_rules(tmp_path):
-    """The stale-dir sweep's ownership proof (code-review r12): a live
-    foreign pid keeps its dir exactly when its /proc start time matches
-    the start the builder recorded on the marker; a mismatched start is
-    a recycled pid (swept), a dead pid is swept, and an undecidable
-    young dir is left alone."""
-    import os
-
-    from torchfusion_spark.operators.dedup import (
-        _pid_start_time,
-        _url_index_cleanup,
-    )
-
-    base = str(tmp_path)
-    owner = os.path.join(base, "url_index_aaaa_1")  # pid 1 is always alive
-    os.makedirs(owner)
-    with open(os.path.join(owner, "_TF_BUILT"), "w") as f:
-        f.write(f"x\n{_pid_start_time(1)}")
-    recycled = os.path.join(base, "url_index_bbbb_1")
-    os.makedirs(recycled)
-    with open(os.path.join(recycled, "_TF_BUILT"), "w") as f:
-        f.write("x\n123.0")  # pid 1 did not start at epoch+123s
-    dead = os.path.join(base, "url_index_cccc_999999")
-    os.makedirs(dead)
-    undecidable = os.path.join(base, "url_index_dddd_1")  # no marker line 2
-    os.makedirs(undecidable)
-    with open(os.path.join(undecidable, "_TF_BUILT"), "w") as f:
-        f.write("x")
-    # ADVICE r13 #4: a PROVABLY-ALIVE pid whose marker lacks a start
-    # record (legacy marker / build in progress) keeps its dir even past
-    # the 7-day backstop — the backstop applies only when the pid probe
-    # itself is undecidable, never to a possibly-live owner's files.
-    live_old = os.path.join(base, "url_index_eeee_1")
-    os.makedirs(live_old)
-    with open(os.path.join(live_old, "_TF_BUILT"), "w") as f:
-        f.write("x")
-    week_ago = __import__("time").time() - 8 * 24 * 3600
-    os.utime(live_old, (week_ago, week_ago))
-    _url_index_cleanup(base)
-    assert os.path.exists(owner)  # verified live owner — kept
-    assert not os.path.exists(recycled)  # start-time mismatch — swept
-    assert not os.path.exists(dead)  # dead pid — swept
-    assert os.path.exists(undecidable)  # unknowable + young — left alone
-    assert os.path.exists(live_old)  # alive owner, no recorded start — kept at ANY age
-
-
 def test_url_incremental_index_survives_corpus_swap_back(spark, tables):
-    """ADVICE r10 #4: the registry builder's index build is keyed by a
-    ``_TF_BUILT`` marker at the corpus-tagged path, not a last-corpus
-    session attribute — on an A→B→A docs-view swap-back the old memo
-    forgot A and re-overwrote A's parquet dir, deleting files that a
-    previously resolved, not-yet-collected plan for A still referenced.
-    Pin: swap-back does NOT rewrite A's files (mtimes unchanged), and
-    the plan resolved before the swap still collects afterwards."""
+    """ADVICE r10 #4: an A→B→A docs-view swap-back must not rewrite the
+    files a previously resolved, not-yet-collected plan for A still
+    references. Every index build writes its own dir under this
+    process's staging root, released only at exit: swap-back rebuilds
+    into a new dir, A's files are unchanged (mtimes), and the plan
+    resolved before the swap still collects afterwards."""
     import os
 
-    from torchfusion_spark.operators.dedup import _docs_key, _url_index_path
     from torchfusion_spark.plans import REGISTRY
+    from torchfusion_spark.staging import built, staging_root
 
     builder = REGISTRY["dedup_url_incremental"].builder
     orig = spark.table("documents")
     try:
         df_a = builder(spark, tables)  # resolves A's plan; builds A's index
-        path_a = _url_index_path(_docs_key(spark))
-        assert os.path.exists(os.path.join(path_a, "_TF_BUILT"))
+        path_a = built(spark, "url_index").result[0]
+        assert os.path.dirname(path_a) == staging_root(), path_a
         files_a = {
             f: os.path.getmtime(os.path.join(path_a, "urls", f))
             for f in os.listdir(os.path.join(path_a, "urls"))
@@ -823,7 +776,8 @@ def test_url_incremental_index_survives_corpus_swap_back(spark, tables):
             f: os.path.getmtime(os.path.join(path_a, "urls", f))
             for f in os.listdir(os.path.join(path_a, "urls"))
         }
-        assert files_after == files_a  # marker hit — no rewrite of A's dir
+        assert built(spark, "url_index").result[0] != path_a  # rebuilt elsewhere
+        assert files_after == files_a  # no rewrite of A's dir
         assert df_a.count() > 0  # pre-swap plan still backed by its files
     finally:
         orig.createOrReplaceTempView("documents")
@@ -2752,62 +2706,6 @@ def test_multimodal_oracles_are_byte_true_on_non_ascii(spark, tables, tmp_path):
     finally:
         spark._tf_tables_loaded = None
         load_tables(spark, tables)
-
-
-def test_legacy_marker_upgraded_on_probe(spark, tables):
-    """ADVICE r13 #4 companion: a marker-hit probe on a pre-r13 marker
-    (no start-time line) rewrites it in place with this process's start
-    time, closing the live-pid-but-no-recorded-start window the cleanup
-    sweep must otherwise leave alone forever."""
-    import os
-
-    from torchfusion_spark.operators.dedup import (
-        _docs_key,
-        _marker_recorded_start,
-        _pid_start_time,
-        _url_index_path,
-    )
-    from torchfusion_spark.plans import REGISTRY
-
-    builder = REGISTRY["dedup_url_incremental"].builder
-    builder(spark, tables).count()
-    path = _url_index_path(_docs_key(spark))
-    marker = os.path.join(path, "_TF_BUILT")
-    with open(marker) as f:
-        first_line = f.read().splitlines()[0]
-    with open(marker, "w") as f:
-        f.write(first_line)  # forge a legacy single-line marker
-    assert _marker_recorded_start(path) is None
-    builder(spark, tables).count()  # marker hit — must upgrade, not rebuild
-    recorded = _marker_recorded_start(path)
-    assert recorded is not None
-    assert abs(recorded - _pid_start_time(os.getpid())) < 2.0
-
-
-def test_drop_prev_unkeyed_is_per_thread(spark, tmp_path):
-    """ADVICE r13 #2: the unkeyed-index supersede tracking is
-    per-(session, thread) — thread B minting its next unkeyed dir must
-    not rmtree a dir thread A's still-collecting probe plan reads; only
-    the SAME thread's next call supersedes its previous dir."""
-    import os
-    import threading
-
-    from torchfusion_spark.operators.dedup import _drop_prev_unkeyed
-
-    spark.__dict__.pop("_tf_url_unkeyed_prev", None)
-    dirs = {n: str(tmp_path / n) for n in ("a", "b", "c")}
-    for d in dirs.values():
-        os.makedirs(d)
-
-    t = threading.Thread(target=_drop_prev_unkeyed, args=(spark, dirs["a"]))
-    t.start()
-    t.join()
-    _drop_prev_unkeyed(spark, dirs["b"])  # main thread's FIRST dir
-    assert os.path.exists(dirs["a"])  # sibling thread's live dir untouched
-    _drop_prev_unkeyed(spark, dirs["c"])  # main thread's next: supersedes b
-    assert not os.path.exists(dirs["b"])
-    assert os.path.exists(dirs["a"])
-    spark.__dict__.pop("_tf_url_unkeyed_prev", None)
 
 
 def test_star_supersede_protects_live_owner_then_reaps(spark, tables, monkeypatch):

@@ -256,3 +256,52 @@ def test_local_checkpoint_only_in_staging():
         if "localCheckpoint(" in line
     ]
     assert not hits, hits
+
+
+def test_process_lifecycle_only_in_staging():
+    """Staged files have one owner: the per-process root in
+    ``staging.py``. An exit hook, a pid-scoped name or a ``.scratch`` path
+    anywhere else is a second lifecycle for files on disk."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "torchfusion_spark"
+    # `.scratch` the directory, not `staging.scratch` the loop scope
+    token = re.compile(r"\batexit\b|\bos\.getpid\b|(?<!\w)\.scratch\b")
+    hits = [
+        f"{path.relative_to(root)}:{i}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "staging.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if token.search(line)
+    ]
+    assert not hits, hits
+
+
+def test_staging_root_removed_at_exit(tmp_path):
+    """A process that stages a file leaves no root behind once it exits
+    (no Spark: the root belongs to the interpreter, not the session)."""
+    import os
+    import subprocess
+    import sys
+
+    child = (
+        "import os\n"
+        "from torchfusion_spark.staging import staged_dir, staging_root\n"
+        "d = staged_dir('probe')\n"
+        "open(os.path.join(d, 'f'), 'w').write('x')\n"
+        "assert os.path.dirname(d) == staging_root()\n"
+        "print(staging_root())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    proc = subprocess.run(
+        [sys.executable, "-c", child], cwd=repo, env=env, capture_output=True, text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    made = proc.stdout.strip()
+    assert os.path.dirname(made) == str(tmp_path), made
+    assert os.path.basename(made).startswith("torchfusion-staging-")
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []

@@ -59,7 +59,7 @@ def _has_cuda() -> bool:
         import torch
 
         return torch.cuda.is_available()
-    except Exception:  # noqa: BLE001
+    except Exception:  # noqa: BLE001 — a broken torch reads as no device
         return False
 
 
@@ -68,7 +68,7 @@ def _has_mps() -> bool:
         import torch
 
         return bool(getattr(torch.backends, "mps", None)) and torch.backends.mps.is_available()
-    except Exception:  # noqa: BLE001
+    except Exception:  # noqa: BLE001 — a broken torch reads as no device
         return False
 
 
@@ -77,7 +77,7 @@ def _has_vulkan() -> bool:
         import torch
 
         return bool(getattr(torch, "is_vulkan_available", lambda: False)())
-    except Exception:  # noqa: BLE001
+    except Exception:  # noqa: BLE001 — a broken torch reads as no device
         return False
 
 

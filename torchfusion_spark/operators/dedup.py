@@ -18,9 +18,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import itertools
-import os
-
 from torchfusion_spark.operators import sqlgen as G
 from torchfusion_spark.staging import declare, scratch, stage, table_key
 
@@ -338,15 +335,6 @@ def minhash_lsh(spark, threshold: float = 0.6, ordered: bool = True):
     return spark.sql(
         minhash_body_sql("spark", sig, threshold, ordered=ordered, ok_rel=ok)
     )
-
-
-def _docs_key(spark):
-    """Identity of the live ``documents`` view: (load_tables key,
-    semantic plan hash of the view) — the key every relation staged from
-    the corpus inherits through the registry's ``documents`` root, so a
-    caller that swaps the view directly (the property-test pattern)
-    rebuilds them all."""
-    return table_key(spark, "documents")
 
 
 @declare("docs", deps=("documents",))
@@ -757,13 +745,15 @@ def _observed(obs, fallback, timeout_s: float = 30.0) -> dict:
     pre-r16 spelling, one extra job paid only in the event-drop case)."""
     import time as _time
 
+    from py4j.protocol import Py4JError
+
     deadline = _time.monotonic() + timeout_s
     wait = 0.001
     while True:
         try:
             if not obs._jo.getOrEmpty().isEmpty():
                 return obs.get  # resolved — the blocking read returns at once
-        except Exception:  # noqa: BLE001 — probe API missing → fall back now
+        except (AttributeError, Py4JError):  # probe API missing → fall back now
             return fallback()
         if _time.monotonic() >= deadline:
             return fallback()
@@ -1732,115 +1722,14 @@ def url_incremental_equiv_sql(d: str) -> str:
     """
 
 
-def _pid_start_time(pid: int) -> float | None:
-    """Absolute start time (epoch seconds) of ``pid`` from
-    ``/proc/<pid>/stat`` field 22 (clock ticks since boot) + the boot
-    time from ``/proc/stat``. Parsed after the last ')' — the comm field
-    may contain spaces and parens. None when unknowable (no procfs):
-    /proc/<pid>'s own inode timestamps are NOT a reliable proxy (dentry
-    eviction recreates them with the current time — code-review r12)."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read().decode("ascii", "replace")
-        ticks = float(stat.rsplit(")", 1)[1].split()[19])  # field 22
-        with open("/proc/stat") as f:
-            btime = next(
-                float(line.split()[1]) for line in f if line.startswith("btime ")
-            )
-        return btime + ticks / os.sysconf("SC_CLK_TCK")
-    except (OSError, StopIteration, IndexError, ValueError):
-        return None
-
-
-_URL_INDEX_MAX_AGE_SEC = 7 * 24 * 3600  # undecidable-ownership backstop only
-
-
-def _marker_recorded_start(full: str) -> float | None:
-    """The builder's own process-start time, recorded on the marker's
-    second line at build-complete; None for pre-r12 markers."""
-    try:
-        with open(os.path.join(full, "_TF_BUILT")) as f:
-            lines = f.read().splitlines()
-        return float(lines[1])
-    except (OSError, IndexError, ValueError):
-        return None
-
-
-def _url_index_cleanup(base: str) -> None:
-    """Best-effort ``.scratch/url_index_*`` hygiene (ADVICE r10 #4):
-    remove this process's index dirs at interpreter exit, and sweep
-    dirs left by DEAD pids (a crashed session cannot clean up after
-    itself). A live foreign pid is the OWNER — never touched — exactly
-    when its /proc start time matches the start time the builder
-    recorded on the marker (pid recycling is thereby detected
-    precisely, not inferred from ages: an idle week-old but live owner
-    keeps its dirs — code-review r12 both passes). Only when ownership
-    is UNDECIDABLE (no procfs, or a pre-start-time marker) does the
-    7-day age backstop apply, so a recycled pid cannot pin a dead
-    session's dirs forever (ADVICE r11 #3). Disk-growth hygiene only,
-    never correctness."""
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(base)
-    except OSError:
-        return
-    for name in entries:
-        if not name.startswith("url_index_"):
-            continue
-        try:
-            pid = int(name.rsplit("_", 1)[1])
-        except ValueError:
-            continue
-        full = os.path.join(base, name)
-        if pid != os.getpid():
-            try:
-                os.kill(pid, 0)  # raises if the pid is gone
-            except ProcessLookupError:
-                pass  # dead owner — sweep
-            except OSError:
-                continue  # EPERM etc.: alive but unprobeable — leave it
-            else:
-                live_start = _pid_start_time(pid)
-                recorded = _marker_recorded_start(full)
-                if live_start is not None and recorded is not None:
-                    if abs(live_start - recorded) < 2.0:
-                        continue  # verified owner — never touch
-                    # start times disagree: the pid was recycled — sweep
-                elif live_start is not None:
-                    # the pid is provably ALIVE but the marker carries no
-                    # start time (a pre-r13 marker, or a build still in
-                    # progress): the live pid may well BE the owner, so
-                    # the ordinary 7-day backstop must not sweep the dir
-                    # out from under it (ADVICE r13 #4 — the old backstop
-                    # here deleted a live owner's week-old dir mid-probe).
-                    # A true owner upgrades its legacy marker on its next
-                    # successful probe, so the only way this state lasts
-                    # is a DEAD owner whose pid was recycled by a
-                    # long-lived foreign process — bound that disk growth
-                    # with a 4x backstop instead of pinning forever
-                    # (code-review r13): at 28 idle days the plausibility
-                    # of a resolved-but-uncollected plan is nil on both
-                    # branches of the ambiguity.
-                    if time.time() - os.path.getmtime(full) < 4 * _URL_INDEX_MAX_AGE_SEC:
-                        continue
-                elif time.time() - os.path.getmtime(full) < _URL_INDEX_MAX_AGE_SEC:
-                    continue  # pid probe undecidable (no procfs) and young — leave it
-        shutil.rmtree(full, ignore_errors=True)
-
-
 @declare("url_index", deps=("documents",), prewarm=True)
 def _url_index(ctx):
     """The persisted canonical-URL seen-set over the lower-half crawl:
-    (index dir, upper-half batch relation). The index parquet lives
-    under the repo's gitignored ``.scratch`` dir at a path derived from
-    the corpus key + pid, with a ``_TF_BUILT`` marker written AFTER the
-    parquet lands: the build is skipped whenever the marker exists, so
-    an A→B→A docs-view swap-back reuses corpus A's intact index instead
-    of overwriting files a previously resolved, not-yet-collected plan
-    for A still references (ADVICE r10 #4). Stale dirs are swept at
-    exit / when their owning pid is dead.
+    (index dir, upper-half batch relation). The index parquet goes into
+    this build's own staging dir (``ctx.dir``), which lives until the
+    process exits: after a documents-view swap the index is rebuilt into
+    a new dir, and a plan resolved against the old one still reads its
+    files.
 
     The split point is collected ONCE here (a 1-row control-plane read,
     the ``connected_components`` sanctioned class) and inlined as a
@@ -1852,32 +1741,13 @@ def _url_index(ctx):
     because both derive the same half-the-max-crawl-id split. An empty
     corpus (MAX = NULL) makes both slices empty via a FALSE predicate —
     the same rows the oracle's NULL-comparison split yields."""
-    import atexit
-
     spark, docs = ctx.spark, ctx.dep("documents")
-    key = ctx.deps["documents"].key
     row = spark.sql(f"SELECT {_url_split_subq('spark', docs)} AS s").first()
     split = "NULL" if row is None or row.s is None else str(row.s)
     idx_pred = "FALSE" if split == "NULL" else f"doc_id < {split}"
     batch_pred = "FALSE" if split == "NULL" else f"doc_id >= {split}"
-    path = _url_index_path(key)
-    if type(key) is object:  # unkeyed sentinel: bound this session's dirs
-        _drop_prev_unkeyed(spark, path)
-    base = os.path.dirname(path)
-    if not getattr(_url_index, "_cleanup_registered", False):
-        atexit.register(_url_index_cleanup, base)
-        _url_index._cleanup_registered = True
-        _url_index_cleanup(base)  # sweep dead-pid leftovers now
-    marker = os.path.join(path, "_TF_BUILT")
-    if not os.path.exists(marker):
-        build_url_index(
-            spark, path, rel=f"(SELECT * FROM {docs} WHERE {idx_pred}) __url_idx_src"
-        )
-        with open(marker, "w") as f:
-            # line 2: this process's start time — the cleanup sweep's
-            # exact ownership proof against pid recycling
-            start = _pid_start_time(os.getpid())
-            f.write(os.path.basename(path) + (f"\n{start}" if start else ""))
+    path = ctx.dir("url_index")
+    build_url_index(spark, path, rel=f"(SELECT * FROM {docs} WHERE {idx_pred}) __url_idx_src")
     return path, f"(SELECT * FROM {docs} WHERE {batch_pred}) __url_batch_src"
 
 
@@ -1887,81 +1757,7 @@ def url_incremental_query(spark):
     (``url_index`` — built once per corpus, the once-per-snapshot cost
     the incremental shape exists to amortize)."""
     path, batch = stage(spark, "url_index")
-    if _marker_recorded_start(path) is None:
-        # legacy (pre-r13) marker with no start-time line: upgrade it
-        # in place on this successful probe — the path is keyed to
-        # OUR pid, so ownership is certain — closing the window in
-        # which a foreign sweep sees a live pid but no recorded start
-        # (ADVICE r13 #4).
-        start = _pid_start_time(os.getpid())
-        if start is not None:
-            with open(os.path.join(path, "_TF_BUILT"), "w") as f:
-                f.write(f"{os.path.basename(path)}\n{start}")
-    else:
-        # touch-on-probe (code-review r13 second pass): the sweep's
-        # no-procfs branch reads dir mtime as "idleness" with a 7-day
-        # backstop, so an ACTIVE owner on a procfs-less host must still
-        # look active to that mtime check. (A PRE-r13 owner idling >28
-        # days remains sweepable by design: the 4x bound is the accepted
-        # plausibility cutoff, ADVICE r13 #4.)
-        try:
-            os.utime(path)
-        except OSError:
-            pass
     return dedup_url_incremental(spark, batch, path)
-
-
-def _url_index_path(key) -> str:
-    """Index parquet dir for a docs-view key — shared by the builder and
-    its tests so the path scheme cannot drift between them. Keyed by
-    (md5 of the key's repr, pid): the pid isolates concurrent
-    processes, the tag isolates corpora within one. The ``_docs_key``
-    always-rebuild sentinel (a bare ``object()`` for un-analyzable
-    views) gets a per-instance nonce path: its repr embeds a transient
-    address that CPython can REUSE for a later sentinel, so two
-    different unknown corpora could alias one marker path and skip the
-    rebuild the sentinel exists to force (code-review r11)."""
-    import hashlib
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    if type(key) is object:  # the un-analyzable-view sentinel
-        nonce = next(_url_index_nonce)
-        return os.path.join(base, f"url_index_unkeyed{nonce}_{os.getpid()}")
-    tag = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    return os.path.join(base, f"url_index_{tag}_{os.getpid()}")
-
-
-def _drop_prev_unkeyed(spark, new_path: str) -> None:
-    """Disk hygiene for the un-analyzable-view sentinel (ADVICE r11 #3):
-    the sentinel forces a rebuild per call, so without this every
-    unkeyed probe leaks a dir until interpreter exit. The previous
-    unkeyed dir is dropped when THE SAME THREAD of this session mints
-    its next one — per-(session, thread) tracking: two SparkSessions in
-    one process must not delete each other's live index dirs
-    (code-review r12), and two THREADS sharing one session must not
-    either — thread B superseding "the session's" previous dir while
-    thread A's just-resolved probe plan is still collecting against it
-    rmtree'd A's files mid-scan (ADVICE r13 #2). A finished thread's last dir persists until
-    interpreter exit, where ``_url_index_cleanup`` removes every
-    own-pid dir unconditionally. Caveat this trades away: an unexecuted
-    probe plan from the same thread's PREVIOUS unkeyed call loses its
-    backing files — unkeyed views carry no reuse-across-builds
-    guarantee (that is what the sentinel means), so only each thread's
-    most recent build's plans are supported."""
-    import shutil
-    import threading
-
-    prev_by_thread = spark.__dict__.setdefault("_tf_url_unkeyed_prev", {})
-    prev = prev_by_thread.setdefault(threading.get_ident(), [])
-    while prev:
-        shutil.rmtree(prev.pop(), ignore_errors=True)
-    prev.append(new_path)
-
-
-_url_index_nonce = itertools.count()
 
 
 def dedup_url_incremental(spark, new_rel: str, path: str):

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,7 +53,7 @@ def _node_is_distinct(expr: Column) -> bool:
     the string-based check as the only (repr-visible) detector there."""
     try:
         return bool(expr._jc.node().isDistinct())
-    except Exception:  # noqa: BLE001 — connect/other backends
+    except (AttributeError, Py4JError):  # connect/other backends
         return False
 
 

@@ -5,14 +5,15 @@
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from torchfusion_spark.functions import argmax
 from torchfusion_spark.plans.registry import query
+from torchfusion_spark.staging import staged_dir
 
 
 @query(
@@ -61,18 +62,13 @@ def argmax_constructed_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MODEL_PATH: str | None = None
-
-
+@functools.cache
 def _demo_model_path() -> str:
-    global _MODEL_PATH
-    if _MODEL_PATH is None or not os.path.exists(_MODEL_PATH):
-        from torchfusion_spark.models.fixtures import write_demo_model
+    """The demo MLP, written once per process into its own staging dir:
+    a model file is never rewritten in place under a reader's worker."""
+    from torchfusion_spark.models.fixtures import write_demo_model
 
-        path = os.path.join(tempfile.gettempdir(), "torchfusion_demo_mlp.npz")
-        write_demo_model(path)
-        _MODEL_PATH = path
-    return _MODEL_PATH
+    return write_demo_model(os.path.join(staged_dir("demo_model"), "mlp.npz"))
 
 
 def _mlp_oracle_sql() -> str:

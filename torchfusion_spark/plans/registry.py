@@ -87,9 +87,10 @@ def fits_broadcast(spark: SparkSession, table: str, slack: float = 4.0) -> bool:
             spark.table(table)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
         memo[key] = size <= slack * threshold
-    except Exception:
-        # stats unavailable (non-JVM-backed relation): preserve the
-        # pre-gate behavior rather than silently changing plans
+    except AttributeError:
+        # stats unavailable (a non-JVM-backed DataFrame has no _jdf):
+        # preserve the pre-gate behavior rather than silently changing
+        # plans. Anything else, a missing table included, raises.
         memo[key] = True
     return memo[key]
 

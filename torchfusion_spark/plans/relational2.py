@@ -581,7 +581,7 @@ def _li_osr_df(lineitem: DataFrame, n: int):
 def _li_by_order(ctx) -> str:
     """The per-(l_orderkey, l_suppkey) 'R'-row rollup of lineitem as an
     EXTERNAL bucketed table on ``l_orderkey`` (``sinks.write_bucketed``,
-    data under the gitignored ``.scratch`` like the URL index) — the
+    data in this build's staging dir, ``ctx.dir``) — the
     co-located materialized-rollup layout at 100 TB: q21's order-level
     aggregation and any orderkey-equi-join read their bucket co-located
     and never shuffle the fact, and the staged grain is the
@@ -594,30 +594,15 @@ def _li_by_order(ctx) -> str:
     the build entirely — precomputation across runs keyed on the test
     corpus, which the optimization rounds explicitly disallow ("every
     bench/oracle invocation must compute from the parquet inputs").
-    Every process builds its own pid-scoped dir per build, swept at exit
-    (a superseded dir may still back a resolved-but-uncollected plan);
+    Every build writes its own staging dir, removed at process exit (a
+    superseded dir may still back a resolved-but-uncollected plan);
     the build cost lands in ``staging_warm_sec`` where the bench reports
     it. At 100 TB the same rollup is a real persisted warehouse table
     maintained by ingest — the cross-run reuse belongs to that layer,
     not to a benchmarked staging pass."""
-    import atexit
-    import os
-    import shutil
-
     from torchfusion_spark.sources import sinks
 
     n = ctx.key
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    path = os.path.join(base, f"li_by_order_{ctx.tag}_{os.getpid()}")
-    made = ctx.spark.__dict__.setdefault("_tf_li_by_order_paths", [])
-    if not made:  # first staging this session: register the sweep
-        atexit.register(lambda: [shutil.rmtree(p, ignore_errors=True) for p in made])
-    # record BEFORE the write so a mid-write failure's partial dir is
-    # still swept at exit (code-review r15)
-    made.append(path)
     table = f"__tf_li_by_order_{ctx.tag}"
     sinks.write_bucketed(
         _li_osr_df(ctx.spark.table(ctx.dep("lineitem")), n),
@@ -625,7 +610,7 @@ def _li_by_order(ctx) -> str:
         ["l_orderkey"],
         n,
         sort_cols=["l_orderkey"],
-        path=path,
+        path=ctx.dir("li_by_order"),
     )
     return table
 

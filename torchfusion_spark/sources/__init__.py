@@ -52,6 +52,7 @@ def _nanos_ts_columns(path: str) -> tuple[str, ...]:
     the round-2 'subset of tables silently broke' class can't recur."""
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .arrow_ipc import _first_with_suffix
@@ -64,7 +65,7 @@ def _nanos_ts_columns(path: str) -> tuple[str, ...]:
         # class this function exists to prevent (ADVICE r06).
         target = _first_with_suffix(path, ".parquet") if os.path.isdir(path) else path
         schema = pq.read_schema(target)
-    except Exception:  # noqa: BLE001 — let spark.read surface the real error
+    except (OSError, pa.ArrowException):  # let spark.read surface the real error
         return ()
     return tuple(
         f.name for f in schema if str(f.type) in ("timestamp[ns]", "timestamp[ns, tz=UTC]")

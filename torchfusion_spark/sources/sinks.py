@@ -55,12 +55,12 @@ def write_bucketed(
 
     ``path`` makes it an EXTERNAL bucketed table (data at ``path``
     instead of the warehouse dir) — the session-staged co-located-join
-    shape (`q21_waiting_supplier`) writes under the gitignored
-    ``.scratch`` like the URL index. To get ONE file per bucket (the
-    precondition for the reader to also report the per-bucket sort
-    order), pre-``repartition(n_buckets, *bucket_cols)`` the input:
-    repartition and bucketBy share the Murmur3 hash, so each write task
-    then holds exactly its own bucket's rows."""
+    shape (`q21_waiting_supplier`) writes into its build's staging dir
+    (``staging._Ctx.dir``), as the URL index does. To get ONE file per
+    bucket (the precondition for the reader to also report the
+    per-bucket sort order), pre-``repartition(n_buckets, *bucket_cols)``
+    the input: repartition and bucketBy share the Murmur3 hash, so each
+    write task then holds exactly its own bucket's rows."""
     writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -42,6 +42,15 @@ lifecycle:
   the scope releases every checkpoint and drops every view it made, so
   what outlives the call must already be on the driver or in a
   registry entry that materialized it inside the scope.
+* **Staged files.** A build that writes files (a parquet index, a
+  bucketed table, a replayed stream's batch files) writes them into its
+  own fresh directory, ``ctx.dir(base)``. Every such directory lies
+  under one per-process root, made on first use with
+  ``tempfile.mkdtemp`` (so under ``$TMPDIR``) and removed whole when the
+  interpreter exits. A directory is never released on supersede: a plan
+  resolved against it but not yet collected keeps its files until the
+  process ends. Staged files are reuse within one process, never across
+  runs; a crashed process's root is left to the temp dir's own cleanup.
 * **Derived prewarm.** :func:`prewarm_staging` builds the relations
   declared ``prewarm=True`` on a thread pool, each submitted once every
   prewarm relation it depends on has finished, so a component's timed
@@ -60,8 +69,11 @@ every staged build into the first timed queries).
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
+import shutil
+import tempfile
 import threading
 from collections.abc import Iterator
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
@@ -128,10 +140,12 @@ def table_key(spark, table: str, df=None):
     """Identity of a catalog table: (load_tables generation, semantic
     plan hash). An un-analyzable table yields a fresh ``object()``, so
     everything built on it rebuilds on every use."""
+    from pyspark.errors import AnalysisException
+
     try:
         df = spark.table(table) if df is None else df
         return (getattr(spark, "_tf_tables_loaded", None), df.semanticHash())
-    except Exception:  # noqa: BLE001 — unknown plan identity → always rebuild
+    except AnalysisException:  # unknown plan identity → always rebuild
         return object()
 
 
@@ -184,6 +198,11 @@ class _Ctx:
         df.count()
         return self.view(base, df)
 
+    def dir(self, base: str) -> str:
+        """A fresh directory for this build's files, under
+        :func:`staging_root`; it lives until the process exits."""
+        return staged_dir(f"{base}_{self.tag}")
+
     def checkpoint(self, base: str, df) -> str:
         """``localCheckpoint`` (eager) and expose ``df`` — for shapes the
         cache manager fails to substitute back into a plan (a CTE inside
@@ -204,6 +223,32 @@ class _Session:
 
 def _session(spark) -> _Session:
     return spark.__dict__.setdefault("_tf_staging", _Session())
+
+
+_root: tuple[int, str] | None = None  # (owning pid, path)
+_root_lock = threading.Lock()
+
+
+def staging_root() -> str:
+    """This process's staging root, made on first use under
+    ``$TMPDIR`` and removed at interpreter exit. A forked child makes its
+    own: the parent's exit hook, inherited, removes only the parent's."""
+    global _root
+    with _root_lock:
+        if _root is None or _root[0] != os.getpid():
+            _root = (os.getpid(), tempfile.mkdtemp(prefix="torchfusion-staging-"))
+            atexit.register(_remove_root, *_root)
+        return _root[1]
+
+
+def _remove_root(pid: int, path: str) -> None:
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def staged_dir(base: str) -> str:
+    """A fresh directory named after ``base`` under :func:`staging_root`."""
+    return tempfile.mkdtemp(prefix=f"{base}_", dir=staging_root())
 
 
 def _local_checkpoint(df):
@@ -389,6 +434,7 @@ def _load_declarations() -> None:
     import torchfusion_spark.operators.similarity  # noqa: F401
     import torchfusion_spark.operators.textstats  # noqa: F401
     import torchfusion_spark.plans.relational2  # noqa: F401
+    import torchfusion_spark.streaming  # noqa: F401
 
 
 def prewarm_staging(spark, timed=None, width: int | None = None) -> None:

@@ -14,11 +14,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from torchfusion_spark.staging import declare, stage
 
 
 @contextmanager
@@ -599,7 +601,7 @@ def exactly_once_sink(
         q.awaitTermination()
     try:
         snap = spark.read.parquet(out_dir)
-    except Exception:  # zero batches ran: nothing written, not even a schema
+    except AnalysisException:  # zero batches ran: nothing written, not even a schema
         return spark.createDataFrame(
             [], "window_start timestamp, event_type string, n bigint, cents bigint, batch int"
         )
@@ -639,48 +641,6 @@ SESSION_GAP_MIN = 360  # session variant: inactivity gap (fixture median
 # replay exercises both merges and splits)
 SESSION_DELAY_MIN = 30  # session variant: watermark delay
 SESSION_STRAG_MOD = 8  # 1-in-8 events arrive one batch late (stragglers)
-
-
-_LATE_STREAM_LOCK = threading.Lock()
-
-
-def _late_batches_dir(spark: SparkSession, sf_dir: str, variant: str = "agg") -> str:
-    """Materialize the 3-file late-arrival corpus under ``.scratch`` —
-    batch b = events with ``event_id % 3 == b``, timestamps backdated by
-    ``LATE_SHIFTS_MIN[b]`` minutes, file mtimes strictly increasing so
-    the file source's (mtime, path) ordering replays batches
-    deterministically. Content-keyed by (sf_dir, events parquet mtime +
-    size), built once, atomic rename. Concurrency: same-process callers
-    serialize under ``_LATE_STREAM_LOCK`` (two unserialized
-    threads would rmtree each other's build-tmp mid-write — code-review
-    r13); cross-process builders use pid+tid-scoped tmp dirs and race
-    only at the atomic rename, to identical content."""
-    import shutil
-
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(ev_path)
-    recipe = f"{LATE_DELAY_MIN}|{LATE_SHIFTS_MIN}|{LATE_DUP_X_MIN}|{LATE_DUP_Y_MIN}"
-    if variant == "session":
-        # EVERY generator parameter folds into the content key (the r13
-        # stale-scratch lesson: a changed constant must never reuse the
-        # old corpus) — variant-scoped so the agg/dedup keys are stable;
-        # c0 = the cents-COALESCE derivation version (code-review r14)
-        recipe += f"|{SESSION_GAP_MIN}|{SESSION_DELAY_MIN}|{SESSION_STRAG_MOD}|c0"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_mtime_ns}|{st.st_size}|{variant}|{recipe}|v2".encode()
-    ).hexdigest()[:16]
-    # repo-root .scratch (three dirnames up from streaming/__init__.py —
-    # the url-index convention; a two-dirname spelling silently created
-    # torchfusion_spark/.scratch and orphaned the sweep, code-review r13)
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    final = os.path.join(root, f"late_stream_{key}")
-    with _LATE_STREAM_LOCK:
-        return _late_batches_build(
-            spark, sf_dir, root, final, key, threading.get_ident(), variant
-        )
 
 
 def _late_variant_frames(spark, sf_dir: str, variant: str):
@@ -759,60 +719,34 @@ def _late_variant_frames(spark, sf_dir: str, variant: str):
     ]
 
 
-def _late_batches_build(spark, sf_dir, root, final, key, tid, variant="agg") -> str:
+def _events_identity(spark, sf_dir: str, **_):
+    path = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+    st = os.stat(path)
+    return path, st.st_mtime_ns, st.st_size
+
+
+@declare("late_batches", key=_events_identity, params={"sf_dir": None, "variant": "agg"})
+def _late_batches(ctx, sf_dir: str, variant: str) -> str:
+    """The 3-file late-arrival corpus of a replay ``variant``, in this
+    build's staging dir: batch b = events with ``event_id % 3 == b``,
+    timestamps backdated by ``LATE_SHIFTS_MIN[b]`` minutes, file mtimes
+    strictly increasing so the file source's (mtime, path) ordering
+    replays batches deterministically. Keyed on the events parquet
+    itself (path, mtime, size), read from ``sf_dir`` directly: the
+    session's ``events`` view may point at another corpus."""
     import shutil
 
-    if os.path.isdir(final):
-        os.utime(final)  # mark live: readers keep their dir out of the sweep
-        return final
-    os.makedirs(root, exist_ok=True)
-    # best-effort hygiene for dead corpora keys (test tmp dirs churn the
-    # key). Unlike url_index dirs these are content-keyed with NO pid, so
-    # they are legitimately shared across processes and a dead-builder-pid
-    # probe proves nothing about live READERS — the only sound sweep
-    # criterion is age. Touch-on-reuse above fires at plan-RESOLUTION
-    # time, not at collect time, so a long-lived foreign session that
-    # resolved a replay plan and went quiet can exceed 7 idle days while
-    # still referencing its corpus (ADVICE r13 #2); use the url-index 4x
-    # plausibility bound (28 idle days) instead of the bare week.
-    import time as _time
-
-    for e in os.listdir(root):
-        if e.startswith("late_stream_") and e != f"late_stream_{key}":
-            p = os.path.join(root, e)
-            try:
-                if os.path.getmtime(p) < _time.time() - 4 * 7 * 86400:
-                    import shutil as _sh
-
-                    _sh.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
-    tmp = f"{final}.tmp.{os.getpid()}.{tid}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    # frames read from sf_dir directly (the scratch key is sf_dir): the
-    # session's `events` VIEW may point at another corpus
-    frames = _late_variant_frames(spark, sf_dir, variant)
-
-    try:
-        for b, frame in enumerate(frames):
-            part_dir = os.path.join(tmp, f"_build{b}")
-            frame.coalesce(1).write.mode("overwrite").parquet(part_dir)
-            part = next(
-                f for f in os.listdir(part_dir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            os.replace(os.path.join(part_dir, part), os.path.join(tmp, f"b{b}.parquet"))
-            shutil.rmtree(part_dir)
-            os.utime(os.path.join(tmp, f"b{b}.parquet"), (1_000_000_000 + b, 1_000_000_000 + b))
-        try:
-            os.rename(tmp, final)
-        except OSError:  # concurrent builder won the race to an identical dir
-            shutil.rmtree(tmp, ignore_errors=True)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    return final
+    d = ctx.dir(f"late_stream_{variant}")
+    for b, frame in enumerate(_late_variant_frames(ctx.spark, sf_dir, variant)):
+        part_dir = os.path.join(d, f"_build{b}")
+        frame.coalesce(1).write.mode("overwrite").parquet(part_dir)
+        part = next(
+            f for f in os.listdir(part_dir) if f.startswith("part-") and f.endswith(".parquet")
+        )
+        os.replace(os.path.join(part_dir, part), os.path.join(d, f"b{b}.parquet"))
+        shutil.rmtree(part_dir)
+        os.utime(os.path.join(d, f"b{b}.parquet"), (1_000_000_000 + b, 1_000_000_000 + b))
+    return d
 
 
 def late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,7 +756,7 @@ def late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts excluding exactly the rows the late-record filter dropped —
     both pinned by the integer-exact oracle."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    d = _late_batches_dir(spark, sf_dir)
+    d = stage(spark, "late_batches", sf_dir=sf_dir)
     src = (
         spark.readStream.schema("ts timestamp, event_type string")
         .option("maxFilesPerTrigger", "1")
@@ -891,7 +825,7 @@ def late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh row — re-emission is only possible when the occurrences
         are more than the delay apart."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    d = _late_batches_dir(spark, sf_dir, variant="dedup")
+    d = stage(spark, "late_batches", sf_dir=sf_dir, variant="dedup")
     src = (
         spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
         .option("maxFilesPerTrigger", "1")
@@ -983,7 +917,7 @@ def stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     .EventTimeTimeout`` path below implements the identical state
     machine (same rules, same oracle), the same dual-path discipline as
     :func:`stateful_cents`."""
-    d = _late_batches_dir(spark, sf_dir, variant="session")
+    d = stage(spark, "late_batches", sf_dir=sf_dir, variant="session")
     return _run_session_timeout(spark, d)
 
 
