@@ -19,7 +19,11 @@ apart from a real regression. From the best run: "build_s" is the
 builder's wall (inside "queries"; jobs a builder runs while building are
 not in "jobs"), and "jobs", "shuffle_bytes", "python_init_ms" and
 "python_total_ms" are the timed action's Spark jobs, shuffle bytes
-written and Python workers' init and total time. Before timing, the JVM is
+written and Python workers' init and total time. "python_init_ms" is
+Spark's pythonInitTime, which is not set-up time alone: pyspark's worker
+takes its start time before its first blocking read, so for a reused
+worker the column also counts the idle wait since its previous task.
+Before timing, the JVM is
 warmed and every prewarm relation of torchfusion_spark/staging.py is
 built; that build is reported as "staging_warm_sec" and per relation in
 "staging_components", and a failed warm-up or prewarm is recorded as

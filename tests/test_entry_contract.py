@@ -128,10 +128,16 @@ def test_sample_queries_run(spark, tables):
 def test_registry_builder_tunes_host_session(spark, tables):
     """A host session carrying Spark defaults (the driver's) gets the
     engine's runtime confs applied by any registry builder."""
-    spark._tf_runtime_tuned = False
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
     from torchfusion_spark.plans import REGISTRY
+    from torchfusion_spark.session import overriding
 
-    REGISTRY["select_distinct"].builder(spark, tables)
-    assert spark.conf.get("spark.sql.shuffle.partitions") != "200"
-    assert spark.conf.get("spark.sql.parquet.aggregatePushdown") == "true"
+    # a session not yet configured, with a Spark default; the override
+    # restores the suite's value afterwards
+    with overriding(spark, {"spark.sql.shuffle.partitions": "200"}):
+        spark._tf_configured = False
+        try:
+            REGISTRY["select_distinct"].builder(spark, tables)
+            assert spark.conf.get("spark.sql.shuffle.partitions") != "200"
+            assert spark.conf.get("spark.sql.parquet.aggregatePushdown") == "true"
+        finally:
+            spark._tf_configured = True

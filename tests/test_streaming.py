@@ -992,3 +992,35 @@ def test_scaled_state_partitions_split(spark):
         assert spark.conf.get(key) == before
     spark.conf.unset("torchfusion.stream.statePartitions")
     spark.conf.unset("torchfusion.stream.pyStatePartitions")
+
+
+def test_stream_keeps_overrides_taken_at_start(spark, tables):
+    """A stream runs on a clone of its session taken at ``start()``, so
+    ``_run_to_memory`` holds its overrides around ``start()`` only: the
+    run keeps the overridden state partitions and store provider after
+    the caller's confs are restored."""
+    from torchfusion_spark.session import overriding
+    from torchfusion_spark.streaming import _event_stream, _scaled_state_partitions
+
+    key, prov = "spark.sql.shuffle.partitions", "spark.sql.streaming.stateStore.providerClass"
+    before = {k: spark.conf.get(k, None) for k in (key, prov)}
+    rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    spark.conf.set("torchfusion.stream.statePartitions", "3")
+    try:
+        agg = _event_stream(spark, tables).groupBy("event_type").count()
+        with _scaled_state_partitions(spark), overriding(spark, {prov: rocks}):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName("tf_override_at_start")
+                .trigger(availableNow=True)
+                .start()
+            )
+    finally:
+        spark.conf.unset("torchfusion.stream.statePartitions")
+    assert {k: spark.conf.get(k, None) for k in (key, prov)} == before
+    q.awaitTermination()
+    ops = [o for p in q.recentProgress for o in (p.get("stateOperators") or [])]
+    assert ops
+    assert {o["numShufflePartitions"] for o in ops} == {3}
+    assert all(any(m.startswith("rocksdb") for m in o["customMetrics"]) for o in ops)

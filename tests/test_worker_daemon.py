@@ -92,3 +92,47 @@ def test_session_workers_run_the_engine_daemon(spark, tmp_path):
     sc.addPyFile(str(py))
     sc.addPyFile(archive)
     assert report() == {(True, ("py", "zip"))}
+
+
+def _pyspark_dir(root, version: bytes) -> str:
+    pkg = root / "pyspark"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "version.py").write_bytes(version)
+    return str(root)
+
+
+def test_daemon_drops_pyspark_zip_only_for_the_same_release(tmp_path):
+    """The daemon imports the interpreter's own pyspark when its
+    ``version.py`` is byte-identical to the one in Spark's pyspark.zip,
+    and keeps the zip otherwise (or when no other pyspark package exists)."""
+    archive = str(tmp_path / "lib" / "pyspark.zip")
+    os.makedirs(os.path.dirname(archive))
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", "__version__: str = '9.9.9'\n")
+    same = _pyspark_dir(tmp_path / "same", b"__version__: str = '9.9.9'\n")
+    other = _pyspark_dir(tmp_path / "other", b"__version__: str = '9.9.8'\n")
+    py4j = str(tmp_path / "lib" / "py4j-src.zip")
+
+    assert worker_daemon.without_spark_pyspark([archive, py4j, same]) == [py4j, same]
+    kept = [archive, py4j, other]
+    assert worker_daemon.without_spark_pyspark(kept) == kept
+    alone = [archive, py4j, str(tmp_path / "empty")]
+    assert worker_daemon.without_spark_pyspark(alone) == alone
+    (tmp_path / "ns" / "pyspark").mkdir(parents=True)  # a namespace package
+    namespace = [archive, py4j, str(tmp_path / "ns")]
+    assert worker_daemon.without_spark_pyspark(namespace) == namespace
+
+
+def test_session_workers_import_the_installed_pyspark(spark):
+    """On this host the installed pyspark is Spark's own release, so a
+    worker's pyspark comes from it, not from pyspark.zip."""
+
+    def where(_):
+        import pyspark
+
+        yield pyspark.__file__
+
+    files = set(spark.sparkContext.parallelize(range(2), 2).mapPartitions(where).collect())
+    assert files and not any("pyspark.zip" in f for f in files), files

@@ -28,8 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def run_scale(sf_dir: str) -> dict:
     from bench import STREAMING
 
-    from torchfusion_spark import session
     from torchfusion_spark.plans import REGISTRY
+    from torchfusion_spark.session import session
     from torchfusion_spark.sources import load_tables
 
     spark = session(app_name=f"stream_scale_{os.path.basename(sf_dir)}")

@@ -111,8 +111,8 @@ def _driver_order_items():
     """Dress rehearsal of the exact driver flow: the prefixed keys from
     ``__spark_entry__.queries()`` in priority order, on a PLAIN local
     session (Spark-default confs, like the driver's own) — exercises the
-    c-prefix mapping, tune_runtime, and staging memoization in the order
-    the driver will actually run."""
+    c-prefix mapping, the builders' ``configure`` of a host session, and
+    staging memoization in the order the driver will actually run."""
     import importlib
 
     entry = importlib.import_module("__spark_entry__")

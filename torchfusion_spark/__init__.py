@@ -17,11 +17,10 @@ registry producing Arrow-native iterator UDFs, the ``argmax`` function,
 and a validated config namespace — plus large-scale data-pipeline
 extension operators (dedup, similarity, text analysis, multimodal) that go
 beyond the reference surface.
+
+The root imports nothing (``session`` is in :mod:`torchfusion_spark.session`,
+``Engine`` in :mod:`torchfusion_spark.engine`), so the worker daemon picks
+its pyspark before any import of it.
 """
 
-from torchfusion_spark.config import TorchConfig
-from torchfusion_spark.engine import Engine
-from torchfusion_spark.session import session
-
-__all__ = ["Engine", "TorchConfig", "session"]
 __version__ = "0.1.0"

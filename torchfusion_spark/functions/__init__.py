@@ -8,9 +8,10 @@ Spark has no unsigned types so we return ``int`` (documented difference).
 Unlike the reference (a Rust SIMD kernel), these are pure Catalyst column
 expressions — they run inside whole-stage codegen on the JVM with **no
 Python boundary**, so they vectorize and scale with executor cores for
-free. Registered both as Python helpers and as SQL UDFs so ``sql()``
+free. The library (``argmax``, ``argmin``, ``vec_dot``, ``vec_norm``,
+``cosine_similarity``) is registered as SQL functions so ``sql()``
 queries resolve them by name, like the reference's function registry
-(src/lib.rs:134).
+(src/lib.rs:134); ``argmax`` is also a Column helper for DataFrame code.
 
 NaN note: Spark's ``array_max`` treats NaN as greater than any number;
 the reference's SIMD argmax ignores NaN. Semantics match on NaN-free
@@ -25,10 +26,6 @@ from pyspark.sql import functions as F
 ColumnOrName = Column | str
 
 
-def _col(c: ColumnOrName) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
 def argmax(v: ColumnOrName) -> Column:
     """0-based index of the max element; first occurrence wins on ties.
 
@@ -36,35 +33,8 @@ def argmax(v: ColumnOrName) -> Column:
     reference's first-max-wins semantics (src/argmax.rs:101-119). Null/empty
     arrays yield NULL (the reference has no null handling at all).
     """
-    v = _col(v)
+    v = F.col(v) if isinstance(v, str) else v
     return (F.array_position(v, F.array_max(v)) - F.lit(1)).cast("int").alias("argmax")
-
-
-def argmin(v: ColumnOrName) -> Column:
-    """0-based index of the min element (companion to argmax)."""
-    v = _col(v)
-    return (F.array_position(v, F.array_min(v)) - F.lit(1)).cast("int").alias("argmin")
-
-
-def vec_dot(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Dot product of two numeric arrays, JVM-side (zip_with + aggregate)."""
-    return F.aggregate(
-        F.zip_with(_col(a), _col(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def vec_norm(a: ColumnOrName) -> Column:
-    """L2 norm of a numeric array."""
-    return F.sqrt(
-        F.aggregate(_col(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Cosine similarity of two numeric arrays (JVM-side, no UDF)."""
-    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 
 
 def _sql_functions() -> dict[str, str]:

@@ -109,10 +109,10 @@ def query(name: str, oracle: str | None, doc: str = "") -> Callable[[Builder], B
 
     def wrap(fn: Builder) -> Builder:
         def bound(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from torchfusion_spark.session import tune_runtime
+            from torchfusion_spark.session import configure
             from torchfusion_spark.sources import load_tables
 
-            tune_runtime(spark)  # host session may carry Spark defaults
+            configure(spark)  # host session may carry Spark defaults
             load_tables(spark, sf_dir)
             return fn(spark, sf_dir)
 

@@ -14,10 +14,17 @@ relation and every checkpoint, the iterative loops' included.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 from torchfusion_spark import config as tf_config
+
+
+# held while configure() applies the runtime confs and for an override's
+# whole body: overrides nest in one thread and take turns across threads
+_CONF_LOCK = threading.RLock()
 
 
 def default_parallelism() -> int:
@@ -41,10 +48,7 @@ def cpu_fanout(df, rows_per_task: int = 128):
 
 def _runtime_confs(shuffle_partitions: int) -> dict[str, str]:
     """The engine's runtime-settable SQL confs: ONE spelling for
-    :func:`session` and :func:`tune_runtime`. The parquet-timestamp
-    vintage confs come from sources' shared spelling."""
-    from torchfusion_spark.sources import _TS_NORMALIZE_CONFS
-
+    :func:`session` (as builder options) and :func:`configure`."""
     return {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -54,8 +58,9 @@ def _runtime_confs(shuffle_partitions: int) -> dict[str, str]:
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # unfiltered MIN/MAX/COUNT answered from parquet footer statistics
         "spark.sql.parquet.aggregatePushdown": "true",
-        # both testdata timestamp vintages → TIMESTAMP (see sources.read_table)
-        **_TS_NORMALIZE_CONFS,
+        # both testdata timestamp vintages → TIMESTAMP (see sources)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
 
 
@@ -65,7 +70,8 @@ def session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the SparkSession with engine defaults applied."""
+    """Build (or reuse) the SparkSession with engine defaults applied;
+    ``shuffle_partitions`` and ``extra_conf`` hold for its life."""
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -82,37 +88,49 @@ def session(
 
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    configure(spark)
-    return spark
+    return _configure(spark, {})  # the builder applied the runtime confs
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply engine setup to an existing session (e.g. the driver's).
+    """The one engine set-up of any session (``configure_context``,
+    reference src/lib.rs:118-137); every engine entry point calls it.
+    Once per session object: apply the runtime confs over a host
+    session's Spark defaults and register the function library. On every
+    call: seed the missing ``torchfusion.*`` keys. So a later user ``SET``
+    wins; driver-only settings only :func:`session` can apply."""
+    return _configure(spark, _runtime_confs(default_parallelism()))
 
-    Equivalent of the tail of ``configure_context`` (reference
-    src/lib.rs:121-134): seed the ``torchfusion.*`` namespace and register
-    the function library (argmax & friends).
-    """
+
+def _configure(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
     from torchfusion_spark.functions import register_all
 
+    if not getattr(spark, "_tf_configured", False):
+        with _CONF_LOCK:
+            if not getattr(spark, "_tf_configured", False):
+                for k, v in confs.items():
+                    spark.conf.set(k, v)
+                register_all(spark)
+                spark._tf_configured = True
     tf_config.seed_defaults(spark)
-    register_all(spark)
     return spark
 
 
-def tune_runtime(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable SQL confs to an existing session.
-
-    A host session we didn't build (the correctness driver's, a notebook's)
-    carries Spark defaults: 200 shuffle partitions (200-task exchanges for
-    kB-sized gate inputs), no parquet aggregate pushdown. Everything set
-    here is runtime-mutable (no restart needed); session-level settings
-    like driver memory can only be applied by :func:`session`. Memoized —
-    every registry builder routes through here.
-    """
-    if getattr(spark, "_tf_runtime_tuned", False):
-        return spark
-    for k, v in _runtime_confs(default_parallelism()).items():
-        spark.conf.set(k, v)
-    spark._tf_runtime_tuned = True
-    return spark
+@contextmanager
+def overriding(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the body, then restore each key's old value or
+    unset a key that had none, raised or not. Session-wide: a query
+    another thread plans meanwhile sees them too. A stream runs on a clone
+    of the session taken at ``start()``, so an override around ``start()``
+    pins its confs for the whole run."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -32,16 +32,14 @@ TABLES = (
 #   2. plain microsecond timestamp[us] with no timezone — Spark 4 infers
 #      TIMESTAMP_NTZ, which `unix_micros()` and friends reject at analysis
 #      time. We disable NTZ inference so the scan emits TIMESTAMP directly
-#      (interpreted as UTC under the pinned UTC session timezone — the same
+#      (interpreted as UTC under the UTC session timezone — the same
 #      naive-as-UTC reading DuckDB uses), with an NTZ→TIMESTAMP cast as a
 #      belt-and-braces fallback for pre-read sessions.
 # Both normalizations are column-generic (any ts column in any table), so a
 # testdata regeneration can't silently break a subset of tables again
 # (round-2 postmortem; format-drift canary in tests/test_sources_format.py).
-_TS_NORMALIZE_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-}
+# session.configure applies both confs and the UTC time zone once.
+
 
 def _nanos_ts_columns(path: str) -> tuple[str, ...]:
     """Columns stored as TIMESTAMP(NANOS) in the parquet footer — read as
@@ -81,20 +79,13 @@ def nanos_to_timestamp(col: str):
     return F.timestamp_micros(F.expr(f"`{col}` div 1000"))
 
 
-def set_ts_normalize_confs(spark: SparkSession) -> None:
-    """Apply the two-vintage parquet-timestamp session confs (see
-    ``_TS_NORMALIZE_CONFS``) — shared entry for batch and streaming."""
-    for k, v in _TS_NORMALIZE_CONFS.items():
-        spark.conf.set(k, v)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    set_ts_normalize_confs(spark)
-    # pinned here, not only in load_tables: the NTZ→TIMESTAMP cast below
-    # reads naive values under the SESSION timezone, so a direct
-    # read_table caller on a non-UTC host session would silently shift
-    # every timestamp relative to the oracle's naive-as-UTC reading
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """One parquet table, every timestamp column as TIMESTAMP, under confs
+    ``configure`` applies once: a later user ``SET`` wins (a non-UTC time
+    zone shifts timestamps against the oracle's naive-as-UTC reading)."""
+    from torchfusion_spark.session import configure
+
+    configure(spark)
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
     dtypes = dict(df.dtypes)
@@ -112,8 +103,8 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABL
 
     Views are lazy — registering all of them costs only file-footer reads;
     Catalyst prunes columns/filters per query, so this is scale-safe.
-    Also pins the session to UTC so timestamp results are stable across
-    environments (duckdb-oracle comparison requirement).
+    Timestamps read as UTC under the session's configured time zone (see
+    :func:`read_table`; no re-pin here, so a later user ``SET`` wins).
 
     Memoized per (session, dir): every registry query calls this, and
     re-registering identical views each time re-reads footers and
@@ -129,7 +120,6 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABL
     # caught-and-retried load would then memo-hit and silently join
     # half-new against half-old tables
     spark._tf_tables_loaded = None
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     for name in tables:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)
     # Registration GENERATION in the key: createOrReplaceTempView

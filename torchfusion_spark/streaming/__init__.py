@@ -25,9 +25,8 @@ from torchfusion_spark.staging import declare, stage
 
 @contextmanager
 def _scaled_state_partitions(spark: SparkSession, python_state: bool = False):
-    """Pin ``spark.sql.shuffle.partitions`` (= streaming state-store
-    partition count, captured at query start) for the duration of a
-    bounded availableNow run, then restore it.
+    """Override ``spark.sql.shuffle.partitions`` (= streaming state-store
+    partition count, captured at query start) around a stream's start.
 
     State partitioning should track key cardinality and executor count,
     not the batch shuffle default: a local bounded replay with 32 state
@@ -47,19 +46,14 @@ def _scaled_state_partitions(spark: SparkSession, python_state: bool = False):
     defaults to min(16, parallelism), overridable via
     ``torchfusion.stream.pyStatePartitions``; the explicit
     ``torchfusion.stream.statePartitions`` still overrides both."""
-    from torchfusion_spark.session import default_parallelism
+    from torchfusion_spark.session import default_parallelism, overriding
 
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
     default = min(16 if python_state else 8, default_parallelism())
     n = spark.conf.get("torchfusion.stream.statePartitions", None)
     if n is None and python_state:
         n = spark.conf.get("torchfusion.stream.pyStatePartitions", None)
-    spark.conf.set(key, n if n is not None else str(default))
-    try:
+    with overriding(spark, {"spark.sql.shuffle.partitions": n if n is not None else str(default)}):
         yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _record_state_metrics(spark: SparkSession, name: str, q) -> None:
@@ -102,11 +96,16 @@ def _run_to_memory(
     name: str,
     mode: str,
     python_state: bool = False,
+    confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Run a bounded availableNow stream into a named memory sink.
     ``python_state`` selects the applyInPandasWithState partition
-    default (see ``_scaled_state_partitions``)."""
-    with _scaled_state_partitions(spark, python_state=python_state):
+    default (see ``_scaled_state_partitions``); ``confs`` are further
+    overrides. The stream runs on a clone of the session taken at
+    ``start()``, so the overrides are held around ``start()`` only."""
+    from torchfusion_spark.session import overriding
+
+    with _scaled_state_partitions(spark, python_state), overriding(spark, confs or {}):
         q = (
             df.writeStream.outputMode(mode)
             .format("memory")
@@ -114,9 +113,10 @@ def _run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     _record_state_metrics(spark, name, q)
     return spark.table(name)
+
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -129,16 +129,17 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP ``ts`` for both testdata vintages (see ``sources.read_table``):
     the footer is sniffed once on the driver — INT64 TIMESTAMP(NANOS) data
     streams as bigint and is rebuilt to µs; µs data streams as TIMESTAMP
-    directly (NTZ inference off, UTC session tz). Streams require an
+    directly (NTZ inference off, UTC session tz: confs ``configure``
+    applies once, so a later user ``SET`` wins). Streams require an
     explicit schema, so the round-2 failure mode (hardcoded nanos schema
     dividing µs values by 1000 → ~1970 windows) is now impossible without
     tripping the canary test."""
     import pyarrow.parquet as pq
 
-    from torchfusion_spark.sources import nanos_to_timestamp, set_ts_normalize_confs
+    from torchfusion_spark.session import configure
+    from torchfusion_spark.sources import nanos_to_timestamp
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    set_ts_normalize_confs(spark)  # same confs as the batch reader — shared
+    configure(spark)
     ts_type = str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type)
     if ts_type in ("timestamp[ns]", "int64"):
         raw_schema = (
@@ -348,29 +349,27 @@ def stateful_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    out = (
+        events.groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=UserStats(),
+            outputStructType="user_id bigint, n_events bigint, total_cents bigint",
+            outputMode="Update",
+            timeMode="None",
+        )
     )
-    try:
-        out = (
-            events.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=UserStats(),
-                outputStructType="user_id bigint, n_events bigint, total_cents bigint",
-                outputMode="Update",
-                timeMode="None",
+    latest = _run_to_memory(
+        spark,
+        out,
+        "tf_stream_stateful_cents",
+        "update",
+        python_state=True,
+        confs={
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
             )
-        )
-        latest = _run_to_memory(
-            spark, out, "tf_stream_stateful_cents", "update", python_state=True
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        },
+    )
     return _latest_per_user(latest)
 
 
@@ -598,7 +597,7 @@ def exactly_once_sink(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     try:
         snap = spark.read.parquet(out_dir)
     except AnalysisException:  # zero batches ran: nothing written, not even a schema
@@ -755,7 +754,6 @@ def late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains exactly the windows the eviction watermark finalized, with
     counts excluding exactly the rows the late-record filter dropped —
     both pinned by the integer-exact oracle."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = stage(spark, "late_batches", sf_dir=sf_dir)
     src = (
         spark.readStream.schema("ts timestamp, event_type string")
@@ -824,7 +822,6 @@ def late_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         input rows), and an accepted re-occurrence is emitted as a
         fresh row — re-emission is only possible when the occurrences
         are more than the delay apart."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     d = stage(spark, "late_batches", sf_dir=sf_dir, variant="dedup")
     src = (
         spark.readStream.schema("event_id bigint, ts timestamp, event_type string")
@@ -934,7 +931,6 @@ def _run_session_timeout(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     gap_us = gap_min * 60_000_000
     src = (
         spark.readStream.schema("user_id bigint, ts timestamp, cents bigint")

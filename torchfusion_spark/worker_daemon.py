@@ -11,12 +11,17 @@ importer takes the directory already in ``zipimport._zip_directory_cache``.
 A rewritten archive (a changed ``addPyFile`` zip) is still re-read, which is
 what pyspark's call is for. :func:`torchfusion_spark.session.session` selects
 this module with ``spark.python.daemon.module``.
+
+The daemon imports the installed pyspark in place of Spark's source-only
+``pyspark.zip`` (compiled again at every start) when both are one release.
 """
 
 from __future__ import annotations
 
 import os
+import zipfile
 import zipimport
+from importlib.machinery import PathFinder
 
 _read = zipimport.zipimporter.invalidate_caches
 # per archive path, process-wide like ``zipimport._zip_directory_cache``
@@ -53,7 +58,31 @@ def install() -> None:
         _signatures.setdefault(path, _signature(path))
 
 
+def without_spark_pyspark(path: list[str]) -> list[str]:
+    """``path`` minus its ``pyspark.zip`` entries if the rest of it imports a
+    pyspark whose ``version.py`` is byte-identical to each zip's, else
+    ``path``: an executor without a matching pyspark keeps the zip."""
+    zips = [p for p in path if os.path.basename(p) == "pyspark.zip"]
+    rest = [p for p in path if p not in zips]
+    spec = PathFinder.find_spec("pyspark", rest) if zips else None
+    if spec is None or spec.origin is None:  # none, or a namespace package
+        return path
+    try:
+        with open(os.path.join(os.path.dirname(spec.origin), "version.py"), "rb") as f:
+            installed = f.read()
+        for archive in zips:
+            with zipfile.ZipFile(archive) as z:
+                if z.read("pyspark/version.py") != installed:
+                    return path
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return path
+    return rest
+
+
 if __name__ == "__main__":
+    import sys
+
+    sys.path[:] = without_spark_pyspark(sys.path)  # before pyspark is imported
     # run as ``python -m``: patch through the importable module, so a worker
     # can tell the patched method apart from pyspark's
     from pyspark import daemon
