@@ -71,20 +71,6 @@ def test_external_table_ddl_reference_form(engine):
     engine.spark.catalog.dropTempView("ext_emb")
 
 
-def test_configure_s3_sets_hadoop_confs(spark):
-    """Conf-level analogue of the reference's (ignored) MinIO test
-    (src/lib.rs:199-267): object-store registration wires endpoint +
-    credentials; no live S3 in this environment."""
-    from torchfusion_spark.sources import configure_s3
-
-    configure_s3(spark, endpoint="http://localhost:9000", access_key="ak", secret_key="sk")
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.s3a.endpoint") == "http://localhost:9000"
-    assert conf.get("fs.s3a.access.key") == "ak"
-    assert conf.get("fs.s3a.secret.key") == "sk"
-    assert conf.get("fs.s3a.path.style.access") == "true"
-
-
 def test_external_table_stored_as_arrow(engine, tables, tmp_path):
     """DataFusion-parity DDL: CREATE EXTERNAL TABLE ... STORED AS ARROW
     routes through the Arrow IPC reader (Spark ships no arrow datasource)."""

@@ -514,26 +514,6 @@ def test_winnow_fingerprint_matches_python(spark, tables):
     assert len(a & b) / len(a) > 0.8
 
 
-def test_ivf_index_persist_probe_matches_inline(spark, tables, tmp_path):
-    """Build-once/probe-many: probing the persisted partitioned IVF index
-    returns exactly the inline ivf_topk result, and the probe plan prunes
-    index partitions (dynamic partition pruning on the list id)."""
-    from torchfusion_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe_index,
-        ivf_topk,
-    )
-
-    path = str(tmp_path / "ivf_index")
-    build_ivf_index(spark, path)
-    probe = ivf_probe_index(spark, path)
-    inline = ivf_topk(spark)
-    assert [tuple(r) for r in probe.collect()] == [tuple(r) for r in inline.collect()]
-
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
-
-
 def test_pack_sequences_properties_on_synthetic_corpora(spark, tables):
     """Property-style check over adversarial synthetic corpora (single
     language, one-token docs, giant docs, uneven shards): token
@@ -582,43 +562,6 @@ def test_pack_sequences_properties_on_synthetic_corpora(spark, tables):
                     assert rep.equals(base), "partitioning changed pack assignment"
     finally:
         orig.createOrReplaceTempView("documents")
-
-
-def test_incremental_dedup_matches_full_lsh(spark, tables, tmp_path):
-    """Production ingest shape: index the existing corpus once, dedup a
-    new batch against it without re-shingling the corpus. The pairs must
-    equal the full-corpus LSH restricted to (batch x index) — LSH over a
-    union is separable, so incremental probing loses nothing (modulo
-    hot-bucket capping, identical on both paths at this corpus size)."""
-    from torchfusion_spark.operators.dedup import (
-        build_minhash_index,
-        dedup_incremental,
-        minhash_lsh_sql,
-    )
-
-    path = str(tmp_path / "mh_index")
-    orig = spark.table("documents")
-    corpus = orig.filter("doc_id % 5 != 0")
-    batch = orig.filter("doc_id % 5 = 0")
-    try:
-        corpus.createOrReplaceTempView("documents")
-        build_minhash_index(spark, path)
-    finally:
-        orig.createOrReplaceTempView("documents")
-    batch.createOrReplaceTempView("__new_batch")
-    got = {
-        (r.new_id, r.old_id, r.jaccard)
-        for r in dedup_incremental(spark, "__new_batch", path).collect()
-    }
-    full = spark.sql(minhash_lsh_sql("spark")).collect()
-    expect = {
-        (a, b, j)
-        for r in full
-        for a, b, j in [(r.id_a, r.id_b, r.jaccard), (r.id_b, r.id_a, r.jaccard)]
-        if a % 5 == 0 and b % 5 != 0
-    }
-    assert expect, "test corpus should contain cross-slice near-dup pairs"
-    assert got == expect
 
 
 def test_incremental_url_dedup_matches_full_corpus(spark, tables, tmp_path):

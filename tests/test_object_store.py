@@ -82,8 +82,15 @@ def test_fetch_bytes_unknown_scheme():
 
 
 def test_configure_s3_wires_hadoop_conf(spark):
+    """Conf-level analogue of the reference's (ignored) MinIO test
+    (src/lib.rs:199-267): object-store registration wires endpoint,
+    credentials and the addressing style; no live S3 in this
+    environment."""
     from torchfusion_spark.sources import configure_s3
 
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    configure_s3(spark, path_style=False)
+    assert conf.get("fs.s3a.path.style.access") == "false"
     configure_s3(
         spark,
         endpoint="http://localhost:9000",
@@ -91,7 +98,6 @@ def test_configure_s3_wires_hadoop_conf(spark):
         secret_key="SK",
         path_style=True,
     )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     assert conf.get("fs.s3a.endpoint") == "http://localhost:9000"
     assert conf.get("fs.s3a.access.key") == "AK"
     assert conf.get("fs.s3a.secret.key") == "SK"

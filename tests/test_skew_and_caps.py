@@ -257,17 +257,22 @@ def test_capped_bucket_stats_observability(spark, tables):
         simhash_capped_bucket_stats,
     )
 
-    from torchfusion_spark.operators.multimodal import phash_capped_bucket_stats
+    from torchfusion_spark.operators.multimodal import (
+        frame_phash_capped_bucket_stats,
+        phash_capped_bucket_stats,
+    )
     from torchfusion_spark.operators.similarity import lsh_capped_bucket_stats
 
     assert simhash_capped_bucket_stats(spark).count() == 0
     assert minhash_capped_bucket_stats(spark).count() == 0
     assert phash_capped_bucket_stats(spark).count() == 0
+    assert frame_phash_capped_bucket_stats(spark).count() == 0
     assert lsh_capped_bucket_stats(spark).count() == 0
     # the surface reports when a cap WOULD bite: tighten max_bucket to 1
     # and the boilerplate-free corpus still has some 2+ buckets
     assert simhash_capped_bucket_stats(spark, max_bucket=1).count() > 0
     assert phash_capped_bucket_stats(spark, max_bucket=1).count() > 0
+    assert frame_phash_capped_bucket_stats(spark, max_bucket=1).count() > 0
     assert lsh_capped_bucket_stats(spark, max_bucket=1).count() > 0
 
 

@@ -258,6 +258,84 @@ def test_local_checkpoint_only_in_staging():
     assert not hits, hits
 
 
+def test_temp_views_only_in_staging_catalog_and_ddl():
+    """The shared temp-view catalog has three writers: staging (key- and
+    scope-named views), the catalog tables ``load_tables`` registers and
+    the user's own DDL through ``Engine.sql``. A query builder that names
+    a view of its own races every concurrent caller for that name."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "torchfusion_spark"
+    owners = {root / "staging.py", root / "sources" / "__init__.py", root / "engine.py"}
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path not in owners
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "createOrReplaceTempView(" in line
+    ]
+    assert not hits, hits
+
+
+def test_concurrent_dedup_canonical_thresholds_get_their_own_answer(
+    spark, tables, monkeypatch
+):
+    """Two threads run the canonical-selection pipeline at thresholds 0.5
+    and 0.9, held together at a barrier inside the quality SQL: each gets
+    its own single-thread answer, not the other caller's clusters."""
+    from torchfusion_spark.operators import textstats
+    from torchfusion_spark.operators.dedup import dedup_canonical
+
+    thresholds = (0.5, 0.9)
+
+    def answer(t):
+        return sorted(tuple(r) for r in dedup_canonical(spark, t).collect())
+
+    want = {t: answer(t) for t in thresholds}
+    assert want[0.5] != want[0.9]
+
+    barrier = threading.Barrier(len(thresholds))
+    quality_sql = textstats.text_quality_sql
+
+    def held(d):
+        barrier.wait(timeout=120)
+        return quality_sql(d)
+
+    monkeypatch.setattr(textstats, "text_quality_sql", held)
+    got, errors = {}, []
+
+    def run(t):
+        try:
+            got[t] = answer(t)
+        except Exception as exc:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(t,)) for t in thresholds]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert not errors, errors
+    assert got == want
+
+
+def test_ann_recall_audit_leaves_the_catalog_as_it_found_it(spark, tables):
+    """The audit's per-call exact pair scan is bound for the parse only:
+    after a warm-up, three more calls leave the temp-view set unchanged
+    and return the warm-up's rows."""
+    from torchfusion_spark.operators.similarity import ann_recall_audit
+
+    def temp_views():
+        return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary}
+
+    first = ann_recall_audit(spark).collect()
+    views = temp_views()
+    for _ in range(3):
+        assert ann_recall_audit(spark).collect() == first
+    assert temp_views() == views
+
+
 def test_process_lifecycle_only_in_staging():
     """Staged files have one owner: the per-process root in
     ``staging.py``. An exit hook, a pid-scoped name or a ``.scratch`` path

@@ -19,7 +19,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 from torchfusion_spark.operators import sqlgen as G
-from torchfusion_spark.staging import declare, scratch, stage, table_key
+from torchfusion_spark.staging import declare, scratch, stage
 
 
 def exact_dedup_sql(d: str) -> str:
@@ -1575,97 +1575,22 @@ def dedup_canonical(spark, threshold: float = 0.6):
     window partitions are cluster-sized (bounded by the hot-bucket cap
     upstream); singleton docs never enter a cluster and are implicitly
     kept — the result is the *decision table* a 100 TB dedup pass ships
-    to the filter stage (anti-join corpus against non-canonical ids)."""
+    to the filter stage (anti-join corpus against non-canonical ids).
+    The clusters are the staged view for this threshold and corpus, the
+    quality scores a CTE, so concurrent callers share no name."""
     from torchfusion_spark.operators.textstats import text_quality_sql
 
-    minhash_clusters(spark, threshold).createOrReplaceTempView("__dedup_clusters")
-    spark.sql(text_quality_sql("spark")).createOrReplaceTempView("__doc_quality")
+    clusters = stage(spark, "minhash_clusters", threshold=threshold)
     return spark.sql(
-        _CANON_SELECT.format(clusters="__dedup_clusters", quality="__doc_quality")
+        f"WITH quality AS (SELECT doc_id, quality_score FROM ({text_quality_sql('spark')}))"
+        + _CANON_SELECT.format(clusters=clusters, quality="quality")
     )
-
-
-def build_minhash_index(spark, path: str) -> None:
-    """Persist the corpus-side dedup state: the signature relation
-    (doc_id, hx, sig) and the exploded band-key relation (band, bkey,
-    doc_id). Build once over the corpus; incremental batches dedup
-    against it without re-shingling a byte of the existing 100 TB."""
-    from torchfusion_spark.session import cpu_fanout
-
-    cpu_fanout(spark.table("documents")).createOrReplaceTempView("__mhidx_docs")
-    sig = spark.sql(
-        sig_rel_sql("spark", f"({hashed_shingle_sql('spark', rel='__mhidx_docs')})")
-    ).cache()
-    sig.count()
-    sig.createOrReplaceTempView("__mhidx_sig")
-    sig.write.mode("overwrite").parquet(f"{path}/sig")
-    exploded = G.band_explode("__mhidx_sig", G.band_exprs("sig", "spark"), "spark")
-    # same hot-bucket cap as the batch LSH path (minhash_body_sql): an
-    # uncapped boilerplate bucket in the index would make every future
-    # ingest probe quadratic against it
-    spark.sql(
-        f"""
-        SELECT doc_id, band, bkey FROM (
-            SELECT doc_id, band, bkey,
-                   COUNT(*) OVER (PARTITION BY band, bkey) AS bsz
-            FROM ({exploded}))
-        WHERE bsz <= {MAX_BUCKET}
-        """
-    ).write.mode("overwrite").parquet(f"{path}/bands")
-    sig.unpersist()
-
-
-@declare(
-    "mhinc_sig", params={"new_rel": None}, key=lambda spark, new_rel: table_key(spark, new_rel)
-)
-def _mhinc_sig(ctx, new_rel):
-    """An ingest batch's signature relation — read by the band explode
-    and the verify join."""
-    return ctx.cache(
-        "__mhinc_sig",
-        ctx.spark.sql(sig_rel_sql("spark", f"({hashed_shingle_sql('spark', rel=new_rel)})")),
-    )
-
-
-def dedup_incremental(spark, new_rel: str, path: str, threshold: float = 0.6):
-    """Dedup a NEW batch against the persisted index: the batch's band
-    keys form the (small) broadcast side, so the index band relation is
-    filtered by a broadcast hash join — the 100 TB index side never
-    shuffles and is never re-shingled. Candidates verify exact Jaccard
-    via the stored shingle-hash sets. Returns (new_id, old_id, jaccard)
-    pairs with jaccard >= threshold.
-
-    This is the production dedup shape: the full-corpus LSH runs once
-    (`build_minhash_index`), every subsequent ingest batch is an
-    incremental probe."""
-    new_sig = stage(spark, "mhinc_sig", new_rel=new_rel)
-    spark.sql(
-        G.band_explode(new_sig, G.band_exprs("sig", "spark"), "spark")
-    ).createOrReplaceTempView("__mhinc_bands")
-    spark.read.parquet(f"{path}/sig").createOrReplaceTempView("__mhidx_sig_r")
-    spark.read.parquet(f"{path}/bands").createOrReplaceTempView("__mhidx_bands_r")
-    inter = G.arr_intersect_size("x.hx", "y.hx", "spark")
-    return spark.sql(f"""
-    WITH cand AS (
-        SELECT /*+ BROADCAST(n) */ DISTINCT n.doc_id AS new_id, i.doc_id AS old_id
-        FROM __mhidx_bands_r i JOIN __mhinc_bands n
-          ON i.band = n.band AND i.bkey = n.bkey AND i.doc_id <> n.doc_id)
-    SELECT new_id, old_id, jaccard FROM (
-        SELECT new_id, old_id,
-               ROUND(CAST({inter} AS DOUBLE) /
-                     ({G.arr_size('x.hx', 'spark')} + {G.arr_size('y.hx', 'spark')} - {inter}), 6) AS jaccard
-        FROM cand JOIN {new_sig} x ON x.doc_id = new_id
-                  JOIN __mhidx_sig_r y ON y.doc_id = old_id)
-    WHERE jaccard >= {threshold}
-    ORDER BY new_id, old_id
-    """)
 
 
 def build_url_index(spark, path: str, rel: str = "documents") -> None:
-    """Persist the canonical-URL seen-set — the URL-layer analogue of
-    :func:`build_minhash_index` (VERDICT r8 item 4): one (canonical_url,
-    keeper_doc_id) row per canonical form, aggregated from a single
-    canonicalization pass over the corpus. Cross-snapshot URL dedup is
+    """Persist the canonical-URL seen-set (VERDICT r8 item 4): one
+    (canonical_url, keeper_doc_id) row per canonical form, aggregated
+    from a single canonicalization pass over the corpus. Cross-snapshot URL dedup is
     the first thing a recurring-crawl pipeline runs (C4/RefinedWeb
     practice): build once, then every ingest batch probes incrementally.
 
@@ -1788,23 +1713,21 @@ def dedup_url_incremental(spark, new_rel: str, path: str):
     MIN() dedupes for free (the index is unique per canonical_url by
     construction, so MIN is exact, not a tie-break). The remaining
     exchanges are the keeper rollup and the presentation sort the
-    oracle's ORDER BY pins."""
-    spark.sql(url_canonical_sql("spark", rel=new_rel)).createOrReplaceTempView(
-        "__urlinc_batch"
-    )
-    spark.read.parquet(f"{path}/urls").createOrReplaceTempView("__urlidx_r")
-    return spark.sql("""
-    WITH resolved AS (
+    oracle's ORDER BY pins. The batch is a CTE and the index a direct
+    parquet scan, so the probe names nothing in the session catalog."""
+    return spark.sql(f"""
+    WITH batch AS (SELECT * FROM ({url_canonical_sql("spark", rel=new_rel)})),
+    resolved AS (
         SELECT canonical_url,
                MIN(CASE WHEN src = 0 THEN k END) AS batch_keeper,
                MIN(CASE WHEN src = 1 THEN k END) AS idx_keeper
         FROM (
             SELECT canonical_url, doc_id AS k, 0 AS src
-            FROM __urlinc_batch WHERE canonical_url IS NOT NULL
+            FROM batch WHERE canonical_url IS NOT NULL
             UNION ALL
             SELECT /*+ BROADCAST(b) */ i.canonical_url, i.keeper_doc_id, 1
-            FROM __urlidx_r i JOIN (SELECT canonical_url FROM __urlinc_batch
-                                    WHERE canonical_url IS NOT NULL) b
+            FROM parquet.`{path}/urls` i JOIN (SELECT canonical_url FROM batch
+                                               WHERE canonical_url IS NOT NULL) b
               ON i.canonical_url = b.canonical_url)
         GROUP BY canonical_url)
     SELECT /*+ BROADCAST(r) */ w.doc_id, w.source, w.canonical_url,
@@ -1812,7 +1735,7 @@ def dedup_url_incremental(spark, new_rel: str, path: str):
                 ELSE COALESCE(r.idx_keeper, r.batch_keeper) END AS keeper_doc_id,
            CASE WHEN w.canonical_url IS NULL THEN TRUE
                 ELSE (r.idx_keeper IS NULL AND w.doc_id = r.batch_keeper) END AS kept
-    FROM __urlinc_batch w LEFT JOIN resolved r ON w.canonical_url = r.canonical_url
+    FROM batch w LEFT JOIN resolved r ON w.canonical_url = r.canonical_url
     ORDER BY w.doc_id
     """)
 

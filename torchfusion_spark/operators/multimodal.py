@@ -566,6 +566,4 @@ def frame_phash_capped_bucket_stats(spark: SparkSession, max_bucket: int | None 
 
     rel, _ = stage(spark, "frame_phash")
     fs = f"(SELECT doc_id * {FRAME_KEY_MULT} + frame_idx AS doc_id, simhash FROM {rel})"
-    v = "__mm_fsig_stats"
-    spark.sql(f"SELECT * FROM {fs}").createOrReplaceTempView(v)
-    return capped_bucket_stats(spark, v, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap)
+    return capped_bucket_stats(spark, fs, _simhash_band_keys(PHASH_BITS // 8, "spark"), cap)

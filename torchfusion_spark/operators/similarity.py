@@ -20,8 +20,6 @@ LSH_MAX_BUCKET).
 
 from __future__ import annotations
 
-import itertools
-
 from torchfusion_spark.operators import sqlgen as G
 from torchfusion_spark.staging import declare, scratch, stage
 
@@ -919,16 +917,15 @@ def ann_recall_audit(
     assignment resolve from session staging (each referenced by multiple
     components), in one :func:`stage` call so all three describe one
     embeddings corpus. The exact pair
-    side is the Arrow scan (:func:`exact_pair_rows`), registered as a
-    per-call temp view the audit SQL splices in — per-call because the
-    scan is part of the audited computation (no caching across calls),
-    nonce-named so concurrent audits cannot clobber each other's view."""
+    side is the Arrow scan (:func:`exact_pair_rows`), passed to the
+    audit SQL as a DataFrame argument of ``spark.sql`` — per call
+    because the scan is part of the audited computation (no caching
+    across calls); pyspark binds it under a unique name for the parse
+    only, so the audit leaves no view in the catalog."""
 
     norms, (rel, ok), assign = stage(
         spark, "sim_norms", "sim_buckets", "sim_assign", n_centroids=n_centroids
     )
-    view = f"__audit_ep_{next(_audit_ep_nonce)}"
-    exact_pair_rows(spark, norms, threshold, AUDIT_PAIR_SAMPLE).createOrReplaceTempView(view)
     return spark.sql(
         ann_recall_audit_sql(
             "spark",
@@ -938,7 +935,7 @@ def ann_recall_audit(
             max_bucket,
             rel=norms,
             bucket_rel=rel,
-            exact_rel=view,
+            exact_rel="{ep}",
             # the IVF side reads the session-staged assignment like it
             # reads the staged norms/buckets (r16): the staged view is
             # content-identical to the inline CTE; the audited
@@ -953,11 +950,9 @@ def ann_recall_audit(
             # audited pair SET is identical (the staged relation is
             # row-identical to the inline sized/ok chain)
             ok_rel=ok if max_bucket == LSH_MAX_BUCKET else None,
-        )
+        ),
+        ep=exact_pair_rows(spark, norms, threshold, AUDIT_PAIR_SAMPLE),
     )
-
-
-_audit_ep_nonce = itertools.count()
 
 
 def norm_excluded_stats(spark):
@@ -1188,54 +1183,3 @@ def kmeans(spark, k: int = KMEANS_K, iters: int = KMEANS_ITERS):
         """)
         rows = model.collect()
     return spark.createDataFrame(rows, model.schema).orderBy("c_id", "dim")
-
-
-def build_ivf_index(spark, path: str, n_centroids: int = 16) -> None:
-    """Persist the IVF index: the nearest-centroid assignment relation
-    (vec_id, v, nrm, c_id) written as parquet PARTITIONED BY the
-    inverted-list id. Build once, probe many — at 100 TB the probe phase
-    reads only ``n_probe / n_centroids`` of the index because the list
-    id is a partition directory, not a row filter."""
-    a = spark.sql(assign_cte_sql("spark", n_centroids, rel=stage(spark, "sim_norms")))
-    a.write.mode("overwrite").partitionBy("c_id").parquet(path)
-
-
-def ivf_probe_index(spark, path: str, k: int = 10, n_queries: int = 4,
-                    n_probe: int = 4, n_centroids: int = 16):
-    """Probe a persisted IVF index without touching the base table: query
-    vectors and centroids are read from the index itself, the per-query
-    probed lists form a tiny broadcast relation, and the join on the
-    partition column lets dynamic partition pruning skip every unprobed
-    list directory. Same ranking discipline as ivf_topk_sql (6dp-rounded
-    cosine, vec_id tie-breaks) so results are identical to the inline
-    query."""
-    import hashlib
-
-    # view scoped by the index path: concurrent probes of DIFFERENT
-    # indexes in one session must not swap the relation under each other
-    idx = f"__ivf_idx_{hashlib.md5(path.encode()).hexdigest()[:8]}"
-    spark.read.parquet(path).createOrReplaceTempView(idx)
-    sim_qc = f"ROUND({_dot('q.qv', 'c.cv', 'spark')} / (q.qn * c.cn), 6)"
-    sim_qa = f"ROUND({_dot('q.qv', 'a.v', 'spark')} / (q.qn * a.nrm), 6)"
-    return spark.sql(f"""
-    WITH q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM {idx}
-               WHERE vec_id < {n_queries}),
-    c AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM {idx}
-          WHERE vec_id < {n_centroids}),
-    probe AS (
-        SELECT q_id, cent_id FROM (
-            SELECT /*+ BROADCAST(c) */ q.q_id, c.cent_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.q_id
-                                      ORDER BY {sim_qc} DESC, c.cent_id) AS rn
-            FROM q CROSS JOIN c) WHERE rn <= {n_probe}),
-    sims AS (
-        SELECT /*+ BROADCAST(q, p) */ q.q_id, a.vec_id AS cand_id, {sim_qa} AS cosine
-        FROM q JOIN probe p ON q.q_id = p.q_id
-               JOIN {idx} a ON a.c_id = p.cent_id
-        WHERE a.vec_id <> q.q_id)
-    SELECT q_id, cand_id, cosine FROM (
-        SELECT q_id, cand_id, cosine,
-               ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, cand_id) AS rk
-        FROM sims) WHERE rk <= {k}
-    ORDER BY q_id, cosine DESC, cand_id
-    """)

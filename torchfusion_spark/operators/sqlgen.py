@@ -112,10 +112,6 @@ def afilter(arr: str, lam: str, d: str) -> str:
     return f"{fn}({arr}, {lam})"
 
 
-def arr_min(arr: str, d: str) -> str:
-    return f"array_min({arr})" if d == "spark" else f"list_aggregate({arr}, 'min')"
-
-
 def arr_distinct(arr: str, d: str) -> str:
     fn = "array_distinct" if d == "spark" else "list_distinct"
     return f"{fn}({arr})"
@@ -142,12 +138,6 @@ def arr_intersect_size(a: str, b: str, d: str) -> str:
     if d == "spark":
         return f"size(array_intersect({a}, {b}))"
     return f"len(list_intersect({a}, {b}))"
-
-
-def arr_union_size(a: str, b: str, d: str) -> str:
-    if d == "spark":
-        return f"size(array_distinct(concat({a}, {b})))"
-    return f"len(list_distinct(list_concat({a}, {b})))"
 
 
 def null_eq(a: str, b: str, d: str) -> str:
@@ -275,11 +265,9 @@ def band_exprs(sig_expr: str, d: str) -> list[str]:
 def band_explode(rel: str, keys: list[str], d: str, carry: str = "doc_id") -> str:
     """Exploded band relation: one (``carry``…, band, bkey) row per input
     row per band — ONE spelling of the {'band': i, 'bkey': expr} encoding
-    shared by every LSH family member (batch self-join, cap stats, the
-    persisted index builder, and the incremental probe). The encoding is
-    load-bearing across PERSISTED data: a drift between the index
-    builder's spelling and the probe's silently yields zero candidates,
-    so the helper exists to make that drift impossible."""
+    shared by every LSH family member (batch self-join, cap stats): a
+    drift between two members' spellings silently yields zero
+    candidates, so the helper exists to make that drift impossible."""
     if d == "spark":
         structs = ", ".join(
             f"named_struct('band', {i}, 'bkey', {b})" for i, b in enumerate(keys)
