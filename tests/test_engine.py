@@ -349,6 +349,27 @@ def test_information_schema_helpers_do_not_leak(engine, tables):
     assert "information_schema" in schemas
 
 
+def test_information_schema_leaves_user_views_and_catalog_alone(engine, tables):
+    """information_schema queries bind their relations per call: a user
+    view named ``df_settings`` keeps its columns, the catalog lists the
+    same names before and after, and braces in the text pass through."""
+    spark = engine.spark
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW df_settings AS SELECT 'me' AS who")
+    try:
+        before = sorted(t.name for t in spark.catalog.listTables())
+        for rel in ("df_settings", "tables", "views", "columns", "schemata"):
+            assert engine.sql(f"SELECT count(*) AS n FROM information_schema.{rel}").collect()
+        row = engine.sql(
+            "SELECT '{\"k\": 1}' AS lit, (SELECT count(*) FROM information_schema.df_settings) AS n"
+        ).collect()[0]
+        assert row.lit == '{"k": 1}' and row.n > 0
+        assert sorted(t.name for t in spark.catalog.listTables()) == before
+        assert spark.table("df_settings").columns == ["who"]
+        assert engine.sql("SELECT who FROM df_settings").collect()[0].who == "me"
+    finally:
+        spark.catalog.dropTempView("df_settings")
+
+
 def test_information_schema_rewrite_skips_string_literals(engine):
     """ADVICE r04: the rewrite must not fire inside string literals."""
     row = engine.sql(

@@ -1,7 +1,7 @@
 """Spark settings have one owner, ``torchfusion_spark/session.py``:
 ``configure`` applies the runtime confs once per session, so a caller's
-settings stick, and ``overriding`` is the one way to change a conf for a
-while and restore it."""
+settings stick; ``scoped`` gives a query loop its own confs on a clone,
+and ``overriding`` changes a conf for a while and restores it."""
 
 from __future__ import annotations
 
@@ -138,3 +138,112 @@ def test_overriding_from_two_threads(spark):
     assert not errors, errors
     assert seen == {k: {v} for k, v in keys.items()}
     assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_overriding_and_clones_only_where_owned():
+    """``overriding`` is session-wide, so only ``session.py`` and the
+    stream starts in ``streaming`` use it; a per-query setting goes
+    through ``scoped``, the one place that clones a session."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "torchfusion_spark"
+    allowed = {
+        "overriding(": {root / "session.py", root / "streaming" / "__init__.py"},
+        "cloneSession": {root / "session.py"},
+    }
+    hits = [
+        f"{path.relative_to(root)}:{i}: {token}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        for token, owners in allowed.items()
+        if path not in owners and re.search(r"\b" + re.escape(token), line)
+    ]
+    assert not hits, hits
+
+
+def test_clone_session_reachable_through_py4j(spark):
+    """``cloneSession`` is ``private[sql]`` in Scala but public in the
+    bytecode py4j calls; a Spark upgrade that hides it fails here."""
+    j = spark._jsparkSession.cloneSession()
+    assert not j.equals(spark._jsparkSession)
+    assert j.sparkContext().equals(spark._jsparkSession.sparkContext())
+
+
+def test_scoped_confs_stay_on_the_clone(spark):
+    from torchfusion_spark.session import configure, scoped
+
+    key, probe = "spark.sql.adaptive.enabled", "spark.tf_test.scoped"
+    before = spark.conf.get(key)
+    clone = scoped(spark, {key: "false", probe: "x"})
+    assert configure(clone) is clone
+    assert (clone.conf.get(key), clone.conf.get(probe)) == ("false", "x")
+    assert spark.conf.get(key) == before
+    assert spark.conf.get(probe, None) is None
+    assert "AdaptiveSparkPlan" not in _plan(clone.range(10).groupBy("id").count())
+    assert "AdaptiveSparkPlan" in _plan(spark.range(10).groupBy("id").count())
+    # the clone is configured: the parent's functions resolve in it
+    assert clone.sql("SELECT argmax(array(1.0, 3.0, 2.0)) AS m").collect()[0].m == 1
+    # making the clone leaves RDD.toDF on the parent
+    assert spark.sparkContext.parallelize([(1,)]).toDF(["a"]).sparkSession is spark
+
+
+def test_scoped_views_snapshot_at_the_call(spark):
+    """The clone holds the parent's temp views as of ``scoped()``: one
+    made earlier is visible in it, one the parent makes later is not,
+    and one the clone makes never reaches the parent."""
+    from torchfusion_spark.session import scoped
+
+    def names(s):
+        return {r.tableName for r in s.sql("SHOW TABLES").collect()}
+
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW tf_scoped_early AS SELECT 1 AS x")
+    try:
+        clone = scoped(spark, {})
+        spark.sql("CREATE OR REPLACE TEMPORARY VIEW tf_scoped_late AS SELECT 2 AS x")
+        clone.sql("CREATE OR REPLACE TEMPORARY VIEW tf_scoped_clone AS SELECT 3 AS x")
+        assert clone.table("tf_scoped_early").collect()[0].x == 1
+        assert "tf_scoped_late" not in names(clone)
+        assert "tf_scoped_clone" not in names(spark)
+        assert {"tf_scoped_early", "tf_scoped_late"} <= names(spark)
+    finally:
+        spark.catalog.dropTempView("tf_scoped_early")
+        spark.catalog.dropTempView("tf_scoped_late")
+
+
+def test_bpe_train_leaves_aqe_on_for_other_threads(spark, tables, monkeypatch):
+    """``bpe_train`` runs its round loop with AQE off. Held at its first
+    round, a query planned on the caller's session from another thread
+    still gets an adaptive plan, and the session still reads AQE on."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from torchfusion_spark.operators import textstats
+
+    entered, release = threading.Event(), threading.Event()
+    top_sql = textstats._bpe_top_sql
+
+    def held(rel):
+        if not entered.is_set():
+            entered.set()
+            release.wait(120)
+        return top_sql(rel)
+
+    monkeypatch.setattr(textstats, "_bpe_top_sql", held)
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    with ThreadPoolExecutor(1) as pool:
+        fut = pool.submit(lambda: textstats.bpe_train(spark).collect())
+        try:
+            assert entered.wait(300)
+            plan = _plan(spark.sql("SELECT o_orderstatus, count(*) FROM orders GROUP BY 1"))
+            during = spark.conf.get(key)
+        finally:
+            release.set()
+        merges = fut.result(timeout=300)
+    assert "AdaptiveSparkPlan" in plan, plan
+    assert during == "true"
+    assert merges

@@ -11,7 +11,7 @@ reference's — SURVEY §0 layer B):
 * ``SET torchfusion.<key> = <value>``  → validated config set
   (reference src/config.rs:38-57)
 * references to ``information_schema.df_settings`` → rewritten to a
-  settings view (torchfusion namespace + engine confs), emulating
+  settings relation (torchfusion namespace + engine confs), emulating
   DataFusion's df_settings (reference src/config.rs:59-78, README.md:97-108)
 """
 
@@ -101,8 +101,8 @@ _DF_SETTINGS_RE = re.compile(r"information_schema\.df_settings", re.IGNORECASE)
 # The rest of information_schema (reference enables ALL of it:
 # with_information_schema(true), src/lib.rs:121-123 — DataFusion provides
 # tables/views/columns/schemata/df_settings). Spark exposes the same
-# metadata through spark.catalog; each referenced relation is rebuilt as
-# a temp view at query time so the snapshot is current.
+# metadata through spark.catalog; each referenced relation is rebuilt at
+# query time, so the snapshot is current, and bound into that query only.
 _INFO_SCHEMA_RE = re.compile(
     r"information_schema\.(?P<rel>tables|views|columns|schemata|routines|parameters)\b",
     re.IGNORECASE,
@@ -273,9 +273,8 @@ def _sub_outside_literals(pattern: re.Pattern, repl, text: str) -> str:
     return "".join(out)
 
 
-# names of the emulation's own helper temp views — catalog listings must
-# not report them as user LOCAL TEMPORARY relations (ADVICE r04); they
-# are presented as the information_schema views DataFusion shows instead
+# the emulated information_schema relations and their columns; listings
+# present them the way DataFusion shows its information_schema views
 _INFO_SCHEMA_RELATIONS: dict[str, str] = {
     "tables": "table_catalog string, table_schema string, table_name string, table_type string",
     "views": "table_catalog string, table_schema string, table_name string, definition string",
@@ -290,9 +289,6 @@ _INFO_SCHEMA_RELATIONS: dict[str, str] = {
     "specific_name string, ordinal_position int, parameter_name string, "
     "data_type string",
 }
-_INFO_SCHEMA_HELPER_NAMES = frozenset(
-    {"df_settings"} | {f"information_schema_{r}" for r in _INFO_SCHEMA_RELATIONS}
-)
 
 # DataFusion's EXPLAIN ANALYZE (execute + annotated plan). Spark has no
 # SQL-level equivalent; emulate: fetch the full result, return the final
@@ -461,10 +457,7 @@ class Engine:
                 rows.append((catalog_name, "public", fname, 1, "input", in_t))
                 rows.append((catalog_name, "public", fname, 0, "RETURN", ret_t))
             return self.spark.createDataFrame(rows, _INFO_SCHEMA_RELATIONS["parameters"])
-        # the emulation's own helper temp views are presentation machinery,
-        # not user relations: list them the way DataFusion lists its
-        # information_schema views, never as LOCAL TEMPORARY rows
-        tables = [t for t in cat.listTables() if t.name not in _INFO_SCHEMA_HELPER_NAMES]
+        tables = cat.listTables()
         if rel == "tables":
             type_map = {"TEMPORARY": "LOCAL TEMPORARY", "VIEW": "VIEW"}
             rows = [
@@ -925,12 +918,19 @@ class Engine:
         # scan/rewrite only outside string literals (ADVICE r04): a
         # literal mentioning information_schema.* must pass through intact
         scannable = _SQL_LITERAL_RE.sub("''", text)
+        helpers = {}
         if _DF_SETTINGS_RE.search(scannable):
-            self.settings().createOrReplaceTempView("df_settings")
-            text = _sub_outside_literals(_DF_SETTINGS_RE, "df_settings", text)
+            helpers["df_settings"] = self.settings()
         for rel in {mm.group("rel").lower() for mm in _INFO_SCHEMA_RE.finditer(scannable)}:
-            self._info_schema_df(rel).createOrReplaceTempView(f"information_schema_{rel}")
+            helpers[f"information_schema_{rel}"] = self._info_schema_df(rel)
+        if not helpers:
+            return self.spark.sql(text)
+        # pyspark binds each helper DataFrame under a unique name for this
+        # parse only; the text goes through str.format, so its own braces
+        # are doubled first
+        text = text.replace("{", "{{").replace("}", "}}")
+        text = _sub_outside_literals(_DF_SETTINGS_RE, "{df_settings}", text)
         text = _sub_outside_literals(
-            _INFO_SCHEMA_RE, lambda mm: f"information_schema_{mm.group('rel').lower()}", text
+            _INFO_SCHEMA_RE, lambda mm: f"{{information_schema_{mm.group('rel').lower()}}}", text
         )
-        return self.spark.sql(text)
+        return self.spark.sql(text, **helpers)

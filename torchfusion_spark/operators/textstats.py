@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from torchfusion_spark.operators import dedup
 from torchfusion_spark.operators import sqlgen as G
-from torchfusion_spark.session import overriding
+from torchfusion_spark.session import scoped
 from torchfusion_spark.staging import declare, scratch, stage
 
 # tiny stopword marker sets for the language-ID heuristic
@@ -2437,30 +2437,31 @@ def bpe_train(spark, rounds: int = BPE_TRAIN_ROUNDS, tf_rel: str | None = None):
     # stage jobs are pure scheduling overhead on an iterative loop —
     # measured at sf0.1: 16 → 8 jobs/run and 2.45 → 1.88 s warm with
     # AQE off, plans static and sizes known-bounded at any corpus scale.
-    # Session-wide: a query another thread plans meanwhile runs without AQE.
-    with scratch(spark) as sc:
+    # The loop runs on a clone taken after ``tfn`` is staged, so the
+    # clone sees ``tfn`` and the caller's session keeps AQE on.
+    loop = scoped(spark, {"spark.sql.adaptive.enabled": "false"})
+    with scratch(loop) as sc:
         # the current stream: the s0 view + an inline merge chain
-        cur = sc.view("__bpe_s", sc.checkpoint(spark.sql(_bpe_sym0_sql("spark", tfn)), "s"))
+        cur = sc.view("__bpe_s", sc.checkpoint(loop.sql(_bpe_sym0_sql("spark", tfn)), "s"))
         depth = 0  # literal merges since the last checkpoint
-        with overriding(spark, {"spark.sql.adaptive.enabled": "false"}):
-            for r in range(1, rounds + 1):
-                top = spark.sql(_bpe_top_sql(cur)).collect()
-                if not top:  # degenerate corpus: no adjacent pairs left
-                    break
-                a, b, cnt = top[0].a, top[0].b, top[0].cnt
-                merges.append((r, a, b, a + b, cnt))
-                if r == rounds:
-                    break
-                cur = f"({_bpe_merge_sql(cur, _pair_lit_rel(a, b))})"
-                depth += 1
-                if depth >= _BPE_CKPT_EVERY:
-                    # bound lineage depth for large round budgets:
-                    # re-checkpoint and restart the inline chain (the
-                    # default 3-round trainer never reaches this — its
-                    # deepest chain is 2 merges)
-                    ck = sc.checkpoint(spark.sql(f"SELECT * FROM {cur}"), "s")
-                    cur = sc.view("__bpe_s", ck)
-                    depth = 0
+        for r in range(1, rounds + 1):
+            top = loop.sql(_bpe_top_sql(cur)).collect()
+            if not top:  # degenerate corpus: no adjacent pairs left
+                break
+            a, b, cnt = top[0].a, top[0].b, top[0].cnt
+            merges.append((r, a, b, a + b, cnt))
+            if r == rounds:
+                break
+            cur = f"({_bpe_merge_sql(cur, _pair_lit_rel(a, b))})"
+            depth += 1
+            if depth >= _BPE_CKPT_EVERY:
+                # bound lineage depth for large round budgets:
+                # re-checkpoint and restart the inline chain (the
+                # default 3-round trainer never reaches this — its
+                # deepest chain is 2 merges)
+                ck = sc.checkpoint(loop.sql(f"SELECT * FROM {cur}"), "s")
+                cur = sc.view("__bpe_s", ck)
+                depth = 0
     schema = StructType(
         [
             StructField("round", LongType(), False),

@@ -1027,10 +1027,8 @@ _sql_pair(
     streaming.STATEFUL_CENTS_ORACLE,
     doc="custom stateful streaming with bit-deterministic integer-cents "
     "state — fully hash-checked against the batch oracle (the float "
-    "variant is rows-only by necessity). Prefers transformWithState "
-    "(typed ValueState on RocksDB, Spark 4.x) when the runtime has "
-    "protobuf; otherwise applyInPandasWithState with identical state "
-    "schema and emissions",
+    "variant is rows-only by necessity): one (n, cents) state struct per "
+    "user in applyInPandasWithState",
 )
 def stream_stateful_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming.stateful_cents(spark, sf_dir)

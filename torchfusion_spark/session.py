@@ -115,13 +115,35 @@ def _configure(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
     return spark
 
 
+def scoped(spark: SparkSession, confs: dict[str, str]) -> SparkSession:
+    """A configured clone of ``spark`` with ``confs`` set on it: queries
+    planned on the clone see them, the parent and every other thread's
+    queries never do. The clone shares the parent's SparkContext, cache
+    and registered functions. It copies the parent's temp views at its
+    first catalog use, which is made here: a view the parent makes after
+    this call is not visible in the clone, and a view the clone makes is
+    never visible in the parent. Streams stay on the parent: a listener
+    on the parent hears nothing from a stream started on a clone."""
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    clone = SparkSession(spark.sparkContext, jsparkSession=spark._jsparkSession.cloneSession())
+    # constructing a session rebinds RDD.toDF to it; keep it on the parent
+    _monkey_patch_RDD(spark)
+    for k, v in confs.items():
+        clone.conf.set(k, v)
+    clone.catalog.currentDatabase()  # the first catalog use: temp views copied now
+    clone._tf_configured = True
+    return clone
+
+
 @contextmanager
 def overriding(spark: SparkSession, confs: dict[str, str]):
     """Set ``confs`` for the body, then restore each key's old value or
     unset a key that had none, raised or not. Session-wide: a query
-    another thread plans meanwhile sees them too. A stream runs on a clone
-    of the session taken at ``start()``, so an override around ``start()``
-    pins its confs for the whole run."""
+    another thread plans meanwhile sees them too, so a query-scoped
+    setting goes through :func:`scoped`. A stream runs on a clone of the
+    session taken at ``start()``, so an override around ``start()`` pins
+    its confs for the whole run."""
     with _CONF_LOCK:
         old = {k: spark.conf.get(k, None) for k in confs}
         try:

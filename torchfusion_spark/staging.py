@@ -437,8 +437,9 @@ def _load_declarations() -> None:
     import torchfusion_spark.streaming  # noqa: F401
 
 
-def prewarm_staging(spark, timed=None, width: int | None = None) -> None:
-    """Build every relation declared ``prewarm=True``.
+def prewarm_staging(spark, timed=None) -> None:
+    """Build every relation declared ``prewarm=True`` on a pool of
+    :func:`staging_pool_width` threads.
 
     ``timed``: optional ``f(name, fn, *args)`` wrapper — the bench passes
     one that records each component's wall-clock under the concurrent
@@ -448,15 +449,13 @@ def prewarm_staging(spark, timed=None, width: int | None = None) -> None:
     """
     _load_declarations()
     run = timed if timed is not None else (lambda _name, fn, *a: fn(*a))
-    if width is None:
-        width = staging_pool_width()
     comps = [n for n, r in REGISTRY.items() if r.prewarm]
     need = {n: prewarm_deps(n) for n in comps}
     fanout = {n: sum(n in need[m] for m in comps) for n in comps}
     order = sorted(comps, key=lambda n: -fanout[n])
     done: set[str] = set()
     running: dict[Future, str] = {}
-    with ThreadPoolExecutor(max_workers=width) as pool:
+    with ThreadPoolExecutor(max_workers=staging_pool_width()) as pool:
         while len(done) < len(comps):
             for n in order:
                 if n not in done and n not in running.values() and need[n] <= done:

@@ -91,21 +91,14 @@ def _record_state_metrics(spark: SparkSession, name: str, q) -> None:
 
 
 def _run_to_memory(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    mode: str,
-    python_state: bool = False,
-    confs: dict[str, str] | None = None,
+    spark: SparkSession, df: DataFrame, name: str, mode: str, python_state: bool = False
 ) -> DataFrame:
     """Run a bounded availableNow stream into a named memory sink.
     ``python_state`` selects the applyInPandasWithState partition
-    default (see ``_scaled_state_partitions``); ``confs`` are further
-    overrides. The stream runs on a clone of the session taken at
-    ``start()``, so the overrides are held around ``start()`` only."""
-    from torchfusion_spark.session import overriding
-
-    with _scaled_state_partitions(spark, python_state), overriding(spark, confs or {}):
+    default (see ``_scaled_state_partitions``). The stream runs on a
+    clone of the session taken at ``start()``, so the override is held
+    around ``start()`` only."""
+    with _scaled_state_partitions(spark, python_state):
         q = (
             df.writeStream.outputMode(mode)
             .format("memory")
@@ -277,99 +270,39 @@ def enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(spark, agg, name, "complete").orderBy("c_mktsegment", "event_type")
 
 
-def _has_tws_runtime() -> bool:
-    """transformWithStateInPandas talks to the JVM state server over
-    protobuf; without a working ``google.protobuf`` the Python worker
-    crashes at runtime, so probe it up front (env mandate: gate missing
-    deps behind an import-try)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def stateful_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running stats in explicit typed state, accumulated as
     integer cents so the final per-user state is bit-deterministic and the
     DuckDB oracle hash-checks it fully (the float-summing
     ``stateful_user_stats`` variant is rows-only for exactly that reason).
-
-    Uses the second-generation stateful API (``transformWithStateInPandas``
-    + ValueState on RocksDB, Spark 4.x) when the runtime has protobuf;
-    otherwise the ``applyInPandasWithState`` path with identical state
-    semantics — same state schema, same emissions, same oracle."""
+    State is one ``(n, cents)`` struct per user in
+    ``applyInPandasWithState``; each micro-batch emits the updated totals
+    of the users it touched."""
     import pandas as pd
 
-    events = _event_stream(spark, sf_dir).withColumn(
-        "cents", F.expr("CAST(ROUND(value * 100) AS BIGINT)")
-    )
-    if not _has_tws_runtime():
-        from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-        def update(key, pdfs, state: GroupState):
-            n, cents = state.get if state.exists else (0, 0)
-            for pdf in pdfs:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-            )
+    def update(key, pdfs, state: GroupState):
+        n, cents = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            n += len(pdf)
+            cents += int(pdf["cents"].sum())
+        state.update((n, cents))
+        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "total_cents": [cents]})
 
-        out = events.groupBy("user_id").applyInPandasWithState(
+    out = (
+        _event_stream(spark, sf_dir)
+        .withColumn("cents", F.expr("CAST(ROUND(value * 100) AS BIGINT)"))
+        .groupBy("user_id")
+        .applyInPandasWithState(
             update,
             outputStructType="user_id bigint, n_events bigint, total_cents bigint",
             stateStructType="n bigint, cents bigint",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        latest = _run_to_memory(
-            spark, out, "tf_stream_stateful_cents", "update", python_state=True
-        )
-        return _latest_per_user(latest)
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", "n bigint, cents bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (self._state.get() or (0, 0)) if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self._state.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    out = (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserStats(),
-            outputStructType="user_id bigint, n_events bigint, total_cents bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
     )
-    latest = _run_to_memory(
-        spark,
-        out,
-        "tf_stream_stateful_cents",
-        "update",
-        python_state=True,
-        confs={
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-            )
-        },
-    )
+    latest = _run_to_memory(spark, out, "tf_stream_stateful_cents", "update", python_state=True)
     return _latest_per_user(latest)
 
 
@@ -908,11 +841,8 @@ def stateful_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions in explicit group state (parallel-array struct), an
     event-time timeout registered at min(session_end)+gap, closed
     sessions emitted with exact integer (epoch-µs bounds, count, cent
-    total). Second-generation API note: ``transformWithStateInPandas``
-    timers (registerTimer/handleExpiredTimer) need the protobuf state
-    server, absent in this runtime — the ``GroupStateTimeout
-    .EventTimeTimeout`` path below implements the identical state
-    machine (same rules, same oracle), the same dual-path discipline as
+    total). The timer is ``applyInPandasWithState``'s
+    ``GroupStateTimeout.EventTimeTimeout``, the same stateful API as
     :func:`stateful_cents`."""
     d = stage(spark, "late_batches", sf_dir=sf_dir, variant="session")
     return _run_session_timeout(spark, d)
