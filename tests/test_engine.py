@@ -41,6 +41,29 @@ def test_bad_batch_size_rejected():
         validate("torchfusion.cuda_device", "minus one")
 
 
+@pytest.mark.parametrize(
+    ("key", "bad", "message"),
+    [("batch_size", "0", "batch size not correct"), ("device", "tpu", "not supported")],
+)
+def test_create_function_validates_settings_set_around_the_engine(engine, tmp_path, key, bad, message):
+    """A plain ``spark.sql("SET torchfusion.…")`` skips ``Engine.sql``'s
+    check; the CREATE FUNCTION snapshot must catch the value on the driver
+    instead of letting it fail in the workers."""
+    from torchfusion_spark.models.fixtures import write_demo_model
+
+    model = write_demo_model(str(tmp_path / "validated.npz"))
+    good = engine.spark.conf.get(f"torchfusion.{key}")
+    engine.spark.sql(f"SET torchfusion.{key} = {bad}")
+    try:
+        with pytest.raises(TorchConfigError, match=message):
+            engine.sql(
+                f"CREATE OR REPLACE FUNCTION validated_clf(FLOAT[]) RETURNS FLOAT[] "
+                f"LANGUAGE TORCH AS '{model}'"
+            )
+    finally:
+        engine.sql(f"SET torchfusion.{key} = {good}")
+
+
 def test_plain_sql_falls_through(engine, tables):
     n = engine.sql("SELECT COUNT(*) AS n FROM nation").collect()[0].n
     assert n == 25

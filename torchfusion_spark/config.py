@@ -85,8 +85,9 @@ def validate(key: str, value: str) -> str:
     """Validate a ``torchfusion.<key>`` assignment; return normalized value.
 
     Mirrors TorchConfig::set (reference src/config.rs:38-57) + parse_device
-    (src/config.rs:82-92): device must name an *available* backend; ids and
-    batch sizes must parse as non-negative integers; unknown keys error.
+    (src/config.rs:82-92): device must name an *available* backend; device
+    ids must parse as non-negative integers and batch sizes as positive
+    ones; unknown keys error.
     """
     short = key.lower().removeprefix(f"{PREFIX}.")
     if short == "device":
@@ -145,11 +146,15 @@ class TorchConfig:
 
     @classmethod
     def from_spark(cls, spark: SparkSession) -> "TorchConfig":
+        """Snapshot the namespace, validating each key: a plain
+        ``spark.sql("SET torchfusion.…")`` bypasses :func:`set_option`, so a
+        bad value must fail here, on the driver, not in the workers."""
         seed_defaults(spark)
+        snap = {key: validate(key, spark.conf.get(key)) for key in _DEFAULTS}
         return cls(
-            device=spark.conf.get(f"{PREFIX}.device", "cpu"),
-            cuda_device=int(spark.conf.get(f"{PREFIX}.cuda_device", "0")),
-            batch_size=int(spark.conf.get(f"{PREFIX}.batch_size", "1")),
+            device=snap[f"{PREFIX}.device"],
+            cuda_device=int(snap[f"{PREFIX}.cuda_device"]),
+            batch_size=int(snap[f"{PREFIX}.batch_size"]),
         )
 
 

@@ -13,6 +13,10 @@ reference's — SURVEY §0 layer B):
 * references to ``information_schema.df_settings`` → rewritten to a
   settings relation (torchfusion namespace + engine confs), emulating
   DataFusion's df_settings (reference src/config.rs:59-78, README.md:97-108)
+* ``argmax(<fn>(…))`` in a query or ``EXPLAIN``, where ``<fn>`` is a
+  LANGUAGE TORCH function → ``<fn>``'s argmax head, which scores and
+  reduces each row in the model's worker (reference: src/udf.rs output
+  feeding src/argmax.rs in one process)
 """
 
 from __future__ import annotations
@@ -25,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from torchfusion_spark import config as tf_config
+from torchfusion_spark.functions import function_builder
+from torchfusion_spark.models.registry import ARGMAX_HEAD_PREFIX, argmax_head, register_torch_udf
 
 # SQL array-type token (FLOAT[] / ARRAY<FLOAT>) → Spark DDL type. Default
 # item type Float32 when omitted, as in the reference (src/lib.rs:35-49).
@@ -113,6 +119,58 @@ _INFO_SCHEMA_RE = re.compile(
 # (ADVICE r04 — a literal like 'see information_schema.tables' was
 # rewritten too).
 _SQL_LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
+
+
+# statements the argmax fusion applies to: queries and EXPLAIN
+_QUERY_STATEMENT_RE = re.compile(
+    r"^\s*(?:\(\s*)*(?:SELECT|WITH|FROM|VALUES|TABLE|EXPLAIN)\b", re.IGNORECASE
+)
+# a literal or backtick identifier (matched so that it is stepped over
+# whole), or an unqualified ``argmax(<fn>(`` call
+_ARGMAX_CALL_RE = re.compile(
+    r"'(?:[^'\\]|\\.)*'|`(?:[^`]|``)*`"
+    r"|(?<![\w.$])argmax\s*\(\s*(?P<fn>[A-Za-z_]\w*)\s*\(",
+    re.IGNORECASE | re.DOTALL,
+)
+_PAREN_SCAN_RE = re.compile(r"'(?:[^'\\]|\\.)*'|`(?:[^`]|``)*`|[()]", re.DOTALL)
+_CLOSE_PAREN_RE = re.compile(r"\s*\)")
+
+
+def _matching_paren(text: str, start: int) -> int:
+    """Index of the ``)`` closing the ``(`` just before ``start``, or -1;
+    parentheses inside literals and backtick identifiers do not count."""
+    depth = 1
+    for m in _PAREN_SCAN_RE.finditer(text, start):
+        if m.group() == "(":
+            depth += 1
+        elif m.group() == ")":
+            depth -= 1
+            if depth == 0:
+                return m.start()
+    return -1
+
+
+def fuse_argmax_calls(text: str, heads: dict[str, str]) -> str:
+    """Rewrite every ``argmax(<fn>(args))`` whose lower-cased ``<fn>`` is a
+    key of ``heads`` to ``heads[fn](args)``. Only an ``argmax`` whose one
+    argument is exactly that call fuses; literals and backtick identifiers
+    pass through verbatim."""
+    out, pos, scan = [], 0, 0
+    while m := _ARGMAX_CALL_RE.search(text, scan):
+        scan = m.end()
+        fn = m.group("fn")
+        if fn is None:
+            continue
+        head = heads.get(fn.lower())
+        close = _matching_paren(text, m.end()) if head else -1
+        tail = _CLOSE_PAREN_RE.match(text, close + 1) if close >= 0 else None
+        if tail is None:
+            scan = m.start("fn")  # the argument may hold a call that fuses
+            continue
+        out += [text[pos : m.start()], f"{head}({fuse_argmax_calls(text[m.end() : close], heads)})"]
+        pos = scan = tail.end()
+    out.append(text[pos:])
+    return "".join(out)
 
 
 def _split_top_level_commas(raw: str) -> list[str]:
@@ -357,8 +415,6 @@ class Engine:
     # -- statement handlers -------------------------------------------------
 
     def _create_torch_function(self, m: re.Match) -> DataFrame:
-        from torchfusion_spark.models.registry import register_torch_udf
-
         body = m.group("body")
         if not body or not (body.startswith("'") and body.endswith("'")):
             # reference: config_err "model file should be specified" (src/lib.rs:58-61)
@@ -381,6 +437,11 @@ class Engine:
         return_type = _parse_array_type(ret_token) if ret_token else input_type
         register_torch_udf(
             self.spark, m.group("name"), uri, input_type=input_type, return_type=return_type
+        )
+        # what the name resolves to now: the fusion into its argmax head
+        # holds only while it still does
+        self.__dict__.setdefault("_argmax_heads", {})[m.group("name").lower()] = function_builder(
+            self.spark, m.group("name")
         )
         # tracked for information_schema.routines/parameters introspection
         self.__dict__.setdefault("_torch_functions", {})[m.group("name").lower()] = (
@@ -444,6 +505,7 @@ class Engine:
                     else (f.description or None),
                 )
                 for f in cat.listFunctions()
+                if not f.name.startswith(ARGMAX_HEAD_PREFIX)
             ]
             return self.spark.createDataFrame(rows, _INFO_SCHEMA_RELATIONS["routines"])
         if rel == "parameters":
@@ -915,6 +977,40 @@ class Engine:
             return self._deallocate_statement(m)
         if _SHOW_ALL_RE.match(text):
             return self.settings()
+        fused = self._fuse_argmax(text)
+        df = self._run_query(fused)
+        if fused != text and any(ARGMAX_HEAD_PREFIX in c for c in df.columns):
+            # an unaliased fused call is named after its head: keep the
+            # names of the statement as written
+            df = df.toDF(*self._run_query(text).columns)
+        return df
+
+    def _fuse_argmax(self, text: str) -> str:
+        """Fuse ``argmax(<fn>(…))`` into ``<fn>``'s argmax head in a query
+        or ``EXPLAIN``, for each ``<fn>`` this engine registered as
+        LANGUAGE TORCH, while ``<fn>`` and ``argmax`` both still resolve to
+        the definitions they had (the library's, for ``argmax``)."""
+        registered = self.__dict__.get("_argmax_heads")
+        if not registered or not _QUERY_STATEMENT_RE.match(text):
+            return text
+        called = {
+            m.group("fn").lower() for m in _ARGMAX_CALL_RE.finditer(text) if m.group("fn")
+        } & registered.keys()
+        library = getattr(self.spark, "_tf_argmax", None)
+        if not called or library is None or not library.equals(
+            function_builder(self.spark, "argmax")
+        ):
+            return text
+        heads = {
+            fn: argmax_head(fn)
+            for fn in called
+            if registered[fn].equals(function_builder(self.spark, fn))
+        }
+        return fuse_argmax_calls(text, heads) if heads else text
+
+    def _run_query(self, text: str) -> DataFrame:
+        """``spark.sql(text)``, with the information_schema relations it
+        names bound into it."""
         # scan/rewrite only outside string literals (ADVICE r04): a
         # literal mentioning information_schema.* must pass through intact
         scannable = _SQL_LITERAL_RE.sub("''", text)

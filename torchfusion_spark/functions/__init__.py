@@ -12,6 +12,8 @@ free. The library (``argmax``, ``argmin``, ``vec_dot``, ``vec_norm``,
 ``cosine_similarity``) is registered as SQL functions so ``sql()``
 queries resolve them by name, like the reference's function registry
 (src/lib.rs:134); ``argmax`` is also a Column helper for DataFrame code.
+Over a LANGUAGE TORCH call, ``Engine.sql`` fuses ``argmax(f(x))`` into
+``f``'s worker instead (``models.registry``), with the same results.
 
 NaN note: Spark's ``array_max`` treats NaN as greater than any number;
 the reference's SIMD argmax ignores NaN. Semantics match on NaN-free
@@ -75,7 +77,21 @@ def _sql_functions() -> dict[str, str]:
     }
 
 
+def function_builder(spark: SparkSession, name: str):
+    """The JVM builder the unqualified function ``name`` resolves to in the
+    session's function registry, or None. Every registration makes a new
+    builder, so ``equals`` on two of them tells whether ``name`` still
+    means what it meant when the first was taken."""
+    ident = spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier.apply(name)
+    found = spark._jsparkSession.sessionState().functionRegistry().lookupFunctionBuilder(ident)
+    return found.get() if found.isDefined() else None
+
+
 def register_all(spark: SparkSession) -> None:
-    """Register the SQL-callable function library into the session."""
+    """Register the SQL-callable function library into the session, and
+    keep the library ``argmax``'s builder: ``Engine.sql`` fuses
+    ``argmax(<LANGUAGE TORCH fn>(x))`` into the model's worker only while
+    ``argmax`` still resolves to it."""
     for ddl in _sql_functions().values():
         spark.sql(ddl)
+    spark._tf_argmax = function_builder(spark, "argmax")

@@ -11,6 +11,15 @@ call (one GEMM per mini-batch) plus one call for the short tail, and the
 output rebuilt as a ListArray, with no per-row or per-mini-batch Python
 call (src/udf.rs:164-179,191-248) → ``spark.udf.register``.
 
+Each registration also registers a hidden argmax head,
+``argmax_head(name)(array<I>) -> int``, on the same broadcast,
+registration token, predictor cache and :func:`_score_list_array` call:
+it reduces each scored row to the index of its first maximum in the
+worker, so ``argmax(<name>(x))`` — which ``Engine.sql`` rewrites to the
+head — sends one ``int`` per row back to the JVM instead of the row's
+logits (the reference chains ``src/udf.rs`` into ``src/argmax.rs`` in one
+process the same way).
+
 The declared return type is honored exactly — the reference's
 ``(f64, f64)`` arm silently returns f32 (src/udf.rs:49-57); we fix that
 quirk per SURVEY §2-A2.
@@ -36,6 +45,9 @@ _SPARK_TO_NUMPY = {
     "int": np.int32,
     "bigint": np.int64,
 }
+
+# the hidden argmax head of function ``f`` is ``__tf_argmax_f``
+ARGMAX_HEAD_PREFIX = "__tf_argmax_"
 
 
 def _element_dtype(array_type_ddl: str) -> np.dtype:
@@ -150,6 +162,27 @@ def _score_list_array(
     return pa.ListArray.from_arrays(out_offsets, flat.astype(out_dtype, copy=False))
 
 
+def _argmax_list_array(scores: pa.ListArray) -> pa.Array:
+    """0-based index of each row's first maximum, as ``int``, over a
+    uniform-width ListArray as :func:`_score_list_array` builds it; NULL
+    for a zero-width row. Rows compare the way the SQL ``argmax`` compares
+    them after its cast to ``ARRAY<DOUBLE>``: NaN is the maximum, and
+    ``bigint`` values round to double first."""
+    n = len(scores)
+    width = scores.offsets[1].as_py() - scores.offsets[0].as_py() if n else 0
+    if width == 0:
+        return pa.nulls(n, pa.int32())
+    values = scores.values.to_numpy()
+    if values.dtype == np.int64:
+        values = values.astype(np.float64)
+    return pa.array(values.reshape(n, width).argmax(axis=1).astype(np.int32))
+
+
+def argmax_head(name: str) -> str:
+    """Name of the hidden argmax head registered beside function ``name``."""
+    return f"{ARGMAX_HEAD_PREFIX}{name.lower()}"
+
+
 def register_torch_udf(
     spark: SparkSession,
     name: str,
@@ -157,7 +190,8 @@ def register_torch_udf(
     input_type: str = "array<float>",
     return_type: str = "array<float>",
 ) -> None:
-    """Create and register the inference UDF ``name(array<I>) -> array<R>``.
+    """Create and register the inference UDF ``name(array<I>) -> array<R>``
+    and its argmax head ``argmax_head(name)(array<I>) -> int``.
 
     Matches the reference signature: exactly one array argument
     (src/udf.rs:108-115), deterministic/immutable (Spark default), output
@@ -179,5 +213,9 @@ def register_torch_udf(
         for arr in it:
             yield _score_list_array(arr, predictor, batch_size, in_dtype, out_dtype)
 
-    udf = F.arrow_udf(infer, returnType=_parse_datatype_string(return_type))
-    spark.udf.register(name, udf)
+    def infer_argmax(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for scores in infer(it):
+            yield _argmax_list_array(scores)
+
+    spark.udf.register(name, F.arrow_udf(infer, returnType=_parse_datatype_string(return_type)))
+    spark.udf.register(argmax_head(name), F.arrow_udf(infer_argmax, returnType="int"))

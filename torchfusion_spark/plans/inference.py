@@ -148,7 +148,9 @@ def _mlp_oracle_sql() -> str:
     doc="the reference's flagship: CREATE FUNCTION ... LANGUAGE TORCH, then "
     "SELECT argmax(model(features)) — batched Arrow-native inference via "
     "iterator arrow_udf over ListArray values+offsets (src/udf.rs:20-287 "
-    "semantics); oracle = the seeded "
+    "semantics), the argmax fused into the model's worker (its hidden argmax "
+    "head returns one int per row; src/udf.rs feeding src/argmax.rs); "
+    "oracle = the seeded "
     "MLP unrolled into a DuckDB relational matmul (flagship fully hash-checked)",
 )
 def torch_inference_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
