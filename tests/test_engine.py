@@ -510,7 +510,8 @@ def test_run_script_multi_statement(engine, tables):
 
 def test_execute_binding_property():
     """Property: EXECUTE literal re-rendering round-trips arbitrary
-    strings (quotes included) and numbers through the $n binding."""
+    strings (quotes and backslashes included, in Spark's spelling) and
+    numbers through the $n binding."""
     from hypothesis import given, settings as hsettings
     from hypothesis import strategies as st
 
@@ -525,20 +526,10 @@ def test_execute_binding_property():
         n=st.integers(min_value=-10**12, max_value=10**12),
     )
     def roundtrip(s, n):
-        rendered = "'" + s.replace("'", "''") + "'"
+        rendered = "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
         raw = f"{rendered}, {n}"
         # parse the arg list exactly as _execute_statement does
-        args, pos = [], 0
-        while pos < len(raw):
-            am = eng._EXEC_ARG_RE.match(raw, pos)
-            assert am, raw[pos:]
-            if am.group("s") is not None:
-                args.append("'" + am.group("s") + "'")
-            elif am.group("n") is not None:
-                args.append(am.group("n"))
-            else:
-                args.append(am.group("w").upper())
-            pos = am.end()
+        args = eng._execute_args(raw)
         assert args[0] == rendered
         assert args[-1] == str(n)
 
@@ -677,7 +668,9 @@ def test_split_script_property():
     def statement(draw):
         kind = draw(st.sampled_from(["lit", "ident", "plain"]))
         if kind == "lit":
-            p = draw(payload).replace("'", "''")
+            # Spark's spelling: a backslash is \\, a quote '' or \'
+            quote = draw(st.sampled_from(["''", "\\'"]))
+            p = draw(payload).replace("\\", "\\\\").replace("'", quote)
             return f"SELECT '{p}' AS c", f"SELECT '{p}' AS c"
         if kind == "ident":
             p = draw(payload).replace('"', '""')
@@ -934,3 +927,112 @@ def test_configure_keeps_preset_settings_and_seeds_missing(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# Engine.sql reads literals and identifiers the way Spark's parser does:
+# (case, Engine.sql text, spark.sql text where it differs). The
+# doubled-quote and raw-literal cases passed before the shared lexer; the
+# rest raised "unterminated string literal", rewrote inside an
+# identifier, or bound $1 inside one.
+_SPARK_AGREEMENT = [
+    ("backslash_quote", r"SELECT 'a\'b' AS s, 'x' AS t", None),
+    ("info_schema_in_backticks", "SELECT 1 AS `see information_schema.tables`", None),
+    (
+        "info_schema_in_double_quotes",
+        'SELECT 1 AS "see information_schema.tables"',
+        "SELECT 1 AS `see information_schema.tables`",
+    ),
+    ("execute_backslash_quote", r"EXECUTE agree_lit('it\'s')", r"SELECT 'it\'s' AS v"),
+    ("execute_placeholder_in_backticks", "EXECUTE agree_tick(5)", "SELECT 5 AS `$1`"),
+    ("doubled_quote", "SELECT 'it''s' AS s", None),
+    ("raw_literal", r"SELECT r'a\' AS s", None),
+    (
+        "info_schema_in_literal_with_backslash_quote",
+        r"SELECT 'it\'s information_schema.tables' AS s",
+        None,
+    ),
+    ("argmax_call_in_literal_with_backslash_quote", r"SELECT 'it\'s argmax(agree_clf(' AS s", None),
+]
+
+
+@pytest.fixture(scope="module")
+def agreement_engine(engine, tmp_path_factory):
+    """The engine with the statements the agreement cases execute, and a
+    LANGUAGE TORCH function, so the argmax fusion scans every query."""
+    from torchfusion_spark.models.fixtures import write_demo_model
+
+    model = write_demo_model(str(tmp_path_factory.mktemp("agree") / "demo.npz"))
+    engine.sql(f"CREATE OR REPLACE FUNCTION agree_clf(FLOAT[]) LANGUAGE TORCH AS '{model}'")
+    engine.sql("PREPARE agree_lit AS SELECT $1 AS v")
+    engine.sql("PREPARE agree_tick AS SELECT $1 AS `$1`")
+    yield engine
+    engine.sql("DEALLOCATE agree_lit")
+    engine.sql("DEALLOCATE agree_tick")
+
+
+@pytest.mark.parametrize(
+    "text, spark_text", [c[1:] for c in _SPARK_AGREEMENT], ids=[c[0] for c in _SPARK_AGREEMENT]
+)
+def test_engine_sql_agrees_with_spark_sql(agreement_engine, text, spark_text):
+    got = agreement_engine.sql(text)
+    want = agreement_engine.spark.sql(spark_text or text)
+    assert got.columns == want.columns
+    assert got.collect() == want.collect()
+
+
+def test_hint_comment_reaches_spark(spark):
+    """A ``/*+ … */`` hint is Spark syntax, not a comment: with broadcast
+    joins off, ``BROADCAST(b)`` still plans a broadcast hash join through
+    ``Engine.sql``, as it does through ``spark.sql``."""
+    from torchfusion_spark.engine import Engine
+    from torchfusion_spark.session import scoped
+
+    text = (
+        "WITH a AS (SELECT id FROM range(100)), b AS (SELECT id FROM range(10)) "
+        "SELECT /*+ BROADCAST(b) */ a.id FROM a JOIN b ON a.id = b.id"
+    )
+    no_broadcast = scoped(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"})
+
+    def joins(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [j for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin") if j in plan]
+
+    want = joins(no_broadcast.sql(text))
+    assert want == ["BroadcastHashJoin"]
+    assert joins(Engine(no_broadcast).sql(text)) == want
+    assert joins(no_broadcast.sql(text.replace("/*+", "/*"))) == ["SortMergeJoin"]
+
+
+def test_sql_function_in_order_by_needs_an_alias(engine, tables):
+    """Spark 4.1 rejects a library SQL function (``argmax``, ``vec_dot``,
+    …) in ORDER BY; sorting on its alias works. A Spark that lifts the
+    restriction fails the error-class assertion here."""
+    from pyspark.errors import AnalysisException
+
+    for call in ("argmax(embedding)", "vec_dot(embedding, embedding)"):
+        with pytest.raises(AnalysisException) as err:
+            engine.sql(f"SELECT vec_id FROM embeddings ORDER BY {call}, vec_id LIMIT 3").collect()
+        assert err.value.getCondition() == "UNSUPPORTED_SQL_UDF_USAGE"
+    rows = engine.sql(
+        "SELECT vec_id, argmax(embedding) AS am FROM embeddings ORDER BY am, vec_id LIMIT 3"
+    ).collect()
+    every = engine.spark.table("embeddings").select("vec_id", "embedding").collect()
+    want = sorted((e.index(max(e)), r.vec_id) for r in every for e in [r.embedding])[:3]
+    assert [(r.am, r.vec_id) for r in rows] == want
+
+
+def test_one_lexer_reads_literals():
+    """Every rewrite reads literals through ``engine._TOKEN_RE``: the
+    single-quoted literal's alternation is spelled once, and the old
+    literal-only scanners are gone."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "torchfusion_spark"
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "_SQL_LITERAL_RE" in line or "_sub_outside_literals" in line
+    ]
+    assert not hits, hits
+    assert (root / "engine.py").read_text().count("'(?:[^'") == 1

@@ -25,7 +25,7 @@ from tests.fuzz_budget import examples
 
 # payload characters that historically break naive splitters
 _HOSTILE = st.text(
-    alphabet=st.sampled_from(list("ab;'\"-/*` \t\n$")),
+    alphabet=st.sampled_from(list("ab;'\"-/*` \t\n$\\")),
     max_size=8,
 )
 
@@ -45,8 +45,11 @@ def _statement(draw):
     """(script_spelling, spark_spelling, expected_column, expected_value)."""
     kind = draw(st.sampled_from(["lit", "ident", "arith", "prepared"]))
     if kind == "lit":
-        p = draw(_HOSTILE).replace("'", "''")
-        return (f"SELECT '{p}' AS c", None, "c", p.replace("''", "'"))
+        # Spark's spelling: a backslash is \\, a quote '' or \'
+        raw = draw(_HOSTILE)
+        quote = draw(st.sampled_from(["''", "\\'"]))
+        p = raw.replace("\\", "\\\\").replace("'", quote)
+        return (f"SELECT '{p}' AS c", None, "c", raw)
     if kind == "ident":
         p = draw(_HOSTILE).replace('"', '""')
         col = p.replace('""', '"') + "x"

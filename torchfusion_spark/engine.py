@@ -17,6 +17,11 @@ reference's — SURVEY §0 layer B):
   LANGUAGE TORCH function → ``<fn>``'s argmax head, which scores and
   reduces each row in the model's worker (reference: src/udf.rs output
   feeding src/argmax.rs in one process)
+
+Each rewrite reads the statement through one lexer (``_TOKEN_RE``, the
+analogue of the sqlparser tokenizer behind the reference's ``ctx.sql``),
+so none fires inside a string literal, an identifier or a comment, and
+literals end where Spark's parser ends them.
 """
 
 from __future__ import annotations
@@ -102,68 +107,125 @@ _COPY_TO_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 
-_DF_SETTINGS_RE = re.compile(r"information_schema\.df_settings", re.IGNORECASE)
-
 # The rest of information_schema (reference enables ALL of it:
 # with_information_schema(true), src/lib.rs:121-123 — DataFusion provides
 # tables/views/columns/schemata/df_settings). Spark exposes the same
 # metadata through spark.catalog; each referenced relation is rebuilt at
 # query time, so the snapshot is current, and bound into that query only.
 _INFO_SCHEMA_RE = re.compile(
-    r"information_schema\.(?P<rel>tables|views|columns|schemata|routines|parameters)\b",
+    r"information_schema\."
+    r"(?P<rel>tables|views|columns|schemata|routines|parameters|df_settings)\b",
     re.IGNORECASE,
 )
 
-# SQL single-quoted literal (doubled-quote escape included): the
-# information_schema rewrites must not fire inside string values
-# (ADVICE r04 — a literal like 'see information_schema.tables' was
-# rewritten too).
-_SQL_LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
+# Spark's string literal (SqlBaseLexer STRING_LITERAL): ``''`` and
+# backslash escapes inside, or a raw ``r'…'`` with neither. The lexer and
+# EXECUTE's argument parser both read literals with this one spelling.
+_STRING_LITERAL = r"(?<![\w$])[rR]'[^']*'|'(?:[^'\\]|\\.|'')*'"
+
+# The front door's one lexer: each match is a token no rewrite may read
+# into — a literal or backtick identifier (kept verbatim), a ``"…"``
+# identifier (DataFusion's spelling, rewritten to backticks), a hint's
+# ``/*+`` (kept: Spark parses hints), a block or line comment, a ``;``,
+# or an opening quote that never closes. Everything between matches is
+# code.
+_TOKEN_RE = re.compile(
+    rf"(?P<quoted>{_STRING_LITERAL}|`(?:[^`]|``)*`)"
+    r'|"(?P<ident>(?:[^"]|"")*)"'
+    r"|(?P<hint>/\*\+)"
+    r"|(?P<block>/\*)"
+    r"|(?P<line>--[^\n]*)"
+    r"|(?P<semi>;)"
+    r"|(?P<open>['\"`])",
+    re.DOTALL,
+)
+# block comments nest, as in Spark's and sqlparser-rs's lexers; a ``/*+``
+# inside one does not open another (Spark reads it as comment text)
+_BLOCK_COMMENT_RE = re.compile(r"/\*(?!\+)|\*/")
+_UNTERMINATED = {"'": "string literal", '"': '" quoted identifier', "`": "` quoted identifier"}
+
+
+def _lex(text: str):
+    """Yield ``(kind, start, end)`` for each ``_TOKEN_RE`` token of
+    ``text``; a block comment's span runs to its matching ``*/``. An
+    unterminated comment, literal or identifier raises, as sqlparser-rs
+    does at EOF: silently running a truncated prefix of
+    ``SELECT a /* oops FROM t`` is the typo class the error exists for."""
+    pos = 0
+    while m := _TOKEN_RE.search(text, pos):
+        kind, pos = m.lastgroup, m.end()
+        if kind == "open":
+            raise ValueError(f"unterminated {_UNTERMINATED[m.group()]} in SQL script")
+        if kind == "block":
+            depth = 1
+            for c in _BLOCK_COMMENT_RE.finditer(text, pos):
+                depth += 1 if c.group() == "/*" else -1
+                if not depth:
+                    pos = c.end()
+                    break
+            else:
+                raise ValueError("unterminated /* block comment in SQL script")
+        yield kind, m.start(), pos
+
+
+def _code(text: str) -> str:
+    """``text`` with every literal, identifier and comment blanked to NULs
+    of its own length. A rewrite scans this, so it never fires inside one,
+    and applies what it finds at the same offsets of ``text``."""
+    out, pos = [], 0
+    for kind, start, end in _lex(text):
+        kept = kind in ("hint", "semi")
+        out += [text[pos:start], text[start:end] if kept else "\0" * (end - start)]
+        pos = end
+    out.append(text[pos:])
+    return "".join(out)
+
+
+def _sub_code(pattern: re.Pattern, repl, text: str) -> str:
+    """``pattern.sub(repl, text)`` for the matches in ``_code(text)``."""
+    out, pos = [], 0
+    for m in pattern.finditer(_code(text)):
+        out += [text[pos : m.start()], repl(m)]
+        pos = m.end()
+    out.append(text[pos:])
+    return "".join(out)
 
 
 # statements the argmax fusion applies to: queries and EXPLAIN
 _QUERY_STATEMENT_RE = re.compile(
     r"^\s*(?:\(\s*)*(?:SELECT|WITH|FROM|VALUES|TABLE|EXPLAIN)\b", re.IGNORECASE
 )
-# a literal or backtick identifier (matched so that it is stepped over
-# whole), or an unqualified ``argmax(<fn>(`` call
+# an unqualified ``argmax(<fn>(`` call
 _ARGMAX_CALL_RE = re.compile(
-    r"'(?:[^'\\]|\\.)*'|`(?:[^`]|``)*`"
-    r"|(?<![\w.$])argmax\s*\(\s*(?P<fn>[A-Za-z_]\w*)\s*\(",
-    re.IGNORECASE | re.DOTALL,
+    r"(?<![\w.$])argmax\s*\(\s*(?P<fn>[A-Za-z_]\w*)\s*\(", re.IGNORECASE
 )
-_PAREN_SCAN_RE = re.compile(r"'(?:[^'\\]|\\.)*'|`(?:[^`]|``)*`|[()]", re.DOTALL)
+_PAREN_RE = re.compile(r"[()]")
 _CLOSE_PAREN_RE = re.compile(r"\s*\)")
 
 
-def _matching_paren(text: str, start: int) -> int:
-    """Index of the ``)`` closing the ``(`` just before ``start``, or -1;
-    parentheses inside literals and backtick identifiers do not count."""
+def _matching_paren(code: str, start: int) -> int:
+    """Index of the ``)`` closing the ``(`` just before ``start`` in
+    ``_code`` output, or -1."""
     depth = 1
-    for m in _PAREN_SCAN_RE.finditer(text, start):
-        if m.group() == "(":
-            depth += 1
-        elif m.group() == ")":
-            depth -= 1
-            if depth == 0:
-                return m.start()
+    for m in _PAREN_RE.finditer(code, start):
+        depth += 1 if m.group() == "(" else -1
+        if not depth:
+            return m.start()
     return -1
 
 
 def fuse_argmax_calls(text: str, heads: dict[str, str]) -> str:
     """Rewrite every ``argmax(<fn>(args))`` whose lower-cased ``<fn>`` is a
     key of ``heads`` to ``heads[fn](args)``. Only an ``argmax`` whose one
-    argument is exactly that call fuses; literals and backtick identifiers
-    pass through verbatim."""
+    argument is exactly that call fuses; literals, identifiers and
+    comments pass through verbatim."""
+    code = _code(text)
     out, pos, scan = [], 0, 0
-    while m := _ARGMAX_CALL_RE.search(text, scan):
+    while m := _ARGMAX_CALL_RE.search(code, scan):
         scan = m.end()
-        fn = m.group("fn")
-        if fn is None:
-            continue
-        head = heads.get(fn.lower())
-        close = _matching_paren(text, m.end()) if head else -1
-        tail = _CLOSE_PAREN_RE.match(text, close + 1) if close >= 0 else None
+        head = heads.get(m.group("fn").lower())
+        close = _matching_paren(code, m.end()) if head else -1
+        tail = _CLOSE_PAREN_RE.match(code, close + 1) if close >= 0 else None
         if tail is None:
             scan = m.start("fn")  # the argument may hold a call that fuses
             continue
@@ -199,136 +261,37 @@ def _map_df_type(t: str) -> str:
 
 
 def split_script(script: str) -> list[str]:
-    """Split a DataFusion-dialect SQL script into statements.
+    """Split a DataFusion-dialect SQL script into statements, reading it
+    with ``_TOKEN_RE``, the lexer every ``Engine.sql`` rewrite shares.
 
-    Single char-scan tokenizer with four states (all accepted by
-    DataFusion's sqlparser, ADVICE r05): ``'`` literals (the ``''``
-    escape stays inside), ``"`` double-quoted identifiers (``""`` escape
-    likewise), ``--`` line comments ending at newline, and ``/* */``
-    block comments (replaced by one space, so ``x/*c*/y`` stays two
-    tokens). Block comments NEST, as in sqlparser-rs's tokenizer:
-    ``/* a /* b */ c */`` is one comment, so the scanner tracks depth
-    rather than exiting at the first ``*/``. A ``;`` or apostrophe
-    inside any of the quoted/comment states must not split statements —
-    the real failure modes of line- or regex-based splitting. Empty
-    statements are dropped.
-
-    Double-quoted identifiers are rewritten to Spark backtick form
-    INSIDE the scan (DataFusion's dialect reads ``"name"`` as an
-    identifier; Spark's default dialect reads it as a string literal):
-    the ``""`` escape becomes a literal ``"`` and embedded backticks are
-    doubled. Doing this in the scanner — not a post-hoc regex — keeps an
-    apostrophe inside an identifier from being misread as a literal
-    boundary."""
-    statements: list[str] = []
-    buf: list[str] = []
-    in_literal = in_comment = in_ident = in_btick = False
-    block_depth = 0
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if in_comment:
-            if ch == "\n":
-                in_comment = False
-                buf.append(ch)
-            i += 1
-            continue
-        if block_depth:
-            if ch == "*" and i + 1 < n and script[i + 1] == "/":
-                block_depth -= 1
-                if block_depth == 0:
-                    buf.append(" ")
-                i += 1
-            elif ch == "/" and i + 1 < n and script[i + 1] == "*":
-                block_depth += 1
-                i += 1
-            i += 1
-            continue
-        if in_literal:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and script[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_literal = False
-            i += 1
-            continue
-        if in_ident:
-            if ch == '"':
-                if i + 1 < n and script[i + 1] == '"':
-                    buf.append('"')  # "" escape -> literal quote
-                    i += 1
-                else:
-                    in_ident = False
-                    buf.append("`")
-            elif ch == "`":
-                buf.append("``")  # embedded backtick survives quoting
-            else:
-                buf.append(ch)
-            i += 1
-            continue
-        if in_btick:
-            # backtick identifiers pass through verbatim (`` escape
-            # included) — they are the scanner's OWN output, so this
-            # state is what makes split_script idempotent: Engine.sql
-            # re-scans statements run_script already canonicalized
-            buf.append(ch)
-            if ch == "`":
-                if i + 1 < n and script[i + 1] == "`":
-                    buf.append("`")
-                    i += 1
-                else:
-                    in_btick = False
-            i += 1
-            continue
-        if ch == "'":
-            in_literal = True
-            buf.append(ch)
-        elif ch == '"':
-            in_ident = True
-            buf.append("`")
-        elif ch == "`":
-            in_btick = True
-            buf.append(ch)
-        elif ch == "-" and i + 1 < n and script[i + 1] == "-":
-            in_comment = True
-            i += 1
-        elif ch == "/" and i + 1 < n and script[i + 1] == "*":
-            block_depth = 1
-            i += 1
-        elif ch == ";":
+    Its grammar is Spark's where the two dialects meet: ``'…'`` literals
+    take Spark's ``''`` and backslash escapes, and a raw ``r'…'`` takes
+    neither; backtick identifiers pass through verbatim (a doubled
+    backtick included), so a second split of the output is the
+    identity; ``--`` comments end at the newline; ``/* */`` comments nest
+    and become one space, so ``x/*c*/y`` stays two tokens; a hint's
+    ``/*+`` is kept for Spark's parser. ``"…"`` is an identifier, as in
+    DataFusion's dialect (Spark's default dialect reads it as a string
+    literal), and is rewritten to backtick form: ``""`` becomes ``"`` and
+    an embedded backtick is doubled. A ``;`` splits statements only
+    outside all of these; empty statements are dropped, and an
+    unterminated literal, identifier or comment raises."""
+    statements, buf, pos = [], [], 0
+    for kind, start, end in _lex(script):
+        buf.append(script[pos:start])
+        pos = end
+        if kind == "semi":
             statements.append("".join(buf))
             buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    # EOF inside an open state: sqlparser-rs raises at EOF for an
-    # unterminated multi-line comment / string / quoted identifier, and
-    # silently executing a truncated prefix of 'SELECT a /* oops FROM t'
-    # is exactly the typo class the error exists to catch (ADVICE r06).
-    if block_depth:
-        raise ValueError("unterminated /* block comment in SQL script")
-    if in_literal:
-        raise ValueError("unterminated string literal in SQL script")
-    if in_ident:
-        raise ValueError('unterminated " quoted identifier in SQL script')
-    if in_btick:
-        raise ValueError("unterminated ` quoted identifier in SQL script")
-    statements.append("".join(buf))
+        elif kind == "ident":
+            name = script[start + 1 : end - 1].replace('""', '"').replace("`", "``")
+            buf.append(f"`{name}`")
+        elif kind == "block":
+            buf.append(" ")
+        elif kind != "line":
+            buf.append(script[start:end])
+    statements.append("".join(buf) + script[pos:])
     return [stmt for s in statements if (stmt := s.strip())]
-
-
-def _sub_outside_literals(pattern: re.Pattern, repl, text: str) -> str:
-    """``pattern.sub(repl, ...)`` applied only to the segments of ``text``
-    outside single-quoted SQL string literals."""
-    out, last = [], 0
-    for m in _SQL_LITERAL_RE.finditer(text):
-        out.append(pattern.sub(repl, text[last : m.start()]))
-        out.append(m.group(0))
-        last = m.end()
-    out.append(pattern.sub(repl, text[last:]))
-    return "".join(out)
 
 
 # the emulated information_schema relations and their columns; listings
@@ -381,10 +344,28 @@ _DEALLOCATE_RE = re.compile(
 # DataFusion's `SHOW ALL` lists every session setting (the CLI staple);
 # Spark's SHOW grammar has no ALL — route to the df_settings emulation.
 _SHOW_ALL_RE = re.compile(r"^\s*SHOW\s+ALL\s*;?\s*$", re.IGNORECASE)
-# one EXECUTE argument: quoted string / number / TRUE/FALSE/NULL
+# one EXECUTE argument: string literal / number / TRUE/FALSE/NULL
 _EXEC_ARG_RE = re.compile(
-    r"\s*(?:'(?P<s>(?:[^']|'')*)'|(?P<n>-?\d+(?:\.\d+)?)|(?P<w>\w+))\s*(?:,|$)"
+    rf"\s*(?:(?P<s>{_STRING_LITERAL})|(?P<n>-?\d+(?:\.\d+)?)|(?P<w>\w+))\s*(?:,|$)", re.DOTALL
 )
+_PLACEHOLDER_RE = re.compile(r"\$(\d+)")
+
+
+def _execute_args(raw: str) -> list[str]:
+    """EXECUTE's argument list → one SQL literal per argument: a string
+    literal as written, a number, or TRUE/FALSE/NULL."""
+    args: list[str] = []
+    pos = 0
+    while pos < len(raw):
+        am = _EXEC_ARG_RE.match(raw, pos)
+        if not am:
+            raise ValueError(f"cannot parse EXECUTE argument list at: {raw[pos:]!r}")
+        word = am.group("w")
+        if word is not None and word.upper() not in ("TRUE", "FALSE", "NULL"):
+            raise ValueError(f"unsupported EXECUTE argument: {word!r}")
+        args.append(word.upper() if word is not None else am.group("s") or am.group("n"))
+        pos = am.end()
+    return args
 
 
 def _parse_array_type(token: str | None) -> str:
@@ -649,23 +630,7 @@ class Engine:
         prepared = self.__dict__.get("_prepared", {})
         if name not in prepared:
             raise ValueError(f"prepared statement '{name}' does not exist")
-        args: list[str] = []
-        raw = m.group("args") or ""
-        pos = 0
-        while pos < len(raw):
-            am = _EXEC_ARG_RE.match(raw, pos)
-            if not am:
-                raise ValueError(f"cannot parse EXECUTE argument list at: {raw[pos:]!r}")
-            if am.group("s") is not None:
-                args.append("'" + am.group("s") + "'")  # re-rendered quoted literal
-            elif am.group("n") is not None:
-                args.append(am.group("n"))
-            else:
-                word = am.group("w").upper()
-                if word not in ("TRUE", "FALSE", "NULL"):
-                    raise ValueError(f"unsupported EXECUTE argument: {am.group('w')!r}")
-                args.append(word)
-            pos = am.end()
+        args = _execute_args(m.group("args") or "")
         body, types = prepared[name]
         if types is not None:
             # DataFusion casts each bound literal to the type declared in
@@ -677,34 +642,26 @@ class Engine:
                     f"{len(types)} declared parameter type(s)"
                 )
             args = [f"CAST({a} AS {t})" for a, t in zip(args, types)]
-        # bind $n markers outside string literals in ONE regex pass — a
-        # sequential str.replace would let $1 clobber the prefix of an
-        # out-of-range $12, silently splicing a corrupted literal instead
-        # of raising the unbound error
+        # bind $n markers outside literals and identifiers in ONE regex
+        # pass — a sequential str.replace would let $1 clobber the prefix
+        # of an out-of-range $12, silently splicing a corrupted literal
+        # instead of raising the unbound error
         unbound: list[str] = []
 
-        def bind(segment: str) -> str:
-            def sub(mm: re.Match) -> str:
-                idx = int(mm.group(1))
-                if 1 <= idx <= len(args):
-                    return args[idx - 1]
-                unbound.append(mm.group(0))
-                return mm.group(0)
+        def bind(mm: re.Match) -> str:
+            idx = int(mm.group(1))
+            if 1 <= idx <= len(args):
+                return args[idx - 1]
+            unbound.append(mm.group(0))
+            return mm.group(0)
 
-            return re.sub(r"\$(\d+)", sub, segment)
-
-        out, last = [], 0
-        for lit in _SQL_LITERAL_RE.finditer(body):
-            out.append(bind(body[last : lit.start()]))
-            out.append(lit.group(0))
-            last = lit.end()
-        out.append(bind(body[last:]))
+        bound = _sub_code(_PLACEHOLDER_RE, bind, body)
         if unbound:
             raise ValueError(
                 f"EXECUTE {name}: placeholder {unbound[0]} not bound "
                 f"({len(args)} argument(s) given)"
             )
-        return self.sql("".join(out))
+        return self.sql(bound)
 
     def _deallocate_statement(self, m: re.Match) -> DataFrame:
         name = m.group("name").lower()
@@ -935,11 +892,11 @@ class Engine:
     # -- dispatch -----------------------------------------------------------
 
     def sql(self, text: str) -> DataFrame:
-        # Canonicalize through the same scanner run_script uses, so the
+        # Canonicalize through the same lexer run_script uses, so the
         # two front doors can't diverge on dialect: double-quoted
         # identifiers become backticks (DataFusion reads "name" as an
         # identifier; Spark's default dialect reads it as a string
-        # literal) and comments are stripped. Only a clean single
+        # literal) and comments other than hints are stripped. Only a clean single
         # statement is substituted — multi-statement input falls through
         # unchanged to fail with Spark's own parse error, same as before.
         stmts = split_script(text)
@@ -993,9 +950,8 @@ class Engine:
         registered = self.__dict__.get("_argmax_heads")
         if not registered or not _QUERY_STATEMENT_RE.match(text):
             return text
-        called = {
-            m.group("fn").lower() for m in _ARGMAX_CALL_RE.finditer(text) if m.group("fn")
-        } & registered.keys()
+        called = {m.group("fn").lower() for m in _ARGMAX_CALL_RE.finditer(_code(text))}
+        called &= registered.keys()
         library = getattr(self.spark, "_tf_argmax", None)
         if not called or library is None or not library.equals(
             function_builder(self.spark, "argmax")
@@ -1011,22 +967,21 @@ class Engine:
     def _run_query(self, text: str) -> DataFrame:
         """``spark.sql(text)``, with the information_schema relations it
         names bound into it."""
-        # scan/rewrite only outside string literals (ADVICE r04): a
-        # literal mentioning information_schema.* must pass through intact
-        scannable = _SQL_LITERAL_RE.sub("''", text)
-        helpers = {}
-        if _DF_SETTINGS_RE.search(scannable):
-            helpers["df_settings"] = self.settings()
-        for rel in {mm.group("rel").lower() for mm in _INFO_SCHEMA_RE.finditer(scannable)}:
-            helpers[f"information_schema_{rel}"] = self._info_schema_df(rel)
-        if not helpers:
+        rels = {mm.group("rel").lower() for mm in _INFO_SCHEMA_RE.finditer(_code(text))}
+        if not rels:
             return self.spark.sql(text)
+        helpers = {
+            f"information_schema_{rel}": self.settings()
+            if rel == "df_settings"
+            else self._info_schema_df(rel)
+            for rel in rels
+        }
         # pyspark binds each helper DataFrame under a unique name for this
         # parse only; the text goes through str.format, so its own braces
         # are doubled first
-        text = text.replace("{", "{{").replace("}", "}}")
-        text = _sub_outside_literals(_DF_SETTINGS_RE, "{df_settings}", text)
-        text = _sub_outside_literals(
-            _INFO_SCHEMA_RE, lambda mm: f"{{information_schema_{mm.group('rel').lower()}}}", text
+        text = _sub_code(
+            _INFO_SCHEMA_RE,
+            lambda mm: f"{{information_schema_{mm.group('rel').lower()}}}",
+            text.replace("{", "{{").replace("}", "}}"),
         )
         return self.spark.sql(text, **helpers)

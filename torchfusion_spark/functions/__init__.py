@@ -15,6 +15,12 @@ queries resolve them by name, like the reference's function registry
 Over a LANGUAGE TORCH call, ``Engine.sql`` fuses ``argmax(f(x))`` into
 ``f``'s worker instead (``models.registry``), with the same results.
 
+ORDER BY: Spark 4.1 rejects a SQL function in a Sort
+(``UNSUPPORTED_SQL_UDF_USAGE``), so ``ORDER BY argmax(v)`` and
+``ORDER BY vec_dot(a, b)`` fail; select the call under an alias and sort
+on that (``SELECT argmax(v) AS am … ORDER BY am``). WHERE, GROUP BY and a
+window's ORDER BY take the call directly.
+
 NaN note: Spark's ``array_max`` treats NaN as greater than any number;
 the reference's SIMD argmax ignores NaN. Semantics match on NaN-free
 data (all fixtures); documented here per SURVEY.md §7.
