@@ -7,9 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -62,49 +60,3 @@ def test_bucketed_join_has_no_shuffle(spark, tables):
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
-
-def test_li_osr_stage_is_session_scoped(spark, tables):
-    """r16 optimization-round rules: the q21 bucketed rollup must NOT be
-    a cross-run artifact — the staged dir lies under this process's
-    staging root (a new process always rebuilds from the parquet inputs,
-    so the build cost is always inside the benched staging_warm_sec),
-    while WITHIN a session the memo makes every later call
-    registration-free (write_bucketed poisoned to prove it) and the
-    bucketed layout reads exchange-free."""
-    import torchfusion_spark.sources.sinks as sinks
-    from torchfusion_spark.plans import REGISTRY
-    from torchfusion_spark.staging import built, stage, staging_root
-
-    stage(spark, "li_by_order")
-    rel = built(spark, "li_by_order").result
-    path = spark.sql(f"DESCRIBE TABLE EXTENDED {rel}").filter(
-        "col_name = 'Location'"
-    ).first().data_type.removeprefix("file:")
-    # process-scoped dir: no content-keyed cross-process reuse
-    assert os.path.realpath(os.path.dirname(path.rstrip("/"))) == os.path.realpath(
-        staging_root()
-    ), path
-    rows1 = REGISTRY["q21_waiting_supplier"].builder(spark, tables).collect()
-    # the build q21 read: its runtime tuning may change the shuffle
-    # partitions the bucket layout is keyed on, re-staging once
-    rel = built(spark, "li_by_order").result
-
-    # same session, memo warm: a second call must not rebuild
-    real = sinks.write_bucketed
-
-    def _poisoned(*a, **k):
-        raise AssertionError("memo-warm call rebuilt the staged table")
-
-    sinks.write_bucketed = _poisoned
-    try:
-        rel2 = stage(spark, "li_by_order")
-    finally:
-        sinks.write_bucketed = real
-    assert rel2 == rel
-    # the staged table reads bucketed: the order-level rollup runs with
-    # no Exchange below its aggregation
-    agg = spark.table(rel2).groupBy("l_orderkey").count()
-    plan = _executed_plan(agg)
-    assert "Exchange" not in plan, plan
-    rows2 = REGISTRY["q21_waiting_supplier"].builder(spark, tables).collect()
-    assert rows1 == rows2

@@ -659,8 +659,14 @@ def test_split_script_property():
 
     from torchfusion_spark.engine import split_script
 
+    # the characters a lexer can trip on are drawn as often as the rest of
+    # Unicode together: from all of Unicode, a ' or \ is too rare to
+    # witness a broken escape in a few hundred examples
     payload = st.text(
-        alphabet=st.characters(blacklist_categories=("Cs",), blacklist_characters="\x00"),
+        alphabet=st.one_of(
+            st.sampled_from("'\\\"`;-/*\n"),
+            st.characters(blacklist_categories=("Cs",), blacklist_characters="\x00"),
+        ),
         max_size=12,
     )
 

@@ -511,7 +511,11 @@ def _simhash_sig(ctx, bits):
     banded join and the cap-stats observer share one per-token hash +
     bit-vote pass, and the pair self-join reads the capped banded
     relation on both sides exchange-free (the ``minhash_sig``
-    discipline)."""
+    discipline).
+
+    Payback: inlined, ``dedup_simhash`` goes from 2 to 6 exchanges at
+    sf0.001, past its plan-audit ceiling; at sf0.1 staged best + build
+    0.81 s, inline best 0.71 s."""
     spark = ctx.spark
     sig = ctx.cache(
         "__simhash_sig", spark.sql(simhash_sig_sql("spark", rel=ctx.dep("docs"), bits=bits))
@@ -671,6 +675,12 @@ def ngram_jaccard_sql(d: str, n: int = 5, threshold: float = 0.7) -> str:
 
 @declare("ngram_blocks", deps=("docs",), params={"n": 5})
 def _ngram_blocks(ctx, n):
+    """The per-doc n-gram shingle sets, read on both sides of the
+    Jaccard self-join.
+
+    Payback: inlined, ``dedup_ngram_jaccard`` goes from 3 to 5 exchanges
+    at sf0.001; at sf0.1 staged best + build 14.14 s, inline best
+    18.86 s."""
     return ctx.cache(
         "__ngram_blocks", ctx.spark.sql(ngram_blocks_sql("spark", rel=ctx.dep("docs"), n=n))
     )
@@ -904,7 +914,11 @@ def _minhash_clusters_star(ctx, threshold):
     (:func:`connected_components_star`). Checkpointed, not cached: a
     checkpoint of the labels does not read the loop's scratch, and a
     superseded checkpoint is released only after its replacement
-    materializes."""
+    materializes.
+
+    Payback: exempt from a timing — it holds the star-contraction loop's
+    output, which must be materialized outside the loop's ``scratch``
+    scope."""
     with scratch(ctx.spark) as s:
         return ctx.checkpoint(
             "__minhash_clusters_star", connected_components_star(s, _lsh_pairs(ctx, threshold))
@@ -1105,7 +1119,11 @@ def _containment_index(ctx, max_df):
     localCheckpoint, see ``containment`` — and the per-doc sizes
     (doc_id, n) — cache; derived from the SAME pruned exploded pass so
     the df-prune can never drift between the index and the
-    denominator."""
+    denominator.
+
+    Payback: inlined, ``dedup_containment`` goes from 2 to 10 exchanges
+    at sf0.001, past its plan-audit ceiling; at sf0.1 staged best +
+    build 1.07 s, inline best 1.03 s."""
     spark = ctx.spark
     sh = ctx.checkpoint(
         "__contain_sh",
@@ -1515,7 +1533,11 @@ def strip_boilerplate_lines_sql(
 def _doc_lines(ctx, w):
     """The (doc_id, line_no, line, hx) relation: the plan references it
     on both the rollup and the anti-join probe side and Catalyst inlines
-    CTEs — without staging the tokenize+md5 lining pass runs twice."""
+    CTEs — without staging the tokenize+md5 lining pass runs twice.
+
+    Payback: inlined, ``corpus_strip_boilerplate_lines`` goes from 3 to
+    5 exchanges at sf0.001; at sf0.1 staged best + build 1.67 s, inline
+    best 0.75 s."""
     return ctx.cache(
         "__tf_lines", ctx.spark.sql(lines_rel_sql("spark", w, docs_rel=ctx.dep("docs")))
     )
@@ -1665,7 +1687,11 @@ def _url_index(ctx):
     keeps the declarative subquery spelling; results are identical
     because both derive the same half-the-max-crawl-id split. An empty
     corpus (MAX = NULL) makes both slices empty via a FALSE predicate —
-    the same rows the oracle's NULL-comparison split yields."""
+    the same rows the oracle's NULL-comparison split yields.
+
+    Payback: exempt from a timing — it is the persisted seen-set that
+    ``dedup_url_incremental`` exists to probe; inlined, that query would
+    be a batch dedup over the whole crawl."""
     spark, docs = ctx.spark, ctx.dep("documents")
     row = spark.sql(f"SELECT {_url_split_subq('spark', docs)} AS s").first()
     split = "NULL" if row is None or row.s is None else str(row.s)

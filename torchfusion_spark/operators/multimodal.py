@@ -296,7 +296,11 @@ def _payload_phash(ctx):
     relation — 12 bytes per doc, so repeated dedup calls never re-run
     the Arrow scan — and, beside it (r17, the ``minhash_sig``
     discipline), the capped banded relation the pair self-join reads on
-    both sides exchange-free."""
+    both sides exchange-free.
+
+    Payback: inlined, ``multimodal_dedup`` goes from 2 to 6 exchanges
+    and from 0 to 2 Python evaluations at sf0.001; at sf0.1 staged best
+    + build 1.12 s, inline best 0.32 s."""
     spark = ctx.spark
     sig = ctx.cache(
         "__mm_phash", perceptual_hash(attach_payload(spark, spark.table(ctx.dep("docs"))))
@@ -442,7 +446,11 @@ def frame_fingerprints(df: DataFrame) -> DataFrame:
 def _frame_phash(ctx):
     """(per-frame fingerprint view, capped banded view over the PACKED
     frame key — the tail's ``fsig`` spelling verbatim): the
-    ``payload_phash`` discipline."""
+    ``payload_phash`` discipline.
+
+    Payback: inlined, ``multimodal_frame_dedup`` goes from 6 to 12
+    exchanges and from 0 to 4 Python evaluations at sf0.001; at sf0.1
+    staged best + build 0.83 s, inline best 0.60 s."""
     spark = ctx.spark
     sig = ctx.cache(
         "__mm_fphash", frame_fingerprints(attach_payload(spark, spark.table(ctx.dep("docs"))))

@@ -725,7 +725,11 @@ def _bloom_filter(ctx):
     """(benchmark-hash set view, Bloom filter view) — the 100 TB
     deployment shape: the filter depends only on the (fixed) benchmark
     suite, so it is built once and persisted while the corpus-side probe
-    runs per batch."""
+    runs per batch.
+
+    Payback: inlined, ``text_decontaminate_bloom`` goes from 3 to 8
+    exchanges at sf0.001, past its plan-audit ceiling; at sf0.1 staged
+    best + build 0.64 s, inline best 0.44 s."""
     spark = ctx.spark
     bench = ctx.cache(
         "__tf_bench_h",
@@ -935,7 +939,11 @@ def _pack_tokens(ctx, shards):
     documents (VERDICT r14 item 2: the pack ladder now pays ONE
     corpus-sized shuffle — this staging repartition — plus the final
     pack rollup's map-combined partials; the tiny (langs × shards)
-    offset relation broadcasts back)."""
+    offset relation broadcasts back).
+
+    Payback: inlined, ``corpus_pack_sequences`` goes from 3 to 7
+    exchanges at sf0.001; at sf0.1 staged best + build 0.43 s, inline
+    best 0.30 s."""
     t = ctx.spark.sql(
         pack_t_sql("spark", shards=shards, rel=ctx.dep("docs"))
     ).repartition(ctx.key, "lang", "shard")
@@ -1125,6 +1133,12 @@ def dup_gram_exploded_sql(d: str, n: int = DUP_GRAM_N, rel: str = "documents") -
 
 @declare("dupgram_exploded", deps=("documents",))
 def _dupgram_exploded(ctx):
+    """The per-doc exploded n-grams, read twice: by the corpus-wide
+    duplicate count and by the per-doc join.
+
+    Payback: inlined, ``text_dup_gram_fraction`` keeps its 3 exchanges
+    at sf0.001; at sf0.1 staged best + build 2.19 s, inline best
+    4.19 s."""
     return ctx.cache(
         "__dupgram_e", ctx.spark.sql(dup_gram_exploded_sql("spark", rel=ctx.dep("documents")))
     )
@@ -1868,6 +1882,11 @@ def _ppl_scored(ctx):
 
 @declare("dsir_scored", deps=("unigrams",))
 def _dsir_scored(ctx):
+    """The per-doc DSIR importance scores (``dsir_scored_sql``).
+
+    Payback: inlined, ``sample_dsir_importance`` goes from 2 to 14
+    exchanges at sf0.001; at sf0.1 staged best + build 0.46 s, inline
+    best 0.75 s."""
     return ctx.checkpoint(
         "__tf_dsir_scored", ctx.spark.sql(dsir_scored_sql("spark", tf_rel=ctx.dep("unigrams")))
     )
@@ -1887,6 +1906,10 @@ def _cls_scored(ctx):
 
 @declare("pretrain_keep", deps=("hx_shingles", "cls_scored", "ppl_scored"))
 def _pretrain_keep(ctx):
+    """The pipeline's survivor relation (``pretrain_keep_sql``).
+
+    Payback: inlined, ``pipeline_pretrain_corpus`` goes from 12 to 52
+    exchanges at sf0.001 (not timed)."""
     return ctx.checkpoint(
         "__tf_pretrain_keep",
         ctx.spark.sql(
@@ -2478,7 +2501,10 @@ def bpe_train(spark, rounds: int = BPE_TRAIN_ROUNDS, tf_rel: str | None = None):
 def _bpe_merges(ctx) -> tuple[tuple[str, str], ...]:
     """The learned merge pairs: ``corpus_bpe_apply`` re-reads them per
     invocation, and re-running the 3-round trainer each time would
-    triple the staging actions for an artifact of ≤3 tuples."""
+    triple the staging actions for an artifact of ≤3 tuples.
+
+    Payback: exempt from a timing — it holds the trainer loop's output,
+    which must be materialized outside the loop's ``scratch`` scope."""
     rows = bpe_train(ctx.spark, tf_rel=ctx.dep("unigrams")).collect()
     return tuple((r.left_sym, r.right_sym) for r in rows)
 

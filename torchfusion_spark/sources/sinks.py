@@ -40,7 +40,6 @@ def write_bucketed(
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
-    path: str | None = None,
 ) -> None:
     """Bucketed (hash-clustered) managed table — the co-located-join
     layout primitive at 100 TB: two tables bucketed by the same key into
@@ -51,21 +50,18 @@ def write_bucketed(
 
     This is the DataFusion-absent piece of the sources/sinks row that
     matters most at scale: partitioning handles low-cardinality prune
-    keys, bucketing handles high-cardinality join keys.
+    keys, bucketing handles high-cardinality join keys. It is a layout a
+    user curates for many queries; no registry query writes one, because
+    a table built for one query's plan only moves that query's shuffle
+    into its build.
 
-    ``path`` makes it an EXTERNAL bucketed table (data at ``path``
-    instead of the warehouse dir) — the session-staged co-located-join
-    shape (`q21_waiting_supplier`) writes into its build's staging dir
-    (``staging._Ctx.dir``), as the URL index does. To get ONE file per
-    bucket (the precondition for the reader to also report the
-    per-bucket sort order), pre-``repartition(n_buckets, *bucket_cols)``
-    the input: repartition and bucketBy share the Murmur3 hash, so each
-    write task then holds exactly its own bucket's rows."""
+    To get ONE file per bucket (the precondition for the reader to also
+    report the per-bucket sort order), pre-``repartition(n_buckets,
+    *bucket_cols)`` the input: repartition and bucketBy share the Murmur3
+    hash, so each write task then holds exactly its own bucket's rows."""
     writer = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
     writer.saveAsTable(table)
 
 

@@ -13,12 +13,11 @@ lifecycle:
 
 * **Build once per input identity.** An entry is identified by its
   parameters, its own ``key`` (if any) and the builds of its deps. The
-  roots are the catalog tables (``documents``, ``embeddings``,
-  ``lineitem``), pinned as views and keyed on (load_tables generation,
-  semantic plan hash), so swapping a view — or loading other tables —
-  gives every relation downstream of it a new identity. Concurrent
-  callers of one identity wait on one build-once future; no lock is held
-  while Spark runs.
+  roots are the catalog tables ``documents`` and ``embeddings``, pinned
+  as views and keyed on (load_tables generation, semantic plan hash),
+  so swapping a view — or loading other tables — gives every relation
+  downstream of it a new identity. Concurrent callers of one identity
+  wait on one build-once future; no lock is held while Spark runs.
 * **Key-scoped views.** Every build names its temp views after itself
   (``__tf_hx_7``). A later build under another identity makes new views
   instead of replacing the ones a consumer is binding, so a plan bound
@@ -43,14 +42,19 @@ lifecycle:
   what outlives the call must already be on the driver or in a
   registry entry that materialized it inside the scope.
 * **Staged files.** A build that writes files (a parquet index, a
-  bucketed table, a replayed stream's batch files) writes them into its
-  own fresh directory, ``ctx.dir(base)``. Every such directory lies
-  under one per-process root, made on first use with
-  ``tempfile.mkdtemp`` (so under ``$TMPDIR``) and removed whole when the
-  interpreter exits. A directory is never released on supersede: a plan
-  resolved against it but not yet collected keeps its files until the
-  process ends. Staged files are reuse within one process, never across
-  runs; a crashed process's root is left to the temp dir's own cleanup.
+  replayed stream's batch files) writes them into its own fresh
+  directory, ``ctx.dir(base)``. Every such directory lies under one
+  per-process root, made on first use with ``tempfile.mkdtemp`` (so
+  under ``$TMPDIR``) and removed whole when the interpreter exits. A
+  directory is never released on supersede: a plan resolved against it
+  but not yet collected keeps its files until the process ends. Staged
+  files are reuse within one process, never across runs; a crashed
+  process's root is left to the temp dir's own cleanup.
+* **Staging pays or goes.** A relation read by one query builder gets
+  no reuse; staging it only moves that query's work into the prewarm.
+  Such a relation stays only with a ``Payback:`` paragraph in its build
+  docstring: what inlining it cost its consumer (exchanges, Python
+  evaluations or time, measured), or why it cannot be inlined.
 * **Derived prewarm.** :func:`prewarm_staging` builds the relations
   declared ``prewarm=True`` on a thread pool, each submitted once every
   prewarm relation it depends on has finished, so a component's timed
@@ -158,7 +162,7 @@ def _declare_table(table: str) -> None:
         return ctx.view(f"__tf_{table}", df)
 
 
-for _table in ("documents", "embeddings", "lineitem"):
+for _table in ("documents", "embeddings"):
     _declare_table(_table)
 
 
@@ -433,7 +437,6 @@ def _load_declarations() -> None:
     import torchfusion_spark.operators.multimodal  # noqa: F401
     import torchfusion_spark.operators.similarity  # noqa: F401
     import torchfusion_spark.operators.textstats  # noqa: F401
-    import torchfusion_spark.plans.relational2  # noqa: F401
     import torchfusion_spark.streaming  # noqa: F401
 
 
